@@ -20,10 +20,7 @@ local[4N] with the JVM pinned to N cores:
 
   (--salts is FIXED across levels: the north rule compares the identical
   job at two cluster sizes; sizing salts to the level would give the
-  small level less per-group overhead and skew the ratio.  Choose
-  --salts >= 2x the LARGER level's cores so both levels take the same
-  pack strategy — one_shuffle_pack_ok picks the salt-partitioned
-  single-shuffle pack only when salts can fill the cluster.)
+  small level less per-group overhead and skew the ratio.)
 
   (--driver-memory matters: in local mode the "executors" live in the
   driver JVM, and spark-submit's 1g default measures GC, not the

@@ -182,3 +182,74 @@ def test_streaming_foreachbatch(spark, base_docs, tmp_path):
     build_index(spark, final, fresh_dir, config=CFG)
     for terms in QUERIES[:2]:
         _assert_same(_topk(spark, inc_dir, terms), _topk(spark, fresh_dir, terms))
+
+
+def test_batches_and_compact_release_caches_and_broadcasts(
+    spark, base_docs, tmp_path, monkeypatch
+):
+    """A long-running stream applies batch after batch: every relation
+    apply_batch / compact cache and every broadcast they create must be
+    released when the call returns, or the driver and executors
+    accumulate one set per batch."""
+    from pyspark import SparkContext
+    from pyspark.broadcast import Broadcast
+
+    inc_dir = str(tmp_path / "rel")
+    build_index(spark, base_docs, inc_dir, config=CFG)
+    inc = IncrementalIndex(spark, inc_dir, CFG)
+    created, released = [], set()
+    make_bc, unpersist_bc = SparkContext.broadcast, Broadcast.unpersist
+
+    def broadcast(self, value):
+        bc = make_bc(self, value)
+        created.append(bc)
+        return bc
+
+    def unpersist(self, blocking=False):
+        released.add(id(self))
+        return unpersist_bc(self, blocking)
+
+    monkeypatch.setattr(SparkContext, "broadcast", broadcast)
+    monkeypatch.setattr(Broadcast, "unpersist", unpersist)
+    jsc = spark.sparkContext._jsc
+    baseline = jsc.getPersistentRDDs().size()
+    for i in range(2):
+        inc.apply_batch(
+            adds=spark.createDataFrame(
+                [(i, "overwritten spark join"), (5000 + i, "new doc query")],
+                "doc_id long, text string",
+            ),
+            delete_ids=[10 + i],
+        )
+    inc.compact()
+    assert jsc.getPersistentRDDs().size() == baseline
+    # two per mixed batch (dead ids, dying rows) + compact's liveness pin
+    assert len(created) >= 5
+    assert all(id(bc) in released for bc in created)
+
+
+def test_batch_refreshes_term_bytes(spark, base_docs, tmp_path):
+    """apply_batch keeps meta["term_bytes"] in step with the live
+    dictionary, so the driver-pin gate judges a grown vocabulary by its
+    real size rather than the build's."""
+    import json as _json
+
+    from tf_idf_vectorizer_spark.ioutil import table_path
+
+    inc_dir = str(tmp_path / "tb")
+    build_index(spark, base_docs, inc_dir, config=CFG)
+    built = _json.load(open(f"{inc_dir}/meta.json"))["term_bytes"]
+    long_terms = " ".join(f"{'x' * 200}{i}" for i in range(20))
+    IncrementalIndex(spark, inc_dir, CFG).apply_batch(
+        adds=spark.createDataFrame(
+            [(7000, long_terms)], "doc_id long, text string"
+        )
+    )
+    meta = _json.load(open(f"{inc_dir}/meta.json"))
+    live = (
+        spark.read.parquet(table_path(inc_dir, meta, "term_dict"))
+        .agg(F.sum(F.length("term")))
+        .first()[0]
+    )
+    assert meta["term_bytes"] == live
+    assert live >= built + 20 * 200

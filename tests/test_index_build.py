@@ -154,3 +154,20 @@ def test_all_empty_docs_corpus_builds_and_queries(spark, tmp_path):
     pi2 = PackedIndex(spark, out, cfg)
     assert pi2.doc_num == 3  # +1 add, -1 delete
     assert pi2.bm25_topk_rows(["anything"], k=5) == []
+    # merging two all-empty indexes reads back zero posting files for
+    # its lineage: the same schema-inference hazard, one writer later
+    from tf_idf_vectorizer_spark.operators.merge import merge_indexes
+
+    other = str(tmp_path / "empty_idx2")
+    build_index(
+        spark,
+        spark.createDataFrame([(10, ""), (11, " ")], "doc_id long, text string"),
+        other,
+        config=cfg,
+    )
+    merged = str(tmp_path / "empty_merged")
+    merge_indexes(spark, out, other, merged, cfg)
+    pm = PackedIndex(spark, merged, cfg)
+    assert pm.doc_num == 5
+    assert pm.bm25_topk(["anything"], k=5).collect() == []
+    assert pm.bm25_topk_rows(["anything"], k=5) == []

@@ -99,35 +99,60 @@ def test_merge_ranges_empty_input():
     assert lo.tolist() == [1] and hi.tolist() == [6]
 
 
-def test_compact_keeps_doc_dict_layout(spark, topical5, tmp_path):
-    """A compacted (or rewritten) index must keep the fresh-build
-    doc_dict layout — range-partitioned files sorted by doc_id — or the
-    WAND rescore's doc-range pushdown silently stops pruning (measured
-    2x+ on post-compact query latency when compact coalesced the
-    rewrite unsorted).  Same check for the postings term sort."""
+@pytest.mark.parametrize(
+    "producer", ["compact", "refresh_norms", "mixed_batch", "merge_interleaved"]
+)
+def test_compact_keeps_doc_dict_layout(
+    spark, topical5, tmp_path, monkeypatch, producer
+):
+    """A compacted (or rewritten, or merged) index must keep the
+    fresh-build doc_dict layout — range-partitioned files sorted by
+    doc_id — or the WAND rescore's doc-range pushdown silently stops
+    pruning (measured 2x+ on post-compact query latency when compact
+    coalesced the rewrite unsorted).  Same check for the postings term
+    sort.  The merge case interleaves ids (A = 0..N, B = 2i+1), so a
+    writer that only concatenates its inputs overlaps file spans."""
     import glob
     import shutil
 
     import pyarrow.parquet as pq
 
+    from tf_idf_vectorizer_spark.operators import tables
+    from tf_idf_vectorizer_spark.operators.merge import merge_indexes
     from tf_idf_vectorizer_spark.streaming.incremental import IncrementalIndex
 
+    # several doc_dict files even at test scale: exercises the
+    # range-partitioned branch, not just the one-file coalesce
+    monkeypatch.setattr(tables, "DOCS_PER_FILE", 1000)
     out = str(tmp_path / "cmp")
-    shutil.copytree(topical5.dir, out)
-    inc = IncrementalIndex(spark, out, CFG)
-    inc.apply_batch(
-        spark.createDataFrame(
-            [(3, "t1 s0 rewritten"), (9001, "t2 s3 added")],
-            "doc_id long, text string",
-        ),
-        delete_ids=[5, 7],
-    )
-    inc.compact()
+    if producer == "merge_interleaved":
+        b_dir = str(tmp_path / "b")
+        docs_b = synth_topical_corpus(
+            spark, 3000, vocab=500, n_sites=8, seed=12
+        ).select((F.col("doc_id") * 2 + 1).alias("doc_id"), "text")
+        build_index(spark, docs_b, b_dir, config=CFG)
+        merge_indexes(spark, topical5.dir, b_dir, out, CFG)
+    else:
+        shutil.copytree(topical5.dir, out)
+        inc = IncrementalIndex(spark, out, CFG)
+        if producer != "refresh_norms":
+            inc.apply_batch(
+                spark.createDataFrame(
+                    [(3, "t1 s0 rewritten"), (9001, "t2 s3 added")],
+                    "doc_id long, text string",
+                ),
+                delete_ids=[5, 7],
+            )
+        if producer == "compact":
+            inc.compact()
+        elif producer == "refresh_norms":
+            inc.refresh_norms()
     idx = PackedIndex(spark, out, CFG)
-    assert int(idx.meta["generation"]) == 0
+    if producer in ("compact", "merge_interleaved"):
+        assert int(idx.meta["generation"]) == 0
     dd_dir = idx._table_paths["doc_dict"]
     files = sorted(glob.glob(f"{dd_dir}/*.parquet"))
-    assert files
+    assert len(files) > 1
     spans = []
     for f in files:
         t = pq.read_table(f, columns=["doc_id"])

@@ -41,12 +41,6 @@ class EngineConfig:
     # raises n_salts until salt_range <= this (keeps every collect_list
     # buffer executor-sized at ANY corpus scale)
     salt_target_rows: int = 2_000_000
-    # upper bound on a SALT's total posting entries: the pack runs as a
-    # single salt-partitioned shuffle (agg + encode + write in one
-    # stage, no blocks reshuffle), so one task aggregates one salt;
-    # build_index raises n_salts until total posting rows / n_salts
-    # fits (~8M entries ~ a few hundred MB of agg buffer)
-    pack_salt_rows: int = 8_000_000
     # parquet row-group target for the postings files.  Files are sorted
     # by (term_id, block_seq), so bounded row groups turn the per-group
     # term_id min/max stats into a coarse TERM INDEX: a rare term's

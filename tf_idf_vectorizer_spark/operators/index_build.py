@@ -4,10 +4,14 @@ Replaces the reference's in-memory ``term_dim_rev_index``
 (/root/reference/src/vectorizer/mod.rs:57-61, postings appended per doc
 at mod.rs:186-190) with a batch dataflow shaped for 10^12 documents:
 
+  docs -> narrow scalar pass             (doc count, max id, lengths:
+                                           sizes the salting and the
+                                           build's shuffle width)
   tokens (doc_id, term, doc_len)          (doc_len computed BEFORE the
                                            explode; no doc-keyed join)
     -> term_id = xxhash64(term); salt = doc_id // salt_range
-                                          (doc-RANGE salts, not hash salts)
+                                          (doc-RANGE salts, not hash
+                                           salts: tables.salting)
     -> repartition(term_id, salt)         (the ONE posting shuffle; head
                                            terms split across salts)
     -> groupBy(term_id, salt, doc_id, term) -> tf   (exchange-free: the
@@ -17,11 +21,13 @@ at mod.rs:186-190) with a batch dataflow shaped for 10^12 documents:
     -> Catalyst codec projection          (delta + LEB128 varint blocks
                                            of block_size docs — pure JVM
                                            expressions, _varint_chars)
-    -> blocks reshuffle to salt (small, compressed)
-    -> write parquet partitioned by salt, sorted (term_id, block_seq)
-                                          (row-group stats = coarse term
-                                           index; bucket column prunes
-                                           at query time)
+    -> tables.write_postings              (blocks reshuffle to salt; one
+                                           term-sorted file per salt,
+                                           bounded row groups = coarse
+                                           term index)
+    -> tables.write_doc_dict / write_term_dict / write_lineage /
+       write_meta                         (the layout contract every
+                                           other writer shares)
 
 Because salts are doc-id RANGES, blocks of one term are globally
 docID-sorted in (salt, block_seq) order — the reference's sharded
@@ -46,7 +52,6 @@ postings are written under ``postings/salt=S/`` with a manifest row
 
 from __future__ import annotations
 
-import json
 import os
 import time
 from collections.abc import Iterator
@@ -57,25 +62,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tf_idf_vectorizer_spark.config import DEFAULT, EngineConfig, with_effective_tf
-from tf_idf_vectorizer_spark.functions.tokenize import term_frequencies
 from tf_idf_vectorizer_spark.operators.codec import encode_varint_blocks
 from tf_idf_vectorizer_spark.operators.stats import corpus_stats, doc_stats, idf_table
-
-BLOCK_SCHEMA = (
-    "term_id long, salt int, block_seq int, n int, min_doc long, "
-    "max_doc long, max_tf long, min_dl long, max_dl long, "
-    "max_score double, doc_deltas binary, tfs binary"
+from tf_idf_vectorizer_spark.operators.tables import (
+    salt_of,
+    salting,
+    write_doc_dict,
+    write_lineage,
+    write_meta,
+    write_postings,
+    write_term_dict,
 )
-# schema of the WRITTEN postings files (salt is the partition column).
-# Every reader of a postings dir passes it explicitly: a corpus (or a
-# micro-batch) whose docs all tokenize to nothing writes ZERO posting
-# files, and parquet schema inference on a file-less dir is an error.
-POSTINGS_FILE_SCHEMA = BLOCK_SCHEMA + ", bucket int, gen int"
-# min_dl yields the BM25 upper bound; max_dl the LOWER bound the WAND
-# driver-theta fast path needs (a conservative per-doc score floor)
-# postings carry an MVCC generation: a doc's live rows are those whose
-# gen matches its doc_dict row (overwrites bump the gen; stale rows are
-# dropped by the scoring join and reclaimed at compaction)
 
 
 def make_live_repacker(
@@ -261,43 +258,6 @@ def _varint_chars(v, width: int = 10):
             F.raise_error(F.format_string("varint overflow: width %d value %d", F.lit(width), v)),
         ).otherwise(parts[-1])
     return F.concat(*parts) if len(parts) > 1 else parts[0]
-
-
-def write_term_dict(
-    df: DataFrame, path: str, parts: int, rowgroup_bytes: int,
-    n_rows: int | None = None,
-) -> None:
-    """Term dictionary write in the layout every reader wants:
-    range-partitioned files SORTED by term, with bounded row groups, so
-    the per-group term min/max string stats form a coarse TERM INDEX.
-    A cold query's dictionary lookup (`term IN (...)`) then prunes to
-    ~one row group per query term instead of scanning the whole
-    dictionary — at web scale the vocabulary is 10^8+ rows and an
-    unsorted coalesced dict costs a full-table scan per cold query.
-    Shared by build, merge and the incremental IDF rewrite.
-
-    ``n_rows`` (when known) makes the file count scale-adaptive
-    (~250k terms per file): a 31-term dictionary becomes ONE sorted
-    file via coalesce — skipping repartitionByRange's extra sampling
-    job — while a 10^8-term dictionary still fans out."""
-    parts = max(1, int(parts))
-    if n_rows is not None:
-        parts = max(1, min(parts, -(-int(n_rows) // 250_000)))
-    if parts == 1:
-        w = df.coalesce(1).sortWithinPartitions("term")
-    else:
-        w = df.repartitionByRange(parts, "term").sortWithinPartitions("term")
-    w.write.option(
-        "parquet.block.size", str(int(rowgroup_bytes))
-    ).mode("overwrite").parquet(path)
-
-
-def one_shuffle_pack_ok(spark: SparkSession, n_salts: int) -> bool:
-    """True when the salt-partitioned single-shuffle pack can fill the
-    cluster (parallelism = n_salts): n_salts >= 2x defaultParallelism.
-    Below that, the (term_id, salt)-shuffled agg + blocks reshuffle is
-    faster (A/B at 32 cores / 8 salts: 3x)."""
-    return int(n_salts) >= 2 * int(spark.sparkContext.defaultParallelism)
 
 
 def pack_blocks_jvm(
@@ -568,18 +528,7 @@ def _build_index_body(
         )),
     )
 
-    # salting auto-scales so no (term_id, salt) group exceeds
-    # ~salt_target_rows posting entries (a stop-word's salt-local run
-    # is at most salt_range docs).  Salt count is a LAYOUT choice —
-    # more salts fragment mid-frequency terms' blocks (a df-500 term
-    # split over 64 salts becomes 64 eight-doc blocks: +50% index
-    # bytes, more WAND metadata), so it is NOT raised for parallelism:
-    # the pack aggregation partitions on (term_id, salt) regardless.
-    n_salts = max(
-        int(config.n_salts),
-        -(-(int(max_id) + 1) // int(config.salt_target_rows)),
-    )
-    salt_range = max(1, (int(max_id) + n_salts) // n_salts)
+    n_salts, salt_range = salting(max_id, config)
 
     # ---- fused TF build: ONE exchange for TF agg AND pack --------------
     # The exploded tokens are shuffled ONCE, keyed (term_id, salt) —
@@ -615,7 +564,7 @@ def _build_index_body(
     )
     keyed = exploded.select(
         F.xxhash64("term").alias("term_id"),
-        (F.col("doc_id") / F.lit(salt_range)).cast("int").alias("salt"),
+        salt_of(salt_range).alias("salt"),
         "doc_id",
         "term",
         "doc_len",
@@ -654,9 +603,6 @@ def _build_index_body(
     )
     term_dict.cache()
     reminted = False
-    # term_bytes feeds the query layer's MEMORY-based decision on whether
-    # the dictionary can be pinned on the driver (count alone misleads:
-    # 2M 4-char terms and 2M 500-byte URLs are very different pins)
     if check_collisions:
         n_terms, term_bytes, n_ids = term_dict.agg(
             F.count("*"), F.sum(F.length("term")), F.countDistinct("term_id")
@@ -727,111 +673,27 @@ def _build_index_body(
         max_doc_bound=max_id,
         max_tf_bound=2 * max_dl_global + 2,
     )
-    # blocks (small, compressed) reshuffle to the salt layout for the
-    # write: over-partition the hash bins 4x (balls-in-bins), each salt
-    # lands in ONE partition — one directory per salt, ONE
-    # term_id-sorted file inside (parquet row-group min/max pruning;
-    # listing O(salts))
-    packed = packed.repartition(max(4 * n_salts, shuffle_parts), "salt")
-    writer = (
-        # the sort MUST lead with the partitionBy column: FileFormatWriter
-        # requires its output ordered by the partition columns and will
-        # otherwise insert its own SortExec(salt), whose external-sort
-        # spill merge interleaves equal-salt rows from different chunks —
-        # silently shredding the (term_id, block_seq) file order that the
-        # row-group term index depends on (observed: ~68 sorted runs per
-        # file, every per-group term_id range ~full-vocab, zero pruning)
-        packed.sortWithinPartitions("salt", "term_id", "block_seq")
-        .write.partitionBy("salt")
-        # bounded row groups over the term_id-sorted layout = a coarse
-        # term index in the parquet stats (see EngineConfig.pq_rowgroup_bytes)
-        .option("parquet.block.size", str(int(config.pq_rowgroup_bytes)))
-    )
-    if resume and done_salts:
-        writer.mode("append").parquet(f"{out_dir}/postings")
-    else:
-        writer.mode("overwrite").parquet(f"{out_dir}/postings")
+    append = bool(resume and done_salts)
+    mode = "append" if append else "overwrite"
+    write_postings(packed, f"{out_dir}/postings", n_salts, config, mode)
     _mark("pack_write")
-    # range-partitioned + sorted by doc_id: the WAND rescore pushes
-    # candidate doc-id range predicates into this scan, and sorted row
-    # groups turn them into real parquet pruning (a pruned rescore
-    # touches a handful of candidate ranges, not the whole dictionary)
-    # file count scales with the corpus (~1M docs per file), not with
-    # the session's shuffle width: a 5k-doc build writes ONE sorted file
-    # via coalesce (no repartitionByRange sampling job), a 10^9-doc
-    # build still fans out to shuffle_parts/4 range files
-    dd_parts = max(1, min(shuffle_parts // 4, -(-int(doc_num) // 1_000_000)))
-    dd = (
-        doc_dict.coalesce(1) if dd_parts == 1
-        else doc_dict.repartitionByRange(dd_parts, "doc_id")
-    )
-    dd.sortWithinPartitions("doc_id").write.mode("overwrite").parquet(
-        f"{out_dir}/doc_dict"
-    )
-    write_term_dict(
-        term_dict, f"{out_dir}/term_dict",
-        max(1, shuffle_parts // 8), config.pq_rowgroup_bytes,
-        n_rows=n_terms,
-    )
+    write_doc_dict(doc_dict, f"{out_dir}/doc_dict", doc_num)
+    write_term_dict(term_dict, f"{out_dir}/term_dict", n_terms, config)
     dstats.unpersist()
     _mark("dict_writes")
-
-    # per-salt lineage from the WRITTEN blocks (metadata columns only —
-    # parquet column pruning never touches the payloads; no cache of the
-    # packed relation, which would not fit at 10^12 docs).  Explicit
-    # schema: a corpus whose every doc tokenizes to nothing writes ZERO
-    # posting files, and schema inference on the empty dir would fail
-    # the build (a legitimate crawl partition can be all-empty after
-    # text extraction)
-    written = spark.read.schema(
-        "term_id long, salt int, block_seq int, n int, "
-        "min_doc long, max_doc long"
-    ).parquet(f"{out_dir}/postings")
-    if resume and done_salts:
-        written = written.filter(~F.col("salt").isin(list(done_salts)))
-    lineage = written.groupBy("salt").agg(
-        F.sum("n").alias("rows_in"),
-        F.expr(
-            "bit_xor(xxhash64(term_id, block_seq, n, min_doc, max_doc))"
-        ).alias("checksum"),
+    write_lineage(
+        spark, f"{out_dir}/postings", manifest_path, "postings",
+        where=~F.col("salt").isin(list(done_salts)) if append else None,
+        mode=mode,
     )
-    mrows = (
-        lineage.withColumn("phase", F.lit("postings"))
-        .withColumn("rows_out", F.col("rows_in"))
-        .withColumn("ts", F.current_timestamp())
-        .select("salt", "phase", "rows_in", "rows_out", "checksum", "ts")
-    )
-    mmode = "append" if (resume and done_salts) else "overwrite"
-    mrows.write.mode(mmode).parquet(manifest_path)
     _mark("lineage_manifest")
 
-    meta = {
-        "doc_num": int(doc_num),
-        "total_len": int(total_len),
-        "n_terms": int(n_terms),
-        "term_bytes": int(term_bytes or 0),
-        "salt_range": int(salt_range),
-        "n_salts": int(n_salts),
-        "term_buckets": int(config.term_buckets),
-        "block_size": int(config.block_size),
-        "precision": precision,
-        "norms": bool(norms),
-        "generation": 0,
-        "tokenizer": tokenizer or "ws",
-        "k1": float(config.k1),
-        "b": float(config.b),
-        # max_score was packed with real idf/avg_len: the query layer
-        # may trust it as a tight bound while generation stays 0 and
-        # (k1, b) match.  Any pack path that omits idf must NOT set
-        # this (max_score would be 0.0 and zero out every bound).
-        "tight_bounds": True,
-        "dtype": config.dtype,
-        "built_in_sec": round(time.time() - t0, 3),
-        "phases": phases,
-    }
-    from tf_idf_vectorizer_spark.ioutil import write_json_atomic
-
-    write_json_atomic(meta, f"{out_dir}/meta.json")
+    meta = write_meta(
+        out_dir, t0, doc_num=doc_num, total_len=total_len, n_terms=n_terms,
+        term_bytes=term_bytes, n_salts=n_salts, salt_range=salt_range,
+        config=config, precision=precision, norms=norms,
+        tokenizer=tokenizer or "ws", phases=phases,
+    )
     if tf_persisted:
         tf.unpersist()
     return meta

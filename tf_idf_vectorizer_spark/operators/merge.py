@@ -12,7 +12,13 @@ The Spark restatement is simpler because term ids are CONTENT hashes
 remap.  Merging is a dataflow over live posting rows:
 
   decode(live rows of A, minus B's doc ids)  ∪  decode(live rows of B)
-    -> re-salt -> pack_blocks_jvm(gen 0) -> write out_dir
+    -> df/idf from the merged live rows      (term_dict)
+    -> re-salt (tables.salting over the merged max doc id)
+    -> pack_blocks_jvm(gen 0, merged idf)    (tight max_score bounds)
+    -> tables.write_postings / write_doc_dict / write_term_dict /
+       write_lineage / write_meta            (the build's layout: term-
+                                              sorted salt files, range-
+                                              sorted doc_dict)
 
 Collision policy matches the reference: a doc id present in both sides
 takes B's content (``merge`` calls ``add_tf_vec`` which overwrites,
@@ -26,7 +32,6 @@ The merged index is query-identical to a fresh build of the union corpus
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -34,8 +39,15 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from tf_idf_vectorizer_spark.config import DEFAULT, EngineConfig
-from tf_idf_vectorizer_spark.operators.index_build import (
-    pack_blocks_jvm,
+from tf_idf_vectorizer_spark.operators.index_build import pack_blocks_jvm
+from tf_idf_vectorizer_spark.operators.stats import with_norms
+from tf_idf_vectorizer_spark.operators.tables import (
+    salt_of,
+    salting,
+    write_doc_dict,
+    write_lineage,
+    write_meta,
+    write_postings,
     write_term_dict,
 )
 from tf_idf_vectorizer_spark.query.packed import PackedIndex
@@ -115,27 +127,13 @@ def merge_indexes(
     ).first()
 
     if norms:
-        w = F.col("tf").cast(dt) * F.col("idf").cast(dt)
-        new_norms = (
-            rows.join(term_dict.select("term_id", "idf"), "term_id")
-            .groupBy("doc_id")
-            .agg(F.sqrt(F.sum((w * w).cast("double"))).alias("new_norm"))
-        )
-        doc_dict = (
-            doc_dict.join(new_norms, "doc_id", "left")
-            .fillna({"new_norm": 0.0})
-            .drop("norm")
-            .withColumnRenamed("new_norm", "norm")
-        )
+        doc_dict = with_norms(doc_dict, rows, term_dict, precision)
 
-    n_salts = max(
-        int(config.n_salts), -(-(max_id + 1) // int(config.salt_target_rows))
-    )
-    salt_range = max(1, (max_id + n_salts) // n_salts)
+    n_salts, salt_range = salting(max_id, config)
     # (term_id, salt) clustering comes from the pack aggregation itself
     salted = rows.select(
         "term_id",
-        (F.col("doc_id") / F.lit(salt_range)).cast("int").alias("salt"),
+        salt_of(salt_range).alias("salt"),
         "doc_id",
         F.col("tf").cast("int").alias("tf"),
         F.col("doc_len").cast("int").alias("doc_len"),
@@ -155,64 +153,14 @@ def merge_indexes(
         idf_df=term_dict.select("term_id", "idf"),
         max_doc_bound=max_id,
     )
-    # blocks (small, compressed) reshuffle to the salt layout
-    packed = packed.repartition(4 * n_salts, "salt")
-    # sort leads with salt so FileFormatWriter keeps this ordering
-    # instead of inserting its own order-shredding SortExec(salt)
-    # (see index_build.py pack_write)
-    packed.sortWithinPartitions(
-        "salt", "term_id", "block_seq"
-    ).write.partitionBy("salt").option(
-        "parquet.block.size", str(int(config.pq_rowgroup_bytes))
-    ).mode("overwrite").parquet(f"{out_dir}/postings")
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    doc_dict.coalesce(max(1, shuffle_parts // 4)).write.mode("overwrite").parquet(
-        f"{out_dir}/doc_dict"
-    )
-    write_term_dict(
-        term_dict, f"{out_dir}/term_dict",
-        max(1, shuffle_parts // 8), config.pq_rowgroup_bytes,
-    )
-
-    # per-salt lineage, metadata columns only (same shape as build_index)
-    written = spark.read.parquet(f"{out_dir}/postings")
-    lineage = written.groupBy("salt").agg(
-        F.sum("n").alias("rows_in"),
-        F.expr(
-            "bit_xor(xxhash64(term_id, block_seq, n, min_doc, max_doc))"
-        ).alias("checksum"),
-    )
-    (
-        lineage.withColumn("phase", F.lit("merge"))
-        .withColumn("rows_out", F.col("rows_in"))
-        .withColumn("ts", F.current_timestamp())
-        .select("salt", "phase", "rows_in", "rows_out", "checksum", "ts")
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/manifest")
-    )
+    write_postings(packed, f"{out_dir}/postings", n_salts, config)
+    write_doc_dict(doc_dict, f"{out_dir}/doc_dict", doc_num)
+    write_term_dict(term_dict, f"{out_dir}/term_dict", n_terms, config)
+    write_lineage(spark, f"{out_dir}/postings", f"{out_dir}/manifest", "merge")
     term_dict.unpersist()
-
-    meta = {
-        "doc_num": doc_num,
-        "total_len": total_len,
-        "n_terms": int(n_terms),
-        "term_bytes": int(term_bytes or 0),
-        "salt_range": int(salt_range),
-        "n_salts": int(n_salts),
-        "term_buckets": int(config.term_buckets),
-        "block_size": int(config.block_size),
-        "precision": precision,
-        "norms": norms,
-        "generation": 0,
-        "k1": float(config.k1),
-        "b": float(config.b),
-        "tight_bounds": True,
-        "dtype": config.dtype,
-        "tokenizer": tok_a,
-        "built_in_sec": round(time.time() - t0, 3),
-        "merged_from": [dir_a, dir_b],
-    }
-    from tf_idf_vectorizer_spark.ioutil import write_json_atomic
-
-    write_json_atomic(meta, f"{out_dir}/meta.json")
-    return meta
+    return write_meta(
+        out_dir, t0, doc_num=doc_num, total_len=total_len, n_terms=n_terms,
+        term_bytes=term_bytes, n_salts=n_salts, salt_range=salt_range,
+        config=config, precision=precision, norms=norms, tokenizer=tok_a,
+        merged_from=[dir_a, dir_b],
+    )

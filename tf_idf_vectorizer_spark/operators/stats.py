@@ -71,3 +71,24 @@ def doc_stats(
         F.sum("tf").alias("doc_len"),
         F.sqrt(F.sum((w * w).cast("double"))).alias("norm"),
     )
+
+
+def with_norms(
+    doc_dict: DataFrame, rows: DataFrame, idf: DataFrame, precision: str = "f32"
+) -> DataFrame:
+    """``doc_dict`` with ``norm`` recomputed (as in ``doc_stats``) from
+    live posting ``rows`` (term_id, doc_id, tf) under the current
+    ``idf`` (term_id, idf); 0.0 for docs without rows."""
+    dt = "float" if precision == "f32" else "double"
+    w = F.col("tf").cast(dt) * F.col("idf").cast(dt)
+    norms = (
+        rows.join(idf.select("term_id", "idf"), "term_id")
+        .groupBy("doc_id")
+        .agg(F.sqrt(F.sum((w * w).cast("double"))).alias("new_norm"))
+    )
+    return (
+        doc_dict.join(norms, "doc_id", "left")
+        .fillna({"new_norm": 0.0})
+        .drop("norm")
+        .withColumnRenamed("new_norm", "norm")
+    )

@@ -1,0 +1,182 @@
+"""The one writer for every index table.
+
+build_index, IncrementalIndex (apply_batch, refresh_norms, compact) and
+merge_indexes all write through this module, so the layout the query
+side prunes on is defined once:
+
+  postings   salt=S/ dirs, one file per salt sorted by (term_id,
+             block_seq), bounded row groups: the per-group term_id
+             min/max stats are a coarse term index
+  manifest   per-salt lineage rows of the written blocks
+  doc_dict   ~1M docs per file, range-partitioned and sorted by doc_id:
+             the WAND rescore's doc-range predicates prune row groups
+  term_dict  ~250k terms per file, range-partitioned and sorted by term,
+             bounded row groups: a cold lookup prunes to ~one group/term
+  meta.json  the scalars every reader needs
+"""
+
+from __future__ import annotations
+
+import time
+
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from tf_idf_vectorizer_spark.config import EngineConfig
+from tf_idf_vectorizer_spark.ioutil import write_json_atomic
+
+BLOCK_SCHEMA = (
+    "term_id long, salt int, block_seq int, n int, min_doc long, "
+    "max_doc long, max_tf long, min_dl long, max_dl long, "
+    "max_score double, doc_deltas binary, tfs binary"
+)
+# schema of the WRITTEN postings files (salt is the partition column).
+# Every reader of a postings dir passes it explicitly: a corpus (or a
+# micro-batch) whose docs all tokenize to nothing writes ZERO posting
+# files, and parquet schema inference on a file-less dir is an error.
+# min_dl yields the BM25 upper bound, max_dl the lower bound of the WAND
+# driver-theta fast path.  gen is the MVCC generation: a doc's live rows
+# are those whose gen matches its doc_dict row.
+POSTINGS_FILE_SCHEMA = BLOCK_SCHEMA + ", bucket int, gen int"
+
+DOCS_PER_FILE = 1_000_000
+TERMS_PER_FILE = 250_000
+
+
+def salting(max_doc_id: int, config: EngineConfig) -> tuple[int, int]:
+    """(n_salts, salt_range) for doc ids in [0, max_doc_id]: enough
+    salts that no (term_id, salt) run exceeds ~salt_target_rows
+    postings.  Never raised for parallelism — more salts fragment
+    mid-frequency terms into small blocks (more bytes, more WAND
+    metadata)."""
+    max_doc_id = int(max_doc_id)
+    n_salts = max(
+        int(config.n_salts), -(-(max_doc_id + 1) // int(config.salt_target_rows))
+    )
+    return n_salts, max(1, (max_doc_id + n_salts) // n_salts)
+
+
+def salt_of(salt_range: int, col: str = "doc_id") -> Column:
+    """Doc-RANGE salt: float division + truncating cast (compact's numpy
+    repacker replicates exactly this)."""
+    return (F.col(col) / F.lit(int(salt_range))).cast("int")
+
+
+def _shuffle_parts(spark: SparkSession) -> int:
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def write_postings(
+    packed: DataFrame, path: str, n_salts: int, config: EngineConfig,
+    mode: str = "overwrite",
+) -> None:
+    """Packed blocks (small, compressed) reshuffle to salt: 4x more hash
+    bins than salts puts each salt in ONE partition, so ONE
+    term_id-sorted file per salt dir."""
+    parts = max(4 * int(n_salts), _shuffle_parts(packed.sparkSession))
+    (
+        packed.repartition(parts, "salt")
+        # the sort MUST lead with the partitionBy column: FileFormatWriter
+        # otherwise inserts its own SortExec(salt), whose spill merge
+        # interleaves equal-salt rows from different chunks and shreds
+        # the (term_id, block_seq) order the row-group term index needs
+        .sortWithinPartitions("salt", "term_id", "block_seq")
+        .write.partitionBy("salt")
+        .option("parquet.block.size", str(int(config.pq_rowgroup_bytes)))
+        .mode(mode)
+        .parquet(path)
+    )
+
+
+def write_lineage(
+    spark: SparkSession, postings_path: str, manifest_path: str, phase: str,
+    where: Column | None = None, mode: str = "overwrite",
+) -> None:
+    """Manifest rows (salt, phase, rows_in, rows_out, checksum, ts) of the
+    WRITTEN blocks selected by ``where``, from metadata columns only."""
+    written = spark.read.schema(POSTINGS_FILE_SCHEMA).parquet(postings_path)
+    if where is not None:
+        written = written.filter(where)
+    written.groupBy("salt").agg(
+        F.sum("n").alias("rows_in"),
+        F.expr(
+            "bit_xor(xxhash64(term_id, block_seq, n, min_doc, max_doc))"
+        ).alias("checksum"),
+    ).select(
+        "salt",
+        F.lit(phase).alias("phase"),
+        "rows_in",
+        F.col("rows_in").alias("rows_out"),
+        "checksum",
+        F.current_timestamp().alias("ts"),
+    ).write.mode(mode).parquet(manifest_path)
+
+
+def _write_sorted(
+    df: DataFrame, path: str, key: str, parts: int, mode: str = "overwrite",
+    rowgroup_bytes: int | None = None,
+) -> None:
+    # one file goes through coalesce: no repartitionByRange sampling job
+    w = df.coalesce(1) if parts <= 1 else df.repartitionByRange(parts, key)
+    writer = w.sortWithinPartitions(key).write.mode(mode)
+    if rowgroup_bytes is not None:
+        writer = writer.option("parquet.block.size", str(int(rowgroup_bytes)))
+    writer.parquet(path)
+
+
+def write_doc_dict(
+    df: DataFrame, path: str, n_docs: int, mode: str = "overwrite"
+) -> None:
+    """~1M docs per file, capped at a quarter of the session's shuffle
+    width (measured 2x+ on post-compact query latency when a rewrite
+    lost the doc_id range layout)."""
+    parts = min(
+        _shuffle_parts(df.sparkSession) // 4, -(-int(n_docs) // DOCS_PER_FILE)
+    )
+    _write_sorted(df, path, "doc_id", parts, mode)
+
+
+def write_term_dict(
+    df: DataFrame, path: str, n_rows: int, config: EngineConfig
+) -> None:
+    """~250k terms per file, with the postings' row-group bound."""
+    _write_sorted(
+        df, path, "term", -(-int(n_rows) // TERMS_PER_FILE),
+        rowgroup_bytes=config.pq_rowgroup_bytes,
+    )
+
+
+def write_meta(
+    out_dir: str, t0: float, *, doc_num: int, total_len: int, n_terms: int,
+    term_bytes: int | None, n_salts: int, salt_range: int,
+    config: EngineConfig, precision: str, norms: bool, tokenizer: str,
+    **extra,
+) -> dict:
+    """Atomically write and return a freshly packed index's meta.json.
+    Every block is at generation 0 with max_score packed under real
+    idf/avg_len, so ``tight_bounds`` holds while generation stays 0 and
+    (k1, b) match; a pack that omits idf must not claim it."""
+    meta = {
+        "doc_num": int(doc_num),
+        "total_len": int(total_len),
+        "n_terms": int(n_terms),
+        # the driver-pin decision is memory-based: 2M 4-char terms and
+        # 2M 500-byte URLs are very different pins
+        "term_bytes": int(term_bytes or 0),
+        "salt_range": int(salt_range),
+        "n_salts": int(n_salts),
+        "term_buckets": int(config.term_buckets),
+        "block_size": int(config.block_size),
+        "precision": precision,
+        "norms": bool(norms),
+        "generation": 0,
+        "tokenizer": tokenizer,
+        "k1": float(config.k1),
+        "b": float(config.b),
+        "tight_bounds": True,
+        "dtype": config.dtype,
+        "built_in_sec": round(time.time() - t0, 3),
+        **extra,
+    }
+    write_json_atomic(meta, f"{out_dir}/meta.json")
+    return meta

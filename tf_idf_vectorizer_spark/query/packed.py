@@ -324,7 +324,7 @@ class PackedIndex:
         # explicit schema: an all-empty-docs corpus legitimately has
         # ZERO posting files (doc_dict still holds the docs), and
         # schema inference on the file-less dir would fail the open
-        from tf_idf_vectorizer_spark.operators.index_build import (
+        from tf_idf_vectorizer_spark.operators.tables import (
             POSTINGS_FILE_SCHEMA,
         )
 
@@ -466,7 +466,7 @@ class PackedIndex:
         stats for driver-side dictionary point lookups, or None when
         unavailable (non-local path, pyarrow missing, no stats).  The
         dictionary is written range-partitioned and sorted by term
-        (index_build.write_term_dict), so each group's [min, max] is a
+        (tables.write_term_dict), so each group's [min, max] is a
         tight term interval; parquet stat TRUNCATION keeps min a prefix
         (<= true min) and max incremented past the true max, so pruning
         on them stays a superset."""

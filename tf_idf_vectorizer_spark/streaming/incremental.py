@@ -71,6 +71,7 @@ building fresh from the final corpus state.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -84,9 +85,16 @@ from pyspark.sql import functions as F
 from tf_idf_vectorizer_spark.config import DEFAULT, EngineConfig, with_effective_tf
 from tf_idf_vectorizer_spark.ioutil import recover_dir, write_json_atomic
 from tf_idf_vectorizer_spark.operators.index_build import (
-    POSTINGS_FILE_SCHEMA,
     make_live_repacker,
     pack_blocks_jvm,
+)
+from tf_idf_vectorizer_spark.operators.stats import with_norms
+from tf_idf_vectorizer_spark.operators.tables import (
+    POSTINGS_FILE_SCHEMA,
+    salt_of,
+    write_doc_dict,
+    write_lineage,
+    write_postings,
     write_term_dict,
 )
 from tf_idf_vectorizer_spark.query.packed import (
@@ -118,30 +126,22 @@ def _orphan_local_path(uri: str) -> str:
     return local.split("file:", 1)[-1] if local.startswith("file:") else local
 
 
-def _write_doc_dict(
-    spark: SparkSession, df: DataFrame, path: str, persist: bool = False
-) -> None:
-    """Full doc_dict rewrite in the FRESH-BUILD layout: range-partitioned
-    and sorted by doc_id, so the WAND rescore's candidate doc-range
-    predicates prune row groups (index_build.py writes it the same way —
-    a compacted or rewritten index must not silently lose that layout,
-    measured 2x+ on post-compact query latency when it did).
+def _releasing(method):
+    """Run ``method`` with ``self._held`` collecting the cached relations
+    and broadcasts it creates, and unpersist them when it returns or
+    raises: a long-running stream_updates must not accumulate them."""
 
-    ``persist=True`` materializes ``df`` first: repartitionByRange's
-    range sampler is a full pass over the input, so a non-trivial
-    upstream (the mixed-batch anti-join + union) would otherwise be
-    computed twice.  Callers whose input is already cached (compact
-    reads PackedIndex.doc_dict, which is) skip it."""
-    parts = max(1, int(spark.conf.get("spark.sql.shuffle.partitions")) // 4)
-    if persist:
-        df = df.persist()
-    try:
-        df.repartitionByRange(parts, "doc_id").sortWithinPartitions(
-            "doc_id"
-        ).write.mode("overwrite").parquet(path)
-    finally:
-        if persist:
-            df.unpersist()
+    @functools.wraps(method)
+    def run(self, *args, **kwargs):
+        outer, self._held = getattr(self, "_held", None), []
+        try:
+            return method(self, *args, **kwargs)
+        finally:
+            for h in self._held:
+                h.unpersist()
+            self._held = outer
+
+    return run
 
 
 class IncrementalIndex:
@@ -249,6 +249,7 @@ class IncrementalIndex:
             spark.catalog.refreshByPath(table_path)
 
     # ------------------------------------------------------------------
+    @_releasing
     def apply_batch(
         self,
         adds: DataFrame | None = None,
@@ -311,6 +312,7 @@ class IncrementalIndex:
             adds = adds.select(
                 F.col(key_col).alias("doc_id"), F.col(text_col).alias("text")
             ).cache()
+            self._held.append(adds)
             ids_df = adds.select("doc_id")
         elif tf_adds is not None:
             tf_adds = tf_adds.select(
@@ -321,6 +323,7 @@ class IncrementalIndex:
                 if tf_add_ids is not None
                 else tf_adds.select("doc_id")
             ).distinct().cache()
+            self._held += [tf_adds, ids_df]
 
         dead_ids = set(delete_ids)
         if ids_df is not None:
@@ -376,6 +379,7 @@ class IncrementalIndex:
             if dying_rows:
                 ids = np.array(dead_ids, dtype=np.int64)
                 bc = spark.sparkContext.broadcast(ids)
+                self._held.append(bc)
                 blocks = spark.read.schema(POSTINGS_FILE_SCHEMA).parquet(
                     postings_path
                 ).filter(F.col("gen") <= committed_gen)
@@ -401,6 +405,7 @@ class IncrementalIndex:
                     [r["gen"] for r in dying_rows], np.int64
                 )[d_ord]
                 bc_dying = spark.sparkContext.broadcast((d_ids, d_gens))
+                self._held.append(bc_dying)
 
                 def _dead_counts(batches):
                     import pandas as _pd
@@ -455,9 +460,7 @@ class IncrementalIndex:
                 spark.conf.get("spark.sql.shuffle.partitions")
             )
             pack_parts = max(4 * n_salts, shuffle_parts)
-            salt_col = (
-                (F.col("doc_id") / F.lit(salt_range)).cast("int").alias("salt")
-            )
+            salt_col = salt_of(salt_range).alias("salt")
             if adds is not None:
                 # fused shape (same as build_index): ONE (term_id, salt)
                 # exchange feeds the TF aggregation and the pack, and
@@ -488,6 +491,7 @@ class IncrementalIndex:
                     )
                 )
                 tf = with_effective_tf(raw_tf, self.config).cache()
+                self._held.append(tf)
                 # zero-token docs land here with doc_len 0 — same
                 # universe as the fresh build's narrow doc stats
                 new_doc_stats = adds.select(
@@ -523,6 +527,7 @@ class IncrementalIndex:
                     )
                     .cache()
                 )
+                self._held.append(tf)
             n_added, added_len, max_new_id, max_new_dl = new_doc_stats.agg(
                 F.count("*"), F.sum("doc_len"),
                 F.max("doc_id"), F.max("doc_len"),
@@ -545,15 +550,7 @@ class IncrementalIndex:
                 max_doc_bound=int(max_new_id or 0),
                 max_tf_bound=2 * int(max_new_dl or 0) + 2,
             )
-            # blocks (small, compressed) reshuffle to the salt layout
-            packed = packed.repartition(pack_parts, "salt")
-            # leading salt keeps FileFormatWriter from re-sorting and
-            # shredding the term order (see index_build.py pack_write)
-            packed.sortWithinPartitions(
-                "salt", "term_id", "block_seq"
-            ).write.partitionBy("salt").option(
-                "parquet.block.size", str(int(self.config.pq_rowgroup_bytes))
-            ).mode("append").parquet(postings_path)
+            write_postings(packed, postings_path, n_salts, self.config, "append")
             spark.catalog.refreshByPath(postings_path)
             _mark("pack_write")
 
@@ -561,22 +558,9 @@ class IncrementalIndex:
             # metrics): one manifest row per salt touched by this
             # generation's blocks, computed from the WRITTEN metadata
             # columns only (payloads never read)
-            written = spark.read.schema(POSTINGS_FILE_SCHEMA).parquet(
-                postings_path
-            ).filter(F.col("gen") == gen)
-            lineage = written.groupBy("salt").agg(
-                F.sum("n").alias("rows_in"),
-                F.expr(
-                    "bit_xor(xxhash64(term_id, block_seq, n, min_doc, max_doc))"
-                ).alias("checksum"),
-            )
-            (
-                lineage.withColumn("phase", F.lit(f"batch_gen={gen}"))
-                .withColumn("rows_out", F.col("rows_in"))
-                .withColumn("ts", F.current_timestamp())
-                .select("salt", "phase", "rows_in", "rows_out", "checksum", "ts")
-                .write.mode("append")
-                .parquet(f"{self.dir}/manifest")
+            write_lineage(
+                spark, postings_path, f"{self.dir}/manifest",
+                f"batch_gen={gen}", where=F.col("gen") == gen, mode="append",
             )
             _mark("lineage")
 
@@ -673,10 +657,9 @@ class IncrementalIndex:
         td_name = f"term_dict_v{ver}"
         write_term_dict(
             new_term_dict, f"{self.dir}/{td_name}",
-            2, self.config.pq_rowgroup_bytes,
-            # pre-batch vocab as the file-count hint (~250k terms/file):
-            # small dictionaries write one sorted file, no sampling job
-            n_rows=int(meta.get("n_terms", 0)) or None,
+            # pre-batch vocab as the file-count hint: counting the new
+            # dictionary first would run the stats rewrite twice
+            int(meta.get("n_terms", 0)), self.config,
         )
         new_tables = {"term_dict": td_name}
         if pure_append:
@@ -684,30 +667,30 @@ class IncrementalIndex:
                 dd_path = self._path(meta, "doc_dict")
                 # invisible until the meta flip (readers filter
                 # gen <= committed watermark); reclaimed by the replay
-                # guard if this attempt crashes before the commit
-                # sorted within the appended files: their per-group
-                # doc_id min/max stats stay tight, so the WAND
+                # guard if this attempt crashes before the commit.
+                # The appended files are doc_id-sorted too, so the WAND
                 # rescore's doc-range pushdown keeps pruning across
                 # append generations
-                append_rows.coalesce(4).sortWithinPartitions(
-                    "doc_id"
-                ).write.mode("append").parquet(dd_path)
+                write_doc_dict(append_rows, dd_path, n_added, mode="append")
                 spark.catalog.refreshByPath(dd_path)
         else:
             dd_name = f"doc_dict_v{ver}"
-            _write_doc_dict(
-                spark,
+            # not persisted first: the upstream (scan + broadcast
+            # anti-join + union) costs about one table scan — measured
+            # A/B at 2M docs, materializing it for the range sampler
+            # breaks even at best and doubles the disk footprint
+            write_doc_dict(
                 doc_dict.select("doc_id", "doc_len", "norm", "gen", *dd_extra),
                 f"{self.dir}/{dd_name}",
-                # persist=False: the upstream (scan + broadcast anti-join
-                # + union) costs about one table scan — measured A/B at
-                # 2M docs, materializing it first breaks even at best
-                # and doubles the table's disk footprint at scale
+                meta["doc_num"],
             )
             new_tables["doc_dict"] = dd_name
-        meta["n_terms"] = int(
-            spark.read.parquet(f"{self.dir}/{td_name}").count()
-        )
+        # term_bytes too: _can_pin_dict judges a grown vocabulary by it
+        n_terms, term_bytes = spark.read.parquet(
+            f"{self.dir}/{td_name}"
+        ).agg(F.count("*"), F.sum(F.length("term"))).first()
+        meta["n_terms"] = int(n_terms)
+        meta["term_bytes"] = int(term_bytes or 0)
         _mark("dict_writes")
         _mark("commit")
         meta["batch_phases"] = phases
@@ -748,6 +731,7 @@ class IncrementalIndex:
         )
 
     # ------------------------------------------------------------------
+    @_releasing
     def refresh_norms(self) -> dict:
         """Recompute every doc's cosine norm against the CURRENT idf
         table (norm spans ALL doc terms weighted by current IDF,
@@ -757,32 +741,24 @@ class IncrementalIndex:
         spark = self.spark
         meta = self._meta()
         idx = PackedIndex(spark, self.dir, self.config)
+        self._held += [idx.doc_dict, idx.term_dict]
         decoded = idx.decode_postings(None)
         live = decoded.join(
             idx.doc_dict.select("doc_id", "gen"), ["doc_id", "gen"], "left_semi"
         )
-        dt = "float" if meta.get("precision", "f32") == "f32" else "double"
-        w = F.col("tf").cast(dt) * F.col("idf").cast(dt)
-        norms = (
-            live.join(idx.term_dict.select("term_id", "idf"), "term_id")
-            .groupBy("doc_id")
-            .agg(F.sqrt(F.sum((w * w).cast("double"))).alias("new_norm"))
-        )
-        new_dd = (
-            idx.doc_dict.join(norms, "doc_id", "left")
-            .fillna({"new_norm": 0.0})
-            .drop("norm")
-            .withColumnRenamed("new_norm", "norm")
+        new_dd = with_norms(
+            idx.doc_dict, live, idx.term_dict, meta.get("precision", "f32")
         )
         ver = int(meta.get("table_version", 0)) + 1
         meta["table_version"] = ver
         dd_name = f"doc_dict_v{ver}"
-        _write_doc_dict(spark, new_dd, f"{self.dir}/{dd_name}")
+        write_doc_dict(new_dd, f"{self.dir}/{dd_name}", meta["doc_num"])
         meta["norms"] = True
         self._commit(meta, {"doc_dict": dd_name})
         return meta
 
     # ------------------------------------------------------------------
+    @_releasing
     def compact(self) -> None:
         """Reclaim stale posting rows: decode, keep (doc_id, gen) pairs
         that match doc_dict, re-pack everything at generation 0.  No
@@ -791,6 +767,7 @@ class IncrementalIndex:
         spark = self.spark
         meta = self._meta()
         idx = PackedIndex(spark, self.dir, self.config)
+        self._held += [idx.doc_dict, idx.term_dict]
         salt_range = meta["salt_range"]
         n_salts = int(meta.get("n_salts", 8))
         avg_len = float(meta.get("total_len", 0)) / max(
@@ -835,6 +812,7 @@ class IncrementalIndex:
                     tdf["ln_idf"].to_numpy(np.float64)[t_ord],
                 )
             )
+            self._held.append(bc)
             # salt via min_doc (any block doc gives the block's salt):
             # an all-empty corpus has zero posting files, so the salt
             # PARTITION column may not exist on this relation
@@ -852,9 +830,7 @@ class IncrementalIndex:
                     64 * par,
                 ),
             )
-            salt_key = (
-                F.col("min_doc") / F.lit(int(salt_range))
-            ).cast("int")
+            salt_key = salt_of(salt_range, "min_doc")
             # declare the same nullability the JVM pack derives
             # (posexplode pos / size() / lit are non-null), so the
             # written files are BYTE-identical, footer included
@@ -878,7 +854,7 @@ class IncrementalIndex:
                 ),
                 schema=out_schema,
             )
-            self._write_compacted(spark, idx, meta, packed, n_salts)
+            self._write_compacted(idx, meta, packed, n_salts)
             return
         if ds is not None:
             import pandas as _pd
@@ -887,6 +863,7 @@ class IncrementalIndex:
             bc = spark.sparkContext.broadcast(
                 (ids_s, dls_s.astype(np.int64), gens_s)
             )
+            self._held.append(bc)
 
             def _decode_live(batches):
                 ids_v, dls_v, gens_v = bc.value
@@ -915,7 +892,7 @@ class IncrementalIndex:
             )
         rows = live.select(
             "term_id",
-            (F.col("doc_id") / F.lit(salt_range)).cast("int").alias("salt"),
+            salt_of(salt_range).alias("salt"),
             "doc_id",
             F.col("tf").cast("int").alias("tf"),
             F.col("doc_len").cast("int").alias("doc_len"),
@@ -943,11 +920,10 @@ class IncrementalIndex:
             idf_df=idx.term_dict.select("term_id", "idf"),
             max_doc_bound=max_doc_id,
         )
-        self._write_compacted(spark, idx, meta, packed, n_salts)
+        self._write_compacted(idx, meta, packed, n_salts)
 
     def _write_compacted(
         self,
-        spark: SparkSession,
         idx: PackedIndex,
         meta: dict,
         packed: DataFrame,
@@ -961,25 +937,14 @@ class IncrementalIndex:
         ver = int(meta.get("table_version", 0)) + 1
         meta["table_version"] = ver
         p_name, dd_name = f"postings_v{ver}", f"doc_dict_v{ver}"
-        # blocks (small, compressed) reshuffle to the salt layout
-        packed = packed.repartition(4 * n_salts, "salt")
-        # leading salt keeps FileFormatWriter from re-sorting and
-        # shredding the term order (see index_build.py pack_write)
-        packed.sortWithinPartitions(
-            "salt", "term_id", "block_seq"
-        ).write.partitionBy("salt").option(
-            "parquet.block.size", str(int(self.config.pq_rowgroup_bytes))
-        ).mode("overwrite").parquet(
-            f"{self.dir}/{p_name}"
-        )
-        dd_cols = idx.doc_dict.columns
-        _write_doc_dict(
-            self.spark,
+        write_postings(packed, f"{self.dir}/{p_name}", n_salts, self.config)
+        write_doc_dict(
             idx.doc_dict.select(
                 *[F.lit(0).alias("gen") if c == "gen" else F.col(c)
-                  for c in dd_cols]
+                  for c in idx.doc_dict.columns]
             ),
             f"{self.dir}/{dd_name}",
+            meta["doc_num"],
         )
         meta["generation"] = 0
         meta["k1"] = float(meta.get("k1", self.config.k1))
