@@ -7,8 +7,10 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from tf_idf_vectorizer_spark.operators.codec import (
+    decode_blocks,
     decode_deltas,
     decode_varint,
+    encode_blocks,
     encode_deltas,
     encode_varint,
 )
@@ -62,3 +64,65 @@ def test_varint_roundtrip_hypothesis(xs):
 def test_delta_roundtrip_hypothesis(gaps):
     ids = np.cumsum(np.array(gaps, dtype=np.uint64), dtype=np.uint64)
     assert np.array_equal(decode_deltas(encode_deltas(ids)), ids)
+
+
+def _blocks_near_int64_limit():
+    """Six 32-posting blocks of one term with doc ids near 2^62."""
+    rng = np.random.default_rng(62)
+    ids = np.sort(
+        (1 << 62) + rng.choice(1 << 40, size=6 * 32, replace=False)
+    ).astype(np.int64)
+    tfs = rng.integers(1, 50, size=ids.size).astype(np.int64)
+    starts = np.arange(0, ids.size, 32)
+    doc_deltas, tf_bytes = encode_blocks(ids, tfs, starts)
+    return ids, tfs, doc_deltas, tf_bytes
+
+
+def test_decode_blocks_exact_when_cumsum_wraps():
+    """The decoder's running cumsum spans all blocks of a call: six block
+    heads near 2^62 push it past 2^63, where int64 wraps negative.  The
+    ids still come back exact — numpy int64 arithmetic is modular, and
+    each id is a difference of two wrapped sums."""
+    ids, tfs, doc_deltas, tf_bytes = _blocks_near_int64_limit()
+    raw = decode_varint(b"".join(doc_deltas)).astype(np.int64)
+    with np.errstate(over="ignore"):
+        assert (np.cumsum(raw) < 0).any()  # the wrap really happens
+    got_ids, got_tfs = decode_blocks(np.full(6, 32), doc_deltas, tf_bytes)
+    assert np.array_equal(got_ids, ids)
+    assert np.array_equal(got_tfs, tfs)
+
+
+def test_compact_repacker_exact_when_cumsum_wraps():
+    """Same six blocks through compact's repack kernel (decode,
+    liveness, re-block, re-encode): every live posting survives with
+    its doc id intact, and one dead posting is dropped."""
+    from types import SimpleNamespace
+
+    import pandas as pd
+
+    from tf_idf_vectorizer_spark.operators.index_build import make_live_repacker
+
+    ids, tfs, doc_deltas, tf_bytes = _blocks_near_int64_limit()
+    gens = np.zeros(ids.size, dtype=np.int64)
+    gens[7] = 1  # doc_dict moved this doc to gen 1: its gen-0 row is dead
+    bc = SimpleNamespace(value=(
+        ids, np.full(ids.size, 10, np.int64), gens,
+        np.array([42], np.int64), np.array([0.5]),
+    ))
+    blocks = pd.DataFrame({
+        "term_id": np.full(6, 42, np.int64),
+        "min_doc": ids[::32],
+        "n": np.full(6, 32, np.int32),
+        "gen": np.zeros(6, np.int32),
+        "doc_deltas": doc_deltas,
+        "tfs": tf_bytes,
+    })
+    repack = make_live_repacker(
+        bc, block_size=32, term_buckets=8, k1=1.2, b=0.75, avg_len=10.0,
+        salt_range=1 << 62,
+    )
+    out = pd.concat(list(repack(iter([blocks]))), ignore_index=True)
+    got_ids, got_tfs = decode_blocks(out["n"], out["doc_deltas"], out["tfs"])
+    live = gens == 0
+    assert np.array_equal(got_ids, ids[live])
+    assert np.array_equal(got_tfs, tfs[live])

@@ -188,14 +188,26 @@ def test_batches_and_compact_release_caches_and_broadcasts(
     spark, base_docs, tmp_path, monkeypatch
 ):
     """A long-running stream applies batch after batch: every relation
-    apply_batch / compact cache and every broadcast they create must be
-    released when the call returns, or the driver and executors
-    accumulate one set per batch."""
+    apply_batch / set_term_counts / compact / merge_indexes cache and
+    every broadcast they create must be released when the call
+    returns, or the driver and executors accumulate one set per call."""
     from pyspark import SparkContext
     from pyspark.broadcast import Broadcast
 
+    from tf_idf_vectorizer_spark.operators.merge import merge_indexes
+
     inc_dir = str(tmp_path / "rel")
     build_index(spark, base_docs, inc_dir, config=CFG)
+    other_dir = str(tmp_path / "rel_other")
+    build_index(
+        spark,
+        spark.createDataFrame(
+            [(9000, "merged spark doc"), (0, "collides with doc zero")],
+            "doc_id long, text string",
+        ),
+        other_dir,
+        config=CFG,
+    )
     inc = IncrementalIndex(spark, inc_dir, CFG)
     created, released = [], set()
     make_bc, unpersist_bc = SparkContext.broadcast, Broadcast.unpersist
@@ -221,11 +233,44 @@ def test_batches_and_compact_release_caches_and_broadcasts(
             ),
             delete_ids=[10 + i],
         )
+    inc.set_term_counts(
+        spark.createDataFrame(
+            [(3, "spark", 4), (4, "join", 0)], "doc_id long, term string, count long"
+        )
+    )
     inc.compact()
+    merge_indexes(spark, inc_dir, other_dir, str(tmp_path / "rel_merged"), CFG)
     assert jsc.getPersistentRDDs().size() == baseline
-    # two per mixed batch (dead ids, dying rows) + compact's liveness pin
+    # one per mixed batch (the dying rows), two for set_term_counts
+    # (get_tf's doc ids + its batch's dying rows), compact's liveness pin
     assert len(created) >= 5
     assert all(id(bc) in released for bc in created)
+
+
+def test_duplicate_doc_dict_row_fails_loudly(spark, base_docs, tmp_path):
+    """Liveness matches every posting against ONE doc_dict row per
+    doc_id.  A second row for a doc_id breaks that contract, and the
+    readers that pin the doc_dict as sorted arrays must refuse it, not
+    silently match whichever row sorts first."""
+    import glob
+    import json as _json
+
+    import pyarrow.parquet as pq
+
+    from tf_idf_vectorizer_spark.ioutil import table_path
+
+    idx_dir = str(tmp_path / "dup")
+    build_index(spark, base_docs, idx_dir, config=CFG)
+    meta = _json.load(open(f"{idx_dir}/meta.json"))
+    dd_dir = table_path(idx_dir, meta, "doc_dict")
+    first = sorted(glob.glob(f"{dd_dir}/*.parquet"))[0]
+    pq.write_table(pq.read_table(first).slice(0, 1), f"{dd_dir}/part-dup.parquet")
+    spark.catalog.refreshByPath(dd_dir)
+
+    with pytest.raises(ValueError, match="doc_dict"):
+        PackedIndex(spark, idx_dir, CFG).bm25_topk_rows(["spark", "join"])
+    with pytest.raises(ValueError, match="doc_dict"):
+        IncrementalIndex(spark, idx_dir, CFG).compact()
 
 
 def test_batch_refreshes_term_bytes(spark, base_docs, tmp_path):

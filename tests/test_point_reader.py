@@ -1,13 +1,13 @@
-"""Direct tests for the driver-side pyarrow posting point reader
-(PackedIndex._pq_files / _pq_point_fetch / _pq_point_fetch_keys).
+"""Direct tests for the driver block fetch and its pyarrow point
+reader (PackedIndex._pq_files / _fetch_blocks).
 
-The point reader serves cache-miss postings fetches and the
-distributed-WAND rescore without a Spark job, by row-group pruning on
-the (term_id, block_seq) min/max stats of the term-sorted postings
-files.  It must be row-for-row interchangeable with the executor scan
-it replaces: same rows (parity), same committed-generation watermark
-(orphan rows of a crashed batch stay invisible), and a clean None
-fallback when the byte cap is exceeded — never a wrong answer.
+The point reader serves cache-miss postings fetches, the sparse-term
+payloads and the WAND rescore without a Spark job, by row-group pruning
+on the (term_id, block_seq) min/max stats of the term-sorted postings
+files.  It must be row-for-row interchangeable with the Spark scan it
+replaces: same rows (parity), same committed-generation watermark
+(orphan rows of a crashed batch stay invisible), and a clean fallback
+to that scan when the byte cap is exceeded — never a wrong answer.
 """
 
 from __future__ import annotations
@@ -56,6 +56,28 @@ def _rows_key(pdf: pd.DataFrame) -> list[tuple]:
     )
 
 
+def _no_spark_fallback(pi):
+    """Make the fetch's Spark-collect fallback fail, so a passing fetch
+    proves the pyarrow point read served it."""
+
+    def fail(df):
+        raise AssertionError("point read fell back to a Spark collect")
+
+    pi._topandas_arrow = fail
+
+
+def _count_spark_fallbacks(pi) -> list:
+    calls = []
+    collect = pi._topandas_arrow
+
+    def spy(df):
+        calls.append(df)
+        return collect(df)
+
+    pi._topandas_arrow = spy
+    return calls
+
+
 def _sample_tids(pi, n=12) -> list[int]:
     rows = (
         pi.term_dict.orderBy("df", "term").select("term_id").limit(n // 2)
@@ -98,13 +120,14 @@ def test_multiple_row_groups_exist(pi, idx_dir):
 
 def test_point_fetch_matches_executor_scan(pi):
     tids = _sample_tids(pi)
-    pdf = pi._pq_point_fetch(tids)
-    assert pdf is not None and len(pdf) > 0
     scan = pi._topandas_arrow(
         pi._blocks_for(tids)
         .filter(F.col("term_id").isin([int(t) for t in tids]))
         .select(*FETCH_COLS)
     )
+    _no_spark_fallback(pi)
+    pdf = pi._fetch_blocks(tids, FETCH_COLS)
+    assert len(pdf) > 0
     assert _rows_key(pdf[FETCH_COLS]) == _rows_key(scan)
 
 
@@ -124,8 +147,9 @@ def test_point_fetch_respects_watermark(spark, idx_dir):
     try:
         pi = PackedIndex(spark, idx_dir, CFG)
         tid = int(orphan.column("term_id")[0].as_py())
-        pdf = pi._pq_point_fetch([tid])
-        assert pdf is not None
+        _no_spark_fallback(pi)
+        pdf = pi._fetch_blocks([tid], FETCH_COLS)
+        assert len(pdf) > 0
         # the orphan's rows sit above the committed watermark: invisible
         assert (pdf["gen"] <= int(pi.meta.get("generation", 0))).all()
         assert not (pdf["gen"] == wm_gen).any()
@@ -138,8 +162,14 @@ def test_point_fetch_respects_watermark(spark, idx_dir):
 def test_byte_cap_falls_back_not_wrong(spark, idx_dir):
     pi_a = PackedIndex(spark, idx_dir, CFG)
     pi_b = PackedIndex(spark, idx_dir, CFG)
-    pi_b.PQ_POINT_READ_MAX_BYTES = 0  # force executor-scan fallback
-    assert pi_b._pq_point_fetch(_sample_tids(pi_b)) is None
+    pi_b.PQ_POINT_READ_MAX_BYTES = 0  # force the Spark-scan fallback
+    tids = _sample_tids(pi_b)
+    calls = _count_spark_fallbacks(pi_b)
+    scanned = pi_b._fetch_blocks(tids, FETCH_COLS)
+    assert len(calls) == 1
+    assert _rows_key(scanned) == _rows_key(
+        pi_a._fetch_blocks(tids, FETCH_COLS)[FETCH_COLS]
+    )
     terms = [r[0] for r in pi_a.term_dict.orderBy("df", "term")
              .select("term").limit(3).collect()]
     rows_point = pi_a.bm25_topk_rows(terms, k=10)
@@ -149,7 +179,7 @@ def test_byte_cap_falls_back_not_wrong(spark, idx_dir):
     assert rows_point == rows_scan
 
 
-def test_keyed_fetch_returns_superset(pi, idx_dir):
+def test_keyed_fetch_returns_exactly_the_keys(spark, pi, idx_dir):
     import pyarrow.parquet as pq
 
     frames = []
@@ -162,17 +192,30 @@ def test_keyed_fetch_returns_superset(pi, idx_dir):
     cand = allk.sample(n=min(7, len(allk)), random_state=3)[
         ["term_id", "salt", "block_seq", "gen"]
     ].reset_index(drop=True)
-    got = pi._pq_point_fetch_keys(cand)
-    assert got is not None
-    have = {
-        (int(r.term_id), int(r.salt), int(r.block_seq), int(r.gen))
-        for r in got.itertuples()
-    }
+    cand["is_target"] = np.arange(len(cand)) % 2 == 0
+    tids = cand["term_id"].unique()
+
+    def keyed(pdf):
+        return sorted(
+            (int(r.term_id), int(r.salt), int(r.block_seq), int(r.gen),
+             bool(r.is_target), bytes(r.doc_deltas))
+            for r in pdf.itertuples()
+        )
+
     want = {
-        (int(r.term_id), int(r.salt), int(r.block_seq), int(r.gen))
+        (int(r.term_id), int(r.salt), int(r.block_seq), int(r.gen),
+         bool(r.is_target))
         for r in cand.itertuples()
     }
-    assert want <= have  # row-group-granular superset contains every key
+    _no_spark_fallback(pi)
+    got = pi._fetch_blocks(tids, FETCH_COLS, keys=cand)
+    # the row-group-granular read is cut down to exactly the keys, with
+    # their flags attached
+    assert {k[:5] for k in keyed(got)} == want and len(got) == len(cand)
+    pi_scan = PackedIndex(spark, idx_dir, CFG)
+    pi_scan.PQ_POINT_READ_MAX_BYTES = 0
+    scanned = pi_scan._fetch_blocks(tids, FETCH_COLS, keys=cand)
+    assert keyed(scanned) == keyed(got)
 
 
 def test_term_dict_point_lookup_matches_pinned(spark, idx_dir):

@@ -75,7 +75,7 @@ def test_varint_overflow_raises_not_truncates(spark):
 def test_varint_width_bounds_byte_identical(spark):
     """Bounded-width unroll == the canonical numpy codec on boundary
     values (127/128, 16383/16384, the bound itself)."""
-    from tf_idf_vectorizer_spark.operators.codec import decode_deltas, decode_tfs
+    from tf_idf_vectorizer_spark.operators.codec import decode_blocks, encode_blocks
     from tf_idf_vectorizer_spark.operators.index_build import pack_blocks_jvm
 
     docs = [0, 1, 127, 128, 129, 16383, 16384, 20000]
@@ -88,16 +88,15 @@ def test_varint_width_bounds_byte_identical(spark):
     ).collect()
     assert len(packed) == 1
     blk = packed[0]
-    got_ids = decode_deltas(bytes(blk["doc_deltas"]))
-    got_tfs = decode_tfs(bytes(blk["tfs"]))
+    want_tfs = [d % 97 + 1 for d in sorted(docs)]
+    got_ids, got_tfs = decode_blocks([blk["n"]], [blk["doc_deltas"]], [blk["tfs"]])
     assert got_ids.tolist() == sorted(docs)
-    assert got_tfs.tolist() == [d % 97 + 1 for d in sorted(docs)]
-    # and the stream is the canonical encoding (re-encode comparison)
-    from tf_idf_vectorizer_spark.operators.codec import encode_deltas, encode_tfs
-
-    assert bytes(blk["doc_deltas"]) == encode_deltas(
-        np.array(sorted(docs), dtype=np.uint64)
+    assert got_tfs.tolist() == want_tfs
+    # and the stream is the canonical encoding (numpy re-encode)
+    want_dd, want_tf = encode_blocks(
+        np.array(sorted(docs), dtype=np.int64),
+        np.array(want_tfs, dtype=np.int64),
+        np.zeros(1, dtype=np.int64),
     )
-    assert bytes(blk["tfs"]) == encode_tfs(
-        np.array([d % 97 + 1 for d in sorted(docs)], dtype=np.uint64)
-    )
+    assert bytes(blk["doc_deltas"]) == want_dd[0]
+    assert bytes(blk["tfs"]) == want_tf[0]

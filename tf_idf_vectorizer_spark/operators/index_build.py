@@ -18,9 +18,10 @@ at mod.rs:186-190) with a batch dataflow shaped for 10^12 documents:
                                            group key refines the
                                            partitioning)
     -> groupBy(term_id, salt) collect+sort salt-local runs (exchange-free)
-    -> Catalyst codec projection          (delta + LEB128 varint blocks
+    -> codec.encode_blocks_jvm            (delta + LEB128 varint blocks
                                            of block_size docs — pure JVM
-                                           expressions, _varint_chars)
+                                           expressions; codec.py owns
+                                           the block format)
     -> tables.write_postings              (blocks reshuffle to salt; one
                                            term-sorted file per salt,
                                            bounded row groups = coarse
@@ -62,7 +63,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tf_idf_vectorizer_spark.config import DEFAULT, EngineConfig, with_effective_tf
-from tf_idf_vectorizer_spark.operators.codec import encode_varint_blocks
+from tf_idf_vectorizer_spark.operators.codec import (
+    decode_blocks,
+    encode_blocks,
+    encode_blocks_jvm,
+    sorted_member,
+)
 from tf_idf_vectorizer_spark.operators.stats import corpus_stats, doc_stats, idf_table
 from tf_idf_vectorizer_spark.operators.tables import (
     salt_of,
@@ -109,36 +115,18 @@ def make_live_repacker(
         if not parts or ids_v.size == 0:  # no committed docs -> no live rows
             return
         pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        from tf_idf_vectorizer_spark.operators.codec import decode_varint
-
         n = pdf["n"].to_numpy(np.int64)
-        deltas = decode_varint(
-            b"".join(bytes(x) for x in pdf["doc_deltas"])
-        ).astype(np.int64)
-        tf = decode_varint(
-            b"".join(bytes(x) for x in pdf["tfs"])
-        ).astype(np.int64)
-        starts = np.concatenate(([0], np.cumsum(n)[:-1]))
-        total = np.cumsum(deltas)
-        corr = np.zeros(len(n), dtype=np.int64)
-        corr[1:] = total[starts[1:] - 1]
-        docs = total - np.repeat(corr, n)
+        docs, tf = decode_blocks(n, pdf["doc_deltas"], pdf["tfs"])
         tids = np.repeat(pdf["term_id"].to_numpy(np.int64), n)
         gens = np.repeat(pdf["gen"].to_numpy(np.int64), n)
         # liveness: (doc_id, gen) must match the committed doc_dict row
-        pos = np.searchsorted(ids_v, docs)
-        posc = np.minimum(pos, max(ids_v.size - 1, 0))
-        ok = (
-            (pos < ids_v.size)
-            & (ids_v[posc] == docs)
-            & (gens_v[posc] == gens)
-        )
+        ok, pos = sorted_member(ids_v, docs, gens_v, gens)
         if not ok.any():
             return
         docs = docs[ok]
         tf = tf[ok]
         tids = tids[ok]
-        dls = dls_v[posc[ok]]
+        dls = dls_v[pos[ok]]
         order = np.lexsort((docs, tids))
         docs = docs[order]
         tf = tf[order]
@@ -160,9 +148,6 @@ def make_live_repacker(
         off = np.arange(m, dtype=np.int64) - g_starts[group_of]
         b_starts = np.flatnonzero(off % block_size == 0)
         b_ends = np.append(b_starts[1:], m)
-        dd = docs.copy()
-        dd[1:] -= docs[:-1]
-        dd[b_starts] = docs[b_starts]
         # per-pair BM25 impact — SAME expression, SAME operation order
         # as pack_blocks_jvm's _pair_impact (IEEE doubles: +,*,/ are
         # correctly rounded, so identical op order => identical bits)
@@ -173,16 +158,13 @@ def make_live_repacker(
         imp = tfd * kp1 / denom
         best = np.maximum.reduceat(imp, b_starts)
         bt = tids[b_starts]
-        if ln_tids.size:
-            lp = np.searchsorted(ln_tids, bt)
-            lpc = np.minimum(lp, ln_tids.size - 1)
-            has = (lp < ln_tids.size) & (ln_tids[lpc] == bt)
-            ln = np.where(has, ln_vals[lpc], np.nan)
-        else:
-            ln = np.full(bt.size, np.nan)
+        has, lp = sorted_member(ln_tids, bt)
+        ln = np.full(bt.size, np.nan)
+        ln[has] = ln_vals[lp[has]]
         # when(ln_idf > 0, ln_idf * best).otherwise(0.0); a missing term
         # (NaN here, null in the JVM) lands in the 0.0 branch both ways
         max_score = np.where(ln > 0, ln * best, 0.0)
+        doc_deltas, tf_bytes = encode_blocks(docs, tf, b_starts)
         yield pd.DataFrame(
             {
                 "term_id": bt,
@@ -195,69 +177,14 @@ def make_live_repacker(
                 "min_dl": np.minimum.reduceat(dls, b_starts),
                 "max_dl": np.maximum.reduceat(dls, b_starts),
                 "max_score": max_score,
-                "doc_deltas": encode_varint_blocks(dd, b_starts),
-                "tfs": encode_varint_blocks(tf, b_starts),
+                "doc_deltas": doc_deltas,
+                "tfs": tf_bytes,
                 "bucket": (bt % term_buckets).astype(np.int32),
                 "gen": np.zeros(bt.size, dtype=np.int32),
             }
         )
 
     return repack
-
-
-def varint_width(bound: int | None) -> int:
-    """Unroll width (LEB128 byte count) that provably covers every value
-    in [0, bound].  None -> the full 10-byte unroll (any uint64)."""
-    if bound is None:
-        return 10
-    b = max(int(bound), 1)
-    return min(10, max(1, (b.bit_length() + 6) // 7))
-
-
-def _varint_chars(v, width: int = 10):
-    """LEB128 varint of a non-negative long as a string of codepoints
-    0..255 (one per byte) — pure Catalyst expressions (shift/mask/char),
-    fully codegen'd.  The caller byte-serializes the joined stream with
-    ``encode(..., 'ISO-8859-1')``, which maps each codepoint back to its
-    single byte.
-
-    Keeping the codec JVM-side is what makes the build scale: measured on
-    local[8->32], pushing the raw posting rows through the Arrow/Python
-    boundary cost a flat ~12s per 33M rows regardless of cores, while
-    this expression pipeline scales with the task count.  Byte-for-byte
-    identical to codec.encode_varint (property-tested).  Measured A/B at
-    8.3M entries vs the previous hex+unhex detour: ~30% less pack-stage
-    time (one char per byte instead of two, no unhex pass).
-
-    ``width`` bounds the unroll: varint is canonical, so any part beyond
-    the value's own width emits "" — unrolling only as many bytes as the
-    caller's provable max value needs (varint_width) shrinks both the
-    Janino compile of this expression tree and the per-element branch
-    count, with identical output.  A value that would overflow the
-    unroll raises instead of silently truncating.
-    """
-    # int32 inputs MUST widen first: Java shift amounts wrap mod 32 on
-    # ints, so shiftrightunsigned(v, 35) on an int column silently
-    # shifts by 3 and emits garbage continuation bytes
-    v = v.cast("long")
-    parts = []
-    for j in range(width):
-        rest = F.shiftrightunsigned(v, 7 * j)
-        byte = rest.bitwiseAND(F.lit(0x7F)) + F.when(
-            F.shiftrightunsigned(v, 7 * (j + 1)) > 0, F.lit(0x80)
-        ).otherwise(F.lit(0))
-        ch = F.char(byte)
-        emit = ch if j == 0 else F.when(rest > 0, ch).otherwise(F.lit(""))
-        parts.append(emit)
-    if width < 10:
-        # loud guard on the last part: a caller-supplied bound that was
-        # wrong must fail the job, never corrupt the posting stream
-        overflow = F.shiftrightunsigned(v, 7 * width) > 0
-        parts[-1] = F.when(
-            overflow,
-            F.raise_error(F.format_string("varint overflow: width %d value %d", F.lit(width), v)),
-        ).otherwise(parts[-1])
-    return F.concat(*parts) if len(parts) > 1 else parts[0]
 
 
 def pack_blocks_jvm(
@@ -278,8 +205,8 @@ def pack_blocks_jvm(
       groupBy(term_id, salt)
         -> array_sort(collect_list) salt-local posting run
       slice/posexplode -> block_seq assignment + per-block metadata
-      transform/concat/unhex
-        -> delta + LEB128-varint payloads (see _varint_hex)
+      codec.encode_blocks_jvm
+        -> delta + LEB128-varint payloads
 
     ``idf_df`` (term_id, idf) joins AFTER the aggregation, broadcast at
     GROUP granularity: carrying idf on every posting row would push 8
@@ -379,28 +306,8 @@ def pack_blocks_jvm(
     else:
         max_score = F.lit(0.0)
     g = g.withColumn("max_score", max_score)
-    pairs = F.col("pairs")
-    deltas = F.transform(
-        pairs,
-        lambda x, i: F.when(i == 0, x["doc_id"]).otherwise(
-            x["doc_id"] - F.element_at(pairs, i)["doc_id"]
-        ),
-    )
-    # unroll widths: every delta (incl. block 0's absolute doc id) is
-    # <= the corpus max doc id; tf was cast to int32 above, so even
-    # with no caller bound 5 bytes always cover it (_varint_chars guards
-    # against a too-small caller bound by raising, never truncating)
-    w_doc = varint_width(max_doc_bound)
-    w_tf = min(varint_width(max_tf_bound), 5)
-    doc_deltas = F.encode(
-        F.array_join(F.transform(deltas, lambda d: _varint_chars(d, w_doc)), ""),
-        "ISO-8859-1",
-    )
-    tf_bytes = F.encode(
-        F.array_join(
-            F.transform(pairs, lambda x: _varint_chars(x["tf"], w_tf)), ""
-        ),
-        "ISO-8859-1",
+    doc_deltas, tf_bytes = encode_blocks_jvm(
+        F.col("pairs"), max_doc_bound, max_tf_bound
     )
     return g.select(
         "term_id", "salt", "block_seq", "n", "min_doc", "max_doc",
@@ -663,7 +570,7 @@ def _build_index_body(
         rows = rows.filter(~F.col("salt").isin(list(done_salts)))
 
     build_avg_len = float(total_len) / max(int(doc_num), 1)
-    # varint unroll bounds (see _varint_hex): deltas <= max doc id; tf
+    # varint unroll bounds (codec.encode_blocks_jvm): deltas <= max doc id; tf
     # <= doc_len for the integer dtypes, and the f16 roundtrip can
     # overshoot the raw count by < 2^-9 relative — 2x + 2 is airtight
     packed = pack_blocks_jvm(

@@ -65,6 +65,23 @@ def merge_indexes(
     t0 = time.time()
     a = PackedIndex(spark, dir_a, config)
     b = PackedIndex(spark, dir_b, config)
+    try:
+        return _merge(spark, a, b, out_dir, config, t0)
+    finally:
+        # release both inputs' cached dictionaries once the merge is
+        # written (or failed): a long-running driver merges repeatedly
+        a.unpersist()
+        b.unpersist()
+
+
+def _merge(
+    spark: SparkSession,
+    a: PackedIndex,
+    b: PackedIndex,
+    out_dir: str,
+    config: EngineConfig,
+    t0: float,
+) -> dict:
     if a.meta.get("precision") != b.meta.get("precision"):
         raise ValueError("cannot merge indexes built at different precisions")
     # the tokenizer travels with the index (build_index records it so
@@ -162,5 +179,5 @@ def merge_indexes(
         out_dir, t0, doc_num=doc_num, total_len=total_len, n_terms=n_terms,
         term_bytes=term_bytes, n_salts=n_salts, salt_range=salt_range,
         config=config, precision=precision, norms=norms, tokenizer=tok_a,
-        merged_from=[dir_a, dir_b],
+        merged_from=[a.dir, b.dir],
     )

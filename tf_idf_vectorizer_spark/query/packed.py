@@ -48,7 +48,6 @@ import glob
 import json
 import math
 import os
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -56,9 +55,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tf_idf_vectorizer_spark.config import DEFAULT, EngineConfig
-from tf_idf_vectorizer_spark.operators.codec import decode_varint
+from tf_idf_vectorizer_spark.operators.codec import (
+    BLOCK_COLS,
+    any_in_ranges,
+    decode_blocks,
+    decode_blocks_df,
+    decode_overlapping,
+    doc_id_order,
+    sorted_member,
+)
 
-_DECODE_SCHEMA = "term_id long, doc_id long, tf long, gen int"
+_KEY_COLS = ["term_id", "salt", "block_seq", "gen"]
 
 
 def _arrow_df(spark: SparkSession, data, schema: str) -> DataFrame:
@@ -159,6 +166,31 @@ def _bm25_partial(ln_idf, tf, dl, k1: float, b: float, avg_len: float):
     return ln_idf * (tf * (k1 + 1.0)) / denom
 
 
+def _bm25_partial_col(k1: float, b: float, avg_len: float):
+    """:func:`_bm25_partial` as a JVM Column over (idf, tf, doc_len),
+    same operation grouping."""
+    tfd = F.col("tf").cast("double")
+    denom = tfd + F.lit(k1) * (
+        F.lit(1.0 - b)
+        + F.lit(b) * F.col("doc_len").cast("double") / F.lit(avg_len)
+    )
+    return F.log(F.col("idf")) * (tfd * F.lit(k1 + 1.0)) / denom
+
+
+def _fold(ids_parts: list, score_parts: list, dl_parts: list | None = None):
+    """Driver twin of :func:`canonical_fold`: per-doc sums of per-term
+    score partials -> (sorted unique doc ids, sums, doc_len per id or
+    None).  bincount accumulates in row order, so parts passed in
+    ascending term_id order fold canonically."""
+    uids, inv = np.unique(np.concatenate(ids_parts), return_inverse=True)
+    sums = np.bincount(inv, weights=np.concatenate(score_parts))
+    if dl_parts is None:
+        return uids, sums, None
+    udl = np.zeros(uids.size)
+    udl[inv] = np.concatenate(dl_parts)
+    return uids, sums, udl
+
+
 def canonical_fold(partial, term_ids: list[int], key_col: str = "term_id"):
     """Deterministic per-doc score aggregate: fold the per-term score
     partials in ASCENDING term_id order.  IEEE addition is commutative
@@ -199,64 +231,6 @@ def canonical_fold(partial, term_ids: list[int], key_col: str = "term_id"):
     return F.aggregate(
         arr, F.lit(0.0), lambda acc, x: acc + x["p"]
     )
-
-
-def _decode_batch(pdf: pd.DataFrame):
-    """Vectorized multi-block decode of one Arrow batch: varint streams
-    are self-delimiting, so the concatenated payloads decode in ONE
-    numpy pass; a segmented cumsum (the first value of every block is an
-    absolute doc id) restores ids with no per-block Python loop.
-    -> (n_per_block, doc_ids, tfs) arrays."""
-    n = pdf["n"].to_numpy(np.int64)
-    deltas = decode_varint(
-        b"".join(bytes(x) for x in pdf["doc_deltas"])
-    ).astype(np.int64)
-    tf = decode_varint(b"".join(bytes(x) for x in pdf["tfs"])).astype(np.int64)
-    starts = np.concatenate(([0], np.cumsum(n)[:-1]))
-    total = np.cumsum(deltas)
-    corr = np.zeros(len(n), dtype=np.int64)
-    corr[1:] = total[starts[1:] - 1]
-    return n, total - np.repeat(corr, n), tf
-
-
-def _decode_blocks_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        n, docs, tf = _decode_batch(pdf)
-        yield pd.DataFrame(
-            {
-                "term_id": np.repeat(pdf["term_id"].to_numpy(np.int64), n),
-                "doc_id": docs,
-                "tf": tf,
-                "gen": np.repeat(pdf["gen"].to_numpy(np.int64), n).astype(np.int32),
-            }
-        )
-
-
-def blocks_overlapping_ids(blocks: DataFrame, bc) -> DataFrame:
-    """Blocks whose [min_doc, max_doc] range contains >=1 of the
-    broadcast SORTED doc ids.  The range check (vectorized searchsorted)
-    runs over METADATA COLUMNS ONLY — the compressed payloads of
-    non-matching blocks never cross the Arrow boundary (that boundary is
-    the measured scale bottleneck; matching blocks' payloads come back
-    via a JVM key join)."""
-    key_cols = ["term_id", "salt", "block_seq", "gen"]
-    meta = blocks.select(*key_cols, "min_doc", "max_doc")
-
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        v = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            lo = np.searchsorted(v, pdf["min_doc"].to_numpy())
-            ok = (lo < v.size) & (
-                v[np.minimum(lo, v.size - 1)] <= pdf["max_doc"].to_numpy()
-            )
-            yield pdf[ok]
-
-    keys = meta.mapInPandas(check, schema=meta.schema).select(*key_cols)
-    return blocks.join(keys, key_cols)
 
 
 class PackedIndex:
@@ -639,8 +613,20 @@ class PackedIndex:
             F.col("bucket").isin(buckets) & F.col("term_id").isin(term_ids)
         )
 
-    def blocks_overlapping_ids(self, blocks: DataFrame, bc) -> DataFrame:
-        return blocks_overlapping_ids(blocks, bc)
+    def _broadcast(self, value):
+        """Broadcast owned by this instance (released by unpersist)."""
+        bc = self.spark.sparkContext.broadcast(value)
+        self._bcs = getattr(self, "_bcs", []) + [bc]
+        return bc
+
+    def unpersist(self) -> None:
+        """Release what this instance holds on the cluster: the cached
+        dictionaries and the broadcasts its reads created."""
+        self.doc_dict.unpersist()
+        self.term_dict.unpersist()
+        for bc in getattr(self, "_bcs", []):
+            bc.unpersist()
+        self._bcs = []
 
     def get_tf(self, doc_ids: list[int]) -> DataFrame:
         """Point read: the live TF maps of the given docs ->
@@ -649,27 +635,13 @@ class PackedIndex:
         through tf_denorm, so they are the EFFECTIVE values — lossy for
         the f16 engine exactly as the reference documents
         (mod.rs:270-271).  Only blocks whose doc range intersects the
-        requested ids are decoded (vectorized searchsorted check)."""
-        ids = np.sort(np.array(sorted(set(doc_ids)), dtype=np.int64))
+        requested ids are decoded (codec.decode_overlapping)."""
+        ids = np.array(sorted(set(doc_ids)), dtype=np.int64)
         if ids.size == 0:
             return _arrow_df(
                 self.spark, [], "doc_id long, term string, tf long"
             )
-        bc = self.spark.sparkContext.broadcast(ids)
-        hit = self.blocks_overlapping_ids(self._postings(), bc)
-
-        def decode_filtered(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            v = bc.value
-            for out in _decode_blocks_iter(batches):
-                pos = np.searchsorted(v, out["doc_id"].to_numpy())
-                keep = (pos < v.size) & (
-                    v[np.minimum(pos, v.size - 1)] == out["doc_id"].to_numpy()
-                )
-                yield out[keep]
-
-        decoded = hit.select(
-            "term_id", "n", "doc_deltas", "tfs", "gen"
-        ).mapInPandas(decode_filtered, schema=_DECODE_SCHEMA)
+        decoded = decode_overlapping(self._postings(), self._broadcast(ids))
         live = decoded.join(
             self.doc_dict.select("doc_id", "gen"), ["doc_id", "gen"], "left_semi"
         )
@@ -682,8 +654,7 @@ class PackedIndex:
         when None) — the exact packed read path (no pruning).  tf is the
         EFFECTIVE value (the build applied the config's quantize/denorm
         chain once at pack time), so scorers use it directly."""
-        blocks = self._blocks_for(term_ids).select("term_id", "n", "doc_deltas", "tfs", "gen")
-        return blocks.mapInPandas(_decode_blocks_iter, schema=_DECODE_SCHEMA)
+        return decode_blocks_df(self._blocks_for(term_ids))
 
     # ------------------------------------------------------------------
     @staticmethod
@@ -718,12 +689,7 @@ class PackedIndex:
         joined = decoded.join(F.broadcast(qdf), "term_id").join(
             self.doc_dict.select(*dd_cols), join_keys
         )
-        tfd = F.col("tf").cast("double")
-        denom = tfd + F.lit(k1) * (
-            F.lit(1.0 - b)
-            + F.lit(b) * F.col("doc_len").cast("double") / F.lit(self.avg_len)
-        )
-        partial = F.log(F.col("idf")) * (tfd * F.lit(k1 + 1.0)) / denom
+        partial = _bm25_partial_col(k1, b, self.avg_len)
         return (
             joined.groupBy("doc_id")
             .agg(
@@ -826,7 +792,7 @@ class PackedIndex:
                     self.doc_dict.select("doc_id", "doc_len", "gen")
                 )
                 ids = pdf["doc_id"].to_numpy(np.int64)
-                order = np.argsort(ids, kind="stable")
+                order = doc_id_order(ids)
                 self._dstats = (
                     ids[order],
                     pdf["doc_len"].to_numpy(np.float64)[order],
@@ -982,119 +948,116 @@ class PackedIndex:
         self._pq_meta = metas
         return metas
 
-    def _pq_point_fetch(self, tids: list[int]) -> pd.DataFrame | None:
-        """Driver-side point read of the given terms' posting blocks
-        via pyarrow row-group pruning; None -> caller falls back to the
-        executor scan.  Applies the committed-generation watermark
-        (orphan rows of a crashed batch stay invisible, exactly like
-        the Spark relation's filter)."""
-        metas = self._pq_files()
-        if metas is None:
-            return None
-        ts = np.array(sorted({int(t) for t in tids}), dtype=np.int64)
-        cols = ["term_id", "n", "doc_deltas", "tfs", "gen"]
-        sel, total = [], 0
-        for pf, _salt, lo, hi, _blo, _bhi, nb in metas:
-            # groups are term-sorted and disjoint: group i holds one of
-            # our terms iff the smallest query term >= lo_i is <= hi_i
-            pos = np.searchsorted(ts, lo)
-            ok = (pos < ts.size) & (ts[np.minimum(pos, ts.size - 1)] <= hi)
-            gs = np.flatnonzero(ok)
-            if gs.size:
-                total += int(nb[gs].sum())
-                sel.append((pf, gs.tolist()))
-        if total > self.PQ_POINT_READ_MAX_BYTES:
-            return None
-        if not sel:
-            return pd.DataFrame(columns=cols)
-        import pyarrow as pa
-        import pyarrow.compute as pc
+    def _fetch_blocks(
+        self, tids, cols: list[str], keys: pd.DataFrame | None = None
+    ) -> pd.DataFrame:
+        """THE driver block fetch: ``cols`` of the committed posting
+        blocks of terms ``tids``, as pandas.  With ``keys`` (block keys
+        term_id, salt, block_seq, gen plus flag columns such as
+        is_target) only exactly those blocks, merged with the keys'
+        flag columns.
 
-        # filter to the matching rows IN ARROW before any pandas
-        # conversion: to_pandas materializes a Python bytes object per
-        # payload row, and a row group holds thousands of rows for the
-        # ~dozen that match (measured 0.11 s/query in to_pandas alone)
-        tset = pa.array(ts, pa.int64())
-        wm = int(self.meta.get("generation", 0))
-        parts = []
-        for pf, gs in sel:
-            tbl = pf.read_row_groups(gs, columns=cols)
-            mask = pc.and_(
-                pc.is_in(tbl.column("term_id"), value_set=tset),
-                pc.less_equal(tbl.column("gen"), wm),
-            )
-            parts.append(tbl.filter(mask))
-        # files written by different jobs (merge inputs, incremental
-        # appends) can disagree on nullability flags — normalize to the
-        # first part's types before concat; any real type clash falls
-        # back to the executor scan rather than failing the query
-        try:
-            if len(parts) > 1:
-                target = pa.schema(
-                    [pa.field(f.name, f.type) for f in parts[0].schema]
+        Local index: a pyarrow point read, no Spark job.  The postings
+        files are sorted by (term_id, block_seq) with bounded row
+        groups, so per-group term_id (and, for keys, block_seq) min/max
+        stats prune the read to ~one group per salt file; rows are
+        filtered IN ARROW by term set and the committed-generation
+        watermark (orphan rows of a crashed batch stay invisible,
+        exactly like the Spark relation's filter) before any pandas
+        conversion — to_pandas materializes a Python bytes object per
+        payload row, and a row group holds thousands of rows for the
+        ~dozen that match (measured 0.11 s/query in to_pandas alone).
+        Past PQ_POINT_READ_MAX_BYTES, off a local path, or when the
+        files cannot serve the read: one Arrow collect of the Spark scan
+        (a broadcast key join for ``keys``)."""
+        ts = np.unique(np.asarray(tids, dtype=np.int64))
+        flags = [] if keys is None else [
+            c for c in keys.columns if c not in _KEY_COLS
+        ]
+        need = list(dict.fromkeys(
+            [*cols, *(_KEY_COLS if keys is not None else []), "term_id", "gen"]
+        ))
+        pdf = None
+        metas = self._pq_files()
+        if metas is not None:
+            if keys is not None:
+                kt = keys["term_id"].to_numpy(np.int64)
+                ks = keys["salt"].to_numpy(np.int64)
+                kb = keys["block_seq"].to_numpy(np.int64)
+            sel, total = [], 0
+            for pf, salt, lo, hi, blo, bhi, nb in metas:
+                if keys is None:
+                    # groups are term-sorted and disjoint: keep group i
+                    # iff a query term lies in [lo_i, hi_i]
+                    hit = any_in_ranges(ts, lo, hi)
+                else:
+                    m = ks == salt
+                    ct, cb = kt[m], kb[m]
+                    hit = np.array(
+                        [
+                            bool((
+                                (ct >= lo[i]) & (ct <= hi[i])
+                                & (cb >= blo[i]) & (cb <= bhi[i])
+                            ).any())
+                            for i in range(lo.size)
+                        ],
+                        dtype=bool,
+                    )
+                gs = np.flatnonzero(hit)
+                if gs.size:
+                    total += int(nb[gs].sum())
+                    sel.append((pf, salt, gs.tolist()))
+            if total <= self.PQ_POINT_READ_MAX_BYTES:
+                pdf = self._pq_read(sel, ts, need)
+        if pdf is None:
+            rel = self._blocks_for(ts.tolist())
+            if keys is not None:
+                rel = rel.join(
+                    F.broadcast(self.spark.createDataFrame(keys.astype(
+                        {"salt": np.int32, "block_seq": np.int32,
+                         "gen": np.int32}
+                    ))),
+                    _KEY_COLS,
                 )
-                parts = [p.cast(target) for p in parts]
-            return pa.concat_tables(parts).to_pandas()
-        except pa.ArrowInvalid:
-            return None
+            return self._topandas_arrow(rel.select(*need, *flags))
+        if keys is None:
+            return pdf
+        as64 = {c: np.int64 for c in _KEY_COLS}
+        return pdf.astype(as64).merge(keys.astype(as64), on=_KEY_COLS)
 
-    def _pq_point_fetch_keys(self, cand: pd.DataFrame) -> pd.DataFrame | None:
-        """Driver-side point read of an EXPLICIT candidate block-key set
-        (term_id, salt, block_seq, gen) — the WAND rescore's fetch.  The
-        generic term fetch above reads every block of a term; after
-        pruning, the candidates are a small block_seq range per
-        (term, salt), and the files are sorted by (term_id, block_seq),
-        so per-group (term_id, block_seq) min/max stats prune the read
-        down to the candidate row groups.  The exact key membership is
-        applied after conversion (candidate sets are a few thousand
-        rows).  Returns rows for a superset of the candidate keys —
-        the caller merges on the full key — or None (no local files /
-        byte cap exceeded) for the executor-scan fallback."""
-        metas = self._pq_files()
-        if metas is None or not len(cand):
-            return None
-        ct_all = cand["term_id"].to_numpy(np.int64)
-        cb_all = cand["block_seq"].to_numpy(np.int64)
-        cs_all = cand["salt"].to_numpy(np.int64)
-        ts = np.unique(ct_all)
-        cols = ["term_id", "block_seq", "n", "doc_deltas", "tfs", "gen"]
-        sel, total = [], 0
-        for pf, salt, lo, hi, blo, bhi, nb in metas:
-            m = cs_all == salt
-            if not m.any():
-                continue
-            ct, cb = ct_all[m], cb_all[m]
-            gs = [
-                i
-                for i in range(lo.size)
-                if (
-                    (ct >= lo[i]) & (ct <= hi[i])
-                    & (cb >= blo[i]) & (cb <= bhi[i])
-                ).any()
-            ]
-            if gs:
-                total += int(nb[gs].sum())
-                sel.append((pf, salt, gs))
-        if total > self.PQ_POINT_READ_MAX_BYTES:
-            return None
+    def _pq_read(self, sel: list, ts: np.ndarray, need: list[str]):
+        """Arrow half of :meth:`_fetch_blocks`: read the selected row
+        groups, keep the committed rows of terms ``ts``, attach the salt
+        partition column when asked -> pandas, or None when the files
+        cannot serve the read."""
         if not sel:
-            return pd.DataFrame(columns=cols + ["salt"])
+            return pd.DataFrame(columns=need)
         import pyarrow as pa
         import pyarrow.compute as pc
 
         tset = pa.array(ts, pa.int64())
         wm = int(self.meta.get("generation", 0))
+        file_cols = [c for c in need if c != "salt"]
         parts = []
         for pf, salt, gs in sel:
-            tbl = pf.read_row_groups(gs, columns=cols)
-            mask = pc.and_(
+            tbl = pf.read_row_groups(gs, columns=file_cols)
+            if tbl.num_columns != len(file_cols):
+                # a file from an older layout lacks a column the Spark
+                # relation's explicit schema fills with nulls
+                return None
+            t = tbl.filter(pc.and_(
                 pc.is_in(tbl.column("term_id"), value_set=tset),
                 pc.less_equal(tbl.column("gen"), wm),
-            )
-            t = tbl.filter(mask)
-            parts.append(
-                t.append_column("salt", pa.array([salt] * len(t), pa.int64()))
-            )
+            ))
+            if "salt" in need:
+                t = t.append_column(
+                    "salt", pa.array(np.full(len(t), salt, np.int32))
+                )
+            parts.append(t)
+        # files written by different jobs (merge inputs, incremental
+        # appends) can disagree on nullability flags — normalize to the
+        # first part's types before concat; a real type clash falls back
+        # to the Spark scan rather than failing the query
         try:
             if len(parts) > 1:
                 target = pa.schema(
@@ -1105,25 +1068,30 @@ class PackedIndex:
         except pa.ArrowInvalid:
             return None
 
+    def _decode_live_np(self, pdf: pd.DataFrame, carry: tuple[str, ...] = ()):
+        """Driver decode of fetched blocks, LIVE rows only ((doc_id,
+        gen) matches the pinned doc stats) -> (term_ids, doc_ids, tfs as
+        float64, positions in the pinned doc stats, *carried columns)."""
+        sids, _dls, gens = self._doc_stats_np()
+        n = pdf["n"].to_numpy(np.int64)
+        dids, tf = decode_blocks(n, pdf["doc_deltas"], pdf["tfs"])
+        ok, pos = sorted_member(
+            sids, dids, gens, np.repeat(pdf["gen"].to_numpy(np.int64), n)
+        )
+        return (
+            np.repeat(pdf["term_id"].to_numpy(np.int64), n)[ok],
+            dids[ok],
+            tf[ok].astype(np.float64),
+            pos[ok],
+            *(np.repeat(pdf[c].to_numpy(), n)[ok] for c in carry),
+        )
+
     def _decode_live_driver_fetch(self, tids: list[int]) -> dict[int, tuple]:
-        sids, dls, gens = self._doc_stats_np()
-        pdf = self._pq_point_fetch(tids)
-        if pdf is None:
-            pdf = self._topandas_arrow(
-                self._blocks_for(tids).select(
-                    "term_id", "n", "doc_deltas", "tfs", "gen"
-                )
-            )
+        pdf = self._fetch_blocks(tids, BLOCK_COLS)
         if not len(pdf):
             return {}
-        n, dids, tf_i = _decode_batch(pdf)
-        tf = tf_i.astype(np.float64)
-        term = np.repeat(pdf["term_id"].to_numpy(np.int64), n)
-        gen = np.repeat(pdf["gen"].to_numpy(np.int64), n)
-        pos = np.searchsorted(sids, dids)
-        pc = np.minimum(pos, sids.size - 1)
-        ok = (pos < sids.size) & (sids[pc] == dids) & (gens[pc] == gen)
-        dids, term, tf, dl = dids[ok], term[ok], tf[ok], dls[pc[ok]]
+        term, dids, tf, pos = self._decode_live_np(pdf)
+        dl = self._doc_stats_np()[1][pos]
         order = np.argsort(term, kind="stable")
         term_s = term[order]
         dids_s, tf_s, dl_s = dids[order], tf[order], dl[order]
@@ -1166,11 +1134,7 @@ class PackedIndex:
             dl_all.append(dl)
         if not ids_all:
             return []
-        ids = np.concatenate(ids_all)
-        uids, inv = np.unique(ids, return_inverse=True)
-        sums = np.bincount(inv, weights=np.concatenate(sc_all))
-        udl = np.zeros(uids.size)
-        udl[inv] = np.concatenate(dl_all)
+        uids, sums, udl = _fold(ids_all, sc_all, dl_all)
         return self._topk_rows(uids, sums, udl, k)
 
     def _bm25_driver(self, qinfo: list[dict], k: int, k1: float, b: float) -> DataFrame:
@@ -1425,12 +1389,7 @@ class PackedIndex:
         joined = decoded.join(F.broadcast(qdf), "term_id").join(
             self.doc_dict.select(*(keys + ["doc_len"])), keys
         )
-        tfd = F.col("tf").cast("double")
-        denom = tfd + F.lit(k1) * (
-            F.lit(1.0 - b)
-            + F.lit(b) * F.col("doc_len").cast("double") / F.lit(self.avg_len)
-        )
-        partial = F.log(F.col("idf")) * (tfd * F.lit(k1 + 1.0)) / denom
+        partial = _bm25_partial_col(k1, b, self.avg_len)
         scored = joined.groupBy("query_id", "doc_id").agg(
             self._det_score(
                 partial, [{"term_id": t} for t in tids]
@@ -1471,11 +1430,9 @@ class PackedIndex:
             parts = [partials[t] for t in tl if t in partials]
             if not parts:
                 continue
-            ids = np.concatenate([p[0] for p in parts])
-            uids, inv = np.unique(ids, return_inverse=True)
-            sums = np.bincount(inv, weights=np.concatenate([p[1] for p in parts]))
-            udl = np.zeros(uids.size)
-            udl[inv] = np.concatenate([p[2] for p in parts])
+            uids, sums, udl = _fold(
+                [p[0] for p in parts], [p[1] for p in parts], [p[2] for p in parts]
+            )
             out_rows.extend(
                 (int(qid), d, s, dl_)
                 for d, s, dl_ in self._topk_rows(uids, sums, udl, k)
@@ -1589,13 +1546,9 @@ class PackedIndex:
             ids_all.append(dids)
             sc_all.append(qtf * tf * idf * idf)
             dl_all.append(dl)
-        ids = np.concatenate(ids_all)
-        if ids.size == 0:
+        uids, raw, udl = _fold(ids_all, sc_all, dl_all)
+        if uids.size == 0:
             return []
-        uids, inv = np.unique(ids, return_inverse=True)
-        raw = np.bincount(inv, weights=np.concatenate(sc_all))
-        udl = np.zeros(uids.size)
-        udl[inv] = np.concatenate(dl_all)
         if algo == "dot":
             return self._topk_rows(uids, raw, udl, k)
         if algo != "cosine":
@@ -1658,14 +1611,9 @@ class PackedIndex:
                     )
                 )
                 ids_all.append(dids)
-            ids = np.concatenate(ids_all)
-            if ids.size:
-                uids, inv = np.unique(ids, return_inverse=True)
-                sums = np.bincount(inv, weights=np.concatenate(sc_all))
-                pos = np.searchsorted(uids, cand)
-                pc = np.minimum(pos, uids.size - 1)
-                hit = (pos < uids.size) & (uids[pc] == cand)
-                scores[hit] = sums[pc[hit]]
+            uids, sums, _udl = _fold(ids_all, sc_all)
+            hit, pos = sorted_member(uids, cand)
+            scores[hit] = sums[pos[hit]]
         cdl = dls[np.searchsorted(sids, cand)]
         return self._topk_rows(cand, scores, cdl, k)
 
@@ -1870,17 +1818,15 @@ class PackedIndex:
             if not gen0:
                 meta_df = meta_df.limit(self.META_COLLECT_MAX + 1)
             mp = self._topandas_arrow(meta_df)
-            # sparse payloads come from a SECOND, term-pruned scan: the
+            # sparse payloads come from a SECOND, term-pruned fetch: the
             # metadata scan must not project tfs/doc_deltas, or parquet
             # reads the HEAD terms' full payload chunks just to null
             # them out — the cost the metadata-only fetch exists to skip
             spf = None
             if sparse_ids and len(mp) <= self.META_COLLECT_MAX:
-                spf = self._topandas_arrow(
-                    self._blocks_for(sparse_ids).select(
-                        "term_id", "salt", "block_seq", "gen", "n",
-                        "min_dl", "max_dl", "doc_deltas", "tfs",
-                    )
+                spf = self._fetch_blocks(
+                    sparse_ids,
+                    [*_KEY_COLS, "n", "min_dl", "max_dl", "doc_deltas", "tfs"],
                 )
             if len(mp) <= self.META_COLLECT_MAX:
                 while len(cache) >= 8:
@@ -1912,45 +1858,10 @@ class PackedIndex:
             pos = mp[kcols].copy()
             pos["_mp_row"] = np.arange(n_blocks, dtype=np.int64)
             spm = spf.merge(pos, on=kcols, how="inner")
-            spt = spm["term_id"].to_numpy(np.int64)
-            for tid in sparse_ids:
-                rr = np.flatnonzero(spt == tid)
-                if rr.size == 0:
-                    continue
-                nn = spm["n"].to_numpy(np.int64)[rr]
-                deltas = decode_varint(
-                    b"".join(bytes(spm["doc_deltas"].iloc[i]) for i in rr)
-                ).astype(np.int64)
-                tf = decode_varint(
-                    b"".join(bytes(spm["tfs"].iloc[i]) for i in rr)
-                ).astype(np.float64)
-                starts = np.concatenate(([0], np.cumsum(nn)[:-1]))
-                total = np.cumsum(deltas)
-                corr = np.zeros(rr.size, dtype=np.int64)
-                corr[1:] = total[starts[1:] - 1]
-                ids = total - np.repeat(corr, nn)
-                ln_idf = math.log(idf_map[tid])
-                min_dl = np.repeat(spm["min_dl"].to_numpy(np.float64)[rr], nn)
-                max_dl = np.repeat(spm["max_dl"].to_numpy(np.float64)[rr], nn)
-                brow = np.repeat(spm["_mp_row"].to_numpy(np.int64)[rr], nn)
-                live = self._sparse_live_mask(
-                    ids, np.repeat(spm["gen"].to_numpy(np.int64)[rr], nn)
-                )
-                if live is not None:
-                    ids, tf = ids[live], tf[live]
-                    min_dl, max_dl, brow = (
-                        min_dl[live], max_dl[live], brow[live]
-                    )
-                if ln_idf > 0:
-                    ub_p = ln_idf * (k1 + 1.0) * tf / (
-                        tf + k1 * (1.0 - b + b * min_dl / self.avg_len)
-                    )
-                    fl_p = ln_idf * (k1 + 1.0) * tf / (
-                        tf + k1 * (1.0 - b + b * max_dl / self.avg_len)
-                    )
-                else:
-                    ub_p = np.zeros(ids.size)
-                    fl_p = np.full(ids.size, -np.inf)
+            for tid, (ids, ub_p, fl_p, brow) in self._sparse_bounds(
+                spm, sparse_ids, idf_map, k1, b,
+                spm["_mp_row"].to_numpy(np.int64),
+            ).items():
                 o = np.argsort(ids, kind="stable")
                 sp[tid] = (ids[o], ub_p[o], fl_p[o], brow[o])
 
@@ -2127,10 +2038,8 @@ class PackedIndex:
         b: float,
         k: int,
     ) -> list[tuple]:
-        """Driver-side exact rescore of a pruned block set: ONE Arrow
-        payload fetch — a pyarrow row-group point read of the candidate
-        keys when the index is on a local filesystem (no Spark job at
-        all), else a broadcast key join collect (no shuffle) — then
+        """Driver-side exact rescore of a pruned block set: ONE payload
+        fetch of the candidate keys (:meth:`_fetch_blocks`) — then
         numpy decode + scoring against the pinned doc stats.  After
         pruning, the candidate volume is tiny — a distributed rescore
         would spend 10-100x the candidate decode cost shuffling the
@@ -2145,42 +2054,15 @@ class PackedIndex:
                 "is_target": flags.astype(bool),
             }
         )
-        pdf = self._pq_point_fetch_keys(kdf_pd)
-        if pdf is not None:
-            # exact key membership + survival flags in one merge (the
-            # point read returns a row-group-granular superset)
-            pdf = pdf.astype(
-                {"term_id": np.int64, "salt": np.int64,
-                 "block_seq": np.int64, "gen": np.int64}
-            ).merge(kdf_pd, on=["term_id", "salt", "block_seq", "gen"])
-        else:
-            kdf = F.broadcast(self.spark.createDataFrame(
-                kdf_pd.astype({"salt": np.int32, "block_seq": np.int32,
-                               "gen": np.int32})
-            ))
-            tids = sorted(set(term.tolist()))
-            pdf = self._topandas_arrow(
-                self._blocks_for(tids)
-                .join(kdf, ["term_id", "salt", "block_seq", "gen"])
-                .select("term_id", "n", "doc_deltas", "tfs", "gen", "is_target")
-            )
+        pdf = self._fetch_blocks(np.unique(term), BLOCK_COLS, keys=kdf_pd)
         if not len(pdf):
             return []
-        sids, dls, gens = self._doc_stats_np()
-        n, dids, tf_i = _decode_batch(pdf)
-        tf = tf_i.astype(np.float64)
-        ptid = np.repeat(pdf["term_id"].to_numpy(np.int64), n)
-        pgen = np.repeat(pdf["gen"].to_numpy(np.int64), n)
-        ptgt = np.repeat(pdf["is_target"].to_numpy(bool), n)
-        pos = np.searchsorted(sids, dids)
-        pc = np.minimum(pos, sids.size - 1)
-        ok = (pos < sids.size) & (sids[pc] == dids) & (gens[pc] == pgen)
-        dids, ptid, tf, ptgt = dids[ok], ptid[ok], tf[ok], ptgt[ok]
-        dl = dls[pc[ok]]
+        sids, dls, _gens = self._doc_stats_np()
+        ptid, _dids, tf, didx, ptgt = self._decode_live_np(pdf, ("is_target",))
+        dl = dls[didx]
         # canonical fold: bincount accumulates in row order, so sort the
         # rows by term_id — each doc's partials then add in ascending
         # term_id order, bit-identical to every other scoring path
-        didx = pc[ok]  # position in the pinned doc-stats arrays
         o = np.argsort(ptid, kind="stable")
         ptid, tf, ptgt, dl, didx = ptid[o], tf[o], ptgt[o], dl[o], didx[o]
         ln_idf = np.zeros(didx.size)
@@ -2263,31 +2145,7 @@ class PackedIndex:
         if kdf_how == "left":
             blocks = blocks.fillna({"is_target": False})
 
-        def decode_flagged(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                n, docs, tf = _decode_batch(pdf)
-                yield pd.DataFrame(
-                    {
-                        "term_id": np.repeat(pdf["term_id"].to_numpy(np.int64), n),
-                        "doc_id": docs,
-                        "tf": tf,
-                        "gen": np.repeat(
-                            pdf["gen"].to_numpy(np.int64), n
-                        ).astype(np.int32),
-                        "is_target": np.repeat(
-                            pdf["is_target"].to_numpy(bool), n
-                        ),
-                    }
-                )
-
-        decoded = blocks.select(
-            "term_id", "n", "doc_deltas", "tfs", "gen", "is_target"
-        ).mapInPandas(
-            decode_flagged,
-            schema="term_id long, doc_id long, tf long, gen int, is_target boolean",
-        )
+        decoded = decode_blocks_df(blocks, carry=("is_target",))
         qdf = _arrow_df(
             self.spark,
             [(r["term_id"], float(r["idf"])) for r in qinfo],
@@ -2302,12 +2160,7 @@ class PackedIndex:
                 cond = c if cond is None else (cond | c)
             dd = dd.filter(cond)
         joined = decoded.join(F.broadcast(qdf), "term_id").join(dd, keys)
-        tfd = F.col("tf").cast("double")
-        denom = tfd + F.lit(k1) * (
-            F.lit(1.0 - b)
-            + F.lit(b) * F.col("doc_len").cast("double") / F.lit(self.avg_len)
-        )
-        partial = F.log(F.col("idf")) * (tfd * F.lit(k1 + 1.0)) / denom
+        partial = _bm25_partial_col(k1, b, self.avg_len)
         return (
             joined.groupBy("doc_id")
             .agg(
@@ -2329,9 +2182,7 @@ class PackedIndex:
         if int(self.meta.get("generation", 0)) == 0:
             return None
         sids, _dls, dgens = self._doc_stats_np()
-        pos = np.searchsorted(sids, ids)
-        pc = np.minimum(pos, sids.size - 1)
-        return (pos < sids.size) & (sids[pc] == ids) & (dgens[pc] == gens)
+        return sorted_member(sids, ids, dgens, gens)[0]
 
     def _sparse_query_terms(self, qinfo: list[dict]) -> list[int]:
         """Query terms whose whole postings are worth pulling to the
@@ -2365,52 +2216,42 @@ class PackedIndex:
                 sp_budget -= df_t
         return out
 
-    def _sparse_postings_np(
-        self, sparse_ids: list[int], idf_map: dict[int, float], k1: float, b: float
-    ) -> pd.DataFrame | None:
-        """Fetch + decode the full (driver-sized) postings of sparse
-        query terms: one Arrow fetch of their payload blocks, one
-        vectorized varint pass.  Returns a pandas frame with one row
-        per posting: (term_id, salt, doc_id, ub, floor) — ub scores the
-        posting with its block's min_dl (upper bound), floor with
-        max_dl (a real doc's lower bound).  None when nothing found."""
-        if not sparse_ids:
-            return None
-        spf = self._topandas_arrow(
-            self._blocks_for(sparse_ids).select(
-                "term_id", "salt", "n", "min_dl", "max_dl",
-                "doc_deltas", "tfs", "gen",
-            )
-        )
-        if not len(spf):
-            return None
-        outs = []
+    def _sparse_bounds(
+        self,
+        spf: pd.DataFrame,
+        sparse_ids: list[int],
+        idf_map: dict[int, float],
+        k1: float,
+        b: float,
+        carry: np.ndarray,
+    ) -> dict[int, tuple]:
+        """Decode the sparse terms' fetched blocks (one row per block:
+        term_id, n, min_dl, max_dl, gen, payloads) and bound every LIVE
+        posting -> {term_id: (doc_ids, ub, floor, carry)} in block
+        order.  ``ub`` scores a posting with its block's min_dl (an
+        upper bound), ``floor`` with its max_dl (a real doc's lower
+        bound); ``carry`` holds one value per block row, repeated onto
+        its postings."""
+        out: dict[int, tuple] = {}
         stid = spf["term_id"].to_numpy(np.int64)
         for tid in sparse_ids:
             rr = np.flatnonzero(stid == tid)
             if rr.size == 0:
                 continue
             nn = spf["n"].to_numpy(np.int64)[rr]
-            deltas = decode_varint(
-                b"".join(bytes(spf["doc_deltas"].iloc[i]) for i in rr)
-            ).astype(np.int64)
-            tf = decode_varint(
-                b"".join(bytes(spf["tfs"].iloc[i]) for i in rr)
-            ).astype(np.float64)
-            starts = np.concatenate(([0], np.cumsum(nn)[:-1]))
-            total = np.cumsum(deltas)
-            corr = np.zeros(rr.size, dtype=np.int64)
-            corr[1:] = total[starts[1:] - 1]
-            ids = total - np.repeat(corr, nn)
+            ids, tf_i = decode_blocks(
+                nn, spf["doc_deltas"].iloc[rr], spf["tfs"].iloc[rr]
+            )
+            tf = tf_i.astype(np.float64)
             ln_idf = math.log(idf_map[tid])
             min_dl = np.repeat(spf["min_dl"].to_numpy(np.float64)[rr], nn)
             max_dl = np.repeat(spf["max_dl"].to_numpy(np.float64)[rr], nn)
-            salts = np.repeat(spf["salt"].to_numpy(np.int32)[rr], nn)
+            extra = np.repeat(carry[rr], nn)
             live = self._sparse_live_mask(
                 ids, np.repeat(spf["gen"].to_numpy(np.int64)[rr], nn)
             )
             if live is not None:
-                ids, tf, salts = ids[live], tf[live], salts[live]
+                ids, tf, extra = ids[live], tf[live], extra[live]
                 min_dl, max_dl = min_dl[live], max_dl[live]
             if ln_idf > 0:
                 ub_p = ln_idf * (k1 + 1.0) * tf / (
@@ -2422,17 +2263,38 @@ class PackedIndex:
             else:
                 ub_p = np.zeros(ids.size)
                 fl_p = np.full(ids.size, -np.inf)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "term_id": np.full(ids.size, tid, dtype=np.int64),
-                        "salt": salts,
-                        "doc_id": ids,
-                        "ub": ub_p,
-                        "floor": fl_p,
-                    }
-                )
+            out[tid] = (ids, ub_p, fl_p, extra)
+        return out
+
+    def _sparse_postings_np(
+        self, sparse_ids: list[int], idf_map: dict[int, float], k1: float, b: float
+    ) -> pd.DataFrame | None:
+        """The full (driver-sized) postings of sparse query terms, one
+        fetch + :meth:`_sparse_bounds` -> a pandas frame with one row
+        per live posting: (term_id, salt, doc_id, ub, floor).  None
+        when nothing found."""
+        if not sparse_ids:
+            return None
+        spf = self._fetch_blocks(
+            sparse_ids,
+            ["term_id", "salt", "n", "min_dl", "max_dl", "doc_deltas", "tfs", "gen"],
+        )
+        if not len(spf):
+            return None
+        outs = [
+            pd.DataFrame(
+                {
+                    "term_id": np.full(ids.size, tid, dtype=np.int64),
+                    "salt": salts,
+                    "doc_id": ids,
+                    "ub": ub_p,
+                    "floor": fl_p,
+                }
             )
+            for tid, (ids, ub_p, fl_p, salts) in self._sparse_bounds(
+                spf, sparse_ids, idf_map, k1, b, spf["salt"].to_numpy(np.int32)
+            ).items()
+        ]
         if not outs:
             return None
         return pd.concat(outs, ignore_index=True)
@@ -3144,23 +3006,10 @@ class PackedIndex:
         k1: float,
         b: float,
     ) -> DataFrame:
-        """Exact BM25 for a fixed candidate set: decode only blocks whose
-        doc range contains a candidate (searchsorted check on broadcast
-        sorted ids), then filter decoded rows to the candidates."""
-        sc = self.spark.sparkContext
-        bc = sc.broadcast(cand_ids)
-        hit_blocks = self.blocks_overlapping_ids(self._blocks_for(tids), bc)
-
-        def decode_filtered(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ids = bc.value
-            for out in _decode_blocks_iter(batches):
-                pos = np.searchsorted(ids, out["doc_id"].to_numpy())
-                keep = (pos < ids.size) & (
-                    ids[np.minimum(pos, ids.size - 1)] == out["doc_id"].to_numpy()
-                )
-                yield out[keep]
-
-        decoded = hit_blocks.select(
-            "term_id", "n", "doc_deltas", "tfs", "gen"
-        ).mapInPandas(decode_filtered, schema=_DECODE_SCHEMA)
+        """Exact BM25 for a fixed candidate set (sorted ids): decode only
+        blocks whose doc range contains a candidate, keep the
+        candidates' rows (codec.decode_overlapping)."""
+        decoded = decode_overlapping(
+            self._blocks_for(tids), self._broadcast(cand_ids)
+        )
         return self._score_decoded(decoded, qinfo, k1, b)

@@ -84,6 +84,11 @@ from pyspark.sql import functions as F
 
 from tf_idf_vectorizer_spark.config import DEFAULT, EngineConfig, with_effective_tf
 from tf_idf_vectorizer_spark.ioutil import recover_dir, write_json_atomic
+from tf_idf_vectorizer_spark.operators.codec import (
+    decode_blocks_df,
+    decode_overlapping,
+    doc_id_order,
+)
 from tf_idf_vectorizer_spark.operators.index_build import (
     make_live_repacker,
     pack_blocks_jvm,
@@ -97,14 +102,7 @@ from tf_idf_vectorizer_spark.operators.tables import (
     write_postings,
     write_term_dict,
 )
-from tf_idf_vectorizer_spark.query.packed import (
-    PackedIndex,
-    _arrow_df,
-    _decode_blocks_iter,
-    blocks_overlapping_ids,
-)
-
-_DECODED = "term_id long, doc_id long, tf long, gen int"
+from tf_idf_vectorizer_spark.query.packed import PackedIndex, _arrow_df
 
 _TABLE_DIR_RE = re.compile(r"^(term_dict|doc_dict|postings)(_v\d+|_old|_new)?$")
 
@@ -377,65 +375,34 @@ class IncrementalIndex:
             n_dead = len(dying_rows)
             dead_len = sum(r["doc_len"] for r in dying_rows)
             if dying_rows:
-                ids = np.array(dead_ids, dtype=np.int64)
-                bc = spark.sparkContext.broadcast(ids)
-                self._held.append(bc)
                 blocks = spark.read.schema(POSTINGS_FILE_SCHEMA).parquet(
                     postings_path
                 ).filter(F.col("gen") <= committed_gen)
-                # range check over metadata only; payloads of
-                # non-matching blocks never cross the Arrow boundary
-                hit = blocks_overlapping_ids(blocks, bc)
                 # only the CURRENT generation rows of currently-live
                 # docs count toward DF (stale rows were already
-                # subtracted when their generation died).  The check is
-                # a broadcast searchsorted INSIDE the decode pass (same
-                # pattern as compact's liveness filter): a scattered
+                # subtracted when their generation died): a point decode
+                # of the dying (doc_id, gen) set — the block range check
+                # runs over metadata only, and the gen match is a
+                # broadcast searchsorted INSIDE the decode pass (same
+                # kernel as compact's liveness filter).  A scattered
                 # delete set decodes most blocks, and the old left-semi
                 # join shuffled+sorted every decoded posting row against
                 # the batch-sized dying set — measured at a 2M-doc
                 # index, the stats-rewrite job this feeds dropped
-                # 4.4 s -> ~1.5 s.  Per-partition partial counts keep
+                # 4.4 s -> ~1.5 s.  The partial count aggregation keeps
                 # the shuffle at (vocab x partitions) rows, not one row
                 # per dead posting.
                 d_ids = np.array([r["doc_id"] for r in dying_rows], np.int64)
-                d_ord = np.argsort(d_ids, kind="stable")
-                d_ids = d_ids[d_ord]
+                d_ord = doc_id_order(d_ids)
                 d_gens = np.array(
                     [r["gen"] for r in dying_rows], np.int64
                 )[d_ord]
-                bc_dying = spark.sparkContext.broadcast((d_ids, d_gens))
+                bc_dying = spark.sparkContext.broadcast((d_ids[d_ord], d_gens))
                 self._held.append(bc_dying)
-
-                def _dead_counts(batches):
-                    import pandas as _pd
-
-                    ids_v, gens_v = bc_dying.value
-                    for out in _decode_blocks_iter(batches):
-                        d = out["doc_id"].to_numpy()
-                        pos = np.searchsorted(ids_v, d)
-                        posc = np.minimum(pos, ids_v.size - 1)
-                        ok = (
-                            (pos < ids_v.size)
-                            & (ids_v[posc] == d)
-                            & (gens_v[posc] == out["gen"].to_numpy())
-                        )
-                        if ok.any():
-                            vc = out.loc[ok, "term_id"].value_counts()
-                            yield _pd.DataFrame(
-                                {
-                                    "term_id": vc.index.to_numpy(np.int64),
-                                    "df_sub": vc.to_numpy(np.int64),
-                                }
-                            )
-
                 df_sub = (
-                    hit.select("term_id", "n", "doc_deltas", "tfs", "gen")
-                    .mapInPandas(
-                        _dead_counts, schema="term_id long, df_sub long"
-                    )
+                    decode_overlapping(blocks, bc_dying)
                     .groupBy("term_id")
-                    .agg(F.sum("df_sub").alias("df_sub"))
+                    .agg(F.count("*").alias("df_sub"))
                 )
             _mark("df_sub")
             meta["doc_num"] -= int(n_dead or 0)
@@ -700,6 +667,7 @@ class IncrementalIndex:
         return meta
 
     # ------------------------------------------------------------------
+    @_releasing
     def set_term_counts(self, updates: DataFrame, refresh_norms: bool = False) -> dict:
         """Term-level point upsert (term.rs:113-122 `set_term_count` +
         the add_tf_vec overwrite, mod.rs:183-225): ``updates`` is
@@ -716,6 +684,7 @@ class IncrementalIndex:
         affected = updates.select("doc_id").distinct()
         affected_ids = [r["doc_id"] for r in affected.collect()]  # batch-sized
         idx = PackedIndex(spark, self.dir, self.config)
+        self._held.append(idx)
         current = idx.get_tf(affected_ids)
         merged = (
             current.join(updates, ["doc_id", "term"], "full_outer")
@@ -741,7 +710,7 @@ class IncrementalIndex:
         spark = self.spark
         meta = self._meta()
         idx = PackedIndex(spark, self.dir, self.config)
-        self._held += [idx.doc_dict, idx.term_dict]
+        self._held.append(idx)
         decoded = idx.decode_postings(None)
         live = decoded.join(
             idx.doc_dict.select("doc_id", "gen"), ["doc_id", "gen"], "left_semi"
@@ -767,7 +736,7 @@ class IncrementalIndex:
         spark = self.spark
         meta = self._meta()
         idx = PackedIndex(spark, self.dir, self.config)
-        self._held += [idx.doc_dict, idx.term_dict]
+        self._held.append(idx)
         salt_range = meta["salt_range"]
         n_salts = int(meta.get("n_salts", 8))
         avg_len = float(meta.get("total_len", 0)) / max(
@@ -857,34 +826,12 @@ class IncrementalIndex:
             self._write_compacted(idx, meta, packed, n_salts)
             return
         if ds is not None:
-            import pandas as _pd
-
             ids_s, dls_s, gens_s = ds
             bc = spark.sparkContext.broadcast(
-                (ids_s, dls_s.astype(np.int64), gens_s)
+                (ids_s, gens_s, dls_s.astype(np.int64))
             )
             self._held.append(bc)
-
-            def _decode_live(batches):
-                ids_v, dls_v, gens_v = bc.value
-                for out in _decode_blocks_iter(batches):
-                    d = out["doc_id"].to_numpy()
-                    pos = np.searchsorted(ids_v, d)
-                    posc = np.minimum(pos, ids_v.size - 1)
-                    ok = (
-                        (pos < ids_v.size)
-                        & (ids_v[posc] == d)
-                        & (gens_v[posc] == out["gen"].to_numpy())
-                    )
-                    kept = out[ok]
-                    kept = kept.assign(doc_len=dls_v[posc[ok]])
-                    yield kept
-
-            live = (
-                idx._postings()
-                .select("term_id", "n", "doc_deltas", "tfs", "gen")
-                .mapInPandas(_decode_live, schema=_DECODED + ", doc_len long")
-            )
+            live = decode_blocks_df(idx._postings(), keep=bc, with_doc_len=True)
         else:
             live = idx.decode_postings(None).join(
                 idx.doc_dict.select("doc_id", "gen", "doc_len"),
