@@ -1,0 +1,172 @@
+"""The file format of every index table: Parquet v2 data pages + zstd,
+from the one option map in ``operators/tables.py``.  Every writer site
+(build, pure append, mixed batch, refresh_norms, compact, merge) must
+apply it; indexes written in the old v1/snappy format must keep serving
+rank-identically, and batches and compact() must rewrite their tables
+in the new format."""
+
+from __future__ import annotations
+
+import glob
+import json
+import math
+
+import pytest
+from pyspark.sql import functions as F
+
+from tf_idf_vectorizer_spark.config import EngineConfig
+from tf_idf_vectorizer_spark.ioutil import table_path
+from tf_idf_vectorizer_spark.operators import tables
+from tf_idf_vectorizer_spark.operators.index_build import build_index
+from tf_idf_vectorizer_spark.operators.merge import merge_indexes
+from tf_idf_vectorizer_spark.query.packed import PackedIndex
+from tf_idf_vectorizer_spark.sources import load_documents
+from tf_idf_vectorizer_spark.streaming import IncrementalIndex
+
+from test_point_reader import _no_spark_fallback
+
+CFG = EngineConfig(n_salts=4, block_size=64, term_buckets=16)
+TABLES = ("postings", "doc_dict", "term_dict", "manifest")
+# encodings only a v1 data page lists (v2 pages say RLE_DICTIONARY and
+# never bit-pack levels)
+V1_ONLY = {"PLAIN_DICTIONARY", "BIT_PACKED"}
+QUERIES = [["spark", "join", "query"], ["the"], ["fresh", "newterm"]]
+
+
+def _live_files(idx_dir: str, names=TABLES) -> dict[str, list[str]]:
+    meta = json.load(open(f"{idx_dir}/meta.json"))
+    out = {}
+    for name in names:
+        files = glob.glob(
+            f"{table_path(idx_dir, meta, name)}/**/*.parquet", recursive=True
+        )
+        assert files, f"{idx_dir}: no {name} files"
+        out[name] = files
+    return out
+
+
+def _chunks(path: str):
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        for c in range(rg.num_columns):
+            yield rg.column(c)
+
+
+def _codecs(idx_dir: str) -> set[str]:
+    return {
+        ch.compression
+        for files in _live_files(idx_dir).values()
+        for f in files
+        for ch in _chunks(f)
+    }
+
+
+def _assert_v2_zstd(idx_dir: str, step: str, names=TABLES) -> None:
+    for name, files in _live_files(idx_dir, names).items():
+        for f in files:
+            for ch in _chunks(f):
+                where = f"{step}: {name} {f} column {ch.path_in_schema}"
+                assert ch.compression == "ZSTD", (where, ch.compression)
+                assert not V1_ONLY & set(ch.encodings), (where, ch.encodings)
+
+
+@pytest.fixture(scope="module")
+def base_docs(spark, sf_smoke):
+    return load_documents(spark, sf_smoke).select("doc_id", "text").cache()
+
+
+def _adds(spark):
+    return spark.createDataFrame(
+        [
+            (1000, "fresh newterm spark join alpha"),
+            (1001, "the the the query fresh"),
+        ],
+        "doc_id long, text string",
+    )
+
+
+def test_every_writer_uses_the_one_option_set(spark, base_docs, tmp_path):
+    idx = str(tmp_path / "idx")
+    build_index(spark, base_docs, idx, config=CFG, norms=True)
+    _assert_v2_zstd(idx, "build_index")
+
+    inc = IncrementalIndex(spark, idx, CFG)
+    inc.apply_batch(adds=_adds(spark))
+    _assert_v2_zstd(idx, "pure append")
+
+    over = spark.createDataFrame(
+        [(0, "overwritten text spark"), (1000, "fresh rewritten join join")],
+        "doc_id long, text string",
+    )
+    inc.apply_batch(adds=over, delete_ids=[1, 2])
+    _assert_v2_zstd(idx, "mixed batch")
+
+    inc.refresh_norms()
+    _assert_v2_zstd(idx, "refresh_norms")
+
+    inc.compact()
+    _assert_v2_zstd(idx, "compact")
+
+    other = str(tmp_path / "other")
+    build_index(
+        spark, base_docs.filter(F.col("doc_id") >= 250), other, config=CFG,
+        norms=True,
+    )
+    merged = str(tmp_path / "merged")
+    merge_indexes(spark, idx, other, merged, CFG)
+    _assert_v2_zstd(merged, "merge_indexes")
+
+
+def _same(a, b):
+    assert [x[0] for x in a] == [x[0] for x in b], (a[:5], b[:5])
+    for x, y in zip(a, b):
+        assert math.isclose(x[1], y[1], rel_tol=1e-12, abs_tol=1e-12), (x, y)
+        assert x[2] == y[2]
+
+
+def _results(spark, idx_dir: str) -> list:
+    pi = PackedIndex(spark, idx_dir, CFG)
+    out = []
+    for terms in QUERIES:
+        for mode in ("wand", "exact"):
+            df = pi.bm25_topk(terms, k=15, mode=mode)
+            out.append([tuple(r[:3]) for r in df.collect()])
+    # last: the point reader must serve a mixed-format postings dir
+    # without falling back to a Spark collect
+    _no_spark_fallback(pi)
+    for terms in QUERIES:
+        out.append(pi.bm25_topk_rows(terms, k=15))
+    return out
+
+
+def test_old_format_index_serves_and_compact_upgrades(
+    spark, base_docs, tmp_path, monkeypatch
+):
+    idx = str(tmp_path / "old")
+    with monkeypatch.context() as m:
+        # Parquet's own defaults: v1 pages, snappy
+        m.setattr(tables, "WRITE_OPTIONS", {})
+        build_index(spark, base_docs, idx, config=CFG)
+    assert _codecs(idx) == {"SNAPPY"}
+    IncrementalIndex(spark, idx, CFG).apply_batch(adds=_adds(spark))
+    assert _codecs(idx) == {"SNAPPY", "ZSTD"}
+    # every batch rewrites the whole term_dict
+    _assert_v2_zstd(idx, "append to an old-format index", ("term_dict",))
+
+    fresh = str(tmp_path / "fresh")
+    build_index(spark, base_docs.unionByName(_adds(spark)), fresh, config=CFG)
+    want = _results(spark, fresh)
+    for got, exp in zip(_results(spark, idx), want):
+        _same(got, exp)
+
+    IncrementalIndex(spark, idx, CFG).compact()
+    # compact rewrites postings and doc_dict; the manifest is an
+    # append-only lineage log it leaves alone
+    _assert_v2_zstd(
+        idx, "compact of an old-format index", ("postings", "doc_dict")
+    )
+    for got, exp in zip(_results(spark, idx), want):
+        _same(got, exp)

@@ -338,9 +338,9 @@ def build_index(
 
     Tables written (parquet; Iceberg would slot in unchanged via
     ``writeTo`` when its runtime is on the classpath):
-      doc_dict   (doc_id, url?, doc_len, norm)
+      doc_dict   (doc_id, url?, doc_len, norm, gen)
       term_dict  (term_id, term, df, idf)
-      postings   (salt=S/bucket=B/...) posting blocks, BLOCK_SCHEMA
+      postings   (salt=S/...) posting blocks, POSTINGS_FILE_SCHEMA
       manifest   (salt, phase, rows_in, rows_out, checksum, ts)
       meta.json  scalars (doc_num, total_len, config)
     """
