@@ -105,10 +105,7 @@ def test_compact_repacker_exact_when_cumsum_wraps():
     ids, tfs, doc_deltas, tf_bytes = _blocks_near_int64_limit()
     gens = np.zeros(ids.size, dtype=np.int64)
     gens[7] = 1  # doc_dict moved this doc to gen 1: its gen-0 row is dead
-    bc = SimpleNamespace(value=(
-        ids, np.full(ids.size, 10, np.int64), gens,
-        np.array([42], np.int64), np.array([0.5]),
-    ))
+    bc = SimpleNamespace(value=(ids, np.full(ids.size, 10, np.int64), gens))
     blocks = pd.DataFrame({
         "term_id": np.full(6, 42, np.int64),
         "min_doc": ids[::32],

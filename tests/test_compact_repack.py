@@ -1,29 +1,34 @@
-"""compact()'s budget-gated numpy fast path must be BIT-IDENTICAL to
-the JVM pack tiers: same postings files (every column, including the
-varint payload bytes and the double max_score), so its correctness is
-inherited from the long-standing pack_blocks_jvm path rather than
-argued.  The three tiers under test:
+"""compact() must write BIT-IDENTICAL postings to the plain JVM pack:
+same files (every column, including the varint payload bytes and the
+double max_score), so its correctness is inherited from the
+long-standing ``pack_blocks_jvm`` path rather than argued.
 
-  fast        — pinned doc stats + pinned dictionary: one mapInPandas
-                over compressed blocks (make_live_repacker)
-  broadcast   — pinned doc stats only: broadcast-liveness decode +
-                pack_blocks_jvm (forced via DRIVER_DICT_MAX_TERMS=0)
-  distributed — neither pinned: liveness join + pack_blocks_jvm
-                (forced via DRIVER_DOC_STATS_MAX=0 as well)
+compact() runs one kernel (``make_live_repacker`` over the compressed
+blocks) one doc-id chunk at a time; the reference below decodes every
+posting, joins liveness against doc_dict and packs with
+``pack_blocks_jvm``.  Both one chunk (doc stats within the driver pin
+budget) and several chunks (budget forced down to one doc) must match
+it salt dir by salt dir.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import json
 import math
+import os
 import shutil
 
-import pytest
 from pyspark.sql import functions as F
 
 from tf_idf_vectorizer_spark.config import EngineConfig
 from tf_idf_vectorizer_spark.ioutil import table_path
-from tf_idf_vectorizer_spark.operators.index_build import build_index
+from tf_idf_vectorizer_spark.operators import tables
+from tf_idf_vectorizer_spark.operators.index_build import (
+    build_index,
+    pack_blocks_jvm,
+)
 from tf_idf_vectorizer_spark.query.packed import PackedIndex
 from tf_idf_vectorizer_spark.sources.synth import synth_corpus
 from tf_idf_vectorizer_spark.streaming import IncrementalIndex
@@ -65,106 +70,107 @@ def _postings_rows(spark, idx_dir: str):
     return meta, rows
 
 
-def test_compact_fast_path_bit_identical_to_jvm_tiers(
+def _reference_postings(spark, idx_dir: str, out: str) -> None:
+    """Decoded live rows -> pack_blocks_jvm(gen 0, idf from term_dict)
+    -> write_postings: the dataflow compact() replaces."""
+    meta = json.load(open(f"{idx_dir}/meta.json"))
+    idx = PackedIndex(spark, idx_dir, CFG)
+    live = idx.decode_postings(None).join(
+        idx.doc_dict.select("doc_id", "gen", "doc_len"), ["doc_id", "gen"]
+    )
+    rows = live.select(
+        "term_id",
+        tables.salt_of(meta["salt_range"]).alias("salt"),
+        "doc_id",
+        F.col("tf").cast("int").alias("tf"),
+        F.col("doc_len").cast("int").alias("doc_len"),
+    )
+    packed = pack_blocks_jvm(
+        rows, CFG.block_size, meta["term_buckets"], gen=0,
+        avg_len=meta["total_len"] / meta["doc_num"],
+        k1=meta["k1"], b=meta["b"],
+        idf_df=idx.term_dict.select("term_id", "idf"),
+        max_doc_bound=int(idx.doc_dict.agg(F.max("doc_id")).first()[0]),
+    )
+    tables.write_postings(packed, out, meta["n_salts"], CFG)
+    idx.unpersist()
+
+
+def _salt_digests(root: str) -> dict:
+    """{salt dir: (size, md5)} of a postings dir holding one file per
+    salt dir — footer metadata included."""
+    out = {}
+    for d in glob.glob(f"{root}/salt=*"):
+        files = glob.glob(f"{d}/*.parquet")
+        assert len(files) == 1, (d, files)
+        with open(files[0], "rb") as fh:
+            out[os.path.basename(d)] = (
+                os.path.getsize(files[0]), hashlib.md5(fh.read()).hexdigest()
+            )
+    return out
+
+
+def test_compact_bit_identical_to_jvm_pack_in_one_and_many_chunks(
     spark, tmp_path, monkeypatch
 ):
     base = str(tmp_path / "base")
     _mixed_history_index(spark, base)
-
-    dirs = {t: str(tmp_path / t) for t in ("fast", "broadcast", "dist")}
+    dirs = {t: str(tmp_path / t) for t in ("one", "many")}
     for d in dirs.values():
         shutil.copytree(base, d)
 
+    ref = str(tmp_path / "ref_postings")
+    _reference_postings(spark, base, ref)
+    want = _salt_digests(ref)
+    assert len(want) > 1
+
     # pre-compact reference results for the query-identity check
-    idx0 = PackedIndex(spark, dirs["fast"], CFG)
+    idx0 = PackedIndex(spark, base, CFG)
     before = [
         (r["doc_id"], r["score"])
         for r in idx0.bm25_topk(["alpha", "spark", "the"], k=20).collect()
     ]
 
-    IncrementalIndex(spark, dirs["fast"], CFG).compact()
+    pins = []
+    pin = PackedIndex._pin_doc_stats
 
-    monkeypatch.setattr(PackedIndex, "DRIVER_DICT_MAX_TERMS", 0)
-    IncrementalIndex(spark, dirs["broadcast"], CFG).compact()
+    def counting_pin(self, lo=None, hi=None):
+        pins.append((lo, hi))
+        return pin(self, lo, hi)
 
-    monkeypatch.setattr(PackedIndex, "DRIVER_DOC_STATS_MAX", 0)
-    IncrementalIndex(spark, dirs["dist"], CFG).compact()
+    monkeypatch.setattr(PackedIndex, "_pin_doc_stats", counting_pin)
+    IncrementalIndex(spark, dirs["one"], CFG).compact()
+    assert pins == [(None, None)]
+    pins.clear()
+    monkeypatch.setattr(PackedIndex, "DRIVER_DOC_STATS_MAX", 1)
+    IncrementalIndex(spark, dirs["many"], CFG).compact()
     monkeypatch.undo()
+    # a budget of one doc makes every chunk one salt wide
+    assert len(pins) == len(want) > 1, pins
 
-    meta_f, rows_f = _postings_rows(spark, dirs["fast"])
-    meta_b, rows_b = _postings_rows(spark, dirs["broadcast"])
-    meta_d, rows_d = _postings_rows(spark, dirs["dist"])
+    for name, d in dirs.items():
+        meta, rows = _postings_rows(spark, d)
+        assert meta["generation"] == 0 and meta["tight_bounds"] is True
+        assert rows
+        got = _salt_digests(table_path(d, meta, "postings"))
+        assert got == want, name
 
-    assert len(rows_f) > 0
-    assert len(rows_f) == len(rows_b) == len(rows_d)
-    cols = [
-        "term_id", "salt", "block_seq", "n", "min_doc", "max_doc",
-        "max_tf", "min_dl", "max_dl", "max_score", "doc_deltas", "tfs",
-        "bucket", "gen",
-    ]
-    for rf, rb, rd in zip(rows_f, rows_b, rows_d):
-        for c in cols:
-            vf, vb, vd = rf[c], rb[c], rd[c]
-            if c == "max_score":
-                # bit-level check: the WAND planner uses max_score both
-                # as an upper bound and (k-th largest) as a theta floor,
-                # so even a one-ULP drift would change pruning
-                assert math.isclose(vf, vb, rel_tol=0.0, abs_tol=0.0), (
-                    rf["term_id"], rf["salt"], rf["block_seq"], vf, vb
-                )
-                assert math.isclose(vf, vd, rel_tol=0.0, abs_tol=0.0)
-            else:
-                assert vf == vb, (c, rf, rb)
-                assert vf == vd, (c, rf, rd)
-
-    # meta agrees where it matters
-    for m in (meta_b, meta_d):
-        assert meta_f["generation"] == m["generation"] == 0
-        assert meta_f["doc_num"] == m["doc_num"]
-        assert meta_f["total_len"] == m["total_len"]
-        assert meta_f.get("tight_bounds") is True
-
-    # strongest form: the WRITTEN postings files are byte-identical
-    # (same partition dirs, sizes and md5 — footer metadata included;
-    # the fast path declares the JVM pack's exact nullability so even
-    # the parquet definition levels match)
-    import glob
-    import hashlib
-    import os
-
-    def _file_digests(idx_dir, meta):
-        root = f"{idx_dir}/{meta['tables']['postings']}"
-        out = {}
-        for f in glob.glob(f"{root}/**/*.parquet", recursive=True):
-            rel = os.path.relpath(f, root)
-            key = (os.path.dirname(rel), os.path.basename(rel).split("-")[1])
-            with open(f, "rb") as fh:
-                out[key] = (
-                    os.path.getsize(f),
-                    hashlib.md5(fh.read()).hexdigest(),
-                )
-        return out
-
-    dig_f = _file_digests(dirs["fast"], meta_f)
-    dig_b = _file_digests(dirs["broadcast"], meta_b)
-    assert dig_f and dig_f == dig_b
-
-    # and queries over the fast-path compacted index are unchanged
-    idx1 = PackedIndex(spark, dirs["fast"], CFG)
-    after = [
-        (r["doc_id"], r["score"])
-        for r in idx1.bm25_topk(["alpha", "spark", "the"], k=20).collect()
-    ]
-    assert [d for d, _ in before] == [d for d, _ in after]
-    for (_, s0), (_, s1) in zip(before, after):
-        assert math.isclose(s0, s1, rel_tol=1e-12, abs_tol=1e-12)
+    # and queries over the compacted index are unchanged
+    for d in dirs.values():
+        idx1 = PackedIndex(spark, d, CFG)
+        after = [
+            (r["doc_id"], r["score"])
+            for r in idx1.bm25_topk(["alpha", "spark", "the"], k=20).collect()
+        ]
+        assert [x for x, _ in before] == [x for x, _ in after]
+        for (_, s0), (_, s1) in zip(before, after):
+            assert math.isclose(s0, s1, rel_tol=1e-12, abs_tol=1e-12)
 
 
 def test_compact_fast_path_pure_gen0_roundtrip(spark, tmp_path):
-    """Compacting a freshly built (all-gen-0, nothing dead) index via
-    the fast path must reproduce the postings exactly (modulo the
-    max_score recompute, which equals the build's for an unchanged
-    corpus)."""
+    """Compacting a freshly built (all-gen-0, nothing dead) index must
+    reproduce the build's postings exactly (max_score is recomputed, and
+    equals the build's for an unchanged corpus)."""
     out = str(tmp_path / "clean")
     docs = synth_corpus(spark, 1200, vocab=900, seed=3).select(
         "doc_id", "text"

@@ -154,6 +154,11 @@ def test_all_empty_docs_corpus_builds_and_queries(spark, tmp_path):
     pi2 = PackedIndex(spark, out, cfg)
     assert pi2.doc_num == 3  # +1 add, -1 delete
     assert pi2.bm25_topk_rows(["anything"], k=5) == []
+    # compact repacks and writes lineage over zero posting files
+    inc.compact()
+    pi3 = PackedIndex(spark, out, cfg)
+    assert pi3.doc_num == 3 and pi3.meta["generation"] == 0
+    assert pi3.bm25_topk_rows(["anything"], k=5) == []
     # merging two all-empty indexes reads back zero posting files for
     # its lineage: the same schema-inference hazard, one writer later
     from tf_idf_vectorizer_spark.operators.merge import merge_indexes

@@ -162,11 +162,36 @@ def test_old_format_index_serves_and_compact_upgrades(
     for got, exp in zip(_results(spark, idx), want):
         _same(got, exp)
 
+    manifest_before = set(glob.glob(f"{idx}/manifest/*.parquet"))
     IncrementalIndex(spark, idx, CFG).compact()
-    # compact rewrites postings and doc_dict; the manifest is an
-    # append-only lineage log it leaves alone
+    # compact rewrites postings and doc_dict, and appends its own rows
+    # to the manifest, an append-only lineage log
     _assert_v2_zstd(
         idx, "compact of an old-format index", ("postings", "doc_dict")
+    )
+    written = set(glob.glob(f"{idx}/manifest/*.parquet")) - manifest_before
+    assert written
+    for f in written:
+        for ch in _chunks(f):
+            assert ch.compression == "ZSTD", (f, ch.compression)
+            assert not V1_ONLY & set(ch.encodings), (f, ch.encodings)
+    # the compact rows describe the live postings, salt by salt
+    meta = json.load(open(f"{idx}/meta.json"))
+    live = (
+        spark.read.parquet(table_path(idx, meta, "postings"))
+        .groupBy("salt")
+        .agg(
+            F.sum("n").alias("rows_in"),
+            F.expr(
+                "bit_xor(xxhash64(term_id, block_seq, n, min_doc, max_doc))"
+            ).alias("checksum"),
+        )
+    )
+    rows = spark.read.parquet(f"{idx}/manifest").filter(
+        F.col("phase") == f"compact_v{meta['table_version']}"
+    )
+    assert sorted(tuple(r) for r in live.collect()) == sorted(
+        tuple(r) for r in rows.select("salt", "rows_in", "checksum").collect()
     )
     for got, exp in zip(_results(spark, idx), want):
         _same(got, exp)

@@ -205,7 +205,7 @@ DECODED_SCHEMA = "term_id long, doc_id long, tf long, gen int"
 BLOCK_COLS = ["term_id", "n", "doc_deltas", "tfs", "gen"]
 
 
-def _decode_kernel(carry: tuple[str, ...], keep, with_doc_len: bool):
+def _decode_kernel(carry: tuple[str, ...], keep):
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         v = keep.value if keep is not None else None
         for pdf in batches:
@@ -224,11 +224,9 @@ def _decode_kernel(carry: tuple[str, ...], keep, with_doc_len: bool):
                 cols[c] = np.repeat(pdf[c].to_numpy(), n)
             if v is not None:
                 if isinstance(v, np.ndarray):
-                    ok, pos = sorted_member(v, docs)
+                    ok, _ = sorted_member(v, docs)
                 else:
-                    ok, pos = sorted_member(v[0], docs, v[1], gen)
-                    if with_doc_len:
-                        cols["doc_len"] = v[2][pos]
+                    ok, _ = sorted_member(v[0], docs, v[1], gen)
                 cols = {c: a[ok] for c, a in cols.items()}
             cols["gen"] = cols["gen"].astype(np.int32)
             yield pd.DataFrame(cols)
@@ -240,7 +238,6 @@ def decode_blocks_df(
     blocks: DataFrame,
     carry: tuple[str, ...] = (),
     keep=None,
-    with_doc_len: bool = False,
 ) -> DataFrame:
     """The executor decode: posting blocks -> one row per posting
     (term_id, doc_id, tf, gen, *carry) in one ``mapInPandas`` pass.
@@ -249,16 +246,12 @@ def decode_blocks_df(
     (e.g. the WAND rescore's ``is_target`` flag).  ``keep`` optionally
     broadcasts sorted doc ids to keep: a bare array keeps the rows whose
     doc_id it holds; an ``(ids, gens)`` pair keeps the rows whose
-    (doc_id, gen) matches — liveness against the doc_dict — and an
-    ``(ids, gens, doc_lens)`` triple with ``with_doc_len`` also attaches
-    each kept row's doc_len."""
+    (doc_id, gen) matches — liveness against the doc_dict."""
     schema = DECODED_SCHEMA + "".join(
         f", {c} {blocks.schema[c].dataType.simpleString()}" for c in carry
     )
-    if with_doc_len:
-        schema += ", doc_len long"
     return blocks.select(*BLOCK_COLS, *carry).mapInPandas(
-        _decode_kernel(tuple(carry), keep, with_doc_len), schema=schema
+        _decode_kernel(tuple(carry), keep), schema=schema
     )
 
 

@@ -90,27 +90,26 @@ def make_live_repacker(
     avg_len: float,
     salt_range: int,
 ):
-    """mapInPandas body for the budget-gated compact fast path (guide
-    §8: every shuffle but the last moves a lightweight proxy — here the
-    COMPRESSED block payloads cross the one exchange, never the decoded
-    posting rows).  Per partition, fully vectorized numpy: decode every
-    block, drop rows whose (doc_id, gen) misses the broadcast doc stats,
-    re-sort by (term_id, salt, doc_id), re-slice into ``block_size``
-    blocks and re-encode — emitting gen-0 rows in POSTINGS_FILE_SCHEMA,
-    byte- and bit-identical to ``pack_blocks_jvm`` over the same live
-    rows (pinned by tests/test_compact_repack.py: identical output
-    files, including ``max_score``, whose per-pair arithmetic below
-    replicates the JVM expression operation-for-operation and whose
-    ln(idf) values are COLLECTED from a JVM ``F.log`` projection rather
-    than recomputed with numpy's differently-rounded log).
+    """mapInPandas body of compact()'s repack (guide §8: every shuffle
+    but the last moves a lightweight proxy — here the COMPRESSED block
+    payloads cross the one exchange, never the decoded posting rows).
+    Per partition, fully vectorized numpy: decode every block, drop rows
+    whose (doc_id, gen) misses the broadcast doc stats, re-sort by
+    (term_id, salt, doc_id), re-slice into ``block_size`` blocks and
+    re-encode — emitting gen-0 rows in POSTINGS_FILE_SCHEMA, with
+    ``max_score`` holding each block's best per-pair impact.  compact()
+    multiplies it by ln(idf) in the JVM, with ``pack_blocks_jvm``'s own
+    expression, so the written files are byte-identical to
+    ``pack_blocks_jvm`` over the same live rows (pinned by
+    tests/test_compact_repack.py).
 
-    ``bc`` broadcasts (sorted doc_ids, doc_lens int64, gens,
-    sorted ln_idf term_ids, ln_idf values)."""
+    ``bc`` broadcasts (sorted doc_ids, doc_lens int64, gens) — all of
+    doc_dict or the doc-id range of the blocks being repacked."""
     kp1 = k1 + 1.0
     one_minus_b = 1.0 - b
 
     def repack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_v, dls_v, gens_v, ln_tids, ln_vals = bc.value
+        ids_v, dls_v, gens_v = bc.value
         parts = [p for p in batches if len(p)]
         if not parts or ids_v.size == 0:  # no committed docs -> no live rows
             return
@@ -133,10 +132,8 @@ def make_live_repacker(
         tids = tids[order]
         dls = dls[order]
         m = docs.size
-        # salt recomputed from doc_id, not read from the block row (an
-        # all-empty corpus has ZERO posting files, so the salt partition
-        # column may not exist) — float64 division + truncating cast,
-        # the exact JVM `(doc_id / salt_range).cast("int")` semantics.
+        # salt recomputed from doc_id: float64 division + truncating
+        # cast, the exact JVM `(doc_id / salt_range).cast("int")`.
         # salt is monotonic in doc_id, so sorting by (term_id, doc_id)
         # already groups (term_id, salt) runs contiguously.
         salts = (docs.astype(np.float64) / salt_range).astype(np.int64)
@@ -156,14 +153,7 @@ def make_live_repacker(
             one_minus_b + (b * dls.astype(np.float64)) / avg_len
         )
         imp = tfd * kp1 / denom
-        best = np.maximum.reduceat(imp, b_starts)
         bt = tids[b_starts]
-        has, lp = sorted_member(ln_tids, bt)
-        ln = np.full(bt.size, np.nan)
-        ln[has] = ln_vals[lp[has]]
-        # when(ln_idf > 0, ln_idf * best).otherwise(0.0); a missing term
-        # (NaN here, null in the JVM) lands in the 0.0 branch both ways
-        max_score = np.where(ln > 0, ln * best, 0.0)
         doc_deltas, tf_bytes = encode_blocks(docs, tf, b_starts)
         yield pd.DataFrame(
             {
@@ -176,7 +166,7 @@ def make_live_repacker(
                 "max_tf": np.maximum.reduceat(tf, b_starts),
                 "min_dl": np.minimum.reduceat(dls, b_starts),
                 "max_dl": np.maximum.reduceat(dls, b_starts),
-                "max_score": max_score,
+                "max_score": np.maximum.reduceat(imp, b_starts),
                 "doc_deltas": doc_deltas,
                 "tfs": tf_bytes,
                 "bucket": (bt % term_buckets).astype(np.int32),

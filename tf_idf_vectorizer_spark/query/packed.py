@@ -777,27 +777,36 @@ class PackedIndex:
         finally:
             conf.set(key, prev)
 
+    def _doc_stats_budget(self) -> int:
+        """Most doc_dict rows pinned on the driver at once: the pin is
+        ~24 bytes/doc of numpy arrays, and the entry budget
+        (memory-derived) additionally protects small drivers."""
+        return min(self.DRIVER_DOC_STATS_MAX, self._driver_entry_budget())
+
+    def _pin_doc_stats(self, lo: int | None = None, hi: int | None = None):
+        """(sorted doc_id, doc_len, gen) arrays of the doc_dict rows with
+        ``lo <= doc_id < hi`` (every row by default), collected through
+        Arrow and refused on a duplicate doc_id (``doc_id_order``)."""
+        dd = self.doc_dict
+        if lo is not None:
+            dd = dd.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+        pdf = self._topandas_arrow(dd.select("doc_id", "doc_len", "gen"))
+        ids = pdf["doc_id"].to_numpy(np.int64)
+        order = doc_id_order(ids)
+        return (
+            ids[order],
+            pdf["doc_len"].to_numpy(np.float64)[order],
+            pdf["gen"].to_numpy(np.int64)[order],
+        )
+
     def _doc_stats_np(self):
-        """Pinned (sorted doc_id, doc_len, gen) arrays, or None when the
-        corpus exceeds the driver bound."""
+        """The cached full-range pin, or None when the corpus exceeds
+        the driver bound."""
         if not hasattr(self, "_dstats"):
-            # the pin is ~24 bytes/doc of numpy arrays; the entry budget
-            # (memory-derived) additionally protects small drivers
-            if self.doc_num > min(
-                self.DRIVER_DOC_STATS_MAX, self._driver_entry_budget()
-            ):
-                self._dstats = None
-            else:
-                pdf = self._topandas_arrow(
-                    self.doc_dict.select("doc_id", "doc_len", "gen")
-                )
-                ids = pdf["doc_id"].to_numpy(np.int64)
-                order = doc_id_order(ids)
-                self._dstats = (
-                    ids[order],
-                    pdf["doc_len"].to_numpy(np.float64)[order],
-                    pdf["gen"].to_numpy(np.int64)[order],
-                )
+            self._dstats = (
+                None if self.doc_num > self._doc_stats_budget()
+                else self._pin_doc_stats()
+            )
         return self._dstats
 
     # decoded-postings LRU budget: fraction of the driver entry budget

@@ -81,11 +81,11 @@ import time
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from tf_idf_vectorizer_spark.config import DEFAULT, EngineConfig, with_effective_tf
 from tf_idf_vectorizer_spark.ioutil import recover_dir, write_json_atomic
 from tf_idf_vectorizer_spark.operators.codec import (
-    decode_blocks_df,
     decode_overlapping,
     doc_id_order,
 )
@@ -729,162 +729,109 @@ class IncrementalIndex:
     # ------------------------------------------------------------------
     @_releasing
     def compact(self) -> None:
-        """Reclaim stale posting rows: decode, keep (doc_id, gen) pairs
-        that match doc_dict, re-pack everything at generation 0.  No
-        term-dictionary collect: liveness alone decides survival (a term
-        whose df dropped to 0 simply has no live rows left)."""
+        """Reclaim stale posting rows: re-pack the live rows at
+        generation 0, one code path at any corpus size.
+
+        ``make_live_repacker`` runs over the COMPRESSED blocks of one
+        doc-id range (a "chunk": a run of whole salts) at a time, with
+        that range's doc stats pinned on the driver and broadcast for
+        the (doc_id, gen) liveness test — the payload bytes cross one
+        exchange and the decoded posting rows never shuffle.  A corpus
+        within the driver pin budget (``PackedIndex._doc_stats_budget``,
+        the serving tier's gate) is one chunk; a larger one runs chunks
+        of ``budget // salt_range`` salts (at least one salt, which
+        ``salting`` caps at ``salt_target_rows`` docs), so driver memory
+        stays bounded however large the index grows.
+
+        Each block's ``max_score`` is the TRUE per-block maximum under
+        the current corpus stats, so the tight WAND bounds stay valid
+        (generation returns to 0, exactly when ``_tight_bounds_ok``
+        trusts them).  No term-dictionary collect: liveness alone
+        decides survival, and ln(idf) joins in the JVM.  Per-salt
+        lineage rows of the new postings append to the manifest."""
         spark = self.spark
         meta = self._meta()
         idx = PackedIndex(spark, self.dir, self.config)
         self._held.append(idx)
-        salt_range = meta["salt_range"]
+        salt_range = int(meta["salt_range"])
         n_salts = int(meta.get("n_salts", 8))
-        avg_len = float(meta.get("total_len", 0)) / max(
-            int(meta.get("doc_num", 1)), 1
-        )
+        total_len = int(meta.get("total_len", 0))
+        avg_len = float(total_len) / max(int(meta.get("doc_num", 1)), 1)
         k1 = float(meta.get("k1", self.config.k1))
         b = float(meta.get("b", self.config.b))
-        # liveness: when the doc stats fit the driver pin budget
-        # (PackedIndex._doc_stats_np — the same gate the serving tier
-        # uses), the (doc_id -> gen, doc_len) check runs as a broadcast
-        # numpy filter INSIDE the decode pass: no (doc_id, gen) shuffle
-        # + sort of every decoded posting row for the sort-merge join.
-        # Past the budget, the distributed join is the scale path.
         ds = idx._doc_stats_np()
-        # fastest tier: when the TERM dictionary also fits its pin
-        # budget (_can_pin_dict — the serving tier's gate), the whole
-        # decode -> liveness -> re-sort -> re-encode loop runs inside
-        # ONE mapInPandas over the COMPRESSED blocks (guide §8: the
-        # payload bytes cross one exchange; the decoded posting rows
-        # never shuffle and the collect_list re-pack disappears).
-        # Output is bit-identical to the pack_blocks_jvm tiers below —
-        # pinned by tests/test_compact_repack.py — because the varint
-        # codec is canonical and the max_score arithmetic replicates
-        # the JVM expression op-for-op (ln(idf) values are collected
-        # from a JVM F.log projection, not recomputed in numpy).
-        if ds is not None and idx._can_pin_dict():
-            tdf = idx._topandas_arrow(
-                idx.term_dict.select(
-                    "term_id",
-                    F.log(F.col("idf").cast("double")).alias("ln_idf"),
-                )
-            )
-            t_ids = tdf["term_id"].to_numpy(np.int64)
-            t_ord = np.argsort(t_ids, kind="stable")
-            ids_s, dls_s, gens_s = ds
-            bc = spark.sparkContext.broadcast(
-                (
-                    ids_s,
-                    dls_s.astype(np.int64),
-                    gens_s,
-                    t_ids[t_ord],
-                    tdf["ln_idf"].to_numpy(np.float64)[t_ord],
-                )
-            )
-            self._held.append(bc)
-            # salt via min_doc (any block doc gives the block's salt):
-            # an all-empty corpus has zero posting files, so the salt
-            # PARTITION column may not exist on this relation
-            blocks = idx._postings().select(
-                "term_id", "min_doc", "n", "gen", "doc_deltas", "tfs"
-            )
-            # partition count from corpus size (total tokens >= posting
-            # entries), same ~150k-rows-per-task target and 64x cap as
-            # the build's agg width — never the session shuffle knob
-            par = int(spark.sparkContext.defaultParallelism)
-            n_parts = max(
-                par,
-                min(
-                    -(-int(meta.get("total_len", 0)) // 150_000),
-                    64 * par,
-                ),
-            )
-            salt_key = salt_of(salt_range, "min_doc")
-            # declare the same nullability the JVM pack derives
-            # (posexplode pos / size() / lit are non-null), so the
-            # written files are BYTE-identical, footer included
-            from pyspark.sql.types import StructType
-
-            out_schema = StructType.fromDDL(POSTINGS_FILE_SCHEMA)
-            for f_ in out_schema.fields:
-                if f_.name in ("block_seq", "n", "gen"):
-                    f_.nullable = False
-            packed = blocks.repartition(
-                n_parts, F.col("term_id"), salt_key
-            ).mapInPandas(
-                make_live_repacker(
-                    bc,
-                    self.config.block_size,
-                    int(meta["term_buckets"]),
-                    k1=k1,
-                    b=b,
-                    avg_len=avg_len,
-                    salt_range=int(salt_range),
-                ),
-                schema=out_schema,
-            )
-            self._write_compacted(idx, meta, packed, n_salts)
-            return
-        if ds is not None:
-            ids_s, dls_s, gens_s = ds
-            bc = spark.sparkContext.broadcast(
-                (ids_s, gens_s, dls_s.astype(np.int64))
-            )
-            self._held.append(bc)
-            live = decode_blocks_df(idx._postings(), keep=bc, with_doc_len=True)
+        if ds is None:
+            max_id = int(idx.doc_dict.agg(F.max("doc_id")).first()[0] or 0)
+            width = max(1, idx._doc_stats_budget() // salt_range)
+            starts = range(0, max_id // salt_range + 1, width)
         else:
-            live = idx.decode_postings(None).join(
-                idx.doc_dict.select("doc_id", "gen", "doc_len"),
-                ["doc_id", "gen"],
-            )
-        rows = live.select(
-            "term_id",
-            salt_of(salt_range).alias("salt"),
-            "doc_id",
-            F.col("tf").cast("int").alias("tf"),
-            F.col("doc_len").cast("int").alias("doc_len"),
+            width, starts = None, [None]
+        # partition count from corpus size (total tokens >= posting
+        # entries), same ~150k-rows-per-task target and 64x cap as the
+        # build's agg width, split over the chunks
+        par = int(spark.sparkContext.defaultParallelism)
+        n_parts = max(
+            par, min(-(-total_len // len(starts) // 150_000), 64 * par)
         )
-        # NO explicit repartition here: the pack aggregation's own
-        # ENSURE_REQUIREMENTS exchange places partial_collect_list
-        # BELOW the shuffle (one stage with the liveness join) and AQE
-        # sizes the reduce side.  Measured A/B at 6.4M docs, fresh
-        # JVMs, interleaved: an explicit fine-grained
-        # repartition(total/150k) was 1.7x SLOWER (raw rows shuffled,
-        # both agg halves above the exchange, 10x the task count).
-        # idf_df: the re-pack recomputes the TRUE per-block max_score
-        # under current corpus stats, so the tight WAND bounds stay
-        # valid after compaction (generation returns to 0, which is
-        # exactly when _tight_bounds_ok trusts them — a 0.0 max_score
-        # here would zero every block bound and prune the whole index)
-        # delta unroll bound: one metadata-only agg over doc_dict (tf
-        # needs no bound — stored tf is int32, 5 bytes always cover it)
-        max_doc_id = int(
-            idx.doc_dict.agg(F.max("doc_id")).first()[0] or 0
+        blocks = idx._postings().select(
+            "term_id", "salt", "n", "gen", "doc_deltas", "tfs"
         )
-        packed = pack_blocks_jvm(
-            rows, self.config.block_size, meta["term_buckets"], gen=0,
-            avg_len=avg_len, k1=k1, b=b,
-            idf_df=idx.term_dict.select("term_id", "idf"),
-            max_doc_bound=max_doc_id,
+        ln_idf = idx.term_dict.select(
+            "term_id", F.log(F.col("idf").cast("double")).alias("ln_idf")
         )
-        self._write_compacted(idx, meta, packed, n_salts)
-
-    def _write_compacted(
-        self,
-        idx: PackedIndex,
-        meta: dict,
-        packed: DataFrame,
-        n_salts: int,
-    ) -> None:
-        """Shared compact tail: write the gen-0 re-pack + gen-reset
-        doc_dict to fresh versioned dirs and commit both atomically."""
-        # versioned commit covers postings too: the gen-0 re-pack and the
-        # doc_dict gen reset MUST flip together (a crash between them
-        # would otherwise leave a liveness join that matches nothing)
+        # declare the same nullability the JVM pack derives (posexplode
+        # pos / size() / lit are non-null), so the written files are
+        # BYTE-identical to pack_blocks_jvm's, footer included
+        out_schema = StructType.fromDDL(POSTINGS_FILE_SCHEMA)
+        for f_ in out_schema.fields:
+            if f_.name in ("block_seq", "n", "gen"):
+                f_.nullable = False
+        # pack_blocks_jvm's max_score expression: when(>0), not
+        # when(<=0), so a term without idf lands in the 0.0 branch
+        ln = F.col("ln_idf")
+        max_score = F.when(ln > 0, ln * F.col("max_score")).otherwise(
+            F.lit(0.0)
+        )
         ver = int(meta.get("table_version", 0)) + 1
         meta["table_version"] = ver
         p_name, dd_name = f"postings_v{ver}", f"doc_dict_v{ver}"
-        write_postings(packed, f"{self.dir}/{p_name}", n_salts, self.config)
+        for i, s0 in enumerate(starts):
+            part = blocks
+            if s0 is None:
+                ids, dls, gens = ds
+            else:
+                ids, dls, gens = idx._pin_doc_stats(
+                    s0 * salt_range, (s0 + width) * salt_range
+                )
+                # on the salt partition column: prunes to the chunk's dirs
+                part = blocks.filter(F.col("salt").between(s0, s0 + width - 1))
+            bc = spark.sparkContext.broadcast((ids, dls.astype(np.int64), gens))
+            self._held.append(bc)
+            packed = part.repartition(n_parts, "term_id", "salt").mapInPandas(
+                make_live_repacker(
+                    bc, self.config.block_size, int(meta["term_buckets"]),
+                    k1=k1, b=b, avg_len=avg_len, salt_range=salt_range,
+                ),
+                schema=out_schema,
+            )
+            # each salt sits in one chunk, so each salt dir still gets
+            # one file: the first chunk overwrites, later ones append
+            write_postings(
+                packed.join(ln_idf, "term_id", "left").select(
+                    *[max_score.alias(c) if c == "max_score" else c
+                      for c in out_schema.names]
+                ),
+                f"{self.dir}/{p_name}", n_salts, self.config,
+                "append" if i else "overwrite",
+            )
+            bc.unpersist()  # executors hold one chunk's pin at a time
+        write_lineage(
+            spark, f"{self.dir}/{p_name}", f"{self.dir}/manifest",
+            f"compact_v{ver}", mode="append",
+        )
+        # versioned commit covers postings too: the gen-0 re-pack and the
+        # doc_dict gen reset MUST flip together (a crash between them
+        # would otherwise leave a liveness join that matches nothing)
         write_doc_dict(
             idx.doc_dict.select(
                 *[F.lit(0).alias("gen") if c == "gen" else F.col(c)
@@ -894,8 +841,8 @@ class IncrementalIndex:
             meta["doc_num"],
         )
         meta["generation"] = 0
-        meta["k1"] = float(meta.get("k1", self.config.k1))
-        meta["b"] = float(meta.get("b", self.config.b))
+        meta["k1"] = k1
+        meta["b"] = b
         meta["tight_bounds"] = True
         self._commit(meta, {"postings": p_name, "doc_dict": dd_name})
 
