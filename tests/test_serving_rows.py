@@ -81,3 +81,62 @@ def test_rows_apis_job_free_when_resident(srv, spark):
     srv.search_rows(parse_sexpr('(and "t1" (not "t2"))'), k=5)
     after = set(tracker.getJobIdsForGroup(None) or [])
     assert after == before, "serving calls must not launch Spark jobs"
+
+
+def _unpinnable(ix):
+    """A fresh instance whose doc stats exceed the driver bound."""
+    fresh = PackedIndex(ix.spark, ix.dir, CFG)
+    fresh.DRIVER_DOC_STATS_MAX = 0
+    return fresh
+
+
+@pytest.mark.parametrize(
+    "call, match",
+    [
+        (lambda ix: ix.bm25_topk(["missing_term"], mode="bogus"), "mode must be"),
+        (lambda ix: ix.bm25_topk_batch({0: ["t1"]}, mode="bogus"), "mode must be"),
+        (lambda ix: ix.bm25_topk_batch({0: ["t1"]}, mode="wand"), "mode must be"),
+        (lambda ix: ix.similarity("bogus", ["missing_term"]), "unknown algorithm"),
+        (lambda ix: ix.similarity_rows("bogus", ["missing_term"]),
+         "unknown algorithm"),
+        (lambda ix: _unpinnable(ix).bm25_topk(["t1"], mode="driver"),
+         "driver bound"),
+    ],
+    ids=["topk_mode", "batch_mode", "batch_wand", "similarity_algo",
+         "similarity_rows_algo", "driver_unpinned"],
+)
+def test_bad_selector_rejected(srv, call, match):
+    """A bad mode or algorithm raises before the dictionary lookup, so
+    a query of unknown terms cannot hide it behind an empty result."""
+    with pytest.raises(ValueError, match=match):
+        call(srv)
+
+
+def test_rows_api_on_wand_dispatch(spark, srv):
+    """With every query in WAND territory, bm25_topk_rows returns the
+    WAND rows of either planner, equal to the exact plan's; an empty
+    WAND exit still wraps into the typed top-k relation."""
+    for meta_max, planner in (
+        (PackedIndex.META_COLLECT_MAX, "_wand_topk"),
+        (0, "_wand_topk_distributed"),
+    ):
+        idx = PackedIndex(spark, srv.dir, CFG)
+        idx.WAND_THRESHOLD = 0
+        idx.META_COLLECT_MAX = meta_max
+        calls = []
+        orig = getattr(idx, planner)
+        setattr(idx, planner, lambda *a, _o=orig: calls.append(1) or _o(*a))
+        for terms in (["t1", "t2"], ["t1", "s2"], ["s0", "s3"], ["missing_term"]):
+            want = _df_rows(idx.bm25_topk(terms, k=12, mode="exact"))
+            assert _norm(idx.bm25_topk_rows(terms, k=12)) == want, (planner, terms)
+        assert len(calls) == 3, planner
+    # a zero-survivor exit of the distributed planner
+    idx._seg_cell_survival_est = lambda *a, **kw: 0.0
+    survivors = idx._seg_survivors_from
+    idx._seg_survivors_from = lambda *a, **kw: survivors(*a, **kw).limit(0)
+    for terms in (["t1", "t2"], ["missing_term"]):
+        empty = idx.bm25_topk(terms, k=5, mode="wand")
+        assert empty.dtypes == [
+            ("doc_id", "bigint"), ("score", "double"), ("doc_len", "bigint")
+        ]
+        assert empty.collect() == [], terms

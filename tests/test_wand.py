@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tf_idf_vectorizer_spark.config import EngineConfig
+from tf_idf_vectorizer_spark.operators.codec import decode_overlapping
 from tf_idf_vectorizer_spark.operators.index_build import build_index
 from tf_idf_vectorizer_spark.oracle import OracleIndex
 from tf_idf_vectorizer_spark.query.exact import ExactSearcher
@@ -107,8 +108,9 @@ def test_wand_prunes_blocks(spark, zipf_idx):
     rare = min(qinfo, key=lambda r: (r["df"], r["term"]))
     seed_docs = idx.decode_postings([rare["term_id"]]).select("doc_id").distinct()
     ids = np.sort(np.array([r["doc_id"] for r in seed_docs.collect()]))
+    decoded = decode_overlapping(idx._blocks_for(tids), idx._broadcast(ids))
     top = (
-        idx._score_candidates(ids, tids, qinfo, k1, b)
+        idx._score_decoded(decoded, qinfo, k1, b)
         .orderBy(F.desc("score")).limit(k).collect()
     )
     theta = top[-1]["score"]

@@ -7,27 +7,42 @@ this module prunes whole compressed blocks with BM25 upper bounds before
 any decode happens, then exact-rescoring the survivors keeps the top-k
 rank-identical to the exact path (verified by tests).
 
+Every top-k regime returns rows, ``list[(doc_id, score, doc_len)]``:
+the single-node driver path, both WAND planners and the exact pass
+they fall back to collect their k rows where they finish.
+``bm25_topk_rows`` hands those rows back as they are; ``bm25_topk``
+wraps driver and WAND rows once in a local Arrow relation, and only
+``mode='exact'`` stays a lazy Spark plan.
+
 Block-max WAND, three bounded passes:
 
-  1. THETA — a safe LOWER bound θ on the final k-th score.  Fast path
-     (fresh index, all idf > 1, rare term driver-sized): the rare term's
-     tf varints ride along with the metadata collect and θ is computed
-     on the driver with each block's max_dl as the doc-length bound — a
-     per-doc score FLOOR, so its k-th largest is valid and NO Spark job
-     runs.  Fallback: decode the rarest term's highest-bound blocks and
-     exact-score those docs in one fused job.
+  1. THETA — a safe LOWER bound θ on the final k-th score, job-free
+     when every idf > 1: the postings of a SPARSE query term (its df is
+     driver-sized; the payload comes from a second, term-pruned point
+     read after the metadata fetch), each scored with its block's
+     max_dl, are real docs' score FLOORS, so their k-th largest is a
+     valid θ; on a fresh index so is the k-th largest pack-time
+     max_score among one term's blocks.  Fallback: exact-score the
+     docs of the rarest term's highest-bound blocks.
   2. PRUNE — over block METADATA ONLY (parquet column pruning never
      reads the compressed payloads): a block of term t survives iff
-     ub_block(t) + Σ_{t'≠t} term_ub(t') ≥ θ.  Any doc appearing only in
-     pruned blocks has total score < θ and cannot enter the top-k
-     (proof: its per-term block bounds are each dominated by the pruning
-     inequality of its best term's block).
-  3. RESCORE — decode surviving blocks plus the pruned blocks whose
-     doc-id range overlaps them (the is_target flag rides through the
-     decode kernel; overlap is interval math — driver-side when the
-     metadata fits, a salt-local interval join otherwise), exact BM25
-     via one groupBy(doc_id).sum, then TakeOrderedAndProject top-k.
-     Candidate doc ids are NEVER collected.
+     ub_block(t) + Σ_{t'≠t} credit(t') ≥ θ, where credit(t') is the
+     max ub of the t'-blocks overlapping it (per posting for a sparse
+     t').  Any doc appearing only in pruned blocks has total score < θ
+     and cannot enter the top-k (proof: its per-term block bounds are
+     each dominated by the pruning inequality of its best term's block).
+  3. RESCORE — the candidate doc ranges (each surviving dense block's
+     [min_doc, max_doc], each surviving sparse block's decoded docs as
+     singletons) select every block a candidate has a posting in, and
+     the docs of >=1 surviving block are exact-scored: on the driver
+     (one payload fetch of the candidate blocks, numpy BM25 against the
+     pinned doc stats) when that volume is driver-sized, else in one
+     distributed job with the ranges pushed into the doc_dict and
+     payload scans and the is_target flag riding through the decode
+     kernel.  Candidate payloads reach the driver only on the driver
+     rescore; the distributed rescore collects its k rows.
+  When no θ is found or pruning removes (almost) nothing, both
+  planners take the exact pass instead.
 
 Below WAND territory, auto mode dispatches to a bounded SINGLE-NODE
 serving path (the reference's own regime, scoring.rs:215-288): one
@@ -82,17 +97,6 @@ def _arrow_df(spark: SparkSession, data, schema: str) -> DataFrame:
     return spark.createDataFrame(data, schema)
 
 
-def _merge_intervals(ivs: list) -> list:
-    """Sorted disjoint merge of (lo, hi) inclusive intervals."""
-    out: list = []
-    for lo, hi in sorted(ivs):
-        if out and lo <= out[-1][1] + 1:
-            out[-1] = (out[-1][0], max(out[-1][1], hi))
-        else:
-            out.append((lo, hi))
-    return out
-
-
 def _range_max(vals: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
     """Vectorized max over ``vals[lo_i:hi_i)`` per pair (0.0 where the
     range is empty) — the classic interleaved ``maximum.reduceat`` trick;
@@ -128,6 +132,61 @@ def _overlap_mask(m_lo: np.ndarray, m_hi: np.ndarray, lo: np.ndarray, hi: np.nda
     the range with the greatest start <= hi_i can (disjoint + sorted)."""
     i = np.searchsorted(m_lo, hi, side="right") - 1
     return (i >= 0) & (m_hi[np.maximum(i, 0)] >= lo)
+
+
+def _candidate_ranges(
+    term: np.ndarray, lo: np.ndarray, hi: np.ndarray, sp: dict
+):
+    """Merged, sorted doc-id ranges holding every doc of the surviving
+    blocks (``term``, ``lo``, ``hi``: one entry per block or per
+    envelope of blocks).  A dense term's block enters as its [lo, hi]
+    span; a SPARSE term's (``sp``: term_id -> (sorted live doc ids,
+    ...), see ``_sparse_bounds``) as the term's doc ids inside that
+    span, singleton ranges — a sparse block's span covers nearly the
+    whole corpus and would drag every other block back into the
+    rescore."""
+    is_sp = np.isin(term, list(sp))
+    lo_parts, hi_parts = [lo[~is_sp]], [hi[~is_sp]]
+    for t, (ids, *_bounds) in sp.items():
+        m = term == t
+        if m.any():
+            s_lo, s_hi = _merge_ranges(lo[m], hi[m])
+            d = ids[_overlap_mask(s_lo, s_hi, ids, ids)]
+            lo_parts.append(d)
+            hi_parts.append(d)
+    return _merge_ranges(np.concatenate(lo_parts), np.concatenate(hi_parts))
+
+
+def _range_pred(
+    lo: np.ndarray, hi: np.ndarray, lo_col: str = "doc_id", hi_col: str = "doc_id"
+):
+    """Column: does [lo_col, hi_col] meet one of the merged ranges
+    [lo_i, hi_i]?  Every range costs a few py4j Column calls on the
+    driver and a term in every row's filter, so past 256 ranges the
+    predicate covers their envelope instead — a superset, which only
+    prunes less."""
+    if lo.size > 256:
+        lo, hi = lo[:1], hi[-1:]
+    cond = None
+    for a, z in zip(lo.tolist(), hi.tolist()):
+        c = (F.col(lo_col) <= int(z)) & (F.col(hi_col) >= int(a))
+        cond = c if cond is None else (cond | c)
+    return cond
+
+
+def _ordered(scored: DataFrame, k: int) -> DataFrame:
+    """The (score desc, doc_id asc) top-k of a scored relation."""
+    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def _rows(df: DataFrame) -> list[tuple]:
+    """Collect a top-k relation as (doc_id, score, doc_len) rows."""
+    return [(r["doc_id"], r["score"], r["doc_len"]) for r in df.collect()]
+
+
+def _check_algo(algo: str) -> None:
+    if algo not in ("contains", "dot", "cosine", "bm25"):
+        raise ValueError(f"unknown algorithm {algo!r}")
 
 
 def _overlap_credit(
@@ -405,9 +464,7 @@ class PackedIndex:
             # WAND planner: metadata collect + flagged decode + rescore
             qinfo = self._query_info([rare["term"]])
             if qinfo:
-                self._wand_topk(
-                    qinfo, 1, self.config.k1, self.config.b
-                ).limit(1).collect()
+                self._wand_topk(qinfo, 1, self.config.k1, self.config.b)
         if terms and self._doc_stats_np() is not None:
             budget = self._driver_entry_budget() // self.TERM_CACHE_FRACTION
             qinfo = self._query_info(terms)
@@ -1125,33 +1182,35 @@ class PackedIndex:
             (int(doc_ids[i]), float(scores[i]), int(doc_lens[i])) for i in order
         ]
 
+    def _bm25_partials(
+        self, qinfo: list[dict], k1: float, b: float
+    ) -> dict[int, tuple]:
+        """{term_id: (doc ids, BM25 partials, doc_lens)} over the live
+        postings of the terms — one decode through the serving LRU."""
+        ln_idf = {r["term_id"]: math.log(float(r["idf"])) for r in qinfo}
+        return {
+            t: (dids, _bm25_partial(ln_idf[t], tf, dl, k1, b, self.avg_len), dl)
+            for t, (dids, tf, dl) in self._decode_live_driver(list(ln_idf)).items()
+        }
+
+    @staticmethod
+    def _bm25_fold(partials: dict[int, tuple], tids) -> tuple:
+        """The driver BM25 fold: per-doc sums of the ``tids`` terms'
+        partials, added in ascending term_id order (the canonical fold,
+        bit-identical to every other scoring path) -> (sorted doc ids,
+        scores, doc_lens); empty arrays when no term has postings."""
+        parts = [partials[t] for t in sorted(set(tids)) if t in partials]
+        if not parts:
+            return np.empty(0, np.int64), np.empty(0), np.empty(0)
+        return _fold(*zip(*parts))
+
     def _bm25_driver_rows(
         self, qinfo: list[dict], k: int, k1: float, b: float
     ) -> list[tuple]:
         """Single-node exact BM25 -> plain (doc_id, score, doc_len)
         rows (rank-identical to the distributed exact path; tested)."""
-        tids = [r["term_id"] for r in qinfo]
-        idf_map = {r["term_id"]: float(r["idf"]) for r in qinfo}
-        live = self._decode_live_driver(tids)
-        ids_all, sc_all, dl_all = [], [], []
-        for t in sorted(live):  # ascending term_id = canonical fold order
-            dids, tf, dl = live[t]
-            sc_all.append(
-                _bm25_partial(math.log(idf_map[t]), tf, dl, k1, b, self.avg_len)
-            )
-            ids_all.append(dids)
-            dl_all.append(dl)
-        if not ids_all:
-            return []
-        uids, sums, udl = _fold(ids_all, sc_all, dl_all)
-        return self._topk_rows(uids, sums, udl, k)
-
-    def _bm25_driver(self, qinfo: list[dict], k: int, k1: float, b: float) -> DataFrame:
-        return _arrow_df(
-            self.spark,
-            self._bm25_driver_rows(qinfo, k, k1, b),
-            "doc_id long, score double, doc_len long",
-        )
+        partials = self._bm25_partials(qinfo, k1, b)
+        return self._topk_rows(*self._bm25_fold(partials, partials.keys()), k)
 
     def bm25_topk_rows(
         self,
@@ -1164,8 +1223,8 @@ class PackedIndex:
         the reference returns an in-memory Hits vec (scoring.rs:39-55),
         and a serving tier wants rows, not a DataFrame handle.  On the
         single-node path this skips the createDataFrame->collect
-        roundtrip entirely (one Spark job total); outside its bounds it
-        falls back to collecting the distributed result."""
+        roundtrip entirely (one Spark job total); WAND returns its rows
+        directly, and the exact plan is collected."""
         k1 = self.config.k1 if k1 is None else k1
         b = self.config.b if b is None else b
         qinfo = self._query_info(terms)
@@ -1174,10 +1233,9 @@ class PackedIndex:
         mode = self._dispatch(qinfo)
         if mode == "driver":
             return self._bm25_driver_rows(qinfo, k, k1, b)
-        return [
-            (r["doc_id"], r["score"], r["doc_len"])
-            for r in self.bm25_topk(terms, k=k, k1=k1, b=b, mode=mode).collect()
-        ]
+        if mode == "wand":
+            return self._wand_topk(qinfo, k, k1, b)
+        return _rows(self._exact_topk(qinfo, k, k1, b))
 
     def _dispatch(self, qinfo: list[dict]) -> str:
         """SINGLE source of truth for mode='auto' BM25 dispatch, shared
@@ -1200,14 +1258,22 @@ class PackedIndex:
         LRU) skip the Arrow fetch — the driver's only non-CPU cost — so
         their crossover sits 4x higher (numpy scores ~8M entries in
         ~100 ms; the distributed exact pass costs ~2 s at that volume)."""
-        if self._doc_stats_np() is None:
-            return False
-        budget = self._driver_entry_budget()
-        if volume <= min(self.DRIVER_VOLUME_MAX, budget):
+        if self._driver_ok(volume):
             return True
         cache = getattr(self, "_term_postings_cache", {})
-        return volume <= min(4 * self.DRIVER_VOLUME_MAX, budget) and all(
-            r["term_id"] in cache for r in qinfo
+        return (
+            self._doc_stats_np() is not None
+            and volume <= min(4 * self.DRIVER_VOLUME_MAX, self._driver_entry_budget())
+            and all(r["term_id"] in cache for r in qinfo)
+        )
+
+    def _driver_ok(self, volume: int) -> bool:
+        """Does a ``volume``-entry decode belong on the driver: under the
+        numpy-vs-cluster crossover and the memory budget, with the doc
+        stats pinned?"""
+        return (
+            volume <= min(self.DRIVER_VOLUME_MAX, self._driver_entry_budget())
+            and self._doc_stats_np() is not None
         )
 
     def bm25_topk(
@@ -1223,26 +1289,45 @@ class PackedIndex:
 
         mode='auto' dispatches on Σ df(t) (already known from the
         dictionary lookup — no extra job): small posting volume -> exact
-        single pass; large -> block-max WAND.  Both are rank-identical.
+        single pass; large -> block-max WAND.  All are rank-identical.
+        The driver and WAND regimes return their k rows wrapped in one
+        local relation; 'exact' is the lazy distributed plan.
         """
+        if mode not in ("auto", "exact", "wand", "driver"):
+            raise ValueError(f"mode must be auto|exact|wand|driver, got {mode!r}")
+        if mode == "driver" and self._doc_stats_np() is None:
+            raise ValueError(
+                f"mode='driver' scores against doc stats pinned on the "
+                f"driver, but doc_num={self.doc_num} exceeds the driver "
+                f"bound min(DRIVER_DOC_STATS_MAX, entry budget)="
+                f"{self._doc_stats_budget()}"
+            )
         k1 = self.config.k1 if k1 is None else k1
         b = self.config.b if b is None else b
         qinfo = self._query_info(terms)
         if not qinfo or self.doc_num == 0:
-            return _arrow_df(
-                self.spark, [], "doc_id long, score double, doc_len long"
-            )
-        tids = [r["term_id"] for r in qinfo]
+            return self._rows_df([])
         if mode == "auto":
             mode = self._dispatch(qinfo)
-        if mode == "driver":
-            return self._bm25_driver(qinfo, k, k1, b)
         if mode == "exact":
-            scored = self._score_decoded(self.decode_postings(tids), qinfo, k1, b)
-            return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        if mode != "wand":
-            raise ValueError(f"mode must be auto|exact|wand|driver, got {mode!r}")
-        return self._wand_topk(qinfo, k, k1, b)
+            return self._exact_topk(qinfo, k, k1, b)
+        if mode == "driver":
+            return self._rows_df(self._bm25_driver_rows(qinfo, k, k1, b))
+        return self._rows_df(self._wand_topk(qinfo, k, k1, b))
+
+    def _rows_df(self, rows: list[tuple]) -> DataFrame:
+        return _arrow_df(self.spark, rows, "doc_id long, score double, doc_len long")
+
+    def _exact_topk(
+        self, qinfo: list[dict], k: int, k1: float, b: float
+    ) -> DataFrame:
+        """The exact top-k plan: decode every posting of the query terms,
+        score, order.  mode='exact', and the fallback of both WAND
+        planners when pruning cannot pay."""
+        tids = [r["term_id"] for r in qinfo]
+        return _ordered(
+            self._score_decoded(self.decode_postings(tids), qinfo, k1, b), k
+        )
 
     # ------------------------------------------------------------------
     def similarity(
@@ -1258,15 +1343,14 @@ class PackedIndex:
         candidates.  cosine requires an index built with norms=True."""
         from collections import Counter
 
+        _check_algo(algo)
         if not isinstance(terms, Counter):
             terms = Counter(terms)
         if algo == "bm25":
             return self.bm25_topk(list(terms.keys()), k=k, k1=k1, b=b)
         qinfo = self._query_info(list(terms.keys()))
         if not qinfo or self.doc_num == 0:
-            return _arrow_df(
-                self.spark, [], "doc_id long, score double, doc_len long"
-            )
+            return self._rows_df([])
         tids = [r["term_id"] for r in qinfo]
         decoded = self.decode_postings(tids)
         keys = ["doc_id"] + (["gen"] if "gen" in self.doc_dict.columns else [])
@@ -1298,7 +1382,7 @@ class PackedIndex:
         )
         if algo == "dot":
             out = per_doc.select("doc_id", F.col("raw").alias("score"), "doc_len")
-        elif algo == "cosine":
+        else:
             if not self.meta.get("norms", False):
                 raise ValueError(
                     "cosine over the packed index needs build_index(norms=True)"
@@ -1314,8 +1398,6 @@ class PackedIndex:
                 ),
                 "doc_len",
             )
-        else:
-            raise ValueError(f"unknown algorithm {algo!r}")
         return out.filter(~F.isnan("score")).orderBy(
             F.desc("score"), F.asc("doc_id")
         ).limit(k)
@@ -1338,38 +1420,42 @@ class PackedIndex:
         single-node path (decode each distinct term once, reuse its
         per-term partials across every query that contains it) when doc
         stats are pinned and total volume is driver-sized."""
+        if mode not in ("auto", "exact"):
+            raise ValueError(f"mode must be auto|exact, got {mode!r}")
         k1 = self.config.k1 if k1 is None else k1
         b = self.config.b if b is None else b
         all_terms = sorted({t for ts in queries.values() for t in ts})
         qinfo = {r["term"]: r for r in self._query_info(all_terms)}
-        if mode == "auto":
+        if mode == "auto" and self.doc_num:
             # WAND-territory queries (a stop-word query would force the
             # whole batch to decode its postings) peel off and run
             # individually through block-max WAND; the rest share one
             # batch pass.  Dispatch is free — dfs are already known.
-            heavy = {
-                qid: ts
+            per_q = {
+                qid: [qinfo[t] for t in set(ts) if t in qinfo]
                 for qid, ts in queries.items()
-                if self._dispatch([qinfo[t] for t in set(ts) if t in qinfo])
-                == "wand"
+            }
+            heavy = {
+                qid: qi for qid, qi in per_q.items()
+                if qi and self._dispatch(qi) == "wand"
             }
             if heavy:
+                out = _arrow_df(
+                    self.spark,
+                    [
+                        (int(qid), *row)
+                        for qid, qi in heavy.items()
+                        for row in self._wand_topk(qi, k, k1, b)
+                    ],
+                    "query_id long, doc_id long, score double, doc_len long",
+                )
                 light = {q: ts for q, ts in queries.items() if q not in heavy}
-                parts = [
-                    self.bm25_topk(ts, k=k, k1=k1, b=b, mode="wand").select(
-                        F.lit(int(qid)).cast("long").alias("query_id"),
-                        "doc_id", "score", "doc_len",
-                    )
-                    for qid, ts in heavy.items()
-                ]
                 if light:
-                    parts.append(
+                    out = out.unionByName(
                         self.bm25_topk_batch(light, k=k, k1=k1, b=b, mode="auto")
                         .select("query_id", "doc_id", "score", "doc_len")
                     )
-                from functools import reduce
-
-                return reduce(DataFrame.unionByName, parts)
+                return out
         pairs = [
             (int(qid), qinfo[t]["term_id"], float(qinfo[t]["idf"]))
             for qid, ts in queries.items()
@@ -1420,32 +1506,17 @@ class PackedIndex:
         """Batch single-node path: one pruned scan+collect for ALL
         distinct terms, per-term partial scores computed once and shared
         across queries containing the term."""
-        tids = sorted({r["term_id"] for r in qinfo.values()})
-        idf_map = {r["term_id"]: float(r["idf"]) for r in qinfo.values()}
-        live = self._decode_live_driver(tids)
-        partials: dict[int, tuple] = {}
-        for t, (dids, tf, dl) in live.items():
-            partials[t] = (
-                dids,
-                _bm25_partial(math.log(idf_map[t]), tf, dl, k1, b, self.avg_len),
-                dl,
+        partials = self._bm25_partials(list(qinfo.values()), k1, b)
+        out_rows = [
+            (int(qid), *row)
+            for qid, terms in queries.items()
+            for row in self._topk_rows(
+                *self._bm25_fold(
+                    partials, [qinfo[t]["term_id"] for t in terms if t in qinfo]
+                ),
+                k,
             )
-        out_rows = []
-        term_id_of = {term: r["term_id"] for term, r in qinfo.items()}
-        for qid, terms in queries.items():
-            # ascending term_id = canonical fold order (ties consistent
-            # with every other scoring path)
-            tl = sorted(term_id_of[t] for t in set(terms) if t in term_id_of)
-            parts = [partials[t] for t in tl if t in partials]
-            if not parts:
-                continue
-            uids, sums, udl = _fold(
-                [p[0] for p in parts], [p[1] for p in parts], [p[2] for p in parts]
-            )
-            out_rows.extend(
-                (int(qid), d, s, dl_)
-                for d, s, dl_ in self._topk_rows(uids, sums, udl, k)
-            )
+        ]
         return _arrow_df(
             self.spark,
             out_rows,
@@ -1502,12 +1573,6 @@ class PackedIndex:
             return out
         raise ValueError(q.op)
 
-    def _serving_ready(self, volume: int) -> bool:
-        return (
-            volume <= min(self.DRIVER_VOLUME_MAX, self._driver_entry_budget())
-            and self._doc_stats_np() is not None
-        )
-
     def similarity_rows(
         self,
         algo: str,
@@ -1524,6 +1589,7 @@ class PackedIndex:
         NaN drop, (score desc, doc_id asc) top-k."""
         from collections import Counter
 
+        _check_algo(algo)
         if not isinstance(terms, Counter):
             terms = Counter(terms)
         if algo == "bm25":
@@ -1532,13 +1598,10 @@ class PackedIndex:
         if not qinfo or self.doc_num == 0:
             return []
         volume = sum(r["df"] for r in qinfo)
-        if not self._serving_ready(volume) or (
+        if not self._driver_ok(volume) or (
             algo == "cosine" and self._doc_norms_np() is None
         ):
-            return [
-                (r["doc_id"], r["score"], r["doc_len"])
-                for r in self.similarity(algo, terms, k=k, k1=k1, b=b).collect()
-            ]
+            return _rows(self.similarity(algo, terms, k=k, k1=k1, b=b))
         live = self._decode_live_driver([r["term_id"] for r in qinfo])
         if algo == "contains":
             ids = np.unique(
@@ -1560,8 +1623,6 @@ class PackedIndex:
             return []
         if algo == "dot":
             return self._topk_rows(uids, raw, udl, k)
-        if algo != "cosine":
-            raise ValueError(f"unknown algorithm {algo!r}")
         norms = self._doc_norms_np()
         sids, _dls, _g = self._doc_stats_np()
         norm_d = norms[np.searchsorted(sids, uids)]
@@ -1598,31 +1659,17 @@ class PackedIndex:
         volume = sum(r["df"] for r in qinfo)
         if self.doc_num == 0:
             return []
-        if not self._serving_ready(volume):
-            return [
-                (r["doc_id"], r["score"], r["doc_len"])
-                for r in self.bm25_search(query, k=k, k1=k1, b=b).collect()
-            ]
+        if not self._driver_ok(volume):
+            return _rows(self.bm25_search(query, k=k, k1=k1, b=b))
         cand = self._eval_ast_np(query)
         if cand.size == 0:
             return []
         sids, dls, _g = self._doc_stats_np()
         scores = np.zeros(cand.size)
-        if qinfo:
-            live = self._decode_live_driver([r["term_id"] for r in qinfo])
-            idf_map = {r["term_id"]: float(r["idf"]) for r in qinfo}
-            ids_all, sc_all = [], []
-            for t in sorted(live):  # canonical ascending-term_id fold
-                dids, tf, dl = live[t]
-                sc_all.append(
-                    _bm25_partial(
-                        math.log(idf_map[t]), tf, dl, k1, b, self.avg_len
-                    )
-                )
-                ids_all.append(dids)
-            uids, sums, _udl = _fold(ids_all, sc_all)
-            hit, pos = sorted_member(uids, cand)
-            scores[hit] = sums[pos[hit]]
+        partials = self._bm25_partials(qinfo, k1, b)
+        uids, sums, _udl = self._bm25_fold(partials, partials.keys())
+        hit, pos = sorted_member(uids, cand)
+        scores[hit] = sums[pos[hit]]
         cdl = dls[np.searchsorted(sids, cand)]
         return self._topk_rows(cand, scores, cdl, k)
 
@@ -1647,17 +1694,13 @@ class PackedIndex:
         qinfo = self._query_info(terms)
         cand = self._eval_ast(query)
         if self.doc_num == 0:
-            return _arrow_df(
-                self.spark, [], "doc_id long, score double, doc_len long"
-            )
+            return self._rows_df([])
         if qinfo:
             scored = self._score_decoded(
                 self.decode_postings([r["term_id"] for r in qinfo]), qinfo, k1, b
             )
         else:
-            scored = _arrow_df(
-                self.spark, [], "doc_id long, score double, doc_len long"
-            )
+            scored = self._rows_df([])
         hits = (
             cand.join(scored.select("doc_id", "score"), "doc_id", "left")
             .fillna({"score": 0.0})
@@ -1747,16 +1790,15 @@ class PackedIndex:
     # envelope branch at toy scale)
     DIST_SURV_COLLECT_MAX = 100_000
 
-    def _wand_topk(self, qinfo: list[dict], k: int, k1: float, b: float) -> DataFrame:
+    def _wand_topk(self, qinfo: list[dict], k: int, k1: float, b: float) -> list[tuple]:
         """Block-max WAND with driver-side planning when the query's
         block METADATA fits on the driver (a few hundred KB for typical
-        queries): collect metadata once, pick seed blocks + compute the
-        prune driver-side, then run exactly TWO jobs — a fused
-        theta pass and a fused candidate+rescore pass.  Each pass
-        decodes one driver-chosen block set with an `is_target` flag
-        propagated through the decode kernel, so candidate membership
-        needs no extra collect.  Falls back to the distributed variant
-        when metadata is too large (true head-term territory)."""
+        queries): collect metadata once, compute θ and the prune
+        driver-side, then finish through :meth:`_rescore_rows` — one
+        payload fetch + numpy on the driver, or one fused decode+score
+        job with the `is_target` flag riding through the decode kernel.
+        Falls back to the distributed variant when metadata is too
+        large (true head-term territory).  Returns the top-k rows."""
         tids = [r["term_id"] for r in qinfo]
         idf_map = {r["term_id"]: float(r["idf"]) for r in qinfo}
         rare = min(qinfo, key=lambda r: (r["df"], r["term"]))
@@ -1765,10 +1807,8 @@ class PackedIndex:
         gen0 = int(self.meta.get("generation", 0)) == 0
         # SPARSE terms: when a query term's whole posting payload is
         # driver-sized (df <= DRIVER_THETA_MAX_DF, a few hundred KB of
-        # varints) and every posting row is live (gen 0), fetch its
-        # doc_deltas + tfs in a second, term-pruned scan (cached with
-        # the metadata).  Decoded driver-side they give three things no
-        # block metadata can:
+        # varints), fetch and decode it (cached with the metadata).  The
+        # decoded postings give three things no block metadata can:
         #   θ floors  — each posting scored with its block's max_dl is a
         #               real doc's score LOWER bound (k-th largest = θ);
         #   per-POSTING upper bounds — a sparse term's blocks cover few
@@ -1827,63 +1867,27 @@ class PackedIndex:
             if not gen0:
                 meta_df = meta_df.limit(self.META_COLLECT_MAX + 1)
             mp = self._topandas_arrow(meta_df)
+            if len(mp) > self.META_COLLECT_MAX:
+                return self._wand_topk_distributed(qinfo, k, k1, b)
             # sparse payloads come from a SECOND, term-pruned fetch: the
             # metadata scan must not project tfs/doc_deltas, or parquet
             # reads the HEAD terms' full payload chunks just to null
             # them out — the cost the metadata-only fetch exists to skip
-            spf = None
-            if sparse_ids and len(mp) <= self.META_COLLECT_MAX:
-                spf = self._fetch_blocks(
-                    sparse_ids,
-                    [*_KEY_COLS, "n", "min_dl", "max_dl", "doc_deltas", "tfs"],
-                )
-            if len(mp) <= self.META_COLLECT_MAX:
-                while len(cache) >= 8:
-                    cache.pop(next(iter(cache)))
-                cache[ck] = (mp, spf)
+            sp = self._sparse_postings_np(sparse_ids, idf_map, k1, b)
+            while len(cache) >= 8:
+                cache.pop(next(iter(cache)))
+            cache[ck] = (mp, sp)
         else:
-            mp, spf = hit
-        if len(mp) > self.META_COLLECT_MAX:
-            return self._wand_topk_distributed(qinfo, k, k1, b)
+            mp, sp = hit
         n_blocks = len(mp)
         if n_blocks == 0:
-            return _arrow_df(
-                self.spark, [], "doc_id long, score double, doc_len long"
-            )
+            return []
         bterm = mp["term_id"].to_numpy(np.int64)
-        bsalt = mp["salt"].to_numpy(np.int32)
-        bseq = mp["block_seq"].to_numpy(np.int32)
-        bgen = mp["gen"].to_numpy(np.int32)
         blo = mp["min_doc"].to_numpy(np.int64)
         bhi = mp["max_doc"].to_numpy(np.int64)
         bub = mp["ub"].to_numpy(np.float64)
 
-        # ---- decode sparse terms' postings (driver, vectorized) --------
-        # sp[tid] = (sorted doc_ids, per-posting ub, per-posting floor,
-        #            row index of each posting's block in mp)
-        sp: dict[int, tuple] = {}
-        if spf is not None and len(spf):
-            kcols = ["term_id", "salt", "block_seq", "gen"]
-            pos = mp[kcols].copy()
-            pos["_mp_row"] = np.arange(n_blocks, dtype=np.int64)
-            spm = spf.merge(pos, on=kcols, how="inner")
-            for tid, (ids, ub_p, fl_p, brow) in self._sparse_bounds(
-                spm, sparse_ids, idf_map, k1, b,
-                spm["_mp_row"].to_numpy(np.int64),
-            ).items():
-                o = np.argsort(ids, kind="stable")
-                sp[tid] = (ids[o], ub_p[o], fl_p[o], brow[o])
-
-        theta = -math.inf
-        # θ from sparse floors: each sparse posting's floor is a REAL
-        # doc's score lower bound (doc_len <= its block's max_dl; other
-        # terms only add when nonneg), so the k-th largest per term is a
-        # valid θ — job-free.
-        if nonneg:
-            for _ids, _ub, fl, _br in sp.values():
-                if fl.size >= k and math.isfinite(fl[0]):
-                    kth_fl = float(np.partition(fl, fl.size - k)[fl.size - k])
-                    theta = max(theta, kth_fl)
+        theta = self._floor_theta(sp, k) if nonneg else -math.inf
         if tight and nonneg:
             # θ FROM METADATA ALONE, no job, any term size: a block's
             # max_score is ACHIEVED by one of its docs (true per-doc
@@ -1902,7 +1906,7 @@ class PackedIndex:
             kth = ms[o][rank == k - 1]  # per term with >= k blocks
             if kth.size:
                 theta = max(theta, float(kth.max()))
-        # ---- job 1 (fallback): fused theta pass -------------------------
+        # ---- fallback θ: exact top-k of the rarest term's best blocks --
         rare_idx = np.flatnonzero(bterm == rare["term_id"])
         if not math.isfinite(theta) and rare_idx.size:
             n_seed = max(4, (4 * k) // self.config.block_size + 1)
@@ -1911,17 +1915,13 @@ class PackedIndex:
             part = _overlap_mask(m_lo, m_hi, blo, bhi)
             flags = np.zeros(n_blocks, dtype=bool)
             flags[seeds] = True
-            top = (
-                self._score_flagged_arrays(
-                    bterm[part], bsalt[part], bseq[part], bgen[part],
-                    flags[part], qinfo, k1, b,
-                )
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-                .collect()
+            top = self._rescore_rows(
+                mp[part], flags[part], (m_lo, m_hi), qinfo, k, k1, b
             )
             if len(top) >= k:
-                theta = top[-1]["score"]
+                theta = top[-1][1]
+        if not math.isfinite(theta):
+            return _rows(self._exact_topk(qinfo, k, k1, b))
 
         # ---- driver-side prune: doc-range-ALIGNED bounds ----------------
         # For a doc d in block B of term t, any other term t' can only
@@ -1933,103 +1933,114 @@ class PackedIndex:
         # Vectorized: per-term sorted (start, end, ub) arrays + a
         # reduceat range-max; O(total blocks x terms) with no Python
         # loop over blocks.
-        if math.isfinite(theta):
-            others = np.zeros(n_blocks)
-            for t2 in np.unique(bterm):
-                mask = bterm != t2
-                if int(t2) in sp:
-                    # postings-level: credit t2 only to blocks that
-                    # contain one of its ACTUAL docs (its block ranges
-                    # are sparse-wide and would credit everything)
-                    ids2, ub2, _fl, _br = sp[int(t2)]
-                    lo_idx = np.searchsorted(ids2, blo[mask], side="left")
-                    hi_idx = np.searchsorted(ids2, bhi[mask], side="right")
-                    others[mask] += _range_max(ub2, lo_idx, hi_idx)
-                    continue
-                ii = np.flatnonzero(bterm == t2)
-                srt = ii[np.argsort(blo[ii], kind="stable")]
-                # _overlap_credit stays sound for the overlapping block
-                # ranges a generation > 0 index has (running-max ends)
-                others[mask] += _overlap_credit(
-                    blo[srt], bhi[srt], bub[srt], blo[mask], bhi[mask]
-                )
-            # 1e-9 slack absorbs float-order differences between θ's and
-            # the bounds' arithmetic — only ever makes pruning LESS
-            # aggressive, never unsound
-            keep = bub + others >= theta - 1e-9
-        else:
-            keep = np.ones(n_blocks, dtype=bool)
+        others = np.zeros(n_blocks)
+        for t2 in np.unique(bterm):
+            mask = bterm != t2
+            if int(t2) in sp:
+                # postings-level: credit t2 only to blocks that
+                # contain one of its ACTUAL docs (its block ranges
+                # are sparse-wide and would credit everything)
+                ids2, ub2, _fl, _salt = sp[int(t2)]
+                lo_idx = np.searchsorted(ids2, blo[mask], side="left")
+                hi_idx = np.searchsorted(ids2, bhi[mask], side="right")
+                others[mask] += _range_max(ub2, lo_idx, hi_idx)
+                continue
+            ii = np.flatnonzero(bterm == t2)
+            srt = ii[np.argsort(blo[ii], kind="stable")]
+            # _overlap_credit stays sound for the overlapping block
+            # ranges a generation > 0 index has (running-max ends)
+            others[mask] += _overlap_credit(
+                blo[srt], bhi[srt], bub[srt], blo[mask], bhi[mask]
+            )
+        # 1e-9 slack absorbs float-order differences between θ's and
+        # the bounds' arithmetic — only ever makes pruning LESS
+        # aggressive, never unsound
+        keep = bub + others >= theta - 1e-9
         n_surv = int(keep.sum())
         if n_surv == 0:
-            return _arrow_df(
-                self.spark, [], "doc_id long, score double, doc_len long"
-            )
-
-        # ---- job 2: fused candidate + exact rescore ---------------------
+            return []
         if n_surv >= 0.9 * n_blocks:
             # pruning removed (almost) nothing — on bound-adversarial
             # corpora the flag/join machinery would only add overhead
             # over the plain exact single pass, which selects the same
             # top-k by the pruning proof.  This caps WAND's worst case
             # at exact + one metadata job.
-            scored = self._score_decoded(
-                self.decode_postings(tids), qinfo, k1, b
-            )
-            return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        if len(tids) == 1:
-            # one term: its blocks hold disjoint doc ranges, so a
-            # surviving doc's whole posting mass for the query sits in
-            # its own (surviving) block — no pruned block participates
-            # in the exact rescore
-            part = keep
-        else:
-            # candidate intervals: surviving DENSE blocks contribute
-            # their [min_doc, max_doc] span; surviving SPARSE blocks
-            # contribute their decoded docs as singleton ranges (their
-            # block span covers nearly the whole corpus and would drag
-            # every other block back into the rescore)
-            lo_parts, hi_parts = [], []
-            sp_surv = np.zeros(n_blocks, dtype=bool)
-            for _tid, (ids_t, _u, _f, brow) in sp.items():
-                in_surv = keep[brow]
-                if in_surv.any():
-                    d = ids_t[in_surv]
-                    lo_parts.append(d)
-                    hi_parts.append(d)
-                sp_surv[np.unique(brow)] = True
-            dense_surv = keep & ~sp_surv
-            if dense_surv.any():
-                lo_parts.append(blo[dense_surv])
-                hi_parts.append(bhi[dense_surv])
-            m_lo, m_hi = _merge_ranges(
-                np.concatenate(lo_parts), np.concatenate(hi_parts)
-            )
-            part = _overlap_mask(m_lo, m_hi, blo, bhi)
-        # pruned-volume driver rescore: after pruning, the candidate
-        # decode is usually tiny, and the distributed rescore's
-        # doc_dict join would cost more than the whole query
-        part_vol = int(mp["n"].to_numpy(np.int64)[part].sum())
-        if (
-            part_vol <= min(self.DRIVER_VOLUME_MAX, self._driver_entry_budget())
-            and self._doc_stats_np() is not None
-        ):
-            rows = self._rescore_driver_rows(
-                bterm[part], bsalt[part], bseq[part], bgen[part], keep[part],
-                idf_map, k1, b, k,
-            )
-            return _arrow_df(
-                self.spark, rows, "doc_id long, score double, doc_len long"
-            )
-        r_lo, r_hi = _merge_ranges(blo[part], bhi[part])
-        if r_lo.size > 64:
-            dr = [(int(r_lo[0]), int(r_hi[-1]))]
-        else:
-            dr = list(zip(r_lo.tolist(), r_hi.tolist()))
-        scored = self._score_flagged_arrays(
-            bterm[part], bsalt[part], bseq[part], bgen[part], keep[part],
-            qinfo, k1, b, doc_ranges=dr,
+            return _rows(self._exact_topk(qinfo, k, k1, b))
+        # ---- rescore: every block a candidate has a posting in ---------
+        m_lo, m_hi = _candidate_ranges(bterm[keep], blo[keep], bhi[keep], sp)
+        if m_lo.size == 0:
+            # every survivor is a sparse block with no live docs (stale-
+            # generation artifact): the exact pass is always sound
+            return _rows(self._exact_topk(qinfo, k, k1, b))
+        part = _overlap_mask(m_lo, m_hi, blo, bhi)
+        return self._rescore_rows(
+            mp[part], keep[part], (m_lo, m_hi), qinfo, k, k1, b
         )
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+    @staticmethod
+    def _floor_theta(sp: dict[int, tuple], k: int) -> float:
+        """θ from sparse floors (only valid when every query idf > 1):
+        each sparse posting's floor is a REAL doc's score lower bound
+        (doc_len <= its block's max_dl; the other terms only add), so a
+        term's k-th largest floor is a valid θ — job-free."""
+        theta = -math.inf
+        for _ids, _ub, fl, _salt in sp.values():
+            if fl.size >= k and math.isfinite(fl[0]):
+                theta = max(theta, float(np.partition(fl, fl.size - k)[fl.size - k]))
+        return theta
+
+    def _rescore_rows(
+        self,
+        blocks: pd.DataFrame,
+        flags: np.ndarray,
+        ranges: tuple,
+        qinfo: list[dict],
+        k: int,
+        k1: float,
+        b: float,
+    ) -> list[tuple]:
+        """The rescore finish of both WAND planners: exact top-k rows
+        over the docs that appear in >=1 FLAGGED block.  ``blocks``
+        (block keys + n) holds every block such a doc has a posting in,
+        ``ranges`` (merged lo, hi arrays) every such doc's id.  A
+        driver-sized volume with pinned doc stats takes one payload
+        fetch + numpy (:meth:`_rescore_driver_rows`); otherwise one
+        distributed job scores them, with the ranges pushed into the
+        doc_dict scan and each (term, salt, gen)'s block_seq interval
+        into the payload scan."""
+        term, salt, bseq, gen = (blocks[c].to_numpy(np.int64) for c in _KEY_COLS)
+        if self._driver_ok(int(blocks["n"].sum())):
+            idf_map = {r["term_id"]: float(r["idf"]) for r in qinfo}
+            return self._rescore_driver_rows(
+                term, salt, bseq, gen, flags, idf_map, k1, b, k
+            )
+        # The payload files are sorted by (term_id, block_seq), so a
+        # min_doc/max_doc predicate cannot prune row groups — but
+        # block_seq is doc-id-monotone within (term, salt, gen), so the
+        # candidate blocks translate into per-group block_seq INTERVALS
+        # whose predicate aligns with the file sort order and prunes the
+        # payload IO itself.  Past 256 groups the doc-range overlap
+        # predicate stands in (bounded py4j build cost).
+        grp = blocks.groupby(["term_id", "salt", "gen"])["block_seq"].agg(
+            ["min", "max"]
+        )
+        if len(grp) > 256:
+            blk = _range_pred(*ranges, "min_doc", "max_doc")
+        else:
+            blk = None
+            for (t, s, g), r in grp.iterrows():
+                c = (
+                    (F.col("term_id") == int(t))
+                    & (F.col("salt") == int(s))
+                    & (F.col("gen") == int(g))
+                    & F.col("block_seq").between(int(r["min"]), int(r["max"]))
+                )
+                blk = c if blk is None else (blk | c)
+        scored = self._score_flagged_arrays(
+            term, salt, bseq, gen, flags, qinfo, k1, b,
+            doc_ranges=np.column_stack(ranges), block_filter=blk,
+        )
+        return _rows(_ordered(scored, k))
 
     _KDF_SCHEMA = (
         "term_id long, salt int, block_seq int, gen int, is_target boolean"
@@ -2162,12 +2173,10 @@ class PackedIndex:
         )
         keys = ["doc_id"] + (["gen"] if "gen" in self.doc_dict.columns else [])
         dd = self.doc_dict.select(*(keys + ["doc_len"]))
-        if doc_ranges:
-            cond = None
-            for lo, hi in doc_ranges:
-                c = F.col("doc_id").between(int(lo), int(hi))
-                cond = c if cond is None else (cond | c)
-            dd = dd.filter(cond)
+        if doc_ranges is not None:
+            dd = dd.filter(
+                _range_pred(*np.asarray(doc_ranges, np.int64).reshape(-1, 2).T)
+            )
         joined = decoded.join(F.broadcast(qdf), "term_id").join(dd, keys)
         partial = _bm25_partial_col(k1, b, self.avg_len)
         return (
@@ -2236,8 +2245,8 @@ class PackedIndex:
     ) -> dict[int, tuple]:
         """Decode the sparse terms' fetched blocks (one row per block:
         term_id, n, min_dl, max_dl, gen, payloads) and bound every LIVE
-        posting -> {term_id: (doc_ids, ub, floor, carry)} in block
-        order.  ``ub`` scores a posting with its block's min_dl (an
+        posting -> {term_id: (doc_ids, ub, floor, carry)} sorted by
+        doc id.  ``ub`` scores a posting with its block's min_dl (an
         upper bound), ``floor`` with its max_dl (a real doc's lower
         bound); ``carry`` holds one value per block row, repeated onto
         its postings."""
@@ -2272,41 +2281,26 @@ class PackedIndex:
             else:
                 ub_p = np.zeros(ids.size)
                 fl_p = np.full(ids.size, -np.inf)
-            out[tid] = (ids, ub_p, fl_p, extra)
+            o = np.argsort(ids, kind="stable")
+            out[tid] = (ids[o], ub_p[o], fl_p[o], extra[o])
         return out
 
     def _sparse_postings_np(
         self, sparse_ids: list[int], idf_map: dict[int, float], k1: float, b: float
-    ) -> pd.DataFrame | None:
+    ) -> dict[int, tuple]:
         """The full (driver-sized) postings of sparse query terms, one
-        fetch + :meth:`_sparse_bounds` -> a pandas frame with one row
-        per live posting: (term_id, salt, doc_id, ub, floor).  None
-        when nothing found."""
+        fetch + :meth:`_sparse_bounds` -> {term_id: (doc ids, ub,
+        floor, salt)} per live posting, sorted by doc id."""
         if not sparse_ids:
-            return None
+            return {}
         spf = self._fetch_blocks(
-            sparse_ids,
-            ["term_id", "salt", "n", "min_dl", "max_dl", "doc_deltas", "tfs", "gen"],
+            sparse_ids, ["salt", "n", "min_dl", "max_dl", "doc_deltas", "tfs"]
         )
         if not len(spf):
-            return None
-        outs = [
-            pd.DataFrame(
-                {
-                    "term_id": np.full(ids.size, tid, dtype=np.int64),
-                    "salt": salts,
-                    "doc_id": ids,
-                    "ub": ub_p,
-                    "floor": fl_p,
-                }
-            )
-            for tid, (ids, ub_p, fl_p, salts) in self._sparse_bounds(
-                spf, sparse_ids, idf_map, k1, b, spf["salt"].to_numpy(np.int32)
-            ).items()
-        ]
-        if not outs:
-            return None
-        return pd.concat(outs, ignore_index=True)
+            return {}
+        return self._sparse_bounds(
+            spf, sparse_ids, idf_map, k1, b, spf["salt"].to_numpy(np.int32)
+        )
 
     #: segment-grid resolution for the distributed WAND's range-aligned
     #: dense credits; the driver-side summary is |query terms| x this
@@ -2318,11 +2312,7 @@ class PackedIndex:
     DIST_WAND_WIDE_CAP = 64
 
     def _sparse_credit_plan(
-        self,
-        blocks_meta: DataFrame,
-        sp_pdf: pd.DataFrame | None,
-        sparse_set: set,
-        key_cols: list[str],
+        self, blocks_meta: DataFrame, sp: dict[int, tuple], key_cols: list[str]
     ) -> DataFrame:
         """Attach the sparse-term survival credit column to the block
         metadata (lazy plan, no job).  A sparse term's blocks span
@@ -2331,16 +2321,16 @@ class PackedIndex:
         contain one of its (driver-decoded) docs — salt-equi broadcast
         hash join with the range check as a post-filter, output bounded
         by |query terms| x sparse df."""
-        if not sparse_set:
+        if not sp:
             return blocks_meta.withColumn("sp_credit", F.lit(0.0))
-        spdf = F.broadcast(
-            self.spark.createDataFrame(
-                sp_pdf[["term_id", "salt", "doc_id", "ub"]].rename(
-                    columns={"term_id": "sp_tid", "salt": "sp_salt",
-                             "ub": "sp_ub"}
-                )
-            )
-        )
+        spdf = F.broadcast(self.spark.createDataFrame(pd.DataFrame({
+            "sp_tid": np.concatenate(
+                [np.full(v[0].size, t, np.int64) for t, v in sp.items()]
+            ),
+            "sp_salt": np.concatenate([v[3] for v in sp.values()]),
+            "doc_id": np.concatenate([v[0] for v in sp.values()]),
+            "sp_ub": np.concatenate([v[1] for v in sp.values()]),
+        })))
         credit = (
             blocks_meta.alias("m")
             .join(
@@ -2524,7 +2514,9 @@ class PackedIndex:
             return meta2.limit(0)
         return self._seg_survivors_from(summ, sparse_set, key_cols, theta)
 
-    def _wand_topk_distributed(self, qinfo: list[dict], k: int, k1: float, b: float) -> DataFrame:
+    def _wand_topk_distributed(
+        self, qinfo: list[dict], k: int, k1: float, b: float
+    ) -> list[tuple]:
         """Fully distributed block-max WAND for head-term territory
         (metadata too large for the driver).  Only bounded things touch
         the driver: per-term bounds (|query| rows), seed block metadata
@@ -2536,29 +2528,16 @@ class PackedIndex:
         docs), and singleton candidate intervals.  Candidate membership
         is the is_target flag riding through the decode kernel; the
         "blocks overlapping the surviving candidate ranges" set is a
-        salt-local interval join (salts are disjoint doc-id ranges)."""
-        import time as _time
-
-        _prev = _time.time()
-        _dbg = bool(os.environ.get("TFIDF_WAND_TIMING"))
-
-        def _mk(name: str) -> None:
-            # planning-chain stage timer, printed only when profiling
-            # (TFIDF_WAND_TIMING=1); production queries pay one time()
-            nonlocal _prev
-            now = _time.time()
-            if _dbg:
-                print(f"[wand-dist] {name}: {now - _prev:.3f}s", flush=True)
-            _prev = now
-
+        range-predicate filter over the cached block metadata.  Returns
+        the top-k rows."""
         tids = [r["term_id"] for r in qinfo]
         idf_map = {r["term_id"]: float(r["idf"]) for r in qinfo}
         tight = self._tight_bounds_ok(k1, b)
         nonneg = min(float(r["idf"]) for r in qinfo) > 1.0
-        sparse_ids = self._sparse_query_terms(qinfo)
-        sp_pdf = self._sparse_postings_np(sparse_ids, idf_map, k1, b)
-        _mk("sparse_fetch")
-        key_cols = ["term_id", "salt", "block_seq", "gen"]
+        sp = self._sparse_postings_np(
+            self._sparse_query_terms(qinfo), idf_map, k1, b
+        )
+        key_cols = _KEY_COLS
         meta_cols = key_cols + ["n", "min_doc", "max_doc", "max_tf", "min_dl"]
         if tight:
             meta_cols.append("max_score")
@@ -2591,20 +2570,8 @@ class PackedIndex:
                 dcache.pop(next(iter(dcache)))[0].unpersist()
             dcache[ckey] = ent
         blocks_meta = ent[0]
-        _mk("meta_cache")
 
-        theta = -math.inf
-        # θ floors from sparse postings (job-free beyond the bounded
-        # fetch): each sparse posting scored with its block's max_dl is
-        # a real doc's score lower bound
-        if nonneg and sp_pdf is not None:
-            for tid in sparse_ids:
-                fl = sp_pdf.loc[sp_pdf["term_id"] == tid, "floor"].to_numpy()
-                if fl.size >= k and math.isfinite(fl[0]):
-                    theta = max(
-                        theta,
-                        float(np.partition(fl, fl.size - k)[fl.size - k]),
-                    )
+        theta = self._floor_theta(sp, k) if nonneg else -math.inf
         theta_fut = None
         if tight and nonneg:
             # metadata-only θ (same proof as the driver-planned path:
@@ -2630,230 +2597,104 @@ class PackedIndex:
 
                 pool = self._bg_pool = ThreadPoolExecutor(max_workers=1)
             theta_fut = pool.submit(lambda: kth_df.first()[0])
-        _mk("theta_submit")
 
         # survival credits: ub + (other DENSE terms' range-aligned max)
-        # + (other SPARSE terms' postings-level credit) >= θ.  A sparse
-        # term's blocks span nearly the whole doc-id space, so its
-        # global ub would credit every block; the credit join grants it
-        # only to blocks that truly contain one of its (driver-decoded)
-        # docs — salt-equi broadcast hash join with the range check as
-        # a post-filter, output bounded by |query terms| x sparse df.
-        sparse_set = set(sparse_ids) if sp_pdf is not None else set()
-        meta2 = self._sparse_credit_plan(blocks_meta, sp_pdf, sparse_set, key_cols)
-        _mk("credit_plan")
+        # + (other SPARSE terms' postings-level credit) >= θ
+        sparse_set = set(sp)
+        meta2 = self._sparse_credit_plan(blocks_meta, sp, key_cols)
         summ = self._seg_summary(meta2, tids, sparse_set)
-        _mk("seg_summary")
         if theta_fut is not None:
             kth = theta_fut.result()
             if kth is not None:
                 theta = max(theta, float(kth))
-        _mk("theta_wait")
         if summ is None:
-            return _arrow_df(
-                self.spark, [], "doc_id long, score double, doc_len long"
-            )
+            return []
 
-        # ---- pass 1 (fallback): θ from the rarest term's best blocks --
+        # ---- fallback θ: the rarest term's best blocks ------------------
         # seed block METADATA is tiny (top few blocks of one term) and
         # safe to collect; their doc payloads are not
-        rare = min(qinfo, key=lambda r: (r["df"], r["term"]))
-        seeds = []
         if not math.isfinite(theta):
-            seeds = (
+            rare = min(qinfo, key=lambda r: (r["df"], r["term"]))
+            seeds = self._topandas_arrow(
                 blocks_meta.filter(F.col("term_id") == rare["term_id"])
                 .orderBy(F.desc("ub"), *key_cols)
                 .limit(max(4, (4 * k) // self.config.block_size + 1))
-                .collect()
+                .select(*key_cols, "min_doc", "max_doc")
             )
-        if seeds:
-            seed_iv = _merge_intervals([(m["min_doc"], m["max_doc"]) for m in seeds])
-            seed_keys = {
-                (m["term_id"], m["salt"], m["block_seq"], m["gen"]) for m in seeds
-            }
-            overlap_cond = None
-            for lo, hi in seed_iv:  # few ORed range predicates, JVM filter
-                c = (F.col("min_doc") <= hi) & (F.col("max_doc") >= lo)
-                overlap_cond = c if overlap_cond is None else (overlap_cond | c)
-            seed_kdf = F.broadcast(
-                _arrow_df(
-                    self.spark,
-                    [k_ + (True,) for k_ in sorted(seed_keys)],
-                    self._KDF_SCHEMA,
+            if len(seeds):
+                m_lo, m_hi = _merge_ranges(
+                    seeds["min_doc"].to_numpy(np.int64),
+                    seeds["max_doc"].to_numpy(np.int64),
                 )
-            )
-            theta_kdf = (
-                blocks_meta.filter(overlap_cond)
-                .select(*key_cols)
-                .join(seed_kdf, key_cols, "left")
-                .fillna({"is_target": False})
-            )
-            top = (
-                self._score_flagged_df(theta_kdf, tids, qinfo, k1, b)
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-                .collect()
-            )
-            if len(top) >= k:
-                theta = top[-1]["score"]
+                seed_kdf = F.broadcast(_arrow_df(
+                    self.spark, seeds[key_cols].assign(is_target=True),
+                    self._KDF_SCHEMA,
+                ))
+                theta_kdf = (
+                    blocks_meta.filter(_range_pred(m_lo, m_hi, "min_doc", "max_doc"))
+                    .select(*key_cols)
+                    .join(seed_kdf, key_cols, "left")
+                    .fillna({"is_target": False})
+                )
+                top = _rows(_ordered(
+                    self._score_flagged_df(theta_kdf, tids, qinfo, k1, b), k
+                ))
+                if len(top) >= k:
+                    theta = top[-1][1]
 
-        # ---- pass 2: prune blocks by upper bound (distributed filter) --
+        # ---- prune blocks by upper bound (distributed filter) -----------
         if not math.isfinite(theta):
             # no θ means no pruning: the kdf machinery would decode
             # everything anyway — take the plain exact single pass
-            scored = self._score_decoded(
-                self.decode_postings(tids), qinfo, k1, b
-            )
-            return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+            return _rows(self._exact_topk(qinfo, k, k1, b))
         # job-free no-prune detection from the driver-sized segment
         # grid: when (almost) every occupied cell clears θ the survivor
         # machinery can only remove noise — skip its jobs entirely and
         # take the plain exact single pass, which selects the same
         # top-k (both branches exact; heuristic affects dispatch only)
-        sp_max = 0.0
-        if sparse_set:
-            sp_max = float(
-                sp_pdf[sp_pdf["term_id"].isin(list(sparse_set))]
-                .groupby("term_id")["ub"].max().sum()
-            )
+        sp_max = sum(float(v[1].max()) for v in sp.values() if v[1].size)
         if self._seg_cell_survival_est(summ, sp_max, theta) >= 0.97:
-            _mk("noprune_est")
-            scored = self._score_decoded(
-                self.decode_postings(tids), qinfo, k1, b
-            )
-            return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+            return _rows(self._exact_topk(qinfo, k, k1, b))
         surviving = self._seg_survivors_from(summ, sparse_set, key_cols, theta)
         # fused count + collect: ONE bounded job returns the survivor
-        # keys when the set is driver-sized (the common case) — the
-        # separate count job and cache materialization of the old chain
-        # collapse into this single limited collect; only the rare
+        # keys when the set is driver-sized (the common case); only the
         # too-many-survivors branch below re-runs the pipeline cached
         sk = self._topandas_arrow(
             surviving.select(*key_cols, "min_doc", "max_doc")
             .limit(self.DIST_SURV_COLLECT_MAX + 1)
         )
-        _mk("survivor_collect")
         n_surv = len(sk)
         if n_surv == 0:
-            return _arrow_df(
-                self.spark, [], "doc_id long, score double, doc_len long"
-            )
+            return []
         small = n_surv <= self.DIST_SURV_COLLECT_MAX
         if ent[1] is None:
             # count once per cached metadata relation (a PackedIndex is
             # a snapshot; the relation is immutable while cached)
             ent[1] = blocks_meta.count()
         n_blocks = ent[1]
-        _mk("blocks_count")
-        if small and n_surv >= 0.9 * n_blocks:
-            # pruning removed (almost) nothing — the flag/join machinery
-            # would only add overhead over the plain exact single pass,
-            # which selects the same top-k by the pruning proof (same
-            # cap as the driver-planned path)
-            scored = self._score_decoded(
-                self.decode_postings(tids), qinfo, k1, b
-            )
-            return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-        # ---- pass 3: fused candidate + exact rescore --------------------
-        # Any top-k doc appears in >=1 surviving block; its rows in
-        # PRUNED blocks are still needed for the exact score.  Candidate
-        # doc ranges come from the surviving blocks — collected MERGED
-        # and bounded (precise when the survivor set is driver-sized,
-        # per-salt envelopes otherwise), pushed into both the payload
-        # and doc_dict scans as row-group-prunable predicates, with the
-        # surviving keys broadcast as the is_target flag: ONE scan job,
-        # range-pruned, and the payload relation never shuffles.
-        if not small:
-            # survivor set beyond the driver budget: cache the pipeline
-            # (the envelope aggregation below re-reads it) and get the
-            # exact count for the fallback check + broadcast decision
-            surviving = surviving.cache()
-            n_surv = surviving.count()
-            _mk("survivor_count")
+        if small:
             if n_surv >= 0.9 * n_blocks:
-                surviving.unpersist()
-                scored = self._score_decoded(
-                    self.decode_postings(tids), qinfo, k1, b
-                )
-                return scored.orderBy(
-                    F.desc("score"), F.asc("doc_id")
-                ).limit(k)
-        if len(tids) == 1:
-            # one term -> doc-disjoint blocks -> pruned blocks never
-            # participate in the exact rescore (see driver-planned path)
-            if small:
-                scored = self._score_flagged_arrays(
-                    sk["term_id"].to_numpy(np.int64),
-                    sk["salt"].to_numpy(np.int32),
-                    sk["block_seq"].to_numpy(np.int32),
-                    sk["gen"].to_numpy(np.int32),
-                    np.ones(len(sk), dtype=bool), qinfo, k1, b,
-                )
-            else:
-                kdf1 = surviving.select(*key_cols).withColumn(
-                    "is_target", F.lit(True)
-                )
-                if n_surv <= 2_000_000:
-                    kdf1 = F.broadcast(kdf1)
-                scored = self._score_flagged_df(kdf1, tids, qinfo, k1, b)
-        elif small:
+                # pruning removed (almost) nothing (same cap as the
+                # driver-planned path)
+                return _rows(self._exact_topk(qinfo, k, k1, b))
             # survivor set is driver-sized: the limited collect above
-            # already gave ranges, keys and flags in ONE job, and a
-            # second bounded collect gives the candidate blocks —
-            # everything else (interval merge, block_seq pushdown
-            # intervals, survival flags) is numpy.  Surviving SPARSE
-            # blocks enter as their decoded docs' singleton ranges, not
-            # their (enormous) block span.
-            lo_parts, hi_parts = [], []
-            sk_tid = sk["term_id"].to_numpy(np.int64)
-            dense_mask = ~np.isin(sk_tid, list(sparse_set)) if sparse_set else (
-                np.ones(len(sk), dtype=bool)
+            # gave ranges, keys and flags in ONE job, and a second
+            # bounded collect gives the candidate blocks; the rescore
+            # then runs on the driver or as one distributed job
+            m_lo, m_hi = _candidate_ranges(
+                sk["term_id"].to_numpy(np.int64),
+                sk["min_doc"].to_numpy(np.int64),
+                sk["max_doc"].to_numpy(np.int64),
+                sp,
             )
-            if dense_mask.any():
-                lo_parts.append(sk["min_doc"].to_numpy(np.int64)[dense_mask])
-                hi_parts.append(sk["max_doc"].to_numpy(np.int64)[dense_mask])
-            if sparse_set:
-                for i in np.flatnonzero(~dense_mask):
-                    sel = sp_pdf[
-                        (sp_pdf["term_id"] == sk_tid[i])
-                        & (sp_pdf["salt"] == int(sk["salt"].iloc[i]))
-                        & (sp_pdf["doc_id"] >= int(sk["min_doc"].iloc[i]))
-                        & (sp_pdf["doc_id"] <= int(sk["max_doc"].iloc[i]))
-                    ]
-                    d = sel["doc_id"].to_numpy(np.int64)
-                    lo_parts.append(d)
-                    hi_parts.append(d)
-            lo_all = (
-                np.concatenate(lo_parts) if lo_parts
-                else np.empty(0, np.int64)
-            )
-            if lo_all.size == 0:
+            if m_lo.size == 0:
                 # all survivors sparse with no live docs (stale-gen
                 # artifact): fall through to the always-sound exact pass
-                surviving.unpersist()
-                scored = self._score_decoded(
-                    self.decode_postings(tids), qinfo, k1, b
-                )
-                return scored.orderBy(
-                    F.desc("score"), F.asc("doc_id")
-                ).limit(k)
-            r_lo, r_hi = _merge_ranges(lo_all, np.concatenate(hi_parts))
-            if r_lo.size > 256:
-                dr = [(int(r_lo[0]), int(r_hi[-1]))]
-            else:
-                dr = list(zip(r_lo.tolist(), r_hi.tolist()))
-            ov = None
-            for lo, hi in dr:
-                c = (F.col("min_doc") <= int(hi)) & (
-                    F.col("max_doc") >= int(lo)
-                )
-                ov = c if ov is None else (ov | c)
+                return _rows(self._exact_topk(qinfo, k, k1, b))
             cand = self._topandas_arrow(
-                blocks_meta.filter(ov).select(*key_cols, "n")
+                blocks_meta.filter(_range_pred(m_lo, m_hi, "min_doc", "max_doc"))
+                .select(*key_cols, "n")
             )
-            _mk("candidate_collect")
-            part_vol = int(cand["n"].sum())
             surv_set = set(zip(*(sk[c].to_numpy() for c in key_cols)))
             flags = np.fromiter(
                 (
@@ -2863,162 +2704,64 @@ class PackedIndex:
                 dtype=bool,
                 count=len(cand),
             )
-            # pruned-volume driver rescore (same adaptive move as the
-            # driver-planned path): when the CANDIDATE volume after
-            # pruning is driver-sized and doc stats are pinned, one
-            # Arrow fetch + numpy beats the distributed join/agg's two
-            # shuffles — the distributed rescore below remains the
-            # unbounded-scale fallback
-            if (
-                part_vol
-                <= min(self.DRIVER_VOLUME_MAX, self._driver_entry_budget())
-                and self._doc_stats_np() is not None
-            ):
-                rows = self._rescore_driver_rows(
-                    cand["term_id"].to_numpy(np.int64),
-                    cand["salt"].to_numpy(np.int32),
-                    cand["block_seq"].to_numpy(np.int32),
-                    cand["gen"].to_numpy(np.int32),
-                    flags, idf_map, k1, b, k,
-                )
-                _mk("rescore_driver")
-                surviving.unpersist()
-                return _arrow_df(
-                    self.spark, rows, "doc_id long, score double, doc_len long"
-                )
-            # The payload files are sorted by (term_id, block_seq), so a
-            # min_doc/max_doc predicate cannot prune row groups — but
-            # block_seq is doc-id-monotone within (term, salt, gen), so
-            # the candidate doc ranges translate into per-group
-            # block_seq INTERVALS whose predicate aligns with the file
-            # sort order and prunes the payload IO itself.  Built ONLY
-            # on this distributed-fallback path: the expression is a few
-            # hundred py4j Column ops — real driver milliseconds the
-            # driver-rescore path above must not pay.
-            blk = ov
-            grp = cand.groupby(["term_id", "salt", "gen"])["block_seq"].agg(
-                ["min", "max"]
+            return self._rescore_rows(
+                cand, flags, (m_lo, m_hi), qinfo, k, k1, b
             )
-            if 0 < len(grp) <= 256:
-                blk = None
-                for (t, s, g), r in grp.iterrows():
-                    c = (
-                        (F.col("term_id") == int(t))
-                        & (F.col("salt") == int(s))
-                        & (F.col("gen") == int(g))
-                        & F.col("block_seq").between(
-                            int(r["min"]), int(r["max"])
-                        )
-                    )
-                    blk = c if blk is None else (blk | c)
-            scored = self._score_flagged_arrays(
-                cand["term_id"].to_numpy(np.int64),
-                cand["salt"].to_numpy(np.int32),
-                cand["block_seq"].to_numpy(np.int32),
-                cand["gen"].to_numpy(np.int32),
-                flags, qinfo, k1, b, doc_ranges=dr, block_filter=blk,
-            )
+
+        # ---- survivor set beyond the driver budget ----------------------
+        # cache the pipeline (the flag relation and the envelopes re-read
+        # it) and get the exact count for the fallback check + broadcast
+        # decision
+        surviving = surviving.cache()
+        n_surv = surviving.count()
+        if n_surv >= 0.9 * n_blocks:
+            surviving.unpersist()
+            return _rows(self._exact_topk(qinfo, k, k1, b))
+        kdf = surviving.select(*key_cols).withColumn("is_target", F.lit(True))
+        if n_surv <= 2_000_000:
+            kdf = F.broadcast(kdf)
+        if len(tids) == 1:
+            # one term -> doc-disjoint blocks -> pruned blocks never
+            # participate in the exact rescore
+            scored = self._score_flagged_df(kdf, tids, qinfo, k1, b)
         else:
-            # survivor set too large to collect precisely: per-salt
-            # envelopes for the DENSE survivors (salts partition the
-            # doc-id space, so these are disjoint and the count is
-            # bounded by n_salts) UNIONED with the live doc ids of
-            # surviving SPARSE blocks as singleton ranges — a top-k doc
-            # whose score clears θ only through a sparse survivor may
-            # sit in a salt with no dense survivor, and the envelopes
-            # alone would filter it out of the doc_dict join (silently
-            # wrong top-k).  The sparse side is driver-sized by
-            # construction: sparse terms hold few blocks and their
-            # postings (sp_pdf) are already decoded on the driver.
-            # Surviving keys ride as a (possibly broadcast) flag
-            # relation into a fully distributed rescore.
-            surv_keys = surviving.select(*key_cols).withColumn(
-                "is_target", F.lit(True)
-            )
-            kdf = F.broadcast(surv_keys) if n_surv <= 2_000_000 else surv_keys
-            dense_surv = (
-                surviving.filter(~F.col("term_id").isin(list(sparse_set)))
-                if sparse_set
-                else surviving
-            )
-            ivp = self._topandas_arrow(
-                dense_surv.groupBy("salt").agg(
+            # per-(term, salt) envelopes of the survivors (salts
+            # partition the doc-id space, so their count is bounded by
+            # |terms| x n_salts) through the candidate-range step: dense
+            # envelopes enter as spans, SPARSE ones as the live doc ids
+            # inside them — a top-k doc whose score clears θ only through
+            # a sparse survivor may sit in a salt with no dense survivor,
+            # and a span-only filter would drop it from the doc_dict join
+            # (silently wrong top-k).  Surviving keys ride as a (possibly
+            # broadcast) flag relation into a fully distributed rescore.
+            env = self._topandas_arrow(
+                surviving.groupBy("term_id", "salt").agg(
                     F.min("min_doc").alias("min_doc"),
                     F.max("max_doc").alias("max_doc"),
                 )
             )
-            lo_parts = [ivp["min_doc"].to_numpy(np.int64)]
-            hi_parts = [ivp["max_doc"].to_numpy(np.int64)]
-            if sparse_set:
-                ssk = self._topandas_arrow(
-                    surviving.filter(
-                        F.col("term_id").isin(list(sparse_set))
-                    ).select("term_id", "salt", "min_doc", "max_doc")
-                )
-                for i in range(len(ssk)):
-                    sel = sp_pdf[
-                        (sp_pdf["term_id"] == int(ssk["term_id"].iloc[i]))
-                        & (sp_pdf["salt"] == int(ssk["salt"].iloc[i]))
-                        & (sp_pdf["doc_id"] >= int(ssk["min_doc"].iloc[i]))
-                        & (sp_pdf["doc_id"] <= int(ssk["max_doc"].iloc[i]))
-                    ]
-                    d = sel["doc_id"].to_numpy(np.int64)
-                    lo_parts.append(d)
-                    hi_parts.append(d)
-            lo_all = np.concatenate(lo_parts)
-            if lo_all.size == 0:
+            m_lo, m_hi = _candidate_ranges(
+                env["term_id"].to_numpy(np.int64),
+                env["min_doc"].to_numpy(np.int64),
+                env["max_doc"].to_numpy(np.int64),
+                sp,
+            )
+            if m_lo.size == 0:
                 # every survivor is a sparse block with no live docs
                 # (stale-generation artifact) — the plain exact pass is
                 # always sound, never guess at an empty result
                 surviving.unpersist()
-                scored = self._score_decoded(
-                    self.decode_postings(tids), qinfo, k1, b
-                )
-                return scored.orderBy(
-                    F.desc("score"), F.asc("doc_id")
-                ).limit(k)
-            r_lo, r_hi = _merge_ranges(lo_all, np.concatenate(hi_parts))
-            if r_lo.size > 256:
-                dr = [(int(r_lo[0]), int(r_hi[-1]))]
-            else:
-                dr = list(zip(r_lo.tolist(), r_hi.tolist()))
-            ov = None
-            for lo, hi in dr:
-                c = (F.col("min_doc") <= int(hi)) & (
-                    F.col("max_doc") >= int(lo)
-                )
-                ov = c if ov is None else (ov | c)
+                return _rows(self._exact_topk(qinfo, k, k1, b))
             scored = self._score_flagged_df(
                 kdf, tids, qinfo, k1, b,
-                doc_ranges=dr, block_filter=ov, kdf_how="left",
+                doc_ranges=np.column_stack((m_lo, m_hi)),
+                block_filter=_range_pred(m_lo, m_hi, "min_doc", "max_doc"),
+                kdf_how="left",
             )
-        rows = (
-            scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-        )
-        _mk("rescore_distributed")
-        # the result is k rows — materializing it here lets `surviving`
-        # be released immediately; the block-metadata relation stays
+        rows = _rows(_ordered(scored, k))
+        # the result is k rows — collecting it here lets `surviving` be
+        # released immediately; the block-metadata relation stays
         # persisted in the bounded (4-entry LRU) _dist_meta_cache for
         # reuse by later queries in a serving session
         surviving.unpersist()
-        return _arrow_df(
-            self.spark,
-            [(r["doc_id"], r["score"], r["doc_len"]) for r in rows],
-            "doc_id long, score double, doc_len long",
-        )
-
-    def _score_candidates(
-        self,
-        cand_ids: np.ndarray,
-        tids: list[int],
-        qinfo: list[dict],
-        k1: float,
-        b: float,
-    ) -> DataFrame:
-        """Exact BM25 for a fixed candidate set (sorted ids): decode only
-        blocks whose doc range contains a candidate, keep the
-        candidates' rows (codec.decode_overlapping)."""
-        decoded = decode_overlapping(
-            self._blocks_for(tids), self._broadcast(cand_ids)
-        )
-        return self._score_decoded(decoded, qinfo, k1, b)
+        return rows
