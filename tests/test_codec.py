@@ -78,18 +78,102 @@ def _blocks_near_int64_limit():
     return ids, tfs, doc_deltas, tf_bytes
 
 
+def _old_layout(ids, tfs, starts):
+    """The payloads indexes wrote before the first doc id moved to
+    ``min_doc``: the first id absolute, then the gaps; every tf."""
+    ends = np.append(starts[1:], ids.size)
+    return (
+        [encode_varint(np.diff(ids[s:e], prepend=0)) for s, e in zip(starts, ends)],
+        [encode_varint(tfs[s:e]) for s, e in zip(starts, ends)],
+    )
+
+
 def test_decode_blocks_exact_when_cumsum_wraps():
     """The decoder's running cumsum spans all blocks of a call: six block
-    heads near 2^62 push it past 2^63, where int64 wraps negative.  The
-    ids still come back exact — numpy int64 arithmetic is modular, and
-    each id is a difference of two wrapped sums."""
+    bases (``min_doc``) near 2^62 push it past 2^63, where int64 wraps
+    negative.  The ids still come back exact — numpy int64 arithmetic is
+    modular, and each id is a difference of two wrapped sums."""
     ids, tfs, doc_deltas, tf_bytes = _blocks_near_int64_limit()
-    raw = decode_varint(b"".join(doc_deltas)).astype(np.int64)
+    min_doc = ids[::32]
+    gaps = [decode_varint(d).astype(np.int64) for d in doc_deltas]
+    assert [g.size for g in gaps] == [31] * 6  # n - 1 gaps per block
+    stream = np.concatenate([np.append(m, g) for m, g in zip(min_doc, gaps)])
     with np.errstate(over="ignore"):
-        assert (np.cumsum(raw) < 0).any()  # the wrap really happens
-    got_ids, got_tfs = decode_blocks(np.full(6, 32), doc_deltas, tf_bytes)
+        assert (np.cumsum(stream) < 0).any()  # the wrap really happens
+    got_ids, got_tfs = decode_blocks(np.full(6, 32), min_doc, doc_deltas, tf_bytes)
     assert np.array_equal(got_ids, ids)
     assert np.array_equal(got_tfs, tfs)
+    # the old layout (absolute first id, n varints) decodes alike
+    old_dd, old_tf = _old_layout(ids, tfs, np.arange(0, ids.size, 32))
+    got_ids, got_tfs = decode_blocks(np.full(6, 32), min_doc, old_dd, old_tf)
+    assert np.array_equal(got_ids, ids)
+    assert np.array_equal(got_tfs, tfs)
+
+
+def test_single_posting_blocks_store_nothing_derivable():
+    """n = 1: the only doc id is min_doc, so doc_deltas is empty; tfs is
+    empty when the tf is 1 and one varint otherwise."""
+    ids = np.array([3, 10, 2**40], dtype=np.int64)
+    tfs = np.array([1, 7, 1], dtype=np.int64)
+    starts = np.arange(3)
+    doc_deltas, tf_bytes = encode_blocks(ids, tfs, starts)
+    assert doc_deltas == [b"", b"", b""]
+    assert tf_bytes == [b"", encode_varint(np.array([7])), b""]
+    got_ids, got_tfs = decode_blocks(np.ones(3), ids, doc_deltas, tf_bytes)
+    assert np.array_equal(got_ids, ids)
+    assert np.array_equal(got_tfs, tfs)
+
+
+def test_all_ones_blocks_store_no_tfs():
+    """A block whose tfs are all 1 (max_tf == 1, since tf >= 1) stores an
+    empty tfs payload and decodes to n ones, next to blocks that store
+    their tfs."""
+    rng = np.random.default_rng(11)
+    ids = np.cumsum(rng.integers(1, 500, size=40)).astype(np.int64)
+    tfs = np.ones(40, dtype=np.int64)
+    tfs[20:30] = rng.integers(1, 9, size=10)
+    tfs[25] = 2
+    starts = np.array([0, 10, 20, 30])
+    doc_deltas, tf_bytes = encode_blocks(ids, tfs, starts)
+    assert [len(t) == 0 for t in tf_bytes] == [True, True, False, True]
+    got_ids, got_tfs = decode_blocks(
+        np.full(4, 10), ids[starts], doc_deltas, tf_bytes
+    )
+    assert np.array_equal(got_ids, ids)
+    assert np.array_equal(got_tfs, tfs)
+
+
+@given(st.data())
+@settings(max_examples=200, deadline=None)
+def test_block_roundtrip_both_layouts_hypothesis(data):
+    """Random blocks, each written in either layout, decode in one call."""
+    gaps = data.draw(st.lists(st.integers(1, 2**40), min_size=1, max_size=200))
+    ids = np.cumsum(np.array(gaps, dtype=np.int64))
+    tfs = np.array(
+        data.draw(st.lists(st.integers(1, 3), min_size=ids.size, max_size=ids.size)),
+        dtype=np.int64,
+    )
+    cuts = data.draw(st.sets(st.integers(1, max(ids.size - 1, 1))))
+    starts = np.array(sorted({0} | {c for c in cuts if c < ids.size}))
+    old = data.draw(
+        st.lists(st.booleans(), min_size=starts.size, max_size=starts.size)
+    )
+    new_dd, new_tf = encode_blocks(ids, tfs, starts)
+    old_dd, old_tf = _old_layout(ids, tfs, starts)
+    pick = lambda a, b: [x if o else y for x, y, o in zip(a, b, old)]  # noqa: E731
+    n = np.diff(np.append(starts, ids.size))
+    got_ids, got_tfs = decode_blocks(
+        n, ids[starts], pick(old_dd, new_dd), pick(old_tf, new_tf)
+    )
+    assert np.array_equal(got_ids, ids)
+    assert np.array_equal(got_tfs, tfs)
+
+
+def test_decode_blocks_rejects_a_payload_count_mismatch():
+    ids = np.array([5, 9, 12], dtype=np.int64)
+    dd, tf = encode_blocks(ids, np.array([2, 1, 1]), np.zeros(1, np.int64))
+    with pytest.raises(ValueError):
+        decode_blocks([4], [5], dd, tf)
 
 
 def test_compact_repacker_exact_when_cumsum_wraps():
@@ -119,7 +203,9 @@ def test_compact_repacker_exact_when_cumsum_wraps():
         salt_range=1 << 62,
     )
     out = pd.concat(list(repack(iter([blocks]))), ignore_index=True)
-    got_ids, got_tfs = decode_blocks(out["n"], out["doc_deltas"], out["tfs"])
+    got_ids, got_tfs = decode_blocks(
+        out["n"], out["min_doc"], out["doc_deltas"], out["tfs"]
+    )
     live = gens == 0
     assert np.array_equal(got_ids, ids[live])
     assert np.array_equal(got_tfs, tfs[live])

@@ -224,6 +224,8 @@ def test_term_dict_point_lookup_matches_pinned(spark, idx_dir):
     map, including absent terms, and fall back cleanly under a byte
     cap.  The dict is term-sorted with row-group stats, so the lookup
     is a driver-side read of ~one group per term — no Spark job."""
+    import pyarrow.parquet as pq
+
     pi_a = PackedIndex(spark, idx_dir, CFG)
     terms = [r[0] for r in pi_a.term_dict.orderBy("df", "term")
              .select("term").limit(5).collect()] + ["zz-no-such-term"]
@@ -234,7 +236,14 @@ def test_term_dict_point_lookup_matches_pinned(spark, idx_dir):
     pi_b.DRIVER_DICT_MAX_TERMS = 0  # force the large-dict path
     assert not pi_b._can_pin_dict()
     assert pi_b._td_files() is not None
+    # the files store no term_id: the lookup hashes the query terms on
+    # the driver (tables.term_id_of), still with no Spark job
+    for f in glob.glob(f"{idx_dir}/term_dict/*.parquet"):
+        assert pq.read_schema(f).names == ["term", "df", "idf"]
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None) or [])
     via_point = pi_b._query_info(terms)
+    assert set(tracker.getJobIdsForGroup(None) or []) == before
     assert [
         (r["term"], r["term_id"], r["df"], round(float(r["idf"]), 12))
         for r in via_point

@@ -60,8 +60,9 @@ def test_varint_overflow_raises_not_truncates(spark):
 
     from tf_idf_vectorizer_spark.operators.index_build import pack_blocks_jvm
 
+    # the first doc id lives in min_doc, so the gap after it overflows
     rows = spark.createDataFrame(
-        [(1, 0, 1 << 40, 1, 10)],
+        [(1, 0, 0, 1, 10), (1, 0, 1 << 40, 1, 10)],
         "term_id long, salt int, doc_id long, tf int, doc_len int",
     )
     packed = pack_blocks_jvm(
@@ -89,7 +90,9 @@ def test_varint_width_bounds_byte_identical(spark):
     assert len(packed) == 1
     blk = packed[0]
     want_tfs = [d % 97 + 1 for d in sorted(docs)]
-    got_ids, got_tfs = decode_blocks([blk["n"]], [blk["doc_deltas"]], [blk["tfs"]])
+    got_ids, got_tfs = decode_blocks(
+        [blk["n"]], [blk["min_doc"]], [blk["doc_deltas"]], [blk["tfs"]]
+    )
     assert got_ids.tolist() == sorted(docs)
     assert got_tfs.tolist() == want_tfs
     # and the stream is the canonical encoding (numpy re-encode)

@@ -123,3 +123,48 @@ def test_wand_prunes_blocks(spark, zipf_idx):
             (F.col("term_id") == tid) & (F.col("ub") + F.lit(others) >= theta)
         ).count()
     assert surv < total_blocks, f"no pruning: {surv}/{total_blocks}"
+
+
+def test_wand_equals_exact_under_external_stats(spark, tmp_path):
+    """A with_external_stats copy scores under another corpus's idf, so
+    the build-time max_score column (packed under the local idf) bounds
+    nothing there: trusting it let WAND prune live top-k docs and return
+    other docs at a tied score.  The copy must also not reuse the
+    original's WAND metadata caches, whose keys hold no idf."""
+    from tf_idf_vectorizer_spark.functions.tokenize import term_frequencies
+    from tf_idf_vectorizer_spark.operators.stats import corpus_stats
+    from tf_idf_vectorizer_spark.sources.synth import synth_topical_corpus
+
+    out = str(tmp_path / "topical")
+    docs = synth_topical_corpus(
+        spark, 6000, vocab=500, n_sites=8, seed=11
+    ).select("doc_id", "text").cache()
+    build_index(spark, docs, out, config=CFG)
+    ext_docs = docs.filter(F.col("doc_id") % 7 == 0)
+    ext_stats = corpus_stats(term_frequencies(ext_docs, "doc_id", "text"))
+    ext_n = ext_docs.count()
+
+    def rows(ix, mode):
+        return [
+            (r["doc_id"], round(r["score"], 9), r["doc_len"])
+            for r in ix.bm25_topk(["t1"], k=10, mode=mode).collect()
+        ]
+
+    pi = PackedIndex(spark, out, CFG)
+    ext = pi.with_external_stats(ext_stats, ext_n)
+    assert rows(ext, "wand") == rows(ext, "exact")
+    assert pi._tight_bounds_ok(CFG.k1, CFG.b)  # the original is untouched
+    assert not ext._tight_bounds_ok(CFG.k1, CFG.b)
+
+    # a copy taken after the original planned WAND queries starts with
+    # its own metadata caches
+    rows(pi, "wand")
+    cached = [
+        a for a in ("_wand_meta_cache", "_dist_meta_cache") if a in vars(pi)
+    ]
+    assert cached
+    ext = pi.with_external_stats(ext_stats, ext_n)
+    for a in cached:
+        assert vars(ext).get(a) is not vars(pi)[a], a
+    assert rows(ext, "wand") == rows(ext, "exact")
+    docs.unpersist()

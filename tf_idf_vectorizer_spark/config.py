@@ -35,7 +35,10 @@ class EngineConfig:
     b: float = 0.75             # BM25 b
     block_size: int = 128       # docs per posting block (ours; ref has none)
     n_salts: int = 8            # MINIMUM doc-range salts for head-term skew
-    term_buckets: int = 64      # hash buckets for postings partition pruning
+    # term_id hash bucket of every block (the ``bucket`` column): the
+    # Iceberg publish partitions postings by (salt, bucket); the parquet
+    # postings dirs are partitioned by salt only
+    term_buckets: int = 64
     # upper bound on a (term_id, salt) aggregation group in the packer: a
     # stop-word's salt-local run is <= salt_range docs, so build_index
     # raises n_salts until salt_range <= this (keeps every collect_list

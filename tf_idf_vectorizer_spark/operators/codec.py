@@ -2,9 +2,21 @@
 
 A posting block holds up to ``block_size`` postings of one term,
 docID-sorted, with per-block max-score metadata (the north rule).  Its
-payload is two LEB128 varint streams: ``doc_deltas`` (the block's first
-doc id absolute, then the gaps) and ``tfs`` (one count per posting).
-This module owns that format in both runtimes, so swapping the codec
+payload stores only what that metadata cannot give, as two LEB128
+varint streams:
+
+- ``doc_deltas``: the gaps of postings 2..n (n - 1 varints, empty when
+  n = 1).  The first doc id is the block's ``min_doc`` column.
+- ``tfs``: one count per posting, or empty when every tf is 1 (tf >= 1
+  always, so an all-ones block is exactly ``max_tf == 1``).
+
+Indexes written before this layout stored the first doc id absolute at
+the head of ``doc_deltas`` (n varints) and always n tfs.  The decoder
+tells the two apart per block by counting varints, so old blocks, new
+blocks and a salt dir holding both read alike with no format switch;
+``compact()`` rewrites old blocks in the new layout.
+
+This module owns the format in both runtimes, so swapping the codec
 means editing this file only:
 
 - the JVM encoder (:func:`encode_blocks_jvm`): Catalyst expressions
@@ -41,21 +53,20 @@ def encode_varint_blocks(
     values: np.ndarray, block_starts: np.ndarray
 ) -> list[bytes]:
     """LEB128-encode one uint64 array and split the output at the
-    values indexed by ``block_starts``.
+    values indexed by ``block_starts`` (non-decreasing; equal starts, or
+    a start at ``values.size``, give empty blocks).
 
     Encoding the whole Arrow batch at once and slicing per block is what
     keeps the packer vectorized: one set of numpy passes for millions of
     postings instead of per-block calls.
     """
     v = np.ascontiguousarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return []
     nbytes = np.ones(v.shape, dtype=np.int64)
     for t in _THRESHOLDS:
         nbytes += v >= np.uint64(t)
     ends = np.cumsum(nbytes)
     starts = ends - nbytes
-    out = np.zeros(int(ends[-1]), dtype=np.uint8)
+    out = np.zeros(int(ends[-1]) if v.size else 0, dtype=np.uint8)
     for j in range(10):
         mask = nbytes > j
         if not mask.any():
@@ -65,7 +76,7 @@ def encode_varint_blocks(
         out[starts[mask] + j] = chunk.astype(np.uint8) | (
             cont.astype(np.uint8) << 7
         )
-    bstart = starts[np.asarray(block_starts, dtype=np.int64)]
+    bstart = np.append(starts, len(out))[np.asarray(block_starts, dtype=np.int64)]
     bend = np.append(bstart[1:], len(out))
     raw = out.tobytes()
     return [raw[s:e] for s, e in zip(bstart, bend)]
@@ -78,10 +89,14 @@ def encode_varint(values: np.ndarray) -> bytes:
 
 def decode_varint(buf: bytes) -> np.ndarray:
     """Inverse of :func:`encode_varint` -> uint64 array (vectorized)."""
-    b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.empty(0, dtype=np.uint64)
+    return _decode_bytes(np.frombuffer(buf, dtype=np.uint8))[0]
+
+
+def _decode_bytes(b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """LEB128 bytes -> (uint64 values, the terminator mask per byte)."""
     is_end = (b & 0x80) == 0
+    if b.size == 0:
+        return np.empty(0, dtype=np.uint64), is_end
     # start of each value = position after the previous terminator
     starts = np.empty(int(is_end.sum()), dtype=np.int64)
     starts[0] = 0
@@ -91,7 +106,20 @@ def decode_varint(buf: bytes) -> np.ndarray:
     pos = np.arange(b.size, dtype=np.int64)
     pos -= np.repeat(starts, np.diff(np.append(starts, b.size)))
     vals = (b & np.uint8(0x7F)).astype(np.uint64) << (7 * pos).astype(np.uint64)
-    return np.add.reduceat(vals, starts)
+    return np.add.reduceat(vals, starts), is_end
+
+
+def _decode_payloads(payloads: Iterable) -> tuple[np.ndarray, np.ndarray]:
+    """Per-block varint payloads -> (all values as int64, in block
+    order; the number of values in each payload).  One numpy pass over
+    the concatenation: a payload's count is the number of terminator
+    bytes inside its byte range."""
+    bufs = [bytes(x) for x in payloads]
+    lens = np.fromiter(map(len, bufs), dtype=np.int64, count=len(bufs))
+    vals, is_end = _decode_bytes(np.frombuffer(b"".join(bufs), dtype=np.uint8))
+    seen = np.cumsum(np.append(0, is_end), dtype=np.int64)
+    hi = np.cumsum(lens)
+    return vals.astype(np.int64), seen[hi] - seen[hi - lens]
 
 
 def encode_deltas(doc_ids: np.ndarray) -> bytes:
@@ -111,29 +139,51 @@ def decode_deltas(buf: bytes) -> np.ndarray:
 
 
 def decode_blocks(
-    n: np.ndarray, doc_deltas: Iterable, tfs: Iterable
+    n: np.ndarray, min_doc: np.ndarray, doc_deltas: Iterable, tfs: Iterable
 ) -> tuple[np.ndarray, np.ndarray]:
-    """THE block decoder: per-block posting counts ``n`` and the blocks'
-    payloads -> (doc_ids, tfs), int64, concatenated in block order.
+    """THE block decoder: per-block posting counts ``n``, first doc ids
+    ``min_doc`` and the blocks' payloads -> (doc_ids, tfs), int64,
+    concatenated in block order.
 
     Varint streams are self-delimiting, so the concatenated payloads
-    decode in ONE numpy pass; a segmented cumsum (the first value of
-    every block is an absolute doc id) restores ids with no per-block
-    Python loop.
+    decode in ONE numpy pass, and counting terminator bytes per payload
+    tells each block's layout with no per-block Python loop: n - 1 doc
+    varints are gaps after ``min_doc``; n varints are the old layout,
+    whose first value repeats ``min_doc`` and is dropped.  A ``tfs``
+    payload holds n values or none (all ones).  Any other count is a
+    corrupt block and raises.
 
-    The running cumsum spans every block of the call, so with doc ids
-    near 2^62 it wraps past 2^63 and goes negative.  That is safe:
-    numpy int64 arithmetic is modular (two's complement, no trap), and
-    each id is the running sum minus the running sum before its block —
-    a difference whose true value fits int64, so the wrap cancels
-    exactly (pinned by tests/test_codec.py)."""
+    Ids come back by a segmented cumsum over the delta stream with each
+    block's ``min_doc`` at its head.  The running cumsum spans every
+    block of the call, so with doc ids near 2^62 it wraps past 2^63 and
+    goes negative.  That is safe: numpy int64 arithmetic is modular
+    (two's complement, no trap), and each id is the running sum minus
+    the running sum before its block — a difference whose true value
+    fits int64, so the wrap cancels exactly (pinned by
+    tests/test_codec.py)."""
     n = np.asarray(n, dtype=np.int64)
-    deltas = decode_varint(b"".join(bytes(x) for x in doc_deltas)).astype(np.int64)
-    tf = decode_varint(b"".join(bytes(x) for x in tfs)).astype(np.int64)
-    total = np.cumsum(deltas)
+    total = int(n.sum())
+    gaps, cnt = _decode_payloads(doc_deltas)
+    tf, tcnt = _decode_payloads(tfs)
+    old = cnt == n
+    if not (old | (cnt == n - 1)).all() or not (
+        (tcnt == n) | (tcnt == 0)
+    ).all():
+        raise ValueError("posting block payload does not match its count n")
+    if old.any():
+        keep = np.ones(gaps.size, dtype=bool)
+        keep[(np.cumsum(cnt) - cnt)[old]] = False
+        gaps = gaps[keep]
+    heads = np.cumsum(n - 1) - (n - 1)  # each block's first gap
+    deltas = np.insert(gaps, heads, np.asarray(min_doc, dtype=np.int64))
+    run = np.cumsum(deltas)
     corr = np.zeros(n.size, dtype=np.int64)
-    corr[1:] = total[np.cumsum(n)[:-1] - 1]
-    return total - np.repeat(corr, n), tf
+    corr[1:] = run[np.cumsum(n)[:-1] - 1]
+    if tf.size != total:
+        ones = np.ones(total, dtype=np.int64)
+        ones[np.repeat(tcnt == n, n)] = tf
+        tf = ones
+    return run - np.repeat(corr, n), tf
 
 
 def encode_blocks(
@@ -141,13 +191,20 @@ def encode_blocks(
 ) -> tuple[list[bytes], list[bytes]]:
     """Inverse of :func:`decode_blocks`: docID-sorted postings cut into
     blocks at ``block_starts`` -> the per-block (doc_deltas, tfs)
-    payloads, each block's first doc id absolute."""
-    deltas = doc_ids.copy()
-    deltas[1:] -= doc_ids[:-1]
-    deltas[block_starts] = doc_ids[block_starts]
+    payloads — the gaps after each block's first doc id, and the tfs
+    of blocks that are not all ones."""
+    starts = np.asarray(block_starts, dtype=np.int64)
+    n = np.diff(np.append(starts, doc_ids.size))
+    head = np.zeros(doc_ids.size, dtype=bool)
+    head[starts] = True
+    gaps = np.diff(doc_ids)[~head[1:]]
+    stored = ~np.logical_and.reduceat(tfs == 1, starts)
+    kept = n * stored
     return (
-        encode_varint_blocks(deltas, block_starts),
-        encode_varint_blocks(tfs, block_starts),
+        encode_varint_blocks(gaps, starts - np.arange(starts.size)),
+        encode_varint_blocks(
+            tfs[np.repeat(stored, n)], np.cumsum(kept) - kept
+        ),
     )
 
 
@@ -202,7 +259,7 @@ def any_in_ranges(sorted_v: np.ndarray, lo, hi) -> np.ndarray:
 
 # ---- executor kernel ----------------------------------------------------
 DECODED_SCHEMA = "term_id long, doc_id long, tf long, gen int"
-BLOCK_COLS = ["term_id", "n", "doc_deltas", "tfs", "gen"]
+BLOCK_COLS = ["term_id", "n", "min_doc", "doc_deltas", "tfs", "gen"]
 
 
 def _decode_kernel(carry: tuple[str, ...], keep):
@@ -212,7 +269,9 @@ def _decode_kernel(carry: tuple[str, ...], keep):
             if not len(pdf):
                 continue
             n = pdf["n"].to_numpy(np.int64)
-            docs, tf = decode_blocks(n, pdf["doc_deltas"], pdf["tfs"])
+            docs, tf = decode_blocks(
+                n, pdf["min_doc"], pdf["doc_deltas"], pdf["tfs"]
+            )
             gen = np.repeat(pdf["gen"].to_numpy(np.int64), n)
             cols = {
                 "term_id": np.repeat(pdf["term_id"].to_numpy(np.int64), n),
@@ -346,27 +405,42 @@ def encode_blocks_jvm(
     """Payload projection of one block, in JVM expressions: ``pairs``
     is the block's docID-sorted array<struct<doc_id long, tf int, ...>>
     -> (doc_deltas, tfs) binary Columns, byte-identical to
-    :func:`encode_blocks` over the same postings.
+    :func:`encode_blocks` over the same postings: the gaps of postings
+    2..n, and the tfs unless all are 1.
 
-    Unroll widths: every delta (incl. the block's absolute first doc
-    id) is <= ``max_doc_bound``; tf is an int32 field, so even with no
-    caller bound 5 bytes always cover it (_varint_chars raises on a
-    too-small caller bound, never truncates)."""
-    deltas = F.transform(
+    Unroll widths: every gap is <= ``max_doc_bound``; tf is an int32
+    field, so even with no caller bound 5 bytes always cover it
+    (_varint_chars raises on a too-small caller bound, never
+    truncates)."""
+    w_doc = varint_width(max_doc_bound)
+    w_tf = min(varint_width(max_tf_bound), 5)
+    # gaps materialize once, so each varint part reads a lambda variable
+    # (inlining the gap into _varint_chars re-evaluates it per part:
+    # measured 1.4x the encode time); the first posting emits nothing,
+    # min_doc holds it
+    gaps = F.transform(
         pairs,
-        lambda x, i: F.when(i == 0, x["doc_id"]).otherwise(
+        lambda x, i: F.when(i == 0, F.lit(0)).otherwise(
             x["doc_id"] - F.element_at(pairs, i)["doc_id"]
         ),
     )
-    w_doc = varint_width(max_doc_bound)
-    w_tf = min(varint_width(max_tf_bound), 5)
     doc_deltas = F.encode(
-        F.array_join(F.transform(deltas, lambda d: _varint_chars(d, w_doc)), ""),
+        F.array_join(
+            F.transform(
+                gaps,
+                lambda d, i: F.when(i == 0, F.lit("")).otherwise(
+                    _varint_chars(d, w_doc)
+                ),
+            ),
+            "",
+        ),
         "ISO-8859-1",
     )
     tfs = F.encode(
-        F.array_join(
-            F.transform(pairs, lambda x: _varint_chars(x["tf"], w_tf)), ""
+        F.when(F.forall(pairs, lambda x: x["tf"] == 1), F.lit("")).otherwise(
+            F.array_join(
+                F.transform(pairs, lambda x: _varint_chars(x["tf"], w_tf)), ""
+            )
         ),
         "ISO-8859-1",
     )

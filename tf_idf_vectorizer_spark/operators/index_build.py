@@ -115,7 +115,9 @@ def make_live_repacker(
             return
         pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
         n = pdf["n"].to_numpy(np.int64)
-        docs, tf = decode_blocks(n, pdf["doc_deltas"], pdf["tfs"])
+        docs, tf = decode_blocks(
+            n, pdf["min_doc"], pdf["doc_deltas"], pdf["tfs"]
+        )
         tids = np.repeat(pdf["term_id"].to_numpy(np.int64), n)
         gens = np.repeat(pdf["gen"].to_numpy(np.int64), n)
         # liveness: (doc_id, gen) must match the committed doc_dict row
@@ -329,7 +331,8 @@ def build_index(
     Tables written (parquet; Iceberg would slot in unchanged via
     ``writeTo`` when its runtime is on the classpath):
       doc_dict   (doc_id, url?, doc_len, norm, gen)
-      term_dict  (term_id, term, df, idf)
+      term_dict  (term, df, idf; term_id = xxhash64(term) is derived on
+                 read, stored only when a collision re-minted the ids)
       postings   (salt=S/...) posting blocks, POSTINGS_FILE_SCHEMA
       manifest   (salt, phase, rows_in, rows_out, checksum, ts)
       meta.json  scalars (doc_num, total_len, config)
@@ -575,7 +578,9 @@ def _build_index_body(
     write_postings(packed, f"{out_dir}/postings", n_salts, config, mode)
     _mark("pack_write")
     write_doc_dict(doc_dict, f"{out_dir}/doc_dict", doc_num)
-    write_term_dict(term_dict, f"{out_dir}/term_dict", n_terms, config)
+    write_term_dict(
+        term_dict, f"{out_dir}/term_dict", n_terms, config, reminted=reminted
+    )
     dstats.unpersist()
     _mark("dict_writes")
     write_lineage(

@@ -11,8 +11,16 @@ side prunes on is defined once:
   doc_dict   ~1M docs per file, range-partitioned and sorted by doc_id:
              the WAND rescore's doc-range predicates prune row groups
   term_dict  ~250k terms per file, range-partitioned and sorted by term,
-             bounded row groups: a cold lookup prunes to ~one group/term
+             bounded row groups: a cold lookup prunes to ~one group/term.
+             No term_id column: the id is xxhash64(term), re-derived by
+             read_term_dict (Spark) and term_id_of (driver), except after
+             a collision re-mint, whose ids are stored
   meta.json  the scalars every reader needs
+
+Posting blocks store only what their metadata cannot give
+(operators/codec.py): no first doc id (min_doc has it) and no tfs when
+all are 1.  Blocks and term_dicts written before stored the first id,
+every tf and the term ids; readers take them as they are.
 
 Every parquet table is written with Parquet v2 data pages and zstd
 (WRITE_OPTIONS), dictionary encoding on and the zstd level at its
@@ -153,13 +161,92 @@ def write_doc_dict(
 
 
 def write_term_dict(
-    df: DataFrame, path: str, n_rows: int, config: EngineConfig
+    df: DataFrame, path: str, n_rows: int, config: EngineConfig,
+    *, reminted: bool = False,
 ) -> None:
-    """~250k terms per file, with the postings' row-group bound."""
+    """~250k terms per file, with the postings' row-group bound.  The
+    id is ``xxhash64(term)``, which :func:`read_term_dict` re-derives,
+    so it is not stored — a random 64-bit value per row was 80% of the
+    dictionary's bytes.  Only ids re-minted after a hash collision
+    (``build_index(check_collisions=True)``) cannot be re-derived; their
+    dictionary keeps its ``term_id`` column."""
     _write_sorted(
-        df, path, "term", -(-int(n_rows) // TERMS_PER_FILE),
+        df if reminted else df.drop("term_id"),
+        path, "term", -(-int(n_rows) // TERMS_PER_FILE),
         rowgroup_bytes=config.pq_rowgroup_bytes,
     )
+
+
+def read_term_dict(stored: DataFrame) -> DataFrame:
+    """A term_dict as read from its files -> (term_id, term, df, idf).
+    A stored id column (re-minted ids, or an index written before ids
+    were derived) is kept; otherwise the id is ``xxhash64(term)``."""
+    if "term_id" in stored.columns:
+        return stored
+    return stored.select(F.xxhash64("term").alias("term_id"), *stored.columns)
+
+
+def ids_reminted(stored: DataFrame) -> bool:
+    """Whether a term_dict as read from its files holds ids that are not
+    ``xxhash64(term)``, so a rewrite must keep storing them.  Dictionaries
+    without the column cost no Spark job."""
+    return "term_id" in stored.columns and not stored.filter(
+        F.col("term_id") != F.xxhash64("term")
+    ).isEmpty()
+
+
+# Spark's xxhash64 (XXH64, seed 42, over the UTF-8 bytes) in pure
+# Python, for the driver's term_dict point lookup: a handful of query
+# terms are hashed with no Spark job
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+_M64 = (1 << 64) - 1
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def term_id_of(term: str) -> int:
+    """``xxhash64(term)`` as Spark computes it, as a signed long."""
+    seed = 42
+    data = term.encode("utf-8")
+    size, i = len(data), 0
+    if size >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed,
+             (seed - _P1) & _M64]
+        while i + 32 <= size:
+            for j in range(4):
+                v[j] = _round(v[j], int.from_bytes(data[i:i + 8], "little"))
+                i += 8
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+             + _rotl(v[3], 18)) & _M64
+        for lane in v:
+            h = ((h ^ _round(0, lane)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + size) & _M64
+    while i + 8 <= size:
+        h ^= _round(0, int.from_bytes(data[i:i + 8], "little"))
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= size:
+        h ^= int.from_bytes(data[i:i + 4], "little") * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for byte in data[i:]:
+        h ^= byte * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+    h ^= h >> 33
+    h = h * _P2 & _M64
+    h ^= h >> 29
+    h = h * _P3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
 
 
 def write_meta(

@@ -79,6 +79,7 @@ from tf_idf_vectorizer_spark.operators.codec import (
     doc_id_order,
     sorted_member,
 )
+from tf_idf_vectorizer_spark.operators.tables import read_term_dict, term_id_of
 
 _KEY_COLS = ["term_id", "salt", "block_seq", "gen"]
 
@@ -342,7 +343,9 @@ class PackedIndex:
                 F.col("gen") <= int(self.meta.get("generation", 0))
             )
         self.doc_dict = dd.cache()
-        self.term_dict = spark.read.parquet(paths["term_dict"]).cache()
+        self.term_dict = read_term_dict(
+            spark.read.parquet(paths["term_dict"])
+        ).cache()
         self.doc_num = self.meta["doc_num"]
         # avg_len over all docs at query time (scoring.rs:415); an empty
         # corpus has no scorable docs, so any positive placeholder works
@@ -406,7 +409,9 @@ class PackedIndex:
                 f"open it with a matching EngineConfig (got {config.dtype!r})"
             )
         self.doc_dict = ice.read_table(spark, namespace, "doc_dict", catalog).cache()
-        self.term_dict = ice.read_table(spark, namespace, "term_dict", catalog).cache()
+        self.term_dict = read_term_dict(
+            ice.read_table(spark, namespace, "term_dict", catalog)
+        ).cache()
         self.doc_num = self.meta["doc_num"]
         self.avg_len = (
             self.meta["total_len"] / self.doc_num if self.doc_num > 0 else 1.0
@@ -594,9 +599,18 @@ class PackedIndex:
         tset = pa.array(ts, pa.string())
         out: list[dict] = []
         for pf, gs in sel:
-            tbl = pf.read_row_groups(gs, columns=["term", "term_id", "df", "idf"])
+            # term_id is stored only by indexes that predate derived ids
+            # or re-minted them; otherwise it is xxhash64(term), hashed
+            # here by the pure-Python twin (tables.term_id_of)
+            stored = "term_id" in pf.schema_arrow.names
+            tbl = pf.read_row_groups(
+                gs, columns=["term", *(["term_id"] if stored else []), "df", "idf"]
+            )
             t = tbl.filter(pc.is_in(tbl.column("term"), value_set=tset))
-            out.extend(t.to_pylist())
+            out.extend(
+                r if stored else {"term_id": term_id_of(r["term"]), **r}
+                for r in t.to_pylist()
+            )
         return out
 
     def _query_info(self, terms: list[str]) -> list[dict]:
@@ -645,18 +659,24 @@ class PackedIndex:
             .join(ext, "term")
             .select("term_id", "term", "df", "idf")
         )
-        if hasattr(other, "_term_map"):
-            del other._term_map  # re-pin the driver dict from the new table
+        # the build-time max_score column was packed under the LOCAL idf,
+        # so it bounds nothing here: WAND recomputes bounds from
+        # (max_tf, min_dl) under the external idf
+        other.meta = {**self.meta, "tight_bounds": False}
+        # drop what copy.copy shared and depends on idf: the pinned term
+        # map, the WAND metadata caches (their keys hold no idf) and the
+        # dictionary file metas.  The decoded-postings LRU is idf-free.
+        for attr in ("_term_map", "_td_meta", "_wand_meta_cache",
+                     "_dist_meta_cache"):
+            other.__dict__.pop(attr, None)
         # the copy must NOT point-read the LOCAL on-disk term_dict files:
         # its df/idf now come from the external stats table, so disable
         # the driver-side dictionary point lookup on the copy (own dict
-        # first — copy.copy shares ours) and drop any cached file metas;
-        # _query_info then falls back to the distributed filter over the
-        # joined external term_dict, which is correct
+        # first — copy.copy shares ours); _query_info then falls back to
+        # the distributed filter over the joined external term_dict,
+        # which is correct
         other._table_paths = dict(getattr(self, "_table_paths", {}))
         other._table_paths.pop("term_dict", None)
-        if hasattr(other, "_td_meta"):
-            del other._td_meta
         return other
 
     def _blocks_for(self, term_ids: list[int] | None) -> DataFrame:
@@ -884,10 +904,11 @@ class PackedIndex:
         skip the scan job entirely — the reference's in-memory regime
         (OptimizedDocIter over resident postings, scoring.rs).
 
-        The decode is a SINGLE vectorized pass over all blocks: varint
-        streams are self-delimiting, so the concatenated payloads decode
-        in one call, and a segmented cumsum (first value of every block
-        is an absolute doc id) restores ids without any per-block loop.
+        The decode is a SINGLE vectorized pass over all blocks
+        (codec.decode_blocks): varint streams are self-delimiting, so
+        the concatenated payloads decode in one call, and a segmented
+        cumsum from each block's min_doc restores ids without any
+        per-block loop.
         The fetch is an Arrow toPandas (py4j-pickled collect of binary
         payloads is the hidden 10x cost at multi-million-entry volumes).
         """
@@ -1140,7 +1161,9 @@ class PackedIndex:
         float64, positions in the pinned doc stats, *carried columns)."""
         sids, _dls, gens = self._doc_stats_np()
         n = pdf["n"].to_numpy(np.int64)
-        dids, tf = decode_blocks(n, pdf["doc_deltas"], pdf["tfs"])
+        dids, tf = decode_blocks(
+            n, pdf["min_doc"], pdf["doc_deltas"], pdf["tfs"]
+        )
         ok, pos = sorted_member(
             sids, dids, gens, np.repeat(pdf["gen"].to_numpy(np.int64), n)
         )
@@ -2244,7 +2267,7 @@ class PackedIndex:
         carry: np.ndarray,
     ) -> dict[int, tuple]:
         """Decode the sparse terms' fetched blocks (one row per block:
-        term_id, n, min_dl, max_dl, gen, payloads) and bound every LIVE
+        min_dl, max_dl and codec.BLOCK_COLS) and bound every LIVE
         posting -> {term_id: (doc_ids, ub, floor, carry)} sorted by
         doc id.  ``ub`` scores a posting with its block's min_dl (an
         upper bound), ``floor`` with its max_dl (a real doc's lower
@@ -2258,7 +2281,8 @@ class PackedIndex:
                 continue
             nn = spf["n"].to_numpy(np.int64)[rr]
             ids, tf_i = decode_blocks(
-                nn, spf["doc_deltas"].iloc[rr], spf["tfs"].iloc[rr]
+                nn, spf["min_doc"].to_numpy(np.int64)[rr],
+                spf["doc_deltas"].iloc[rr], spf["tfs"].iloc[rr],
             )
             tf = tf_i.astype(np.float64)
             ln_idf = math.log(idf_map[tid])
@@ -2294,7 +2318,7 @@ class PackedIndex:
         if not sparse_ids:
             return {}
         spf = self._fetch_blocks(
-            sparse_ids, ["salt", "n", "min_dl", "max_dl", "doc_deltas", "tfs"]
+            sparse_ids, ["salt", "min_dl", "max_dl", *BLOCK_COLS]
         )
         if not len(spf):
             return {}

@@ -79,6 +79,7 @@ def publish_index(
             "layout under the index dir remains the storage fallback"
         )
     from tf_idf_vectorizer_spark.ioutil import table_path
+    from tf_idf_vectorizer_spark.operators.tables import read_term_dict
 
     with open(f"{index_dir}/meta.json") as fh:
         meta = json.load(fh)
@@ -97,6 +98,10 @@ def publish_index(
     )
     for name in ("doc_dict", "term_dict"):
         df = spark.read.parquet(table_path(index_dir, meta, name))
+        if name == "term_dict":
+            # catalog readers outside Spark join postings on term_id,
+            # which they cannot re-derive from Spark's xxhash64
+            df = read_term_dict(df)
         df.writeTo(_ident(namespace, name, catalog)).createOrReplace()
     spark.read.parquet(f"{index_dir}/manifest").writeTo(
         _ident(namespace, "manifest", catalog)

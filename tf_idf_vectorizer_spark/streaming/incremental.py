@@ -86,6 +86,7 @@ from pyspark.sql.types import StructType
 from tf_idf_vectorizer_spark.config import DEFAULT, EngineConfig, with_effective_tf
 from tf_idf_vectorizer_spark.ioutil import recover_dir, write_json_atomic
 from tf_idf_vectorizer_spark.operators.codec import (
+    BLOCK_COLS,
     decode_overlapping,
     doc_id_order,
 )
@@ -96,6 +97,8 @@ from tf_idf_vectorizer_spark.operators.index_build import (
 from tf_idf_vectorizer_spark.operators.stats import with_norms
 from tf_idf_vectorizer_spark.operators.tables import (
     POSTINGS_FILE_SCHEMA,
+    ids_reminted,
+    read_term_dict,
     salt_of,
     write_doc_dict,
     write_lineage,
@@ -303,7 +306,8 @@ class IncrementalIndex:
         orig_doc_dict = doc_dict
         dd_extra = [c for c in doc_dict.columns
                     if c not in ("doc_id", "doc_len", "norm", "gen")]
-        term_dict = spark.read.parquet(self._path(meta, "term_dict"))
+        stored_td = spark.read.parquet(self._path(meta, "term_dict"))
+        term_dict = read_term_dict(stored_td)
 
         ids_df = None
         if adds is not None:
@@ -627,6 +631,7 @@ class IncrementalIndex:
             # pre-batch vocab as the file-count hint: counting the new
             # dictionary first would run the stats rewrite twice
             int(meta.get("n_terms", 0)), self.config,
+            reminted=ids_reminted(stored_td),
         )
         new_tables = {"term_dict": td_name}
         if pure_append:
@@ -773,9 +778,7 @@ class IncrementalIndex:
         n_parts = max(
             par, min(-(-total_len // len(starts) // 150_000), 64 * par)
         )
-        blocks = idx._postings().select(
-            "term_id", "salt", "n", "gen", "doc_deltas", "tfs"
-        )
+        blocks = idx._postings().select("salt", *BLOCK_COLS)
         ln_idf = idx.term_dict.select(
             "term_id", F.log(F.col("idf").cast("double")).alias("ln_idf")
         )
