@@ -142,10 +142,10 @@ def test_compact_bit_identical_to_jvm_pack_in_one_and_many_chunks(
     IncrementalIndex(spark, dirs["one"], CFG).compact()
     assert pins == [(None, None)]
     pins.clear()
-    monkeypatch.setattr(PackedIndex, "DRIVER_DOC_STATS_MAX", 1)
+    monkeypatch.setitem(PackedIndex.DRIVER_ROW_BYTES, "doc_stats", 1 << 62)
     IncrementalIndex(spark, dirs["many"], CFG).compact()
     monkeypatch.undo()
-    # a budget of one doc makes every chunk one salt wide
+    # a budget that holds no doc-stat row makes every chunk one salt wide
     assert len(pins) == len(want) > 1, pins
 
     for name, d in dirs.items():

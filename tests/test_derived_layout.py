@@ -25,6 +25,7 @@ from tf_idf_vectorizer_spark.operators.codec import (
     encode_varint_blocks,
 )
 from tf_idf_vectorizer_spark.operators.index_build import build_index
+from tf_idf_vectorizer_spark.operators.merge import merge_indexes
 from tf_idf_vectorizer_spark.query.packed import PackedIndex
 from tf_idf_vectorizer_spark.sources.synth import synth_corpus
 from tf_idf_vectorizer_spark.streaming import IncrementalIndex
@@ -132,7 +133,7 @@ def test_old_layout_serves_appends_and_compact_rewrites(
     terms = ["spark", "join", "the", "zz-no-such-term"]
     pinned = PackedIndex(spark, fresh, CFG)._query_info(terms)
     pi = PackedIndex(spark, old, CFG)
-    pi.DRIVER_DICT_MAX_TERMS = 0
+    pi.DRIVER_ROW_BYTES = {**PackedIndex.DRIVER_ROW_BYTES, "dict": 1 << 62}
     assert _dict_rows(pi._query_info(terms)) == _dict_rows(pinned)
 
     # a pure append puts new-layout blocks next to the old ones
@@ -199,6 +200,47 @@ def test_term_dict_stores_ids_only_when_reminted(spark, tmp_path):
     path = str(tmp_path / "old")
     derived.write.parquet(path)
     assert not tables.ids_reminted(spark.read.parquet(path))
+
+
+def test_batches_and_merges_refuse_reminted_ids(spark, tmp_path, monkeypatch):
+    """Batches and merges mint ``xxhash64(term)``.  On an index whose ids
+    were re-minted after a collision that would file a re-used term
+    under a second id the lookup never returns (the appended doc would
+    be unreachable by "alpha"), so both raise before writing anything."""
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta{i % 5}") for i in range(40)], "doc_id long, text string"
+    )
+    count_distinct = F.countDistinct
+    # under-count the distinct ids once: the build sees a collision
+    monkeypatch.setattr(F, "countDistinct", lambda c: count_distinct(c) - 1)
+    d = str(tmp_path / "reminted")
+    build_index(spark, docs, d, config=CFG, check_collisions=True)
+    monkeypatch.undo()
+    assert tables.ids_reminted(spark.read.parquet(_term_dict_path(d)))
+    generation = json.load(open(f"{d}/meta.json"))["generation"]
+
+    def answers():
+        pi = PackedIndex(spark, d, CFG)
+        rows = [pi.bm25_topk_rows(t, k=50) for t in (["alpha"], ["gamma"],
+                                                     ["beta1", "alpha"])]
+        pi.unpersist()
+        return rows
+
+    before = answers()
+    assert len(before[0]) == 40 and before[1] == []
+    adds = spark.createDataFrame([(40, "alpha gamma")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="re-minted"):
+        IncrementalIndex(spark, d, CFG).apply_batch(adds=adds)
+    assert json.load(open(f"{d}/meta.json"))["generation"] == generation
+    assert answers() == before
+
+    plain = str(tmp_path / "plain")
+    build_index(spark, adds, plain, config=CFG)
+    for a, b in ((d, plain), (plain, d)):
+        out = tmp_path / "merged"
+        with pytest.raises(ValueError, match="re-minted"):
+            merge_indexes(spark, a, b, str(out), CFG)
+        assert not out.exists()
 
 
 @pytest.mark.parametrize("dtype", ["f32", "u16", "u32", "f16"])

@@ -233,8 +233,9 @@ def test_term_dict_point_lookup_matches_pinned(spark, idx_dir):
     assert len(pinned) == 5
 
     pi_b = PackedIndex(spark, idx_dir, CFG)
-    pi_b.DRIVER_DICT_MAX_TERMS = 0  # force the large-dict path
-    assert not pi_b._can_pin_dict()
+    # force the large-dict path: pinning the dictionary alone overflows
+    pi_b.DRIVER_ROW_BYTES = {**PackedIndex.DRIVER_ROW_BYTES, "dict": 1 << 62}
+    assert not pi_b._fits("dict", pi_b.meta["n_terms"])
     assert pi_b._td_files() is not None
     # the files store no term_id: the lookup hashes the query terms on
     # the driver (tables.term_id_of), still with no Spark job
@@ -253,7 +254,7 @@ def test_term_dict_point_lookup_matches_pinned(spark, idx_dir):
     ]
 
     pi_c = PackedIndex(spark, idx_dir, CFG)
-    pi_c.DRIVER_DICT_MAX_TERMS = 0
+    pi_c.DRIVER_ROW_BYTES = {**PackedIndex.DRIVER_ROW_BYTES, "dict": 1 << 62}
     pi_c.PQ_POINT_READ_MAX_BYTES = 0  # force the Spark-scan fallback
     via_scan = pi_c._query_info(terms)
     assert [r["term"] for r in via_scan] == [r["term"] for r in pinned]
@@ -289,8 +290,9 @@ def test_external_stats_disables_local_dict_point_lookup(spark, idx_dir):
     ext_n = ext_docs.count()
 
     ext = pi.with_external_stats(ext_stats, ext_n)
-    ext.DRIVER_DICT_MAX_TERMS = 0  # force the large-dict path on the copy
-    assert not ext._can_pin_dict()
+    # force the large-dict path on the copy
+    ext.DRIVER_ROW_BYTES = {**PackedIndex.DRIVER_ROW_BYTES, "dict": 1 << 62}
+    assert not ext._fits("dict", ext.meta["n_terms"])
     # the copy must not expose the local term_dict files for point reads
     assert ext._td_files() is None
 
@@ -307,5 +309,5 @@ def test_external_stats_disables_local_dict_point_lookup(spark, idx_dir):
     assert set(got) == set(t for t in terms if t in want)
     # and the original index still point-reads its own dictionary
     pi2 = PackedIndex(spark, idx_dir, CFG)
-    pi2.DRIVER_DICT_MAX_TERMS = 0
+    pi2.DRIVER_ROW_BYTES = {**PackedIndex.DRIVER_ROW_BYTES, "dict": 1 << 62}
     assert pi2._td_files() is not None

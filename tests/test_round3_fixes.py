@@ -261,5 +261,5 @@ def test_reference_preset_and_budget(spark, built):
     assert EngineConfig.reference(n_salts=4).n_salts == 4
     assert DEFAULT.dtype == "f32"
     idx = PackedIndex(spark, built, CFG)
-    budget = idx._driver_entry_budget()
-    assert 0 < budget <= PackedIndex.DRIVER_BATCH_VOLUME_MAX
+    budget = idx._driver_budget()
+    assert 0 < budget <= PackedIndex.DRIVER_BUDGET_BYTES

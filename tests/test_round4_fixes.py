@@ -351,7 +351,10 @@ def test_lru_eviction_continues_past_query_terms(spark, tmp_path):
 
     # oldest entry (100) IS a query term; 200/300 are evictable
     idx._term_postings_cache = {100: arrs(6), 200: arrs(6), 300: arrs(6)}
-    idx._driver_entry_budget = lambda: 12 * idx.TERM_CACHE_FRACTION
+    idx.DRIVER_ROW_BYTES = {
+        **PackedIndex.DRIVER_ROW_BYTES, "lru": idx._driver_budget() // 4 // 12
+    }
+    assert idx._capacity("lru") == 12
     idx._decode_live_driver_fetch = lambda tids: {400: arrs(6)}
     out = idx._decode_live_driver([100, 400])
     assert set(out) == {100, 400}
@@ -369,9 +372,11 @@ def test_lru_bounded_under_vocab_churn(spark, tmp_path):
     d = _build(spark, tmp_path / "churn", docs)
     idx = PackedIndex(spark, d, CFG)
     budget_entries = 24  # each term decodes to 1 posting
-    idx._driver_entry_budget = (
-        lambda: budget_entries * idx.TERM_CACHE_FRACTION
-    )
+    idx.DRIVER_ROW_BYTES = {
+        **PackedIndex.DRIVER_ROW_BYTES,
+        "lru": idx._driver_budget() // 4 // budget_entries,
+    }
+    assert idx._capacity("lru") == budget_entries
     tids = [r["term_id"] for r in idx._query_info(
         [f"w{i}_0" for i in range(40)]
     )]

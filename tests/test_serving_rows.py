@@ -86,7 +86,7 @@ def test_rows_apis_job_free_when_resident(srv, spark):
 def _unpinnable(ix):
     """A fresh instance whose doc stats exceed the driver bound."""
     fresh = PackedIndex(ix.spark, ix.dir, CFG)
-    fresh.DRIVER_DOC_STATS_MAX = 0
+    fresh.DRIVER_ROW_BYTES = {**PackedIndex.DRIVER_ROW_BYTES, "doc_stats": 1 << 62}
     return fresh
 
 

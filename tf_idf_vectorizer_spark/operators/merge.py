@@ -42,7 +42,7 @@ from tf_idf_vectorizer_spark.config import DEFAULT, EngineConfig
 from tf_idf_vectorizer_spark.operators.index_build import pack_blocks_jvm
 from tf_idf_vectorizer_spark.operators.stats import with_norms
 from tf_idf_vectorizer_spark.operators.tables import (
-    ids_reminted,
+    require_derived_ids,
     salt_of,
     salting,
     write_doc_dict,
@@ -96,6 +96,10 @@ def _merge(
             f"cannot merge indexes built with different tokenizers "
             f"({tok_a!r} vs {tok_b!r})"
         )
+    # the merge mints xxhash64(term) ids for the union
+    for idx in (a, b):
+        td = idx._table_paths["term_dict"]
+        require_derived_ids(spark.read.parquet(td), td)
     precision = a.meta.get("precision", "f32")
     norms = bool(a.meta.get("norms", False)) and bool(b.meta.get("norms", False))
     os.makedirs(out_dir, exist_ok=True)
@@ -173,13 +177,7 @@ def _merge(
     )
     write_postings(packed, f"{out_dir}/postings", n_salts, config)
     write_doc_dict(doc_dict, f"{out_dir}/doc_dict", doc_num)
-    write_term_dict(
-        term_dict, f"{out_dir}/term_dict", n_terms, config,
-        reminted=any(
-            ids_reminted(spark.read.parquet(i._table_paths["term_dict"]))
-            for i in (a, b)
-        ),
-    )
+    write_term_dict(term_dict, f"{out_dir}/term_dict", n_terms, config)
     write_lineage(spark, f"{out_dir}/postings", f"{out_dir}/manifest", "merge")
     term_dict.unpersist()
     return write_meta(

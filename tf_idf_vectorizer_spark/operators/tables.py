@@ -195,6 +195,19 @@ def ids_reminted(stored: DataFrame) -> bool:
     ).isEmpty()
 
 
+def require_derived_ids(stored: DataFrame, path: str) -> None:
+    """Refuse to extend the term_dict at ``path`` when its ids were
+    re-minted: batches and merges mint ``xxhash64(term)``, which would
+    file a re-used term under a second id that lookups never return."""
+    if ids_reminted(stored):
+        raise ValueError(
+            f"the term_dict at {path} holds term ids re-minted after a "
+            f"hash collision (build_index(check_collisions=True)); "
+            f"batches and merges mint xxhash64(term) ids and cannot "
+            f"extend it — rebuild the index instead"
+        )
+
+
 # Spark's xxhash64 (XXH64, seed 42, over the UTF-8 bytes) in pure
 # Python, for the driver's term_dict point lookup: a handful of query
 # terms are hashed with no Spark job

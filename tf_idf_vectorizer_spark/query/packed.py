@@ -449,8 +449,7 @@ class PackedIndex:
         into the serving LRU (one batched scan; budget-bounded), so
         even their FIRST queries answer from resident postings —
         sub-millisecond on repeated-vocabulary workloads."""
-        if self._can_pin_dict():
-            self._query_info([])  # builds the pinned term map
+        self._query_info([])  # pins the term map when it fits
         self._doc_stats_np()
         if getattr(self, "_term_map", None):
             # dictionary already pinned driver-side: the rarest term is
@@ -471,11 +470,11 @@ class PackedIndex:
             if qinfo:
                 self._wand_topk(qinfo, 1, self.config.k1, self.config.b)
         if terms and self._doc_stats_np() is not None:
-            budget = self._driver_entry_budget() // self.TERM_CACHE_FRACTION
+            cap = self._capacity("lru")
             qinfo = self._query_info(terms)
             picked, vol = [], 0
             for r in sorted(qinfo, key=lambda r: int(r["df"])):
-                if vol + int(r["df"]) > budget:
+                if vol + int(r["df"]) > cap:
                     break
                 picked.append(r["term_id"])
                 vol += int(r["df"])
@@ -483,33 +482,15 @@ class PackedIndex:
                 self._decode_live_driver(picked)
         return self
 
-    # vocab small enough to pin on the driver -> zero-job term lookup;
-    # above either bound, each query pays one tiny dictionary-scan job
-    # instead.  The byte bound is what actually protects driver RSS
-    # (term_bytes is recorded at build time; the Python dict overhead is
-    # ~100 bytes/entry on top, which the row bound caps)
-    DRIVER_DICT_MAX_TERMS = 2_000_000
-    DRIVER_DICT_MAX_BYTES = 256 * 1024 * 1024
-
-    def _can_pin_dict(self) -> bool:
-        return (
-            self.meta.get("n_terms", 1 << 62) <= self.DRIVER_DICT_MAX_TERMS
-            and self.meta.get("term_bytes", 0) <= self.DRIVER_DICT_MAX_BYTES
-        )
-
-    def _td_files(self):
-        """term_dict parquet files + per-row-group term min/max string
-        stats for driver-side dictionary point lookups, or None when
-        unavailable (non-local path, pyarrow missing, no stats).  The
-        dictionary is written range-partitioned and sorted by term
-        (tables.write_term_dict), so each group's [min, max] is a
-        tight term interval; parquet stat TRUNCATION keeps min a prefix
-        (<= true min) and max incremented past the true max, so pruning
-        on them stays a superset."""
-        if hasattr(self, "_td_meta"):
-            return self._td_meta
-        self._td_meta = None
-        path = getattr(self, "_table_paths", {}).get("term_dict")
+    def _rowgroup_stats(self, table: str, pattern: str, keys: list[str]):
+        """Per-row-group min/max stats of the ``keys`` columns of one
+        table's local parquet files (``pattern`` under its live dir),
+        for the driver point readers: a list of (file path, ParquetFile,
+        {key: mins}, {key: maxes}, group byte sizes), or None when the
+        files cannot serve point reads (non-local path, pyarrow missing,
+        more than PQ_POINT_READ_MAX_FILES files, a key or its stats
+        missing)."""
+        path = getattr(self, "_table_paths", {}).get(table)
         if path is None:
             return None
         if path.startswith("file:"):
@@ -520,10 +501,10 @@ class PackedIndex:
             import pyarrow.parquet as pq
         except ImportError:
             return None
-        files = sorted(glob.glob(f"{path}/*.parquet"))
+        files = sorted(glob.glob(f"{path}/{pattern}"))
         if not files or len(files) > self.PQ_POINT_READ_MAX_FILES:
             return None
-        metas = []
+        out = []
         for f in files:
             try:
                 pf = pq.ParquetFile(f)
@@ -536,31 +517,47 @@ class PackedIndex:
             names = {
                 rg0.column(j).path_in_schema: j for j in range(rg0.num_columns)
             }
-            if "term" not in names:
+            if any(k not in names for k in keys):
                 return None
-            ci = names["term"]
-            lo, hi, nb = [], [], []
+            lo, hi, nb = {k: [] for k in keys}, {k: [] for k in keys}, []
             for i in range(md.num_row_groups):
-                st = md.row_group(i).column(ci).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                # compare as RAW BYTES, never decoded strings: byte
-                # order == code-point order for valid UTF-8, and stats
-                # that were byte-truncated mid-sequence (or contain
-                # invalid UTF-8) still compare correctly as prefixes —
-                # decoded lone surrogates would sort ABOVE real
-                # characters and could wrongly prune a group
-                mn, mx = st.min, st.max
-                if isinstance(mn, str):
-                    mn = mn.encode("utf-8")
-                if isinstance(mx, str):
-                    mx = mx.encode("utf-8")
-                lo.append(mn)
-                hi.append(mx)
-                nb.append(md.row_group(i).total_byte_size)
-            metas.append((pf, lo, hi, nb))
-        self._td_meta = metas
-        return metas
+                rg = md.row_group(i)
+                for k in keys:
+                    st = rg.column(names[k]).statistics
+                    if st is None or not st.has_min_max:
+                        return None
+                    lo[k].append(st.min)
+                    hi[k].append(st.max)
+                nb.append(rg.total_byte_size)
+            out.append((f, pf, lo, hi, nb))
+        return out
+
+    def _td_files(self):
+        """term_dict parquet files + per-row-group term min/max string
+        stats for driver-side dictionary point lookups, or None when
+        unavailable (see :meth:`_rowgroup_stats`).  The dictionary is
+        written range-partitioned and sorted by term
+        (tables.write_term_dict), so each group's [min, max] is a
+        tight term interval; parquet stat TRUNCATION keeps min a prefix
+        (<= true min) and max incremented past the true max, so pruning
+        on them stays a superset."""
+        if not hasattr(self, "_td_meta"):
+            stats = self._rowgroup_stats("term_dict", "*.parquet", ["term"])
+            # compare as RAW BYTES, never decoded strings: byte order ==
+            # code-point order for valid UTF-8, and stats that were
+            # byte-truncated mid-sequence (or contain invalid UTF-8)
+            # still compare correctly as prefixes — decoded lone
+            # surrogates would sort ABOVE real characters and could
+            # wrongly prune a group
+            def raw(vs):
+                return [v.encode("utf-8") if isinstance(v, str) else v
+                        for v in vs]
+
+            self._td_meta = None if stats is None else [
+                (pf, raw(lo["term"]), raw(hi["term"]), nb)
+                for _f, pf, lo, hi, nb in stats
+            ]
+        return self._td_meta
 
     def _td_point_lookup(self, terms: list[str]) -> list[dict] | None:
         """Driver-side pyarrow point read of the query terms' dictionary
@@ -615,8 +612,12 @@ class PackedIndex:
 
     def _query_info(self, terms: list[str]) -> list[dict]:
         """Lookup of the query terms' dictionary rows (the broadcast
-        'hot dictionary' — a handful of rows per query)."""
-        if self._can_pin_dict():
+        'hot dictionary' — a handful of rows per query).  A dictionary
+        that fits the driver budget is pinned once: zero-job lookups."""
+        if self._fits(
+            "dict", self.meta.get("n_terms", 1 << 62),
+            self.meta.get("term_bytes", 0),
+        ):
             if not hasattr(self, "_term_map"):
                 self._term_map = {
                     r["term"]: r.asDict()
@@ -626,6 +627,8 @@ class PackedIndex:
                 }
             found = [self._term_map[t] for t in set(terms) if t in self._term_map]
             return sorted(found, key=lambda r: r["term"])
+        if not terms:
+            return []
         # dictionary too large to pin: point-read the handful of rows
         # driver-side (the dict is term-sorted with row-group stats —
         # one group per query term, no Spark job, no full-dict scan)
@@ -775,6 +778,14 @@ class PackedIndex:
             )
         )
 
+    # ---- speed crossovers -------------------------------------------
+    # WAND_THRESHOLD, DRIVER_VOLUME_MAX, META_COLLECT_MAX,
+    # DRIVER_THETA_MAX_DF, DIST_SURV_COLLECT_MAX, DIST_WAND_* and
+    # PQ_POINT_READ_MAX_* are measured speed crossovers, not memory
+    # bounds: at their values none comes near the driver budget below
+    # (200k metadata rows are tens of MB against 1.28 GB).  Memory is
+    # decided by _fits alone.
+
     # below this many posting entries, a single-pass exact decode+score
     # (1 Spark job) beats WAND's planning overhead.  Measured on the
     # round-3 planner (tight pack-time bounds, sparse postings-level
@@ -788,46 +799,60 @@ class PackedIndex:
 
     # ---- bounded single-node serving path ----------------------------
     # The reference evaluates queries in one address space (scoring.rs
-    # OptimizedDocIter) — its 20 ms/query regime.  When doc stats fit on
-    # the driver (<= DRIVER_DOC_STATS_MAX rows ~ a few hundred MB numpy)
-    # and the query's posting volume is bounded, the whole query runs as
-    # ONE pruned scan+collect job plus numpy kernels: no Python workers,
-    # no shuffle, no per-job scheduling floor.  Past either bound the
-    # distributed paths take over — this is a serving-tier optimization,
-    # not the scale path.
-    DRIVER_DOC_STATS_MAX = 10_000_000
-    # single-query dispatch bound: past ~2M posting entries the
+    # OptimizedDocIter) — its 20 ms/query regime.  When the doc stats
+    # fit the driver budget and the query's posting volume is under the
+    # crossover, the whole query runs as ONE pruned scan+collect job
+    # plus numpy kernels: no Python workers, no shuffle, no per-job
+    # scheduling floor.  Past either bound the distributed paths take
+    # over — this is a serving-tier optimization, not the scale path.
+    #
+    # single-query speed crossover: past ~2M posting entries the
     # single-threaded numpy kernels lose to the 32-core distributed
     # exact path (measured at 5M docs: driver 10 s vs distributed 3.4 s
     # on an 8.9M-entry query); memory would allow far more
     DRIVER_VOLUME_MAX = 2_000_000
-    # batch dispatch bound: one decode per DISTINCT term is shared by
-    # every query containing it, so the single-node path stays ahead to
-    # much larger total volumes (latency amortizes across the batch).
-    # This row bound is additionally clamped by ACTUAL memory headroom
-    # (_driver_entry_budget): the decoded arrays plus their
-    # np.unique/argsort copies cost ~DRIVER_ENTRY_BYTES per posting
-    # entry in the Python driver, and a default-sized spark-submit
-    # driver (1g) would OOM long before 20M entries
-    DRIVER_BATCH_VOLUME_MAX = 20_000_000
-    DRIVER_ENTRY_BYTES = 64
 
-    def _driver_entry_budget(self) -> int:
-        """Posting-entry budget for driver-side kernels: the static row
-        bound clamped to a quarter of the machine's available memory and
-        half the JVM driver heap (the Arrow collect materializes there
-        first).  Conservative by design — past the budget the
-        distributed paths serve, which is never wrong, only slower at
-        serving-tier volumes."""
-        budget = self.DRIVER_BATCH_VOLUME_MAX
+    # ---- driver memory: one byte budget, one cost table --------------
+    # Every choice to hold a structure on the driver is rows x bytes
+    # per row against ONE byte budget: this ceiling (read per call, so
+    # an instance can override it), clamped once per instance to the
+    # memory the process can spend (:meth:`_probe_memory`).
+    DRIVER_BUDGET_BYTES = 20_000_000 * 64
+    # Driver bytes per row of each structure, each measured as a PEAK
+    # over one call: tracemalloc (Python objects + numpy buffers) plus
+    # the max_memory of a fresh pyarrow proxy pool (the Arrow buffers
+    # under toPandas), on a 200k-doc index of 200k terms with 8 shared
+    # terms (366k decoded entries), local[2], 4-CPU / 15 GB box.  The
+    # JVM half of a collect is not counted: the heap clamp covers it.
+    DRIVER_ROW_BYTES = {
+        # decoded posting entry (fetch + decode + per-term sort): 108 B
+        # peak, 24 B resident.  Kept at 64, the figure the postings
+        # boundaries were set with, so those boundaries do not move
+        "postings": 64,
+        # pinned (doc_id, doc_len, gen) row: 81.4 B peak during the
+        # Arrow pin, 25.4 B resident; pinning norms next peaks lower
+        # (25.4 resident + 48.4)
+        "doc_stats": 82,
+        # pinned dictionary entry, term characters excluded (the gate
+        # adds meta["term_bytes"]): 613.1 B peak while the Row collect
+        # and the map coexist, 333 B resident
+        "dict": 614,
+        # decoded-LRU entry: 24 B resident, 108 B peak at insert.
+        # Charged as a postings entry, so the LRU boundary does not move
+        "lru": 64,
+    }
+
+    def _probe_memory(self) -> float:
+        """The memory clamp: a quarter of the machine's available memory
+        and half the JVM driver heap (the Arrow collect materializes
+        there first), whichever is smaller; inf when neither is
+        known."""
+        clamp = math.inf
         try:
             with open("/proc/meminfo") as fh:
                 for line in fh:
                     if line.startswith("MemAvailable:"):
-                        avail = int(line.split()[1]) * 1024
-                        budget = min(
-                            budget, (avail // 4) // self.DRIVER_ENTRY_BYTES
-                        )
+                        clamp = int(line.split()[1]) * 1024 // 4
                         break
         except OSError:
             pass
@@ -836,10 +861,29 @@ class PackedIndex:
             units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
             mult = units.get(heap[-1].lower())
             if mult and heap[:-1].isdigit():
-                budget = min(
-                    budget, (int(heap[:-1]) * mult // 2) // self.DRIVER_ENTRY_BYTES
-                )
-        return budget
+                clamp = min(clamp, int(heap[:-1]) * mult // 2)
+        return clamp
+
+    def _driver_budget(self) -> int:
+        """DRIVER_BUDGET_BYTES under the memory clamp, which is probed on
+        first use and then kept for the instance's lifetime."""
+        if not hasattr(self, "_mem_clamp"):
+            self._mem_clamp = self._probe_memory()
+        return min(self.DRIVER_BUDGET_BYTES, self._mem_clamp)
+
+    def _capacity(self, kind: str, extra_bytes: int = 0) -> int:
+        """Most rows of structure ``kind`` (a DRIVER_ROW_BYTES key) that
+        fit the budget next to ``extra_bytes``; the decoded-postings LRU
+        keeps a quarter of the budget."""
+        budget = self._driver_budget() // (4 if kind == "lru" else 1)
+        return (budget - extra_bytes) // self.DRIVER_ROW_BYTES[kind]
+
+    def _fits(self, kind: str, rows: int, extra_bytes: int = 0) -> bool:
+        """THE driver memory gate: may ``rows`` rows of ``kind`` (plus
+        ``extra_bytes``) live on the driver?  Past it the distributed
+        paths serve, which is never wrong, only slower at serving-tier
+        volumes."""
+        return rows <= self._capacity(kind, extra_bytes)
 
     def _topandas_arrow(self, df: DataFrame) -> pd.DataFrame:
         """toPandas with the Arrow path FORCED regardless of session
@@ -853,12 +897,6 @@ class PackedIndex:
             return df.toPandas()
         finally:
             conf.set(key, prev)
-
-    def _doc_stats_budget(self) -> int:
-        """Most doc_dict rows pinned on the driver at once: the pin is
-        ~24 bytes/doc of numpy arrays, and the entry budget
-        (memory-derived) additionally protects small drivers."""
-        return min(self.DRIVER_DOC_STATS_MAX, self._driver_entry_budget())
 
     def _pin_doc_stats(self, lo: int | None = None, hi: int | None = None):
         """(sorted doc_id, doc_len, gen) arrays of the doc_dict rows with
@@ -878,27 +916,22 @@ class PackedIndex:
 
     def _doc_stats_np(self):
         """The cached full-range pin, or None when the corpus exceeds
-        the driver bound."""
+        the driver budget."""
         if not hasattr(self, "_dstats"):
             self._dstats = (
-                None if self.doc_num > self._doc_stats_budget()
-                else self._pin_doc_stats()
+                self._pin_doc_stats()
+                if self._fits("doc_stats", self.doc_num) else None
             )
         return self._dstats
-
-    # decoded-postings LRU budget: fraction of the driver entry budget
-    # reserved for the serving tier's per-term cache (a PackedIndex
-    # instance is an immutable snapshot — its decoded live postings
-    # never change, so caching is unconditionally safe per instance)
-    TERM_CACHE_FRACTION = 4
 
     def _decode_live_driver(self, tids: list[int]) -> dict[int, tuple]:
         """One pruned scan+collect of the terms' blocks; numpy decode +
         liveness filter against the pinned doc stats.  Returns
         {term_id: (doc_ids, tfs, doc_lens)} of LIVE rows.
 
-        Decoded terms land in a bounded per-instance LRU: a PackedIndex
-        is a snapshot (incremental commits are read by REOPENING), so a
+        Decoded terms land in a per-instance LRU bounded by a quarter
+        of the driver budget (``_capacity("lru")``): a PackedIndex is a
+        snapshot (incremental commits are read by REOPENING), so a
         term's decoded live postings are immutable for the instance's
         lifetime, and a serving tier's repeated/overlapping queries
         skip the scan job entirely — the reference's in-memory regime
@@ -927,7 +960,7 @@ class PackedIndex:
         if not missing:
             return out
         fetched = self._decode_live_driver_fetch(missing)
-        budget = self._driver_entry_budget() // self.TERM_CACHE_FRACTION
+        cap = self._capacity("lru")
         for t in missing:
             arrs = fetched.get(t, (np.empty(0, np.int64),
                                    np.empty(0, np.float64),
@@ -935,7 +968,7 @@ class PackedIndex:
             out[t] = arrs
             cache[t] = arrs
         size = sum(v[0].size for v in cache.values())
-        if size > budget:
+        if size > cap:
             # evict oldest-first but SKIP the current query's terms (they
             # were just touched; evicting them would thrash the very
             # entries this call returns) — iterate a snapshot so pops
@@ -943,15 +976,16 @@ class PackedIndex:
             # because an old entry belongs to the query
             protected = set(tids)
             for _k in list(cache.keys()):
-                if size <= budget:
+                if size <= cap:
                     break
                 if _k in protected:
                     continue
                 size -= cache.pop(_k)[0].size
         return out
 
-    # serving point reader caps: bytes one driver-side pyarrow fetch may
-    # touch (beyond it the distributed scan is the right tool) and the
+    # serving point reader caps, speed crossovers: bytes one driver-side
+    # pyarrow fetch may touch (beyond it the distributed scan is the
+    # right tool) and the
     # number of salt files worth stat-ing driver-side (a 500k-salt
     # cluster index is executor territory, not a serving-tier pin).
     # 128 MB decodes in ~100 ms from page cache — still well under the
@@ -962,8 +996,8 @@ class PackedIndex:
 
     def _pq_files(self):
         """Postings parquet files + per-file row-group term_id stats for
-        the driver point reader, or None when unavailable (non-local
-        path, Iceberg-served, pyarrow missing, no stats).  The postings
+        the driver point reader, or None when unavailable (see
+        :meth:`_rowgroup_stats`; also Iceberg-served).  The postings
         files are sorted by (term_id, block_seq) and written with
         bounded row groups (EngineConfig.pq_rowgroup_bytes), so the
         per-group min/max term_id stats are a coarse term index: a
@@ -973,65 +1007,24 @@ class PackedIndex:
         if hasattr(self, "_pq_meta"):
             return self._pq_meta
         self._pq_meta = None
-        path = getattr(self, "_table_paths", {}).get("postings")
-        if path is None:
-            return None
-        if path.startswith("file:"):
-            path = path[len("file:"):]
-        if not path.startswith("/") or not os.path.isdir(path):
-            return None
-        try:
-            import pyarrow.parquet as pq
-        except ImportError:
-            return None
-        files = sorted(glob.glob(f"{path}/salt=*/*.parquet"))
-        if not files or len(files) > self.PQ_POINT_READ_MAX_FILES:
+        stats = self._rowgroup_stats(
+            "postings", "salt=*/*.parquet", ["term_id", "block_seq"]
+        )
+        if stats is None:
             return None
         metas = []
-        for f in files:
-            try:
-                pf = pq.ParquetFile(f)
-            except Exception:
-                return None
-            md = pf.metadata
-            if md.num_row_groups == 0:
-                continue
+        for f, pf, lo, hi, nb in stats:
             try:
                 salt = int(f.split("salt=")[-1].split("/")[0])
             except ValueError:
                 return None
-            rg0 = md.row_group(0)
-            names = {
-                rg0.column(j).path_in_schema: j for j in range(rg0.num_columns)
-            }
-            if "term_id" not in names or "block_seq" not in names:
-                return None
-            ci, bi = names["term_id"], names["block_seq"]
-            lo, hi, blo, bhi, nb = [], [], [], [], []
-            for i in range(md.num_row_groups):
-                st = md.row_group(i).column(ci).statistics
-                bs = md.row_group(i).column(bi).statistics
-                if (
-                    st is None or not st.has_min_max
-                    or bs is None or not bs.has_min_max
-                ):
-                    return None
-                lo.append(st.min)
-                hi.append(st.max)
-                blo.append(bs.min)
-                bhi.append(bs.max)
-                nb.append(md.row_group(i).total_byte_size)
-            metas.append(
-                (
-                    pf,
-                    salt,
-                    np.array(lo, dtype=np.int64),
-                    np.array(hi, dtype=np.int64),
-                    np.array(blo, dtype=np.int64),
-                    np.array(bhi, dtype=np.int64),
-                    np.array(nb, dtype=np.int64),
-                )
-            )
+            metas.append((
+                pf, salt,
+                *(np.array(v, dtype=np.int64) for v in (
+                    lo["term_id"], hi["term_id"],
+                    lo["block_seq"], hi["block_seq"], nb,
+                )),
+            ))
         self._pq_meta = metas
         return metas
 
@@ -1286,7 +1279,8 @@ class PackedIndex:
         cache = getattr(self, "_term_postings_cache", {})
         return (
             self._doc_stats_np() is not None
-            and volume <= min(4 * self.DRIVER_VOLUME_MAX, self._driver_entry_budget())
+            and volume <= 4 * self.DRIVER_VOLUME_MAX
+            and self._fits("postings", volume)
             and all(r["term_id"] in cache for r in qinfo)
         )
 
@@ -1295,7 +1289,8 @@ class PackedIndex:
         numpy-vs-cluster crossover and the memory budget, with the doc
         stats pinned?"""
         return (
-            volume <= min(self.DRIVER_VOLUME_MAX, self._driver_entry_budget())
+            volume <= self.DRIVER_VOLUME_MAX
+            and self._fits("postings", volume)
             and self._doc_stats_np() is not None
         )
 
@@ -1322,8 +1317,8 @@ class PackedIndex:
             raise ValueError(
                 f"mode='driver' scores against doc stats pinned on the "
                 f"driver, but doc_num={self.doc_num} exceeds the driver "
-                f"bound min(DRIVER_DOC_STATS_MAX, entry budget)="
-                f"{self._doc_stats_budget()}"
+                f"bound: {self._capacity('doc_stats')} doc-stat rows fit "
+                f"the driver budget of {self._driver_budget()} bytes"
             )
         k1 = self.config.k1 if k1 is None else k1
         b = self.config.b if b is None else b
@@ -1494,7 +1489,7 @@ class PackedIndex:
         if mode == "auto":
             volume = sum(r["df"] for r in qinfo.values())
             if (
-                volume <= self._driver_entry_budget()
+                self._fits("postings", volume)
                 and self._doc_stats_np() is not None
             ):
                 return self._bm25_batch_driver(queries, qinfo, k, k1, b)
@@ -1800,12 +1795,13 @@ class PackedIndex:
             ub = F.least(ub, F.col("max_score"))
         return ub
 
-    # above this many block-metadata rows for the query's terms, keep the
-    # fully distributed WAND (driver can't hold the metadata); below it,
-    # planning happens driver-side and the whole query is 2 Spark jobs
+    # speed crossovers (see WAND_THRESHOLD's block): above this many
+    # block-metadata rows for the query's terms, keep the fully
+    # distributed WAND; below it, planning happens driver-side and the
+    # whole query is 2 Spark jobs
     META_COLLECT_MAX = 200_000
     # ride the rare term's tf payload with the metadata collect (for the
-    # job-free driver θ) only while it stays driver-sized (~2 bytes/row)
+    # job-free driver θ) only up to this df (~2 bytes/row)
     DRIVER_THETA_MAX_DF = 200_000
     # distributed WAND: survivor sets up to this size collect precisely
     # (exact candidate ranges + block_seq pushdown); above it, per-salt

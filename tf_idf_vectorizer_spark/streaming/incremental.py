@@ -97,8 +97,8 @@ from tf_idf_vectorizer_spark.operators.index_build import (
 from tf_idf_vectorizer_spark.operators.stats import with_norms
 from tf_idf_vectorizer_spark.operators.tables import (
     POSTINGS_FILE_SCHEMA,
-    ids_reminted,
     read_term_dict,
+    require_derived_ids,
     salt_of,
     write_doc_dict,
     write_lineage,
@@ -290,6 +290,9 @@ class IncrementalIndex:
             phases[name] = round(now - _last[0], 3)
             _last[0] = now
 
+        # before anything is written: a batch mints xxhash64(term) ids
+        stored_td = spark.read.parquet(self._path(meta, "term_dict"))
+        require_derived_ids(stored_td, self._path(meta, "term_dict"))
         committed_gen = int(meta.get("generation", 0))
         gen = committed_gen + 1
         postings_path = self._path(meta, "postings")
@@ -306,7 +309,6 @@ class IncrementalIndex:
         orig_doc_dict = doc_dict
         dd_extra = [c for c in doc_dict.columns
                     if c not in ("doc_id", "doc_len", "norm", "gen")]
-        stored_td = spark.read.parquet(self._path(meta, "term_dict"))
         term_dict = read_term_dict(stored_td)
 
         ids_df = None
@@ -631,7 +633,6 @@ class IncrementalIndex:
             # pre-batch vocab as the file-count hint: counting the new
             # dictionary first would run the stats rewrite twice
             int(meta.get("n_terms", 0)), self.config,
-            reminted=ids_reminted(stored_td),
         )
         new_tables = {"term_dict": td_name}
         if pure_append:
@@ -657,7 +658,7 @@ class IncrementalIndex:
                 meta["doc_num"],
             )
             new_tables["doc_dict"] = dd_name
-        # term_bytes too: _can_pin_dict judges a grown vocabulary by it
+        # term_bytes too: the dictionary pin gate charges its characters
         n_terms, term_bytes = spark.read.parquet(
             f"{self.dir}/{td_name}"
         ).agg(F.count("*"), F.sum(F.length("term"))).first()
@@ -742,11 +743,12 @@ class IncrementalIndex:
         that range's doc stats pinned on the driver and broadcast for
         the (doc_id, gen) liveness test — the payload bytes cross one
         exchange and the decoded posting rows never shuffle.  A corpus
-        within the driver pin budget (``PackedIndex._doc_stats_budget``,
+        whose doc stats fit the driver budget (``PackedIndex._fits``,
         the serving tier's gate) is one chunk; a larger one runs chunks
-        of ``budget // salt_range`` salts (at least one salt, which
-        ``salting`` caps at ``salt_target_rows`` docs), so driver memory
-        stays bounded however large the index grows.
+        of as many whole salts as the budget holds doc-stat rows
+        (``_capacity("doc_stats") // salt_range``, at least one salt,
+        which ``salting`` caps at ``salt_target_rows`` docs), so driver
+        memory stays bounded however large the index grows.
 
         Each block's ``max_score`` is the TRUE per-block maximum under
         the current corpus stats, so the tight WAND bounds stay valid
@@ -767,7 +769,7 @@ class IncrementalIndex:
         ds = idx._doc_stats_np()
         if ds is None:
             max_id = int(idx.doc_dict.agg(F.max("doc_id")).first()[0] or 0)
-            width = max(1, idx._doc_stats_budget() // salt_range)
+            width = max(1, idx._capacity("doc_stats") // salt_range)
             starts = range(0, max_id // salt_range + 1, width)
         else:
             width, starts = None, [None]
