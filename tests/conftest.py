@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import itertools
+from contextlib import contextmanager
+
 import pytest
 
 from tf_idf_vectorizer_spark.session import get_spark
@@ -23,3 +26,29 @@ def sf_smoke():
 @pytest.fixture(scope="session")
 def sf_correct():
     return SF_CORRECT
+
+
+_job_groups = itertools.count()
+
+
+@contextmanager
+def spark_jobs(spark):
+    """Run the block under a job group of its own and yield a list that,
+    on exit, holds the ids of the Spark jobs the block launched from
+    this thread.  The status store is fed asynchronously, so the
+    listener bus is drained before the group's jobs are read."""
+    sc = spark.sparkContext
+    saved = {
+        k: sc.getLocalProperty(k)
+        for k in ("spark.jobGroup.id", "spark.job.description")
+    }
+    group = f"test-jobs-{next(_job_groups)}"
+    sc.setJobGroup(group, group)
+    jobs: list[int] = []
+    try:
+        yield jobs
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))

@@ -180,3 +180,34 @@ def test_memory_probe_runs_once_per_instance(spark, base):
     assert ix.bm25_topk_rows(TERMS, k=K) == first
     assert ix.bm25_topk_rows(["t4"], k=K)
     assert ix.similarity_rows("dot", TERMS, k=K)
+
+
+def test_batch_decode_boundary_at_108_bytes_per_entry(spark, base):
+    """At the 1.28 GB ceiling a batch decode may hold 11,851,851 posting
+    entries at their measured 108 B each; the LRU keeps its quarter of
+    the ceiling at 64 B per entry."""
+    ix = _open(spark, base[0], None)
+    ix._mem_clamp = math.inf  # the ceiling binds, as on a 15 GB box
+    assert ix._fits("postings", 11_851_851)
+    assert not ix._fits("postings", 11_851_852)
+    assert ix._capacity("lru") == 5_000_000
+
+
+def test_pins_shrink_the_transient_gates(spark, base):
+    """The pinned dictionary and doc stats count against the postings
+    gate: under a budget that holds both pins, and a decode on its own,
+    but not all three, the query pins both and decodes on Spark."""
+    d, oracle = base
+    ix0 = _open(spark, d, None)
+    want = ix0.bm25_topk_rows(TERMS, k=K)
+    pinned = ix0._pinned_bytes()
+    volume = sum(int(r["df"]) for r in ix0._query_info(TERMS))
+    budget = pinned + volume * ix0.DRIVER_ROW_BYTES["postings"] - 1
+    assert 0 < volume and volume * ix0.DRIVER_ROW_BYTES["postings"] <= budget
+    ix = _open(spark, d, budget)
+    assert ix.bm25_topk_rows(TERMS, k=K) == want
+    assert "_term_map" in vars(ix) and ix._doc_stats_np() is not None
+    assert ix._pinned_bytes() == pinned
+    assert not ix._fits("postings", volume)
+    assert not getattr(ix, "_term_postings_cache", None)
+    _close(want, oracle.similarity("bm25", TERMS, k=K))

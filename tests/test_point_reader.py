@@ -24,6 +24,8 @@ from tf_idf_vectorizer_spark.operators.index_build import build_index
 from tf_idf_vectorizer_spark.query.packed import PackedIndex
 from tf_idf_vectorizer_spark.sources.synth import synth_corpus
 
+from conftest import spark_jobs
+
 # 8 KB row groups force several groups per salt file even on a small
 # corpus, so the pruning logic actually has something to prune
 CFG = EngineConfig(n_salts=4, block_size=32, term_buckets=8,
@@ -241,10 +243,9 @@ def test_term_dict_point_lookup_matches_pinned(spark, idx_dir):
     # the driver (tables.term_id_of), still with no Spark job
     for f in glob.glob(f"{idx_dir}/term_dict/*.parquet"):
         assert pq.read_schema(f).names == ["term", "df", "idf"]
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None) or [])
-    via_point = pi_b._query_info(terms)
-    assert set(tracker.getJobIdsForGroup(None) or []) == before
+    with spark_jobs(spark) as jobs:
+        via_point = pi_b._query_info(terms)
+    assert jobs == []
     assert [
         (r["term"], r["term_id"], r["df"], round(float(r["idf"]), 12))
         for r in via_point

@@ -16,6 +16,8 @@ from tf_idf_vectorizer_spark.query.ast import parse_sexpr
 from tf_idf_vectorizer_spark.query.packed import PackedIndex
 from tf_idf_vectorizer_spark.sources.synth import synth_topical_corpus
 
+from conftest import spark_jobs
+
 CFG = EngineConfig(n_salts=4, block_size=64, term_buckets=16)
 
 
@@ -73,14 +75,12 @@ def test_rows_apis_job_free_when_resident(srv, spark):
     jobs at all (tracked via the status tracker's job ids)."""
     srv.similarity_rows("dot", ["t1", "t2"], k=5)
     srv.search_rows(parse_sexpr('(and "t1" "t2")'), k=5)
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None) or [])
-    srv.similarity_rows("dot", ["t1", "t2"], k=5)
-    srv.similarity_rows("cosine", ["t1", "t2"], k=5)
-    srv.similarity_rows("contains", ["t1"], k=5)
-    srv.search_rows(parse_sexpr('(and "t1" (not "t2"))'), k=5)
-    after = set(tracker.getJobIdsForGroup(None) or [])
-    assert after == before, "serving calls must not launch Spark jobs"
+    with spark_jobs(spark) as jobs:
+        srv.similarity_rows("dot", ["t1", "t2"], k=5)
+        srv.similarity_rows("cosine", ["t1", "t2"], k=5)
+        srv.similarity_rows("contains", ["t1"], k=5)
+        srv.search_rows(parse_sexpr('(and "t1" (not "t2"))'), k=5)
+    assert jobs == [], "serving calls must not launch Spark jobs"
 
 
 def _unpinnable(ix):

@@ -130,7 +130,8 @@ def test_wand_equals_exact_under_external_stats(spark, tmp_path):
     the build-time max_score column (packed under the local idf) bounds
     nothing there: trusting it let WAND prune live top-k docs and return
     other docs at a tied score.  The copy must also not reuse the
-    original's WAND metadata caches, whose keys hold no idf."""
+    original's distributed WAND metadata cache, whose key holds no
+    idf."""
     from tf_idf_vectorizer_spark.functions.tokenize import term_frequencies
     from tf_idf_vectorizer_spark.operators.stats import corpus_stats
     from tf_idf_vectorizer_spark.sources.synth import synth_topical_corpus
@@ -156,15 +157,12 @@ def test_wand_equals_exact_under_external_stats(spark, tmp_path):
     assert pi._tight_bounds_ok(CFG.k1, CFG.b)  # the original is untouched
     assert not ext._tight_bounds_ok(CFG.k1, CFG.b)
 
-    # a copy taken after the original planned WAND queries starts with
-    # its own metadata caches
+    # a copy taken after the original planned distributed WAND queries
+    # starts with its own metadata cache
+    pi.META_COLLECT_MAX = 0
     rows(pi, "wand")
-    cached = [
-        a for a in ("_wand_meta_cache", "_dist_meta_cache") if a in vars(pi)
-    ]
-    assert cached
+    assert "_dist_meta_cache" in vars(pi)
     ext = pi.with_external_stats(ext_stats, ext_n)
-    for a in cached:
-        assert vars(ext).get(a) is not vars(pi)[a], a
+    assert vars(ext).get("_dist_meta_cache") is not vars(pi)["_dist_meta_cache"]
     assert rows(ext, "wand") == rows(ext, "exact")
     docs.unpersist()

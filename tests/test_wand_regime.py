@@ -19,6 +19,8 @@ from tf_idf_vectorizer_spark.oracle import OracleIndex
 from tf_idf_vectorizer_spark.query.packed import PackedIndex
 from tf_idf_vectorizer_spark.sources.synth import synth_topical_corpus
 
+from conftest import spark_jobs
+
 CFG = EngineConfig(n_salts=4, block_size=64, term_buckets=16)
 
 
@@ -227,3 +229,88 @@ def test_wand_after_batch_keeps_rank_identity(spark, topical, tmp_path):
     w = _rows(idx2.bm25_topk(["t1", "s0"], k=10, mode="wand"))
     e = _rows(idx2.bm25_topk(["t1", "s0"], k=10, mode="exact"))
     assert w == e
+
+
+def test_driver_wand_reads_metadata_without_spark(spark, topical, monkeypatch):
+    """A driver-planned WAND query on a fresh index whose θ comes from
+    max_score launches no Spark job: its block metadata is a pyarrow
+    read that projects no payload column, and its rescore fits the
+    driver."""
+    import pyarrow.parquet as pq
+
+    idx = PackedIndex(spark, topical[0].dir, CFG, warm=True)
+    idx.WAND_THRESHOLD = 0  # the serving API dispatches to WAND
+    assert idx._tight_bounds_ok(CFG.k1, CFG.b)
+    terms = ["t1", "s4"]
+    want = _rows(idx.bm25_topk(terms, k=10, mode="exact"))
+    # each pyarrow read, tagged with the columns its fetch asked for
+    reads, fetching = [], [None]
+    read_row_groups = pq.ParquetFile.read_row_groups
+
+    def read(self, row_groups, columns=None, **kw):
+        reads.append((fetching[0], columns))
+        return read_row_groups(self, row_groups, columns=columns, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", read)
+    fetch = idx._fetch_blocks
+
+    def tagged(tids, cols, *a, **kw):
+        fetching[0] = cols
+        return fetch(tids, cols, *a, **kw)
+
+    idx._fetch_blocks = tagged
+    rescores = []
+    rescore = idx._rescore_rows
+    idx._rescore_rows = lambda *a: rescores.append(1) or rescore(*a)
+    with spark_jobs(spark) as jobs:
+        got = idx.bm25_topk_rows(terms, k=10)
+    assert jobs == []
+    assert [(d, round(sc, 9), n) for d, sc, n in got] == want
+    assert rescores == [1]  # θ came from max_score, not a seed rescore
+    meta = [cols for tag, cols in reads if tag and "max_tf" in tag]
+    assert meta
+    for cols in meta:
+        assert "doc_deltas" not in cols and "tfs" not in cols, cols
+
+
+def test_wand_metadata_spark_fallback_is_capped(spark, topical, tmp_path):
+    """At generation > 0 with no point reader, the metadata read is a
+    Spark scan capped one row past META_COLLECT_MAX; a query with more
+    blocks hands off to the distributed planner and stays exact."""
+    import shutil
+
+    from tf_idf_vectorizer_spark.streaming.incremental import IncrementalIndex
+
+    out = str(tmp_path / "inc")
+    shutil.copytree(topical[0].dir, out)
+    IncrementalIndex(spark, out, CFG).apply_batch(spark.createDataFrame(
+        [(2, "t1 t1 s0 fresh"), (6001, "t1 t2 s9 new")],
+        "doc_id long, text string",
+    ))
+    idx = PackedIndex(spark, out, CFG)
+    assert int(idx.meta["generation"]) >= 1
+    idx._pq_meta = None  # no postings point reader on this instance
+    assert idx._pq_files() is None
+    terms = ["t1", "s0"]
+    tids = [r["term_id"] for r in idx._query_info(terms)]
+    n_blocks = idx._blocks_for(tids).count()
+    idx.META_COLLECT_MAX = n_blocks // 2
+    assert idx.META_COLLECT_MAX > 0
+    want = _rows(idx.bm25_topk(terms, k=10, mode="exact"))
+    fetches = []  # (cols, rows returned) of every block fetch
+    fetch = idx._fetch_blocks
+
+    def spy(tids, cols, *a, **kw):
+        out = fetch(tids, cols, *a, **kw)
+        fetches.append((cols, len(out)))
+        return out
+
+    idx._fetch_blocks = spy
+    handoffs = []
+    orig = idx._wand_topk_distributed
+    idx._wand_topk_distributed = lambda *a: handoffs.append(1) or orig(*a)
+    got = _rows(idx.bm25_topk(terms, k=10, mode="wand"))
+    assert got == want
+    assert handoffs == [1]
+    meta = [n for cols, n in fetches if "max_tf" in cols]
+    assert meta == [idx.META_COLLECT_MAX + 1], fetches

@@ -18,14 +18,15 @@ Block-max WAND, three bounded passes:
 
   1. THETA — a safe LOWER bound θ on the final k-th score, job-free
      when every idf > 1: the postings of a SPARSE query term (its df is
-     driver-sized; the payload comes from a second, term-pruned point
-     read after the metadata fetch), each scored with its block's
-     max_dl, are real docs' score FLOORS, so their k-th largest is a
-     valid θ; on a fresh index so is the k-th largest pack-time
-     max_score among one term's blocks.  Fallback: exact-score the
-     docs of the rarest term's highest-bound blocks.
-  2. PRUNE — over block METADATA ONLY (parquet column pruning never
-     reads the compressed payloads): a block of term t survives iff
+     driver-sized; its payload is a term-pruned point read of its own),
+     each scored with its block's max_dl, are real docs' score FLOORS,
+     so their k-th largest is a valid θ; on a fresh index so is the
+     k-th largest pack-time max_score among one term's blocks.
+     Fallback: exact-score the docs of the rarest term's highest-bound
+     blocks.
+  2. PRUNE — over block METADATA ONLY (both planners project the
+     metadata columns, never the compressed payloads; a block's bound
+     is the BM25 partial every scorer uses): a block of term t survives iff
      ub_block(t) + Σ_{t'≠t} credit(t') ≥ θ, where credit(t') is the
      max ub of the t'-blocks overlapping it (per posting for a sparse
      t').  Any doc appearing only in pruned blocks has total score < θ
@@ -337,12 +338,9 @@ class PackedIndex:
         # BEFORE the meta commit (O(batch) ingest — no dict rewrite), so
         # rows above the watermark are uncommitted and must stay
         # invisible, exactly like orphan posting rows
-        dd = spark.read.parquet(paths["doc_dict"])
-        if "gen" in dd.columns:
-            dd = dd.filter(
-                F.col("gen") <= int(self.meta.get("generation", 0))
-            )
-        self.doc_dict = dd.cache()
+        self.doc_dict = spark.read.parquet(paths["doc_dict"]).filter(
+            F.col("gen") <= int(self.meta.get("generation", 0))
+        ).cache()
         self.term_dict = read_term_dict(
             spark.read.parquet(paths["term_dict"])
         ).cache()
@@ -442,8 +440,9 @@ class PackedIndex:
         on the RAREST corpus term — the cheapest term everywhere, so
         Janino codegen of the scan/decode/score plans, the Arrow collect
         path, and the Python decode workers are all hot before the first
-        real query.  Cuts the first query's ~2-3 s cold cost; returns
-        self for chaining.
+        real query (the WAND pass stats the postings files for the
+        pyarrow point reader that serves its reads).  Cuts the first
+        query's ~2-3 s cold cost; returns self for chaining.
 
         ``terms``: optionally pre-decode a workload's expected terms
         into the serving LRU (one batched scan; budget-bounded), so
@@ -465,7 +464,7 @@ class PackedIndex:
         if full:
             # serving/driver path: pruned scan + Arrow collect + numpy
             self.bm25_topk_rows([rare["term"]], k=1)
-            # WAND planner: metadata collect + flagged decode + rescore
+            # WAND planner: metadata read + driver rescore
             qinfo = self._query_info([rare["term"]])
             if qinfo:
                 self._wand_topk(qinfo, 1, self.config.k1, self.config.b)
@@ -667,10 +666,9 @@ class PackedIndex:
         # (max_tf, min_dl) under the external idf
         other.meta = {**self.meta, "tight_bounds": False}
         # drop what copy.copy shared and depends on idf: the pinned term
-        # map, the WAND metadata caches (their keys hold no idf) and the
-        # dictionary file metas.  The decoded-postings LRU is idf-free.
-        for attr in ("_term_map", "_td_meta", "_wand_meta_cache",
-                     "_dist_meta_cache"):
+        # map, the distributed WAND's metadata cache (its key holds no
+        # idf) and the dictionary file metas.  The LRU is idf-free.
+        for attr in ("_term_map", "_td_meta", "_dist_meta_cache"):
             other.__dict__.pop(attr, None)
         # the copy must NOT point-read the LOCAL on-disk term_dict files:
         # its df/idf now come from the external stats table, so disable
@@ -762,12 +760,8 @@ class PackedIndex:
             [(r["term_id"], float(r["idf"])) for r in qinfo],
             "term_id long, idf double",
         )
-        dd_cols = ["doc_id", "doc_len"] + (
-            ["gen"] if "gen" in self.doc_dict.columns else []
-        )
-        join_keys = ["doc_id"] + (["gen"] if "gen" in dd_cols else [])
         joined = decoded.join(F.broadcast(qdf), "term_id").join(
-            self.doc_dict.select(*dd_cols), join_keys
+            self.doc_dict.select("doc_id", "gen", "doc_len"), ["doc_id", "gen"]
         )
         partial = _bm25_partial_col(k1, b, self.avg_len)
         return (
@@ -793,7 +787,7 @@ class PackedIndex:
     # ~2x on every prunable >=4M-entry query and lands within ~3% of
     # exact on the bound-adversarial iid two-head shape (its <10%-
     # pruned plan falls through to the exact pass, so the downside is
-    # one cached metadata fetch).  Expected-case-positive from ~8M
+    # one metadata read).  Expected-case-positive from ~8M
     # entries; callers can still force either mode.
     WAND_THRESHOLD = 8_000_000
 
@@ -826,9 +820,8 @@ class PackedIndex:
     # JVM half of a collect is not counted: the heap clamp covers it.
     DRIVER_ROW_BYTES = {
         # decoded posting entry (fetch + decode + per-term sort): 108 B
-        # peak, 24 B resident.  Kept at 64, the figure the postings
-        # boundaries were set with, so those boundaries do not move
-        "postings": 64,
+        # peak, 24 B resident
+        "postings": 108,
         # pinned (doc_id, doc_len, gen) row: 81.4 B peak during the
         # Arrow pin, 25.4 B resident; pinning norms next peaks lower
         # (25.4 resident + 48.4)
@@ -873,10 +866,27 @@ class PackedIndex:
 
     def _capacity(self, kind: str, extra_bytes: int = 0) -> int:
         """Most rows of structure ``kind`` (a DRIVER_ROW_BYTES key) that
-        fit the budget next to ``extra_bytes``; the decoded-postings LRU
-        keeps a quarter of the budget."""
-        budget = self._driver_budget() // (4 if kind == "lru" else 1)
+        fit the budget next to ``extra_bytes``.  The transient kinds (a
+        postings decode, the LRU fill) see only what the pinned
+        dictionary and doc stats leave of the budget; the
+        decoded-postings LRU keeps a quarter of that."""
+        budget = self._driver_budget()
+        if kind in ("postings", "lru"):
+            budget -= self._pinned_bytes()
+            if kind == "lru":
+                budget //= 4
         return (budget - extra_bytes) // self.DRIVER_ROW_BYTES[kind]
+
+    def _pinned_bytes(self) -> int:
+        """What the pinned dictionary and doc stats hold, at the rows x
+        DRIVER_ROW_BYTES their own gates charged them."""
+        held = 0
+        if getattr(self, "_term_map", None) is not None:
+            held += (len(self._term_map) * self.DRIVER_ROW_BYTES["dict"]
+                     + self.meta.get("term_bytes", 0))
+        if getattr(self, "_dstats", None) is not None:
+            held += self._dstats[0].size * self.DRIVER_ROW_BYTES["doc_stats"]
+        return held
 
     def _fits(self, kind: str, rows: int, extra_bytes: int = 0) -> bool:
         """THE driver memory gate: may ``rows`` rows of ``kind`` (plus
@@ -1029,7 +1039,8 @@ class PackedIndex:
         return metas
 
     def _fetch_blocks(
-        self, tids, cols: list[str], keys: pd.DataFrame | None = None
+        self, tids, cols: list[str], keys: pd.DataFrame | None = None,
+        limit: int | None = None,
     ) -> pd.DataFrame:
         """THE driver block fetch: ``cols`` of the committed posting
         blocks of terms ``tids``, as pandas.  With ``keys`` (block keys
@@ -1049,7 +1060,8 @@ class PackedIndex:
         ~dozen that match (measured 0.11 s/query in to_pandas alone).
         Past PQ_POINT_READ_MAX_BYTES, off a local path, or when the
         files cannot serve the read: one Arrow collect of the Spark scan
-        (a broadcast key join for ``keys``)."""
+        (a broadcast key join for ``keys``), at most ``limit`` rows of
+        it."""
         ts = np.unique(np.asarray(tids, dtype=np.int64))
         flags = [] if keys is None else [
             c for c in keys.columns if c not in _KEY_COLS
@@ -1099,7 +1111,8 @@ class PackedIndex:
                     ))),
                     _KEY_COLS,
                 )
-            return self._topandas_arrow(rel.select(*need, *flags))
+            rel = rel.select(*need, *flags)
+            return self._topandas_arrow(rel if limit is None else rel.limit(limit))
         if keys is None:
             return pdf
         as64 = {c: np.int64 for c in _KEY_COLS}
@@ -1287,11 +1300,12 @@ class PackedIndex:
     def _driver_ok(self, volume: int) -> bool:
         """Does a ``volume``-entry decode belong on the driver: under the
         numpy-vs-cluster crossover and the memory budget, with the doc
-        stats pinned?"""
+        stats pinned?  The doc stats pin first, so the postings gate
+        sees what they hold."""
         return (
             volume <= self.DRIVER_VOLUME_MAX
-            and self._fits("postings", volume)
             and self._doc_stats_np() is not None
+            and self._fits("postings", volume)
         )
 
     def bm25_topk(
@@ -1371,7 +1385,7 @@ class PackedIndex:
             return self._rows_df([])
         tids = [r["term_id"] for r in qinfo]
         decoded = self.decode_postings(tids)
-        keys = ["doc_id"] + (["gen"] if "gen" in self.doc_dict.columns else [])
+        keys = ["doc_id", "gen"]
         if algo == "contains":
             live = decoded.join(self.doc_dict.select(*keys), keys, "left_semi")
             hits = live.select("doc_id").distinct().withColumn("score", F.lit(1.0))
@@ -1387,9 +1401,8 @@ class PackedIndex:
             [(tid, eff[tid], float(r["idf"])) for tid, r in zip(tids, qinfo)],
             "term_id long, qtf double, idf double",
         )
-        dd_cols = list(dict.fromkeys(keys + ["doc_len", "norm"]))
         joined = decoded.join(F.broadcast(qdf), "term_id").join(
-            self.doc_dict.select(*dd_cols), keys
+            self.doc_dict.select(*keys, "doc_len", "norm"), keys
         )
         tfd = F.col("tf").cast("double")
         prod = F.col("qtf") * tfd * F.col("idf") * F.col("idf")
@@ -1489,8 +1502,8 @@ class PackedIndex:
         if mode == "auto":
             volume = sum(r["df"] for r in qinfo.values())
             if (
-                self._fits("postings", volume)
-                and self._doc_stats_np() is not None
+                self._doc_stats_np() is not None
+                and self._fits("postings", volume)
             ):
                 return self._bm25_batch_driver(queries, qinfo, k, k1, b)
         qdf = _arrow_df(
@@ -1498,9 +1511,9 @@ class PackedIndex:
         )
         tids = sorted({p[1] for p in pairs})
         decoded = self.decode_postings(tids)
-        keys = ["doc_id"] + (["gen"] if "gen" in self.doc_dict.columns else [])
+        keys = ["doc_id", "gen"]
         joined = decoded.join(F.broadcast(qdf), "term_id").join(
-            self.doc_dict.select(*(keys + ["doc_len"])), keys
+            self.doc_dict.select(*keys, "doc_len"), keys
         )
         partial = _bm25_partial_col(k1, b, self.avg_len)
         scored = joined.groupBy("query_id", "doc_id").agg(
@@ -1733,7 +1746,7 @@ class PackedIndex:
             return self.doc_dict.select("doc_id").limit(0)
         decoded = self.decode_postings([info[0]["term_id"]])
         # liveness: only current-generation rows count
-        keys = ["doc_id"] + (["gen"] if "gen" in self.doc_dict.columns else [])
+        keys = ["doc_id", "gen"]
         live = decoded.join(self.doc_dict.select(*keys), keys, "left_semi")
         return live.select("doc_id").distinct()
 
@@ -1775,8 +1788,9 @@ class PackedIndex:
     def _block_ub(
         self, idf_map: dict[int, float], k1: float, b: float, tight: bool = False
     ):
-        """Column expr: BM25 upper bound of a block from its metadata.
-        The (max_tf, min_dl) formula bound is always valid; when
+        """Column expr: BM25 upper bound of a block from its metadata,
+        for the distributed planner (the driver planner's numpy bound is
+        :func:`_bm25_partial`).  The (max_tf, min_dl) bound is valid; when
         ``tight`` (see _tight_bounds_ok) the pack-time true max impact
         is at most that, so the min of the two is both valid and
         strictly better on uniform-tf corpora."""
@@ -1797,11 +1811,12 @@ class PackedIndex:
 
     # speed crossovers (see WAND_THRESHOLD's block): above this many
     # block-metadata rows for the query's terms, keep the fully
-    # distributed WAND; below it, planning happens driver-side and the
-    # whole query is 2 Spark jobs
+    # distributed WAND; below it, planning happens driver-side on a
+    # pyarrow metadata read, and a query whose rescore fits the driver
+    # launches no Spark job
     META_COLLECT_MAX = 200_000
-    # ride the rare term's tf payload with the metadata collect (for the
-    # job-free driver θ) only up to this df (~2 bytes/row)
+    # pull a sparse term's whole payload to the driver (θ floors and
+    # per-posting credit) only up to this df (~2 bytes/row)
     DRIVER_THETA_MAX_DF = 200_000
     # distributed WAND: survivor sets up to this size collect precisely
     # (exact candidate ranges + block_seq pushdown); above it, per-salt
@@ -1812,12 +1827,14 @@ class PackedIndex:
     def _wand_topk(self, qinfo: list[dict], k: int, k1: float, b: float) -> list[tuple]:
         """Block-max WAND with driver-side planning when the query's
         block METADATA fits on the driver (a few hundred KB for typical
-        queries): collect metadata once, compute θ and the prune
-        driver-side, then finish through :meth:`_rescore_rows` — one
-        payload fetch + numpy on the driver, or one fused decode+score
-        job with the `is_target` flag riding through the decode kernel.
-        Falls back to the distributed variant when metadata is too
-        large (true head-term territory).  Returns the top-k rows."""
+        queries): read the metadata columns through
+        :meth:`_fetch_blocks` (a pyarrow point read on a local index, no
+        Spark job), compute the bounds, θ and the prune in numpy, then
+        finish through :meth:`_rescore_rows` — one payload fetch + numpy
+        on the driver, or one fused decode+score job with the
+        `is_target` flag riding through the decode kernel.  Falls back
+        to the distributed variant past META_COLLECT_MAX metadata rows
+        (true head-term territory).  Returns the top-k rows."""
         tids = [r["term_id"] for r in qinfo]
         idf_map = {r["term_id"]: float(r["idf"]) for r in qinfo}
         rare = min(qinfo, key=lambda r: (r["df"], r["term"]))
@@ -1826,8 +1843,8 @@ class PackedIndex:
         gen0 = int(self.meta.get("generation", 0)) == 0
         # SPARSE terms: when a query term's whole posting payload is
         # driver-sized (df <= DRIVER_THETA_MAX_DF, a few hundred KB of
-        # varints), fetch and decode it (cached with the metadata).  The
-        # decoded postings give three things no block metadata can:
+        # varints), fetch and decode it.  The decoded postings give
+        # three things no block metadata can:
         #   θ floors  — each posting scored with its block's max_dl is a
         #               real doc's score LOWER bound (k-th largest = θ);
         #   per-POSTING upper bounds — a sparse term's blocks cover few
@@ -1849,62 +1866,40 @@ class PackedIndex:
                      "max_doc", "max_tf", "min_dl"]
         if tight:
             meta_cols.append("max_score")
-        sel = [F.col(c) for c in meta_cols]
-        # Arrow fetch: a head query's metadata is 10^4-10^5 rows, and a
-        # py4j row collect of that costs 1-2 s — more than the pruning
-        # could ever save.  Everything below is vectorized numpy.
-        # Block metadata is IMMUTABLE per generation, so a small LRU
-        # makes repeated-term planning job-free in a serving session
-        # (bounded: ~15 MB/entry worst case x 8 entries).
-        ck = (tuple(sorted(tids)), tuple(sorted(sparse_ids)), tight,
-              float(k1), float(b), int(self.meta.get("generation", 0)))
-        cache = getattr(self, "_wand_meta_cache", None)
-        if cache is None:
-            cache = self._wand_meta_cache = {}
-        # block-count bound from the dictionary (no job): at gen 0 every
+        # block-count bound from the dictionary (no read): at gen 0 every
         # posting row is live, so each term holds ceil(df/block_size)
         # full blocks plus at most one partial block per salt — if even
-        # the bound exceeds the driver budget, plan distributed without
-        # touching the metadata, and otherwise fetch WITHOUT a .limit()
-        # guard (the guard forces a single-partition exchange — measured
-        # 2x the whole fetch cost).  After incremental batches stale
-        # generations keep rows df can't see, so gen>0 falls back to the
-        # guarded fetch.
-        n_salts = int(self.meta.get("n_salts", 1) or 1)
+        # the bound exceeds META_COLLECT_MAX, plan distributed without
+        # touching the metadata.  At gen > 0 stale rows df can't see
+        # remain, so a Spark fallback read is capped one row past it.
         if gen0:
+            n_salts = int(self.meta.get("n_salts", 1) or 1)
             est_blocks = sum(
                 -(-int(r["df"]) // self.config.block_size) for r in qinfo
             ) + n_salts * len(qinfo)
             if est_blocks > self.META_COLLECT_MAX:
                 return self._wand_topk_distributed(qinfo, k, k1, b)
-        hit = cache.get(ck)
-        if hit is None:
-            meta_df = (
-                self._blocks_for(tids).select(*sel)
-                .withColumn("ub", self._block_ub(idf_map, k1, b, tight))
-            )
-            if not gen0:
-                meta_df = meta_df.limit(self.META_COLLECT_MAX + 1)
-            mp = self._topandas_arrow(meta_df)
-            if len(mp) > self.META_COLLECT_MAX:
-                return self._wand_topk_distributed(qinfo, k, k1, b)
-            # sparse payloads come from a SECOND, term-pruned fetch: the
-            # metadata scan must not project tfs/doc_deltas, or parquet
-            # reads the HEAD terms' full payload chunks just to null
-            # them out — the cost the metadata-only fetch exists to skip
-            sp = self._sparse_postings_np(sparse_ids, idf_map, k1, b)
-            while len(cache) >= 8:
-                cache.pop(next(iter(cache)))
-            cache[ck] = (mp, sp)
-        else:
-            mp, sp = hit
+        # metadata columns only: the projection never reads payloads
+        mp = self._fetch_blocks(
+            tids, meta_cols, limit=None if gen0 else self.META_COLLECT_MAX + 1
+        )
+        if len(mp) > self.META_COLLECT_MAX:
+            return self._wand_topk_distributed(qinfo, k, k1, b)
+        # the sparse terms' payloads come from a term-pruned fetch
+        sp = self._sparse_postings_np(sparse_ids, idf_map, k1, b)
         n_blocks = len(mp)
         if n_blocks == 0:
             return []
         bterm = mp["term_id"].to_numpy(np.int64)
         blo = mp["min_doc"].to_numpy(np.int64)
         bhi = mp["max_doc"].to_numpy(np.int64)
-        bub = mp["ub"].to_numpy(np.float64)
+        ln_idf = np.log(mp["term_id"].map(idf_map).to_numpy(np.float64))
+        bub = np.where(ln_idf > 0, _bm25_partial(
+            ln_idf, mp["max_tf"].to_numpy(np.float64),
+            mp["min_dl"].to_numpy(np.float64), k1, b, self.avg_len,
+        ), 0.0)
+        if tight:
+            bub = np.minimum(bub, mp["max_score"].to_numpy(np.float64))
 
         theta = self._floor_theta(sp, k) if nonneg else -math.inf
         if tight and nonneg:
@@ -1983,7 +1978,7 @@ class PackedIndex:
             # corpora the flag/join machinery would only add overhead
             # over the plain exact single pass, which selects the same
             # top-k by the pruning proof.  This caps WAND's worst case
-            # at exact + one metadata job.
+            # at exact + one metadata read.
             return _rows(self._exact_topk(qinfo, k, k1, b))
         # ---- rescore: every block a candidate has a posting in ---------
         m_lo, m_hi = _candidate_ranges(bterm[keep], blo[keep], bhi[keep], sp)
@@ -2190,8 +2185,8 @@ class PackedIndex:
             [(r["term_id"], float(r["idf"])) for r in qinfo],
             "term_id long, idf double",
         )
-        keys = ["doc_id"] + (["gen"] if "gen" in self.doc_dict.columns else [])
-        dd = self.doc_dict.select(*(keys + ["doc_len"]))
+        keys = ["doc_id", "gen"]
+        dd = self.doc_dict.select(*keys, "doc_len")
         if doc_ranges is not None:
             dd = dd.filter(
                 _range_pred(*np.asarray(doc_ranges, np.int64).reshape(-1, 2).T)
@@ -2292,12 +2287,8 @@ class PackedIndex:
                 ids, tf, extra = ids[live], tf[live], extra[live]
                 min_dl, max_dl = min_dl[live], max_dl[live]
             if ln_idf > 0:
-                ub_p = ln_idf * (k1 + 1.0) * tf / (
-                    tf + k1 * (1.0 - b + b * min_dl / self.avg_len)
-                )
-                fl_p = ln_idf * (k1 + 1.0) * tf / (
-                    tf + k1 * (1.0 - b + b * max_dl / self.avg_len)
-                )
+                ub_p = _bm25_partial(ln_idf, tf, min_dl, k1, b, self.avg_len)
+                fl_p = _bm25_partial(ln_idf, tf, max_dl, k1, b, self.avg_len)
             else:
                 ub_p = np.zeros(ids.size)
                 fl_p = np.full(ids.size, -np.inf)
