@@ -52,3 +52,26 @@ def spark_jobs(spark):
             sc.setLocalProperty(k, v)
         sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
         jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def force_wand_chunks(idx):
+    """Force one-salt WAND chunks on ``idx`` (``META_COLLECT_MAX = 0``)
+    and return a list that collects the ``salts`` argument of every
+    block-metadata read the planner makes (None: every salt)."""
+    idx.META_COLLECT_MAX = 0
+    salts = []
+    fetch = idx._fetch_blocks
+
+    def spy(tids, cols, *a, **kw):
+        if "max_tf" in cols:
+            salts.append(kw.get("salts"))
+        return fetch(tids, cols, *a, **kw)
+
+    idx._fetch_blocks = spy
+    return salts
+
+
+def chunk_count(salts) -> int:
+    """How many one-salt chunks the reads ``force_wand_chunks`` saw
+    planned."""
+    return sum(1 for s in salts if s is not None and len(s) == 1)

@@ -211,3 +211,31 @@ def test_pins_shrink_the_transient_gates(spark, base):
     assert not ix._fits("postings", volume)
     assert not getattr(ix, "_term_postings_cache", None)
     _close(want, oracle.similarity("bm25", TERMS, k=K))
+
+
+def test_norm_pin_charges_the_budget(spark, base):
+    """Pinning the cosine norms charges doc_num x DRIVER_ROW_BYTES
+    ["norms"]: under a budget that holds the dictionary, the doc stats
+    and a batch decode, the decode no longer fits once a cosine query
+    pins the norms, and the Spark plan serves the same rows."""
+    d, _ = base
+    ix0 = _open(spark, d, None)
+    want = _batch_rows(ix0)
+    terms = sorted({t for ts in BATCH.values() for t in ts})
+    volume = sum(int(r["df"]) for r in ix0._query_info(terms))
+    budget = ix0._pinned_bytes() + volume * ix0.DRIVER_ROW_BYTES["postings"]
+    ix = _open(spark, d, budget)
+    ix._query_info([])
+    assert ix._doc_stats_np() is not None
+    assert ix._fits("postings", volume)
+    before = ix._pinned_bytes()
+    ix.similarity_rows("cosine", TERMS, k=K)
+    assert ix._doc_norms_np() is not None
+    assert (ix._pinned_bytes() - before
+            == ix.doc_num * ix.DRIVER_ROW_BYTES["norms"])
+    assert not ix._fits("postings", volume)
+    driver = []
+    batch_driver = ix._bm25_batch_driver
+    ix._bm25_batch_driver = lambda *a: driver.append(1) or batch_driver(*a)
+    assert _batch_rows(ix) == want
+    assert driver == []

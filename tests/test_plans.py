@@ -53,10 +53,9 @@ def test_wand_metadata_scan_skips_payload_columns(packed):
     metadata scan's ReadSchema excludes doc_deltas/tfs."""
     qinfo = packed._query_info(["spark", "the"])
     tids = [r["term_id"] for r in qinfo]
-    idf_map = {r["term_id"]: float(r["idf"]) for r in qinfo}
     meta = packed._blocks_for(tids).select(
         "term_id", "salt", "block_seq", "n", "min_doc", "max_doc", "max_tf", "min_dl"
-    ).withColumn("ub", packed._block_ub(idf_map, 1.2, 0.75))
+    )
     plan = explain_str(meta)
     read_schemas = [
         line for line in plan.splitlines() if "ReadSchema" in line

@@ -1,6 +1,6 @@
 """Round-2 hardening: quantized packed path, gen-aware WAND, norms
 refresh, stream replay ordering, empty docs, swap recovery, auto-salt,
-fully distributed WAND, external stats on the packed path."""
+external stats on the packed path."""
 
 from __future__ import annotations
 
@@ -254,42 +254,6 @@ def test_auto_salt_scaling(spark, sf_smoke, tmp_path):
         _rows(idx.bm25_topk(TERMS, k=15, mode="wand")),
         _rows(ref.bm25_topk(TERMS, k=15, mode="exact")),
         tol=1e-9,
-    )
-
-
-# ---------------------------------------------------------------------------
-# 8. fully distributed WAND (no doc-id collect) stays rank-identical
-# ---------------------------------------------------------------------------
-
-
-def test_distributed_wand_equals_exact(spark, sf_smoke, tmp_path):
-    out = str(tmp_path / "dist_idx")
-    docs = load_documents(spark, sf_smoke).select("doc_id", "text")
-    build_index(spark, docs, out, config=CFG)
-    idx = PackedIndex(spark, out, CFG)
-    idx.META_COLLECT_MAX = 0  # force the distributed variant
-    wand = _rows(idx.bm25_topk(TERMS, k=15, mode="wand"))
-    exact = _rows(idx.bm25_topk(TERMS, k=15, mode="exact"))
-    _cmp(wand, exact)
-
-
-def test_distributed_wand_after_apply_batch(spark, sf_smoke, tmp_path):
-    out = str(tmp_path / "dist_inc_idx")
-    docs = load_documents(spark, sf_smoke).select("doc_id", "text")
-    build_index(spark, docs, out, config=CFG)
-    inc = IncrementalIndex(spark, out, CFG)
-    inc.apply_batch(
-        adds=spark.createDataFrame(
-            [(0, "overwritten spark join"), (4000, "the spark anew")],
-            "doc_id long, text string",
-        ),
-        delete_ids=[5],
-    )
-    idx = PackedIndex(spark, out, CFG)
-    idx.META_COLLECT_MAX = 0
-    _cmp(
-        _rows(idx.bm25_topk(TERMS, k=15, mode="wand")),
-        _rows(idx.bm25_topk(TERMS, k=15, mode="exact")),
     )
 
 

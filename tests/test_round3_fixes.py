@@ -9,8 +9,7 @@
 3. stream_updates resolves last-op-wins as a dataflow — document text is
    never collected to the driver;
 4. recover_dir never reclaims a ``_new`` dir (a live writer may own it);
-5. distributed WAND releases its metadata cache after the query;
-6. EngineConfig.reference() is the reference's f16 engine.
+5. EngineConfig.reference() is the reference's f16 engine.
 """
 
 from __future__ import annotations
@@ -232,27 +231,6 @@ def test_recover_dir_leaves_new_alone(tmp_path):
     assert recover_dir(live) is True
     assert os.path.exists(live)
     assert os.path.exists(live + "_new")
-
-
-def test_distributed_wand_metadata_cache_is_bounded(spark, built):
-    """The distributed variant keeps its cached metadata relation in a
-    bounded per-index LRU (round 4: repeated serving queries skip the
-    re-materialization); distinct queries must evict, not accrete."""
-    idx = PackedIndex(spark, built, CFG)
-    want = _rows(idx.bm25_topk(["spark", "join"], k=10, mode="exact"))
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    idx.META_COLLECT_MAX = 0  # force the fully distributed variant
-    got = _rows(idx.bm25_topk(["spark", "join"], k=10, mode="wand"))
-    assert got == want
-    for terms in (["spark"], ["join"], ["query"], ["the"], ["spark", "the"]):
-        idx.bm25_topk(terms, k=5, mode="wand").collect()
-    assert len(idx._dist_meta_cache) <= 4
-    assert jsc.getPersistentRDDs().size() <= before + 4
-    # repeat query hits the cache (same entry, no growth)
-    n = len(idx._dist_meta_cache)
-    idx.bm25_topk(["spark", "join"], k=10, mode="wand").collect()
-    assert len(idx._dist_meta_cache) == n
 
 
 def test_reference_preset_and_budget(spark, built):

@@ -78,221 +78,6 @@ def test_overlap_credit_exact_on_disjoint_and_sound_on_random():
                 assert got[j] >= exact - 1e-12
 
 
-def test_wand_rank_identity_with_interleaved_generations(spark, tmp_path):
-    """End-to-end: a batch whose doc ids interleave the build's ranges
-    produces per-term blocks with overlapping [min_doc, max_doc] spans;
-    forced WAND must stay rank-identical to the exact path (the
-    reference's exactness contract, scoring.rs:410-435)."""
-    d = str(tmp_path / "idx")
-    rng = np.random.RandomState(7)
-    vocab = ["alpha", "beta", "gamma", "delta", "rare"]
-    docs = []
-    for i in range(300):
-        words = ["alpha"] * int(rng.randint(1, 4)) + ["beta"] * int(
-            rng.randint(0, 3)
-        )
-        if i % 7 == 0:
-            words += ["gamma"]
-        if i in (13, 250):
-            words += ["rare"]
-        docs.append((i * 10, " ".join(words)))
-    build_index(
-        spark,
-        spark.createDataFrame(docs, "doc_id long, text string"),
-        d,
-        config=CFG,
-    )
-    # batch ids land BETWEEN build ids across the whole range, and with
-    # high tf so gen-1 blocks carry large upper bounds
-    batch = [
-        (i * 10 + 5, "alpha " * int(rng.randint(1, 9)) + "beta beta")
-        for i in range(0, 300, 4)
-    ] + [(1505, "rare alpha alpha alpha alpha alpha")]
-    IncrementalIndex(spark, d, CFG).apply_batch(
-        adds=spark.createDataFrame(batch, "doc_id long, text string")
-    )
-    idx = PackedIndex(spark, d, CFG)
-    assert int(idx.meta.get("generation", 0)) > 0
-    # round 4: the sparse machinery works at generation > 0 too (stale
-    # rows are liveness-filtered against the pinned doc stats before
-    # any θ floor / credit is derived from them)
-    assert idx._sparse_query_terms(idx._query_info(["rare", "alpha"])) != []
-    for terms in (["rare", "alpha"], ["gamma", "beta"], ["alpha", "beta"]):
-        exact = [
-            (r["doc_id"], round(r["score"], 9))
-            for r in idx.bm25_topk(terms, k=15, mode="exact").collect()
-        ]
-        wand = [
-            (r["doc_id"], round(r["score"], 9))
-            for r in idx.bm25_topk(terms, k=15, mode="wand").collect()
-        ]
-        assert wand == exact
-        # the forced-DISTRIBUTED variant must also hold rank identity
-        # over interleaved generations (overlapping block ranges)
-        idx.META_COLLECT_MAX = 0
-        try:
-            dist = [
-                (r["doc_id"], round(r["score"], 9))
-                for r in idx.bm25_topk(terms, k=15, mode="wand").collect()
-            ]
-        finally:
-            idx.META_COLLECT_MAX = PackedIndex.META_COLLECT_MAX
-        assert dist == exact
-
-
-def test_seg_survivors_superset_of_true_overlap_prune(spark, tmp_path):
-    """Property: the distributed WAND's segment-grid survival set must
-    CONTAIN every block that the exact range-aligned bound keeps
-    (quantization may only loosen the prune, never tighten it) — for
-    random, overlapping (gen>0-like) block layouts."""
-    d = _build(spark, tmp_path / "segp", [(0, "a b"), (1, "b c")])
-    idx = PackedIndex(spark, d, CFG)
-    span = int(idx.meta["salt_range"]) * int(idx.meta["n_salts"])
-    rng = np.random.RandomState(17)
-    key_cols = ["term_id", "salt", "block_seq", "gen"]
-    pruned_any = False
-    for trial in range(6):
-        n_terms = rng.randint(2, 4)
-        rows, metas = [], []
-        for t in range(n_terms):
-            for s in range(rng.randint(3, 9)):
-                lo = int(rng.randint(0, max(1, span - 1)))
-                hi = lo + int(rng.randint(0, span // 2))
-                ub = float(rng.rand() * 3)
-                rows.append((t, 0, s, rng.randint(0, 2), lo, hi, ub, 0.0))
-        import pandas as pd
-
-        pdf = pd.DataFrame(
-            rows,
-            columns=key_cols + ["min_doc", "max_doc", "ub", "sp_credit"],
-        )
-        meta2 = spark.createDataFrame(pdf)
-        theta = float(np.percentile(pdf["ub"], 60) * 1.5)
-        got = {
-            tuple(int(r[c]) for c in key_cols)
-            for r in idx._seg_survivors(
-                meta2, list(range(n_terms)), set(), key_cols, theta
-            ).collect()
-        }
-        # numpy oracle: exact overlap-aligned others
-        keep_oracle = set()
-        for _i, r in pdf.iterrows():
-            others = 0.0
-            for t2 in range(n_terms):
-                if t2 == r["term_id"]:
-                    continue
-                ov = pdf[
-                    (pdf["term_id"] == t2)
-                    & (pdf["min_doc"] <= r["max_doc"])
-                    & (pdf["max_doc"] >= r["min_doc"])
-                ]
-                others += float(ov["ub"].max()) if len(ov) else 0.0
-            if r["ub"] + others >= theta - 1e-9:
-                keep_oracle.add(tuple(int(r[c]) for c in key_cols))
-        assert keep_oracle <= got, (trial, keep_oracle - got)
-        if len(got) < len(pdf):
-            pruned_any = True
-    assert pruned_any, "segment prune never removed anything across trials"
-
-
-def test_dist_wand_empty_survivor_set_returns_empty(spark, tmp_path):
-    """Defensive guard: if the distributed prune leaves zero survivors
-    (cannot happen with sound bounds, but the code must not crash on
-    np.concatenate of an empty range list), the query returns empty."""
-    docs = [
-        (i, ("alpha beta filler" if i % 3 == 0 else "filler other"))
-        for i in range(30)
-    ]
-    d = _build(spark, tmp_path / "empty", docs)
-    idx = PackedIndex(spark, d, CFG)
-    idx.META_COLLECT_MAX = 0
-    # defeat the no-prune early exit (a toy corpus never prunes, so the
-    # grid estimate would dispatch to the exact pass before the guard)
-    idx._seg_cell_survival_est = lambda *a, **k: 0.0
-    orig = idx._seg_survivors_from
-    called = {}
-
-    def fake(*a, **k):
-        called["yes"] = True
-        return orig(*a, **k).limit(0)
-
-    idx._seg_survivors_from = fake
-    assert idx.bm25_topk(["alpha", "beta"], k=3, mode="wand").count() == 0
-    assert called, "theta never became finite; guard untested"
-
-
-def test_all_scoring_paths_bit_identical(spark, tmp_path):
-    """Every BM25 path (distributed exact, driver-planned WAND, forced-
-    distributed WAND, single-node rows) must produce BIT-identical f64
-    scores: canonical partial op grouping + ascending-term_id fold.
-    Without it, tie SETS are fold-dependent and two rank-identical
-    plans can order the k-th-score ties differently (observed at 8M
-    entries between the distributed exact and WAND paths)."""
-    rng = np.random.RandomState(3)
-    docs = [
-        (
-            i,
-            " ".join(
-                ["alpha"] * int(rng.randint(1, 4))
-                + ["beta"] * int(rng.randint(1, 3))
-                + ["gamma"] * int(rng.randint(0, 2))
-                + [f"site{i // 40}"]
-            ),
-        )
-        for i in range(200)
-    ]
-    d = str(tmp_path / "bits")
-    build_index(
-        spark,
-        spark.createDataFrame(docs, "doc_id long, text string"),
-        d,
-        config=CFG,
-    )
-    idx = PackedIndex(spark, d, CFG)
-    terms = ["alpha", "beta", "gamma", "site2"]
-    k = 200  # every scored doc, not just top-k
-
-    def rows_of(df):
-        return sorted(
-            (r["doc_id"], r["score"].hex()) for r in df.collect()
-        )
-
-    exact = rows_of(idx.bm25_topk(terms, k=k, mode="exact"))
-    wand = rows_of(idx.bm25_topk(terms, k=k, mode="wand"))
-    idx.META_COLLECT_MAX = 0
-    dist = rows_of(idx.bm25_topk(terms, k=k, mode="wand"))
-    idx.META_COLLECT_MAX = PackedIndex.META_COLLECT_MAX
-    drv = sorted(
-        (doc, float(score).hex())
-        for doc, score, _dl in idx.bm25_topk_rows(terms, k=k)
-    )
-    assert exact == wand == dist == drv
-    # the string-keyed exact surface sits inside the SAME perimeter
-    # (r5: canonical_fold keyed on xxhash64(term) == packed term_id);
-    # before, its plain F.sum folded in physical row order and could
-    # split k-th ties differently from the packed paths (VERDICT r4 #1)
-    from tf_idf_vectorizer_spark.query.exact import ExactSearcher
-
-    es = ExactSearcher(
-        spark,
-        spark.createDataFrame(docs, "doc_id long, text string"),
-        config=CFG,
-    )
-    srch = rows_of(es.similarity("bm25", terms, k=k))
-    assert srch == exact
-    # and it agrees with itself across partitionings (the original
-    # failure mode: self-divergence under different physical plans)
-    srch2 = rows_of(
-        ExactSearcher(
-            spark,
-            spark.createDataFrame(docs, "doc_id long, text string")
-            .repartition(7),
-            config=CFG,
-        ).similarity("bm25", terms, k=k)
-    )
-    assert srch2 == srch
-
-
 # ---------------------------------------------------------------------------
 # 2. merge tokenizer propagation
 # ---------------------------------------------------------------------------

@@ -16,7 +16,7 @@ from tf_idf_vectorizer_spark.query.ast import parse_sexpr
 from tf_idf_vectorizer_spark.query.packed import PackedIndex
 from tf_idf_vectorizer_spark.sources.synth import synth_topical_corpus
 
-from conftest import spark_jobs
+from conftest import chunk_count, force_wand_chunks, spark_jobs
 
 CFG = EngineConfig(n_salts=4, block_size=64, term_buckets=16)
 
@@ -114,26 +114,25 @@ def test_bad_selector_rejected(srv, call, match):
 
 def test_rows_api_on_wand_dispatch(spark, srv):
     """With every query in WAND territory, bm25_topk_rows returns the
-    WAND rows of either planner, equal to the exact plan's; an empty
-    WAND exit still wraps into the typed top-k relation."""
-    for meta_max, planner in (
-        (PackedIndex.META_COLLECT_MAX, "_wand_topk"),
-        (0, "_wand_topk_distributed"),
-    ):
+    WAND rows of one chunk and of one-salt chunks, equal to the exact
+    plan's; an empty WAND exit still wraps into the typed top-k
+    relation."""
+    for forced in (False, True):
         idx = PackedIndex(spark, srv.dir, CFG)
         idx.WAND_THRESHOLD = 0
-        idx.META_COLLECT_MAX = meta_max
+        salts = force_wand_chunks(idx) if forced else []
         calls = []
-        orig = getattr(idx, planner)
-        setattr(idx, planner, lambda *a, _o=orig: calls.append(1) or _o(*a))
+        orig = idx._wand_topk
+        idx._wand_topk = lambda *a, _o=orig: calls.append(1) or _o(*a)
         for terms in (["t1", "t2"], ["t1", "s2"], ["s0", "s3"], ["missing_term"]):
             want = _df_rows(idx.bm25_topk(terms, k=12, mode="exact"))
-            assert _norm(idx.bm25_topk_rows(terms, k=12)) == want, (planner, terms)
-        assert len(calls) == 3, planner
-    # a zero-survivor exit of the distributed planner
-    idx._seg_cell_survival_est = lambda *a, **kw: 0.0
-    survivors = idx._seg_survivors_from
-    idx._seg_survivors_from = lambda *a, **kw: survivors(*a, **kw).limit(0)
+            salts.clear()
+            assert _norm(idx.bm25_topk_rows(terms, k=12)) == want, (forced, terms)
+            if forced and want:
+                assert chunk_count(salts) >= 2, (terms, salts)
+        assert len(calls) == 3, forced
+    # every chunk of the plan exits empty
+    idx._wand_chunk = lambda *a: []
     for terms in (["t1", "t2"], ["missing_term"]):
         empty = idx.bm25_topk(terms, k=5, mode="wand")
         assert empty.dtypes == [

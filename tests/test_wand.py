@@ -14,7 +14,7 @@ from tf_idf_vectorizer_spark.operators.codec import decode_overlapping
 from tf_idf_vectorizer_spark.operators.index_build import build_index
 from tf_idf_vectorizer_spark.oracle import OracleIndex
 from tf_idf_vectorizer_spark.query.exact import ExactSearcher
-from tf_idf_vectorizer_spark.query.packed import PackedIndex
+from tf_idf_vectorizer_spark.query.packed import PackedIndex, _bm25_partial
 from tf_idf_vectorizer_spark.sources import load_documents
 from tf_idf_vectorizer_spark.sources.synth import synth_corpus
 
@@ -104,7 +104,13 @@ def test_wand_prunes_blocks(spark, zipf_idx):
 
     k1, b, k = idx.config.k1, idx.config.b, 10
     idf_map = {r["term_id"]: float(r["idf"]) for r in qinfo}
-    meta = idx._blocks_for(tids).withColumn("ub", idx._block_ub(idf_map, k1, b))
+    # each block's BM25 bound, the partial every scorer uses
+    meta = idx._blocks_for(tids).select("term_id", "max_tf", "min_dl").toPandas()
+    ln_idf = np.log(meta["term_id"].map(idf_map).to_numpy(np.float64))
+    meta["ub"] = np.where(ln_idf > 0, _bm25_partial(
+        ln_idf, meta["max_tf"].to_numpy(np.float64),
+        meta["min_dl"].to_numpy(np.float64), k1, b, idx.avg_len,
+    ), 0.0)
     rare = min(qinfo, key=lambda r: (r["df"], r["term"]))
     seed_docs = idx.decode_postings([rare["term_id"]]).select("doc_id").distinct()
     ids = np.sort(np.array([r["doc_id"] for r in seed_docs.collect()]))
@@ -114,14 +120,14 @@ def test_wand_prunes_blocks(spark, zipf_idx):
         .orderBy(F.desc("score")).limit(k).collect()
     )
     theta = top[-1]["score"]
-    term_ubs = {r["term_id"]: r["ub"] for r in meta.groupBy("term_id").agg(F.max("ub").alias("ub")).collect()}
+    term_ubs = meta.groupby("term_id")["ub"].max().to_dict()
     s = sum(term_ubs.values())
     surv = 0
     for tid in tids:
         others = s - term_ubs[tid]
-        surv += meta.filter(
-            (F.col("term_id") == tid) & (F.col("ub") + F.lit(others) >= theta)
-        ).count()
+        surv += int(
+            ((meta["term_id"] == tid) & (meta["ub"] + others >= theta)).sum()
+        )
     assert surv < total_blocks, f"no pruning: {surv}/{total_blocks}"
 
 
@@ -129,9 +135,7 @@ def test_wand_equals_exact_under_external_stats(spark, tmp_path):
     """A with_external_stats copy scores under another corpus's idf, so
     the build-time max_score column (packed under the local idf) bounds
     nothing there: trusting it let WAND prune live top-k docs and return
-    other docs at a tied score.  The copy must also not reuse the
-    original's distributed WAND metadata cache, whose key holds no
-    idf."""
+    other docs at a tied score."""
     from tf_idf_vectorizer_spark.functions.tokenize import term_frequencies
     from tf_idf_vectorizer_spark.operators.stats import corpus_stats
     from tf_idf_vectorizer_spark.sources.synth import synth_topical_corpus
@@ -156,13 +160,4 @@ def test_wand_equals_exact_under_external_stats(spark, tmp_path):
     assert rows(ext, "wand") == rows(ext, "exact")
     assert pi._tight_bounds_ok(CFG.k1, CFG.b)  # the original is untouched
     assert not ext._tight_bounds_ok(CFG.k1, CFG.b)
-
-    # a copy taken after the original planned distributed WAND queries
-    # starts with its own metadata cache
-    pi.META_COLLECT_MAX = 0
-    rows(pi, "wand")
-    assert "_dist_meta_cache" in vars(pi)
-    ext = pi.with_external_stats(ext_stats, ext_n)
-    assert vars(ext).get("_dist_meta_cache") is not vars(pi)["_dist_meta_cache"]
-    assert rows(ext, "wand") == rows(ext, "exact")
     docs.unpersist()

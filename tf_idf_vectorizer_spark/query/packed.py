@@ -8,25 +8,31 @@ any decode happens, then exact-rescoring the survivors keeps the top-k
 rank-identical to the exact path (verified by tests).
 
 Every top-k regime returns rows, ``list[(doc_id, score, doc_len)]``:
-the single-node driver path, both WAND planners and the exact pass
-they fall back to collect their k rows where they finish.
-``bm25_topk_rows`` hands those rows back as they are; ``bm25_topk``
-wraps driver and WAND rows once in a local Arrow relation, and only
-``mode='exact'`` stays a lazy Spark plan.
+the single-node driver path and the WAND planner collect their k rows
+where they finish.  ``bm25_topk_rows`` hands those rows back as they
+are; ``bm25_topk`` wraps driver and WAND rows once in a local Arrow
+relation, and only ``mode='exact'`` stays a lazy Spark plan.
 
-Block-max WAND, three bounded passes:
+Block-max WAND has ONE planner, on the driver.  It runs over doc-range
+CHUNKS — runs of whole salts, which partition the doc-id space, so all
+of a doc's postings sit in one chunk.  A query whose block metadata
+fits META_COLLECT_MAX rows is one chunk; a larger one plans chunk by
+chunk, so driver memory stays bounded at any scale.  Per chunk, three
+bounded passes:
 
   1. THETA — a safe LOWER bound θ on the final k-th score, job-free
      when every idf > 1: the postings of a SPARSE query term (its df is
-     driver-sized; its payload is a term-pruned point read of its own),
-     each scored with its block's max_dl, are real docs' score FLOORS,
-     so their k-th largest is a valid θ; on a fresh index so is the
-     k-th largest pack-time max_score among one term's blocks.
+     driver-sized; its payload is a term-pruned point read of its own,
+     fetched once per query), each scored with its block's max_dl, are
+     real docs' score FLOORS, so their k-th largest is a valid θ; on a
+     fresh index so is the k-th largest pack-time max_score among one
+     term's blocks.  The k-th score of the rows earlier chunks returned
+     is a real doc's exact score, so θ carries from chunk to chunk.
      Fallback: exact-score the docs of the rarest term's highest-bound
      blocks.
-  2. PRUNE — over block METADATA ONLY (both planners project the
-     metadata columns, never the compressed payloads; a block's bound
-     is the BM25 partial every scorer uses): a block of term t survives iff
+  2. PRUNE — over block METADATA ONLY (the read projects the metadata
+     columns, never the compressed payloads; a block's bound is the
+     BM25 partial every scorer uses): a block of term t survives iff
      ub_block(t) + Σ_{t'≠t} credit(t') ≥ θ, where credit(t') is the
      max ub of the t'-blocks overlapping it (per posting for a sparse
      t').  Any doc appearing only in pruned blocks has total score < θ
@@ -42,8 +48,10 @@ Block-max WAND, three bounded passes:
      payload scans and the is_target flag riding through the decode
      kernel.  Candidate payloads reach the driver only on the driver
      rescore; the distributed rescore collects its k rows.
-  When no θ is found or pruning removes (almost) nothing, both
-  planners take the exact pass instead.
+  A chunk with no θ, or whose prune keeps (almost) every block, or
+  that has no live candidate, is rescored whole — exact within the
+  chunk.  The answer is the (score desc, doc_id asc) merge of the
+  chunks' rows.
 
 Below WAND territory, auto mode dispatches to a bounded SINGLE-NODE
 serving path (the reference's own regime, scoring.rs:215-288): one
@@ -140,13 +148,12 @@ def _candidate_ranges(
     term: np.ndarray, lo: np.ndarray, hi: np.ndarray, sp: dict
 ):
     """Merged, sorted doc-id ranges holding every doc of the surviving
-    blocks (``term``, ``lo``, ``hi``: one entry per block or per
-    envelope of blocks).  A dense term's block enters as its [lo, hi]
-    span; a SPARSE term's (``sp``: term_id -> (sorted live doc ids,
-    ...), see ``_sparse_bounds``) as the term's doc ids inside that
-    span, singleton ranges — a sparse block's span covers nearly the
-    whole corpus and would drag every other block back into the
-    rescore."""
+    blocks (``term``, ``lo``, ``hi``: one entry per block).  A dense
+    term's block enters as its [lo, hi] span; a SPARSE term's (``sp``:
+    term_id -> (sorted live doc ids, ...), see ``_sparse_postings_np``)
+    as the term's doc ids inside that span, singleton ranges — a
+    sparse block's span covers nearly the whole corpus and would drag
+    every other block back into the rescore."""
     is_sp = np.isin(term, list(sp))
     lo_parts, hi_parts = [lo[~is_sp]], [hi[~is_sp]]
     for t, (ids, *_bounds) in sp.items():
@@ -666,9 +673,8 @@ class PackedIndex:
         # (max_tf, min_dl) under the external idf
         other.meta = {**self.meta, "tight_bounds": False}
         # drop what copy.copy shared and depends on idf: the pinned term
-        # map, the distributed WAND's metadata cache (its key holds no
-        # idf) and the dictionary file metas.  The LRU is idf-free.
-        for attr in ("_term_map", "_td_meta", "_dist_meta_cache"):
+        # map and the dictionary file metas.  The LRU is idf-free.
+        for attr in ("_term_map", "_td_meta"):
             other.__dict__.pop(attr, None)
         # the copy must NOT point-read the LOCAL on-disk term_dict files:
         # its df/idf now come from the external stats table, so disable
@@ -773,11 +779,11 @@ class PackedIndex:
         )
 
     # ---- speed crossovers -------------------------------------------
-    # WAND_THRESHOLD, DRIVER_VOLUME_MAX, META_COLLECT_MAX,
-    # DRIVER_THETA_MAX_DF, DIST_SURV_COLLECT_MAX, DIST_WAND_* and
+    # WAND_THRESHOLD, DRIVER_VOLUME_MAX, DRIVER_THETA_MAX_DF and
     # PQ_POINT_READ_MAX_* are measured speed crossovers, not memory
-    # bounds: at their values none comes near the driver budget below
-    # (200k metadata rows are tens of MB against 1.28 GB).  Memory is
+    # bounds: at their values none comes near the driver budget below.
+    # META_COLLECT_MAX sizes a WAND chunk: 200k metadata rows are tens
+    # of MB against 1.28 GB, however large the index.  Memory is
     # decided by _fits alone.
 
     # below this many posting entries, a single-pass exact decode+score
@@ -823,9 +829,11 @@ class PackedIndex:
         # peak, 24 B resident
         "postings": 108,
         # pinned (doc_id, doc_len, gen) row: 81.4 B peak during the
-        # Arrow pin, 25.4 B resident; pinning norms next peaks lower
-        # (25.4 resident + 48.4)
+        # Arrow pin, 25.4 B resident
         "doc_stats": 82,
+        # pinned cosine norm, pinned after the doc stats: 48.4 B peak
+        # on top of their 25.4 B resident
+        "norms": 49,
         # pinned dictionary entry, term characters excluded (the gate
         # adds meta["term_bytes"]): 613.1 B peak while the Row collect
         # and the map coexist, 333 B resident
@@ -878,14 +886,16 @@ class PackedIndex:
         return (budget - extra_bytes) // self.DRIVER_ROW_BYTES[kind]
 
     def _pinned_bytes(self) -> int:
-        """What the pinned dictionary and doc stats hold, at the rows x
-        DRIVER_ROW_BYTES their own gates charged them."""
+        """What the pinned dictionary, doc stats and norms hold, at the
+        rows x DRIVER_ROW_BYTES their own gates charged them."""
         held = 0
         if getattr(self, "_term_map", None) is not None:
             held += (len(self._term_map) * self.DRIVER_ROW_BYTES["dict"]
                      + self.meta.get("term_bytes", 0))
         if getattr(self, "_dstats", None) is not None:
             held += self._dstats[0].size * self.DRIVER_ROW_BYTES["doc_stats"]
+        if getattr(self, "_dnorms", None) is not None:
+            held += self._dnorms.size * self.DRIVER_ROW_BYTES["norms"]
         return held
 
     def _fits(self, kind: str, rows: int, extra_bytes: int = 0) -> bool:
@@ -1040,13 +1050,14 @@ class PackedIndex:
 
     def _fetch_blocks(
         self, tids, cols: list[str], keys: pd.DataFrame | None = None,
-        limit: int | None = None,
+        salts: list[int] | None = None, limit: int | None = None,
     ) -> pd.DataFrame:
         """THE driver block fetch: ``cols`` of the committed posting
         blocks of terms ``tids``, as pandas.  With ``keys`` (block keys
         term_id, salt, block_seq, gen plus flag columns such as
         is_target) only exactly those blocks, merged with the keys'
-        flag columns.
+        flag columns; with ``salts`` only the blocks of those salts
+        (a WAND chunk).
 
         Local index: a pyarrow point read, no Spark job.  The postings
         files are sorted by (term_id, block_seq) with bounded row
@@ -1060,8 +1071,8 @@ class PackedIndex:
         ~dozen that match (measured 0.11 s/query in to_pandas alone).
         Past PQ_POINT_READ_MAX_BYTES, off a local path, or when the
         files cannot serve the read: one Arrow collect of the Spark scan
-        (a broadcast key join for ``keys``), at most ``limit`` rows of
-        it."""
+        (a broadcast key join for ``keys``, a filter on the ``salt``
+        partition column for ``salts``), at most ``limit`` rows of it."""
         ts = np.unique(np.asarray(tids, dtype=np.int64))
         flags = [] if keys is None else [
             c for c in keys.columns if c not in _KEY_COLS
@@ -1077,7 +1088,10 @@ class PackedIndex:
                 ks = keys["salt"].to_numpy(np.int64)
                 kb = keys["block_seq"].to_numpy(np.int64)
             sel, total = [], 0
+            chunk = None if salts is None else set(salts)
             for pf, salt, lo, hi, blo, bhi, nb in metas:
+                if chunk is not None and salt not in chunk:
+                    continue
                 if keys is None:
                     # groups are term-sorted and disjoint: keep group i
                     # iff a query term lies in [lo_i, hi_i]
@@ -1103,6 +1117,8 @@ class PackedIndex:
                 pdf = self._pq_read(sel, ts, need)
         if pdf is None:
             rel = self._blocks_for(ts.tolist())
+            if salts is not None:
+                rel = rel.filter(F.col("salt").isin(list(salts)))
             if keys is not None:
                 rel = rel.join(
                     F.broadcast(self.spark.createDataFrame(keys.astype(
@@ -1354,8 +1370,7 @@ class PackedIndex:
         self, qinfo: list[dict], k: int, k1: float, b: float
     ) -> DataFrame:
         """The exact top-k plan: decode every posting of the query terms,
-        score, order.  mode='exact', and the fallback of both WAND
-        planners when pruning cannot pay."""
+        score, order: mode='exact'."""
         tids = [r["term_id"] for r in qinfo]
         return _ordered(
             self._score_decoded(self.decode_postings(tids), qinfo, k1, b), k
@@ -1557,11 +1572,15 @@ class PackedIndex:
     # ---- in-memory serving: full query surface -----------------------
     def _doc_norms_np(self):
         """Pinned norms aligned with the pinned doc-stat order, or None
-        (corpus over the driver bound or index built without norms)."""
+        (doc stats or norms over the driver bound, or an index built
+        without norms)."""
         if not self.meta.get("norms", False):
             return None
         if not hasattr(self, "_dnorms"):
-            if self._doc_stats_np() is None:
+            if (
+                self._doc_stats_np() is None
+                or not self._fits("norms", self.doc_num)
+            ):
                 self._dnorms = None
             else:
                 pdf = self._topandas_arrow(
@@ -1785,68 +1804,38 @@ class PackedIndex:
             and "max_score" in self._postings().columns
         )
 
-    def _block_ub(
-        self, idf_map: dict[int, float], k1: float, b: float, tight: bool = False
-    ):
-        """Column expr: BM25 upper bound of a block from its metadata,
-        for the distributed planner (the driver planner's numpy bound is
-        :func:`_bm25_partial`).  The (max_tf, min_dl) bound is valid; when
-        ``tight`` (see _tight_bounds_ok) the pack-time true max impact
-        is at most that, so the min of the two is both valid and
-        strictly better on uniform-tf corpora."""
-        idf_col = F.create_map(
-            *[F.lit(x) for pair in idf_map.items() for x in pair]
-        )[F.col("term_id")]
-        ln_idf = F.log(idf_col)
-        mt = F.col("max_tf").cast("double")
-        denom = mt + F.lit(k1) * (
-            F.lit(1.0 - b)
-            + F.lit(b) * F.col("min_dl").cast("double") / F.lit(self.avg_len)
-        )
-        raw = ln_idf * (mt * F.lit(k1 + 1.0)) / denom
-        ub = F.when(ln_idf <= 0, F.lit(0.0)).otherwise(raw)
-        if tight:
-            ub = F.least(ub, F.col("max_score"))
-        return ub
-
-    # speed crossovers (see WAND_THRESHOLD's block): above this many
-    # block-metadata rows for the query's terms, keep the fully
-    # distributed WAND; below it, planning happens driver-side on a
-    # pyarrow metadata read, and a query whose rescore fits the driver
-    # launches no Spark job
+    # speed crossover (see WAND_THRESHOLD's block): the most block-
+    # metadata rows one WAND chunk reads onto the driver.  A query whose
+    # metadata fits is one chunk of every salt and, when its rescore
+    # fits the driver too, launches no Spark job; a larger query plans
+    # runs of whole salts one at a time (:meth:`_wand_chunks`)
     META_COLLECT_MAX = 200_000
     # pull a sparse term's whole payload to the driver (θ floors and
     # per-posting credit) only up to this df (~2 bytes/row)
     DRIVER_THETA_MAX_DF = 200_000
-    # distributed WAND: survivor sets up to this size collect precisely
-    # (exact candidate ranges + block_seq pushdown); above it, per-salt
-    # envelopes + sparse singletons (class attr so tests can force the
-    # envelope branch at toy scale)
-    DIST_SURV_COLLECT_MAX = 100_000
 
     def _wand_topk(self, qinfo: list[dict], k: int, k1: float, b: float) -> list[tuple]:
-        """Block-max WAND with driver-side planning when the query's
-        block METADATA fits on the driver (a few hundred KB for typical
-        queries): read the metadata columns through
-        :meth:`_fetch_blocks` (a pyarrow point read on a local index, no
-        Spark job), compute the bounds, θ and the prune in numpy, then
-        finish through :meth:`_rescore_rows` — one payload fetch + numpy
-        on the driver, or one fused decode+score job with the
-        `is_target` flag riding through the decode kernel.  Falls back
-        to the distributed variant past META_COLLECT_MAX metadata rows
-        (true head-term territory).  Returns the top-k rows."""
+        """Block-max WAND, planned on the driver one chunk (a run of
+        whole salts, :meth:`_wand_chunks`) at a time.  Salts partition
+        the doc-id space, so all of a doc's postings sit in its chunk.
+        Each chunk reads its block METADATA through :meth:`_fetch_blocks`
+        (a pyarrow point read on a local index, no Spark job) and is
+        planned by :meth:`_wand_chunk`.  θ carries from chunk to chunk:
+        the k-th score of the rows merged so far is a real doc's exact
+        score.  Returns the (score desc, doc_id asc) merge of the
+        chunks' rows."""
         tids = [r["term_id"] for r in qinfo]
         idf_map = {r["term_id"]: float(r["idf"]) for r in qinfo}
-        rare = min(qinfo, key=lambda r: (r["df"], r["term"]))
         tight = self._tight_bounds_ok(k1, b)
         nonneg = min(float(r["idf"]) for r in qinfo) > 1.0
         gen0 = int(self.meta.get("generation", 0)) == 0
         # SPARSE terms: when a query term's whole posting payload is
         # driver-sized (df <= DRIVER_THETA_MAX_DF, a few hundred KB of
-        # varints), fetch and decode it.  The decoded postings give
-        # three things no block metadata can:
+        # varints), fetch and decode it, once per query.  The decoded
+        # postings give three things no block metadata can:
         #   θ floors  — each posting scored with its block's max_dl is a
-        #               real doc's score LOWER bound (k-th largest = θ);
+        #               real doc's score LOWER bound (k-th largest = θ,
+        #               valid in every chunk);
         #   per-POSTING upper bounds — a sparse term's blocks cover few
         #               docs spread over huge doc-id ranges, so its
         #               block-range bound credits it to EVERY other
@@ -1866,43 +1855,118 @@ class PackedIndex:
                      "max_doc", "max_tf", "min_dl"]
         if tight:
             meta_cols.append("max_score")
-        # block-count bound from the dictionary (no read): at gen 0 every
-        # posting row is live, so each term holds ceil(df/block_size)
-        # full blocks plus at most one partial block per salt — if even
-        # the bound exceeds META_COLLECT_MAX, plan distributed without
-        # touching the metadata.  At gen > 0 stale rows df can't see
-        # remain, so a Spark fallback read is capped one row past it.
-        if gen0:
-            n_salts = int(self.meta.get("n_salts", 1) or 1)
-            est_blocks = sum(
-                -(-int(r["df"]) // self.config.block_size) for r in qinfo
-            ) + n_salts * len(qinfo)
-            if est_blocks > self.META_COLLECT_MAX:
-                return self._wand_topk_distributed(qinfo, k, k1, b)
-        # metadata columns only: the projection never reads payloads
-        mp = self._fetch_blocks(
-            tids, meta_cols, limit=None if gen0 else self.META_COLLECT_MAX + 1
-        )
-        if len(mp) > self.META_COLLECT_MAX:
-            return self._wand_topk_distributed(qinfo, k, k1, b)
         # the sparse terms' payloads come from a term-pruned fetch
         sp = self._sparse_postings_np(sparse_ids, idf_map, k1, b)
+        theta = self._floor_theta(sp, k) if nonneg else -math.inf
+        rows: list[tuple] = []
+        pending = self._wand_chunks(qinfo)
+        while pending:
+            salts = pending.pop(0)
+            # past generation 0 stale rows escape the dictionary bound:
+            # a multi-salt read stops one row past META_COLLECT_MAX, and
+            # a chunk that overflows splits
+            capped = not gen0 and (salts is None or len(salts) > 1)
+            # metadata columns only: the projection never reads payloads
+            mp = self._fetch_blocks(
+                tids, meta_cols, salts=salts,
+                limit=self.META_COLLECT_MAX + 1 if capped else None,
+            )
+            if capped and len(mp) > self.META_COLLECT_MAX:
+                pending[:0] = self._wand_chunks(
+                    qinfo, salts or self._wand_salts()
+                )
+                continue
+            if not len(mp):
+                continue
+            if len(rows) >= k:
+                theta = max(theta, rows[k - 1][1])
+            rows = sorted(
+                rows + self._wand_chunk(
+                    mp, sp, theta, qinfo, k, k1, b, tight and nonneg
+                ),
+                key=lambda r: (-r[1], r[0]),
+            )[:k]
+        return rows
+
+    def _wand_chunks(self, qinfo: list[dict], salts: list[int] | None = None) -> list:
+        """The runs of whole salts ("chunks") a WAND query plans one at
+        a time: ``[None]`` — every salt, one chunk — when the dictionary
+        bounds the query's block metadata within META_COLLECT_MAX rows;
+        else ``salts`` (every salt of the index when None) cut into at
+        least two runs of as many salts as that bound admits, at least
+        one salt each.  No Spark job sizes them: at generation 0 every
+        posting row is live, so term t holds at most
+        ceil(df / block_size) blocks plus one partial block per salt,
+        and at most ceil(min(df, salt_range) / block_size) in one salt.
+        Past generation 0 stale rows escape df: the bound is then an
+        estimate, and :meth:`_wand_topk` splits a run that overflows."""
+        bs = int(self.meta["block_size"])
+        if salts is None:
+            n_salts = int(self.meta.get("n_salts", 1) or 1)
+            total = sum(-(-int(r["df"]) // bs) + n_salts for r in qinfo)
+            if total <= self.META_COLLECT_MAX:
+                return [None]
+            salts = self._wand_salts()
+        sr = int(self.meta["salt_range"])
+        per_salt = sum(-(-min(int(r["df"]), sr) // bs) for r in qinfo)
+        width = max(1, min(
+            self.META_COLLECT_MAX // max(per_salt, 1), (len(salts) + 1) // 2
+        ))
+        return [salts[i:i + width] for i in range(0, len(salts), width)]
+
+    def _wand_salts(self) -> list[int]:
+        """Every salt of the index, ascending: those of the point
+        reader's salt files, else every salt up to the pinned doc
+        stats' largest doc id, else up to one max(doc_id) job's."""
+        metas = self._pq_files()
+        if metas is not None:
+            return sorted({m[1] for m in metas})
+        ds = self._doc_stats_np()
+        if ds is not None and ds[0].size:
+            top = int(ds[0][-1])
+        else:
+            top = int(self.doc_dict.agg(F.max("doc_id")).first()[0] or 0)
+        return list(range(top // int(self.meta["salt_range"]) + 1))
+
+    def _wand_chunk(
+        self,
+        mp: pd.DataFrame,
+        sp: dict[int, tuple],
+        theta: float,
+        qinfo: list[dict],
+        k: int,
+        k1: float,
+        b: float,
+        meta_theta: bool,
+    ) -> list[tuple]:
+        """One chunk's plan over its block metadata ``mp`` and the
+        query's sparse postings ``sp`` (the chunk's blocks meet only its
+        own docs of them): bounds, θ (at least ``theta``;
+        raised from max_score when ``meta_theta``), prune, rescore ->
+        the chunk's top-k rows, exact for every doc that can reach the
+        query's top-k.  A chunk with no θ, or whose prune keeps >=90% of
+        its blocks, or that has no live candidate, is rescored whole."""
         n_blocks = len(mp)
-        if n_blocks == 0:
-            return []
         bterm = mp["term_id"].to_numpy(np.int64)
         blo = mp["min_doc"].to_numpy(np.int64)
         bhi = mp["max_doc"].to_numpy(np.int64)
+        idf_map = {r["term_id"]: float(r["idf"]) for r in qinfo}
         ln_idf = np.log(mp["term_id"].map(idf_map).to_numpy(np.float64))
         bub = np.where(ln_idf > 0, _bm25_partial(
             ln_idf, mp["max_tf"].to_numpy(np.float64),
             mp["min_dl"].to_numpy(np.float64), k1, b, self.avg_len,
         ), 0.0)
-        if tight:
+        if "max_score" in mp.columns:
             bub = np.minimum(bub, mp["max_score"].to_numpy(np.float64))
 
-        theta = self._floor_theta(sp, k) if nonneg else -math.inf
-        if tight and nonneg:
+        def whole() -> list[tuple]:
+            # every block flagged: exact over every doc of the chunk
+            return self._rescore_rows(
+                mp, np.ones(n_blocks, dtype=bool), _merge_ranges(blo, bhi),
+                qinfo, k, k1, b,
+            )
+
+        if meta_theta:
             # θ FROM METADATA ALONE, no job, any term size: a block's
             # max_score is ACHIEVED by one of its docs (true per-doc
             # max, index_build.py), blocks of one term hold disjoint
@@ -1921,9 +1985,10 @@ class PackedIndex:
             if kth.size:
                 theta = max(theta, float(kth.max()))
         # ---- fallback θ: exact top-k of the rarest term's best blocks --
+        rare = min(qinfo, key=lambda r: (r["df"], r["term"]))
         rare_idx = np.flatnonzero(bterm == rare["term_id"])
         if not math.isfinite(theta) and rare_idx.size:
-            n_seed = max(4, (4 * k) // self.config.block_size + 1)
+            n_seed = max(4, (4 * k) // int(self.meta["block_size"]) + 1)
             seeds = rare_idx[np.argsort(-bub[rare_idx], kind="stable")[:n_seed]]
             m_lo, m_hi = _merge_ranges(blo[seeds], bhi[seeds])
             part = _overlap_mask(m_lo, m_hi, blo, bhi)
@@ -1935,7 +2000,7 @@ class PackedIndex:
             if len(top) >= k:
                 theta = top[-1][1]
         if not math.isfinite(theta):
-            return _rows(self._exact_topk(qinfo, k, k1, b))
+            return whole()
 
         # ---- driver-side prune: doc-range-ALIGNED bounds ----------------
         # For a doc d in block B of term t, any other term t' can only
@@ -1954,7 +2019,7 @@ class PackedIndex:
                 # postings-level: credit t2 only to blocks that
                 # contain one of its ACTUAL docs (its block ranges
                 # are sparse-wide and would credit everything)
-                ids2, ub2, _fl, _salt = sp[int(t2)]
+                ids2, ub2, _fl = sp[int(t2)]
                 lo_idx = np.searchsorted(ids2, blo[mask], side="left")
                 hi_idx = np.searchsorted(ids2, bhi[mask], side="right")
                 others[mask] += _range_max(ub2, lo_idx, hi_idx)
@@ -1975,17 +2040,17 @@ class PackedIndex:
             return []
         if n_surv >= 0.9 * n_blocks:
             # pruning removed (almost) nothing — on bound-adversarial
-            # corpora the flag/join machinery would only add overhead
-            # over the plain exact single pass, which selects the same
-            # top-k by the pruning proof.  This caps WAND's worst case
-            # at exact + one metadata read.
-            return _rows(self._exact_topk(qinfo, k, k1, b))
+            # corpora the candidate machinery would only add overhead
+            # over rescoring the chunk whole, which selects the same
+            # top-k by the pruning proof
+            return whole()
         # ---- rescore: every block a candidate has a posting in ---------
         m_lo, m_hi = _candidate_ranges(bterm[keep], blo[keep], bhi[keep], sp)
         if m_lo.size == 0:
             # every survivor is a sparse block with no live docs (stale-
-            # generation artifact): the exact pass is always sound
-            return _rows(self._exact_topk(qinfo, k, k1, b))
+            # generation artifact): the whole-chunk rescore is always
+            # sound
+            return whole()
         part = _overlap_mask(m_lo, m_hi, blo, bhi)
         return self._rescore_rows(
             mp[part], keep[part], (m_lo, m_hi), qinfo, k, k1, b
@@ -1998,7 +2063,7 @@ class PackedIndex:
         (doc_len <= its block's max_dl; the other terms only add), so a
         term's k-th largest floor is a valid θ — job-free."""
         theta = -math.inf
-        for _ids, _ub, fl, _salt in sp.values():
+        for _ids, _ub, fl in sp.values():
             if fl.size >= k and math.isfinite(fl[0]):
                 theta = max(theta, float(np.partition(fl, fl.size - k)[fl.size - k]))
         return theta
@@ -2013,7 +2078,7 @@ class PackedIndex:
         k1: float,
         b: float,
     ) -> list[tuple]:
-        """The rescore finish of both WAND planners: exact top-k rows
+        """The rescore finish of every WAND chunk: exact top-k rows
         over the docs that appear in >=1 FLAGGED block.  ``blocks``
         (block keys + n) holds every block such a doc has a posting in,
         ``ranges`` (merged lo, hi arrays) every such doc's id.  A
@@ -2055,10 +2120,6 @@ class PackedIndex:
             doc_ranges=np.column_stack(ranges), block_filter=blk,
         )
         return _rows(_ordered(scored, k))
-
-    _KDF_SCHEMA = (
-        "term_id long, salt int, block_seq int, gen int, is_target boolean"
-    )
 
     def _rescore_driver_rows(
         self,
@@ -2128,10 +2189,19 @@ class PackedIndex:
         doc_ranges: list[tuple] | None = None,
         block_filter=None,
     ) -> DataFrame:
-        """Driver-planned wrapper: block-key arrays + is_target flags ->
-        broadcast kdf, built from pandas so the keys ship via Arrow
-        (py4j tuple shipping at 10^5 keys costs ~1 s)."""
-        kdf_pd = pd.DataFrame(
+        """Decode the flagged blocks (block-key arrays + is_target flags)
+        in one job and exact-BM25-score the docs that appear in >=1
+        target block; the flag rides through the decode kernel so
+        candidate membership never touches the driver.  The keys ship
+        as a broadcast relation built from pandas, via Arrow (py4j tuple
+        shipping at 10^5 keys costs ~1 s).  ``doc_ranges`` (merged,
+        disjoint, covering every doc id the flagged blocks can decode)
+        is pushed into the doc_dict scan — with the build's doc-id-
+        sorted layout that prunes the dictionary read to the candidate
+        row groups instead of the whole corpus.  ``block_filter`` (a
+        Column predicate over the postings metadata columns) prunes the
+        PAYLOAD scan."""
+        kdf = F.broadcast(self.spark.createDataFrame(pd.DataFrame(
             {
                 "term_id": term.astype(np.int64),
                 "salt": salt.astype(np.int32),
@@ -2139,46 +2209,11 @@ class PackedIndex:
                 "gen": gen.astype(np.int32),
                 "is_target": flags.astype(bool),
             }
-        )
-        kdf = F.broadcast(self.spark.createDataFrame(kdf_pd))
-        tids = sorted(set(term.tolist()))
-        return self._score_flagged_df(
-            kdf, tids, qinfo, k1, b, doc_ranges, block_filter=block_filter
-        )
-
-    def _score_flagged_df(
-        self,
-        kdf: DataFrame,
-        tids: list[int],
-        qinfo: list[dict],
-        k1: float,
-        b: float,
-        doc_ranges: list[tuple] | None = None,
-        block_filter=None,
-        kdf_how: str = "inner",
-    ) -> DataFrame:
-        """Decode the flagged blocks (kdf: block key -> is_target) in one
-        job and exact-BM25-score the docs that appear in >=1 target
-        block; the flag rides through the decode kernel so candidate
-        membership never touches the driver.  ``doc_ranges`` (merged,
-        disjoint, covering every doc id the flagged blocks can decode)
-        is pushed into the doc_dict scan — with the build's doc-id-
-        sorted layout that prunes the dictionary read to the candidate
-        row groups instead of the whole corpus.  ``block_filter`` (a
-        Column predicate over the postings metadata columns) prunes the
-        PAYLOAD scan; with ``kdf_how='left'`` that filter alone selects
-        the candidate blocks and kdf only carries the is_target=True
-        keys (broadcast by the caller) — the payload relation then
-        never shuffles."""
-        blocks = self._blocks_for(tids)
+        )))
+        blocks = self._blocks_for(sorted(set(term.tolist())))
         if block_filter is not None:
             blocks = blocks.filter(block_filter)
-        blocks = blocks.join(
-            kdf, ["term_id", "salt", "block_seq", "gen"], kdf_how
-        )
-        if kdf_how == "left":
-            blocks = blocks.fillna({"is_target": False})
-
+        blocks = blocks.join(kdf, _KEY_COLS)
         decoded = decode_blocks_df(blocks, carry=("is_target",))
         qdf = _arrow_df(
             self.spark,
@@ -2248,22 +2283,17 @@ class PackedIndex:
                 sp_budget -= df_t
         return out
 
-    def _sparse_bounds(
-        self,
-        spf: pd.DataFrame,
-        sparse_ids: list[int],
-        idf_map: dict[int, float],
-        k1: float,
-        b: float,
-        carry: np.ndarray,
+    def _sparse_postings_np(
+        self, sparse_ids: list[int], idf_map: dict[int, float], k1: float, b: float
     ) -> dict[int, tuple]:
-        """Decode the sparse terms' fetched blocks (one row per block:
-        min_dl, max_dl and codec.BLOCK_COLS) and bound every LIVE
-        posting -> {term_id: (doc_ids, ub, floor, carry)} sorted by
-        doc id.  ``ub`` scores a posting with its block's min_dl (an
-        upper bound), ``floor`` with its max_dl (a real doc's lower
-        bound); ``carry`` holds one value per block row, repeated onto
-        its postings."""
+        """The full (driver-sized) postings of sparse query terms, one
+        term-pruned fetch, each LIVE posting bounded -> {term_id: (doc
+        ids, ub, floor)} sorted by doc id.  ``ub`` scores a posting with
+        its block's min_dl (an upper bound), ``floor`` with its max_dl
+        (a real doc's lower bound)."""
+        if not sparse_ids:
+            return {}
+        spf = self._fetch_blocks(sparse_ids, ["min_dl", "max_dl", *BLOCK_COLS])
         out: dict[int, tuple] = {}
         stid = spf["term_id"].to_numpy(np.int64)
         for tid in sparse_ids:
@@ -2279,12 +2309,11 @@ class PackedIndex:
             ln_idf = math.log(idf_map[tid])
             min_dl = np.repeat(spf["min_dl"].to_numpy(np.float64)[rr], nn)
             max_dl = np.repeat(spf["max_dl"].to_numpy(np.float64)[rr], nn)
-            extra = np.repeat(carry[rr], nn)
             live = self._sparse_live_mask(
                 ids, np.repeat(spf["gen"].to_numpy(np.int64)[rr], nn)
             )
             if live is not None:
-                ids, tf, extra = ids[live], tf[live], extra[live]
+                ids, tf = ids[live], tf[live]
                 min_dl, max_dl = min_dl[live], max_dl[live]
             if ln_idf > 0:
                 ub_p = _bm25_partial(ln_idf, tf, min_dl, k1, b, self.avg_len)
@@ -2293,486 +2322,5 @@ class PackedIndex:
                 ub_p = np.zeros(ids.size)
                 fl_p = np.full(ids.size, -np.inf)
             o = np.argsort(ids, kind="stable")
-            out[tid] = (ids[o], ub_p[o], fl_p[o], extra[o])
+            out[tid] = (ids[o], ub_p[o], fl_p[o])
         return out
-
-    def _sparse_postings_np(
-        self, sparse_ids: list[int], idf_map: dict[int, float], k1: float, b: float
-    ) -> dict[int, tuple]:
-        """The full (driver-sized) postings of sparse query terms, one
-        fetch + :meth:`_sparse_bounds` -> {term_id: (doc ids, ub,
-        floor, salt)} per live posting, sorted by doc id."""
-        if not sparse_ids:
-            return {}
-        spf = self._fetch_blocks(
-            sparse_ids, ["salt", "min_dl", "max_dl", *BLOCK_COLS]
-        )
-        if not len(spf):
-            return {}
-        return self._sparse_bounds(
-            spf, sparse_ids, idf_map, k1, b, spf["salt"].to_numpy(np.int32)
-        )
-
-    #: segment-grid resolution for the distributed WAND's range-aligned
-    #: dense credits; the driver-side summary is |query terms| x this
-    #: many doubles (a few MB at most), independent of corpus size
-    DIST_WAND_SEGMENTS = 8192
-    #: a block spanning more than this many segments contributes through
-    #: its term's global maximum instead of exploding (only very rare
-    #: terms' blocks span widely; those are sparse-credit territory)
-    DIST_WAND_WIDE_CAP = 64
-
-    def _sparse_credit_plan(
-        self, blocks_meta: DataFrame, sp: dict[int, tuple], key_cols: list[str]
-    ) -> DataFrame:
-        """Attach the sparse-term survival credit column to the block
-        metadata (lazy plan, no job).  A sparse term's blocks span
-        nearly the whole doc-id space, so its global ub would credit
-        every block; this join grants it only to blocks that truly
-        contain one of its (driver-decoded) docs — salt-equi broadcast
-        hash join with the range check as a post-filter, output bounded
-        by |query terms| x sparse df."""
-        if not sp:
-            return blocks_meta.withColumn("sp_credit", F.lit(0.0))
-        spdf = F.broadcast(self.spark.createDataFrame(pd.DataFrame({
-            "sp_tid": np.concatenate(
-                [np.full(v[0].size, t, np.int64) for t, v in sp.items()]
-            ),
-            "sp_salt": np.concatenate([v[3] for v in sp.values()]),
-            "doc_id": np.concatenate([v[0] for v in sp.values()]),
-            "sp_ub": np.concatenate([v[1] for v in sp.values()]),
-        })))
-        credit = (
-            blocks_meta.alias("m")
-            .join(
-                spdf,
-                (F.col("sp_salt") == F.col("m.salt"))
-                & (F.col("sp_tid") != F.col("m.term_id"))
-                & (F.col("doc_id") >= F.col("m.min_doc"))
-                & (F.col("doc_id") <= F.col("m.max_doc")),
-            )
-            .groupBy(*[F.col(f"m.{c}") for c in key_cols], F.col("sp_tid"))
-            .agg(F.max("sp_ub").alias("mx"))
-            .groupBy(*key_cols)
-            .agg(F.sum("mx").alias("sp_credit"))
-        )
-        return blocks_meta.join(credit, key_cols, "left").fillna(
-            {"sp_credit": 0.0}
-        )
-
-    def _seg_summary(
-        self, meta2: DataFrame, tids: list[int], sparse_set: set
-    ) -> dict | None:
-        """Phase 1 of the segment-grid survival plan (see
-        :meth:`_seg_survivors_from`): the doc-id space is cut into
-        DIST_WAND_SEGMENTS fixed segments and each term's per-segment
-        max block ub is aggregated distributed — ONE summary job whose
-        output is bounded by |terms| x segments, independent of corpus
-        size — then the per-(term, segment) 'others' credit sums are
-        computed driver-side in numpy.  Returns the driver-sized grid
-        (plus the segmented block relation) or None when the metadata
-        relation is empty.  Split from the survivor relation so the θ
-        metadata job can run CONCURRENTLY with this summary job (θ is
-        only needed by the survival filter, built afterwards), and so
-        the caller can estimate the no-prune case from the grid without
-        launching the survivor job at all."""
-        # grid size from the meta-estimated doc-id span (salts partition
-        # the space) — no extra job; a coarse overestimate only loosens
-        # the credits, never unsounds them
-        hi_est = max(
-            1,
-            int(self.meta.get("salt_range", 1))
-            * int(self.meta.get("n_salts", 1) or 1),
-        )
-        G = min(self.DIST_WAND_SEGMENTS, hi_est)
-        seg_sz = max(1, (hi_est + G) // G)
-        cap = self.DIST_WAND_WIDE_CAP
-        seg_expr = F.explode(
-            F.when(
-                F.col("seg_hi") - F.col("seg_lo") > cap,
-                F.array(F.lit(-1).cast("long")),
-            ).otherwise(F.sequence("seg_lo", "seg_hi"))
-        ).alias("seg")
-        bm = meta2.withColumn(
-            "seg_lo", (F.col("min_doc") / F.lit(seg_sz)).cast("long")
-        ).withColumn("seg_hi", (F.col("max_doc") / F.lit(seg_sz)).cast("long"))
-        # ONE summary job: wide blocks collapse to seg=-1, narrow blocks
-        # explode into their (<= cap+1) segments
-        segmax = self._topandas_arrow(
-            bm.select("term_id", seg_expr, "ub")
-            .groupBy("term_id", "seg")
-            .agg(F.max("ub").alias("mx"))
-        )
-        if not len(segmax):
-            return None
-        n_seg = max(1, int(segmax["seg"].max()) + 1)
-        tlist = sorted(set(int(t) for t in tids))
-        tix = {t: i for i, t in enumerate(tlist)}
-        cr = np.zeros((len(tlist), n_seg))
-        narrow = segmax[segmax["seg"] >= 0]
-        if len(narrow):
-            ti = narrow["term_id"].map(tix).to_numpy(np.int64)
-            sg = narrow["seg"].to_numpy(np.int64)
-            cr[ti, sg] = narrow["mx"].to_numpy(np.float64)
-        # NO iterrows here: a mixed int64/float64 row upcasts term_id to
-        # float64, which is lossy above 2^53 (xxhash64 ids) — column
-        # access keeps the exact int64 values
-        wide = segmax[segmax["seg"] < 0]
-        for t, mx in zip(
-            wide["term_id"].to_numpy(np.int64),
-            wide["mx"].to_numpy(np.float64),
-        ):
-            i = tix[int(t)]
-            cr[i] = np.maximum(cr[i], float(mx))
-        dense_rows = [tix[t] for t in tlist if t not in sparse_set]
-        total = (
-            cr[dense_rows].sum(axis=0) if dense_rows else np.zeros(n_seg)
-        )
-        others = np.empty((len(tlist), n_seg))
-        for t in tlist:
-            i = tix[t]
-            others[i] = total - (cr[i] if t not in sparse_set else 0.0)
-        return {
-            "bm": bm, "seg_expr": seg_expr, "tlist": tlist,
-            "cr": cr, "others": others, "n_seg": n_seg,
-        }
-
-    def _seg_cell_survival_est(self, summ: dict, sp_max: float, theta: float) -> float:
-        """Driver-side, job-free estimate of the surviving fraction from
-        the segment grid: a (term, segment) cell's BEST block survives
-        iff cr + others + sp_max clears θ, so the fraction of occupied
-        cells clearing θ upper-bounds how much the survivor machinery
-        could prune.  ~1.0 means pruning would remove (almost) nothing
-        — the caller then skips the survivor/candidate jobs entirely
-        and takes the plain exact pass, which selects the same top-k
-        (both branches are exact; this is a dispatch heuristic only)."""
-        cr, others = summ["cr"], summ["others"]
-        occ = cr > 0
-        n_occ = int(occ.sum())
-        if n_occ == 0:
-            return 1.0
-        alive = (cr + others + sp_max) >= (theta - 1e-9)
-        return float((occ & alive).sum()) / n_occ
-
-    def _seg_survivors_from(
-        self, summ: dict, sparse_set: set, key_cols: list[str], theta: float
-    ) -> DataFrame:
-        """Phase 2: the distributed survival relation from the segment
-        grid summary.  The per-(term, segment) others sums are BROADCAST
-        back and survival is decided inside the exploded pipeline
-        (exists a segment of the block where ub + others + sp_credit
-        clears θ), so nothing per-block ever lands on the driver or
-        shuffles wide.  Sound: a doc in block B lies in one of B's
-        segments s, and the t'-block containing it overlaps s, so
-        segmax(t', s) >= its contribution; the exists-max over B's
-        segments only loosens further.  Blocks spanning >
-        DIST_WAND_WIDE_CAP segments use their term's global max
-        (seg = -1 rows — sound superset).  Returns the surviving blocks
-        with key_cols + min_doc/max_doc."""
-        tlist, others, n_seg = summ["tlist"], summ["others"], summ["n_seg"]
-        pt_max = others.max(axis=1)
-        oth_pdf = pd.DataFrame(
-            {
-                "term_id": np.concatenate(
-                    [
-                        np.repeat(np.array(tlist, dtype=np.int64), n_seg),
-                        np.array(tlist, dtype=np.int64),
-                    ]
-                ),
-                "seg": np.concatenate(
-                    [
-                        np.tile(np.arange(n_seg, dtype=np.int64), len(tlist)),
-                        np.full(len(tlist), -1, dtype=np.int64),
-                    ]
-                ),
-                "oth": np.concatenate([others.ravel(), pt_max]),
-            }
-        )
-        oth_df = F.broadcast(self.spark.createDataFrame(oth_pdf))
-        # survival decided inside the exploded pipeline: the only wide
-        # operation is the final per-key dedup over rows that ALREADY
-        # cleared θ
-        return (
-            summ["bm"].select(
-                *key_cols, "min_doc", "max_doc", "ub", "sp_credit",
-                summ["seg_expr"],
-            )
-            .join(oth_df, ["term_id", "seg"])
-            .filter(
-                F.col("ub") + F.col("oth") + F.col("sp_credit")
-                >= F.lit(theta) - F.lit(1e-9)
-            )
-            .groupBy(*key_cols)
-            .agg(
-                F.first("min_doc").alias("min_doc"),
-                F.first("max_doc").alias("max_doc"),
-            )
-        )
-
-    def _seg_survivors(
-        self,
-        meta2: DataFrame,
-        tids: list[int],
-        sparse_set: set,
-        key_cols: list[str],
-        theta: float,
-    ) -> DataFrame:
-        """Both phases composed (summary job + survival relation) — the
-        shape the soundness property test pins: grid survival must be a
-        superset of the exact range-aligned prune."""
-        summ = self._seg_summary(meta2, tids, sparse_set)
-        if summ is None:
-            return meta2.limit(0)
-        return self._seg_survivors_from(summ, sparse_set, key_cols, theta)
-
-    def _wand_topk_distributed(
-        self, qinfo: list[dict], k: int, k1: float, b: float
-    ) -> list[tuple]:
-        """Fully distributed block-max WAND for head-term territory
-        (metadata too large for the driver).  Only bounded things touch
-        the driver: per-term bounds (|query| rows), seed block metadata
-        (a handful), θ (k rows), and — when the query has driver-sized
-        SPARSE terms — those terms' postings (df-bounded), which buy
-        the same three wins as on the driver-planned path: θ floors,
-        postings-level survival credit (a head block is only credited a
-        rare term's contribution when it truly contains one of its
-        docs), and singleton candidate intervals.  Candidate membership
-        is the is_target flag riding through the decode kernel; the
-        "blocks overlapping the surviving candidate ranges" set is a
-        range-predicate filter over the cached block metadata.  Returns
-        the top-k rows."""
-        tids = [r["term_id"] for r in qinfo]
-        idf_map = {r["term_id"]: float(r["idf"]) for r in qinfo}
-        tight = self._tight_bounds_ok(k1, b)
-        nonneg = min(float(r["idf"]) for r in qinfo) > 1.0
-        sp = self._sparse_postings_np(
-            self._sparse_query_terms(qinfo), idf_map, k1, b
-        )
-        key_cols = _KEY_COLS
-        meta_cols = key_cols + ["n", "min_doc", "max_doc", "max_tf", "min_dl"]
-        if tight:
-            meta_cols.append("max_score")
-        # the cached metadata relation is reused ACROSS queries through a
-        # small LRU (serving sessions repeat vocabularies); entries are
-        # immutable per generation and unpersisted on eviction
-        ckey = (tuple(sorted(tids)), tight, float(k1), float(b),
-                int(self.meta.get("generation", 0)))
-        dcache = getattr(self, "_dist_meta_cache", None)
-        if dcache is None:
-            dcache = self._dist_meta_cache = {}
-        ent = dcache.get(ckey)
-        if ent is not None:
-            dcache[ckey] = dcache.pop(ckey)  # LRU touch (move-to-end)
-        else:
-            ent = [
-                self._blocks_for(tids).select(*meta_cols)
-                .withColumn("ub", self._block_ub(idf_map, k1, b, tight))
-                .cache(),
-                None,  # block count, filled by the first query
-            ]
-            # a PackedIndex is a snapshot (its generation never moves),
-            # but drop any stale-generation stragglers defensively, then
-            # LRU-evict overflow — evicted relations unpersist so the
-            # bound holds in executor memory, not just in entry count
-            gen_now = int(self.meta.get("generation", 0))
-            for k_ in [k_ for k_ in dcache if k_[-1] != gen_now]:
-                dcache.pop(k_)[0].unpersist()
-            while len(dcache) >= 4:
-                dcache.pop(next(iter(dcache)))[0].unpersist()
-            dcache[ckey] = ent
-        blocks_meta = ent[0]
-
-        theta = self._floor_theta(sp, k) if nonneg else -math.inf
-        theta_fut = None
-        if tight and nonneg:
-            # metadata-only θ (same proof as the driver-planned path:
-            # per-term block max_scores are achieved by k distinct real
-            # docs) — replaces the seed DECODE pass with one tiny
-            # metadata aggregation.  SUBMITTED to a background thread:
-            # θ is only consumed by the survival filter, which is built
-            # after the (independent) segment-summary job — the two
-            # planning jobs overlap instead of running back-to-back.
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("term_id").orderBy(
-                F.desc("max_score"), *key_cols
-            )
-            kth_df = (
-                blocks_meta.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == k)
-                .agg(F.max("max_score"))
-            )
-            pool = getattr(self, "_bg_pool", None)
-            if pool is None:
-                from concurrent.futures import ThreadPoolExecutor
-
-                pool = self._bg_pool = ThreadPoolExecutor(max_workers=1)
-            theta_fut = pool.submit(lambda: kth_df.first()[0])
-
-        # survival credits: ub + (other DENSE terms' range-aligned max)
-        # + (other SPARSE terms' postings-level credit) >= θ
-        sparse_set = set(sp)
-        meta2 = self._sparse_credit_plan(blocks_meta, sp, key_cols)
-        summ = self._seg_summary(meta2, tids, sparse_set)
-        if theta_fut is not None:
-            kth = theta_fut.result()
-            if kth is not None:
-                theta = max(theta, float(kth))
-        if summ is None:
-            return []
-
-        # ---- fallback θ: the rarest term's best blocks ------------------
-        # seed block METADATA is tiny (top few blocks of one term) and
-        # safe to collect; their doc payloads are not
-        if not math.isfinite(theta):
-            rare = min(qinfo, key=lambda r: (r["df"], r["term"]))
-            seeds = self._topandas_arrow(
-                blocks_meta.filter(F.col("term_id") == rare["term_id"])
-                .orderBy(F.desc("ub"), *key_cols)
-                .limit(max(4, (4 * k) // self.config.block_size + 1))
-                .select(*key_cols, "min_doc", "max_doc")
-            )
-            if len(seeds):
-                m_lo, m_hi = _merge_ranges(
-                    seeds["min_doc"].to_numpy(np.int64),
-                    seeds["max_doc"].to_numpy(np.int64),
-                )
-                seed_kdf = F.broadcast(_arrow_df(
-                    self.spark, seeds[key_cols].assign(is_target=True),
-                    self._KDF_SCHEMA,
-                ))
-                theta_kdf = (
-                    blocks_meta.filter(_range_pred(m_lo, m_hi, "min_doc", "max_doc"))
-                    .select(*key_cols)
-                    .join(seed_kdf, key_cols, "left")
-                    .fillna({"is_target": False})
-                )
-                top = _rows(_ordered(
-                    self._score_flagged_df(theta_kdf, tids, qinfo, k1, b), k
-                ))
-                if len(top) >= k:
-                    theta = top[-1][1]
-
-        # ---- prune blocks by upper bound (distributed filter) -----------
-        if not math.isfinite(theta):
-            # no θ means no pruning: the kdf machinery would decode
-            # everything anyway — take the plain exact single pass
-            return _rows(self._exact_topk(qinfo, k, k1, b))
-        # job-free no-prune detection from the driver-sized segment
-        # grid: when (almost) every occupied cell clears θ the survivor
-        # machinery can only remove noise — skip its jobs entirely and
-        # take the plain exact single pass, which selects the same
-        # top-k (both branches exact; heuristic affects dispatch only)
-        sp_max = sum(float(v[1].max()) for v in sp.values() if v[1].size)
-        if self._seg_cell_survival_est(summ, sp_max, theta) >= 0.97:
-            return _rows(self._exact_topk(qinfo, k, k1, b))
-        surviving = self._seg_survivors_from(summ, sparse_set, key_cols, theta)
-        # fused count + collect: ONE bounded job returns the survivor
-        # keys when the set is driver-sized (the common case); only the
-        # too-many-survivors branch below re-runs the pipeline cached
-        sk = self._topandas_arrow(
-            surviving.select(*key_cols, "min_doc", "max_doc")
-            .limit(self.DIST_SURV_COLLECT_MAX + 1)
-        )
-        n_surv = len(sk)
-        if n_surv == 0:
-            return []
-        small = n_surv <= self.DIST_SURV_COLLECT_MAX
-        if ent[1] is None:
-            # count once per cached metadata relation (a PackedIndex is
-            # a snapshot; the relation is immutable while cached)
-            ent[1] = blocks_meta.count()
-        n_blocks = ent[1]
-        if small:
-            if n_surv >= 0.9 * n_blocks:
-                # pruning removed (almost) nothing (same cap as the
-                # driver-planned path)
-                return _rows(self._exact_topk(qinfo, k, k1, b))
-            # survivor set is driver-sized: the limited collect above
-            # gave ranges, keys and flags in ONE job, and a second
-            # bounded collect gives the candidate blocks; the rescore
-            # then runs on the driver or as one distributed job
-            m_lo, m_hi = _candidate_ranges(
-                sk["term_id"].to_numpy(np.int64),
-                sk["min_doc"].to_numpy(np.int64),
-                sk["max_doc"].to_numpy(np.int64),
-                sp,
-            )
-            if m_lo.size == 0:
-                # all survivors sparse with no live docs (stale-gen
-                # artifact): fall through to the always-sound exact pass
-                return _rows(self._exact_topk(qinfo, k, k1, b))
-            cand = self._topandas_arrow(
-                blocks_meta.filter(_range_pred(m_lo, m_hi, "min_doc", "max_doc"))
-                .select(*key_cols, "n")
-            )
-            surv_set = set(zip(*(sk[c].to_numpy() for c in key_cols)))
-            flags = np.fromiter(
-                (
-                    kk in surv_set
-                    for kk in zip(*(cand[c].to_numpy() for c in key_cols))
-                ),
-                dtype=bool,
-                count=len(cand),
-            )
-            return self._rescore_rows(
-                cand, flags, (m_lo, m_hi), qinfo, k, k1, b
-            )
-
-        # ---- survivor set beyond the driver budget ----------------------
-        # cache the pipeline (the flag relation and the envelopes re-read
-        # it) and get the exact count for the fallback check + broadcast
-        # decision
-        surviving = surviving.cache()
-        n_surv = surviving.count()
-        if n_surv >= 0.9 * n_blocks:
-            surviving.unpersist()
-            return _rows(self._exact_topk(qinfo, k, k1, b))
-        kdf = surviving.select(*key_cols).withColumn("is_target", F.lit(True))
-        if n_surv <= 2_000_000:
-            kdf = F.broadcast(kdf)
-        if len(tids) == 1:
-            # one term -> doc-disjoint blocks -> pruned blocks never
-            # participate in the exact rescore
-            scored = self._score_flagged_df(kdf, tids, qinfo, k1, b)
-        else:
-            # per-(term, salt) envelopes of the survivors (salts
-            # partition the doc-id space, so their count is bounded by
-            # |terms| x n_salts) through the candidate-range step: dense
-            # envelopes enter as spans, SPARSE ones as the live doc ids
-            # inside them — a top-k doc whose score clears θ only through
-            # a sparse survivor may sit in a salt with no dense survivor,
-            # and a span-only filter would drop it from the doc_dict join
-            # (silently wrong top-k).  Surviving keys ride as a (possibly
-            # broadcast) flag relation into a fully distributed rescore.
-            env = self._topandas_arrow(
-                surviving.groupBy("term_id", "salt").agg(
-                    F.min("min_doc").alias("min_doc"),
-                    F.max("max_doc").alias("max_doc"),
-                )
-            )
-            m_lo, m_hi = _candidate_ranges(
-                env["term_id"].to_numpy(np.int64),
-                env["min_doc"].to_numpy(np.int64),
-                env["max_doc"].to_numpy(np.int64),
-                sp,
-            )
-            if m_lo.size == 0:
-                # every survivor is a sparse block with no live docs
-                # (stale-generation artifact) — the plain exact pass is
-                # always sound, never guess at an empty result
-                surviving.unpersist()
-                return _rows(self._exact_topk(qinfo, k, k1, b))
-            scored = self._score_flagged_df(
-                kdf, tids, qinfo, k1, b,
-                doc_ranges=np.column_stack((m_lo, m_hi)),
-                block_filter=_range_pred(m_lo, m_hi, "min_doc", "max_doc"),
-                kdf_how="left",
-            )
-        rows = _rows(_ordered(scored, k))
-        # the result is k rows — collecting it here lets `surviving` be
-        # released immediately; the block-metadata relation stays
-        # persisted in the bounded (4-entry LRU) _dist_meta_cache for
-        # reuse by later queries in a serving session
-        surviving.unpersist()
-        return rows

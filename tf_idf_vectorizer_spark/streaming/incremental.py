@@ -519,7 +519,7 @@ class IncrementalIndex:
                 # the tf_adds path was not built on the fused exchange
                 rows = rows.repartition(pack_parts, "term_id", "salt")
             packed = pack_blocks_jvm(
-                rows, self.config.block_size, meta["term_buckets"], gen=gen,
+                rows, int(meta["block_size"]), meta["term_buckets"], gen=gen,
                 max_doc_bound=int(max_new_id or 0),
                 max_tf_bound=2 * int(max_new_dl or 0) + 2,
             )
@@ -814,7 +814,7 @@ class IncrementalIndex:
             self._held.append(bc)
             packed = part.repartition(n_parts, "term_id", "salt").mapInPandas(
                 make_live_repacker(
-                    bc, self.config.block_size, int(meta["term_buckets"]),
+                    bc, int(meta["block_size"]), int(meta["term_buckets"]),
                     k1=k1, b=b, avg_len=avg_len, salt_range=salt_range,
                 ),
                 schema=out_schema,
