@@ -191,11 +191,12 @@ def main() -> None:
             results[f"wand8m_{mode}"] = round(min(reps), 3)
         results["wand8m_rank_match"] = w8_rows["exact"] == w8_rows["wand"]
 
-        # ---- 3c. DISTRIBUTED WAND variant at the same >=8M volume.
-        # The driver-planned path above collects block metadata; at
-        # 10^12 docs the metadata itself outgrows the driver and
-        # _wand_topk_distributed is the ONLY path — force it
-        # (META_COLLECT_MAX=0) and require it to beat the distributed
+        # ---- 3c. CHUNKED WAND at the same >=8M volume.  The driver
+        # planner above reads the query's block metadata in one chunk;
+        # at 10^12 docs that metadata outgrows the driver and the same
+        # planner runs chunk by chunk, each chunk a run of whole salts.
+        # META_COLLECT_MAX=0 forces one-salt chunks (the "dist" keys
+        # keep their old names); the result must match the distributed
         # exact pass rank-identically.
         saved_mcm = idx8.META_COLLECT_MAX
         idx8.META_COLLECT_MAX = 0
@@ -279,13 +280,12 @@ def main() -> None:
     # XL section below, the driver still gets a complete bench line
     _emit(results)
 
-    # ---- 6. XL: the distributed variant IN ITS OWN REGIME: at
-    # >=25M entries the block metadata outgrows the driver budget
-    # (so even mode='wand' dispatches distributed) and the planning
-    # floor amortizes — the forced-distributed variant must now
-    # BEAT the distributed exact pass rank-identically.  This is
-    # the heavyweight section (a ~20M-doc build); disable with
-    # BENCH_WAND_XL=0 when iterating.
+    # ---- 6. XL: chunked WAND at >=25M entries, where one chunk's
+    # block metadata would outgrow META_COLLECT_MAX and the planner
+    # runs salt by salt (forced here with META_COLLECT_MAX=0; the
+    # "dist" keys keep their old names) against the distributed exact
+    # pass, rank-identically.  This is the heavyweight section (a
+    # ~20M-doc build); disable with BENCH_WAND_XL=0 when iterating.
     if os.environ.get("BENCH_WAND_XL", "1") != "0":
         from tf_idf_vectorizer_spark.sources.synth import synth_topical_corpus
 

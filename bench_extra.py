@@ -150,7 +150,7 @@ def mode_pack():
             ts.append(round(time.time() - t0, 2))
         _emit(mode="pack", which=label, reps=ts, rows=n_rows)
 
-    full = pack_blocks_jvm(rows, CFG.block_size, CFG.term_buckets, gen=0,
+    full = pack_blocks_jvm(rows, CFG.block_size, gen=0,
                            max_doc_bound=n, max_tf_bound=500)
     agg_only = rows.groupBy("term_id", "salt").agg(
         F.array_sort(F.collect_list(F.struct("doc_id", "tf", "doc_len"))).alias("run"))

@@ -199,7 +199,7 @@ def test_compact_repacker_exact_when_cumsum_wraps():
         "tfs": tf_bytes,
     })
     repack = make_live_repacker(
-        bc, block_size=32, term_buckets=8, k1=1.2, b=0.75, avg_len=10.0,
+        bc, block_size=32, k1=1.2, b=0.75, avg_len=10.0,
         salt_range=1 << 62,
     )
     out = pd.concat(list(repack(iter([blocks]))), ignore_index=True)

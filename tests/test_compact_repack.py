@@ -86,7 +86,7 @@ def _reference_postings(spark, idx_dir: str, out: str) -> None:
         F.col("doc_len").cast("int").alias("doc_len"),
     )
     packed = pack_blocks_jvm(
-        rows, CFG.block_size, meta["term_buckets"], gen=0,
+        rows, CFG.block_size, gen=0,
         avg_len=meta["total_len"] / meta["doc_num"],
         k1=meta["k1"], b=meta["b"],
         idf_df=idx.term_dict.select("term_id", "idf"),
@@ -183,5 +183,5 @@ def test_compact_fast_path_pure_gen0_roundtrip(spark, tmp_path):
     for r0, r1 in zip(rows_before, rows_after):
         for c in ("term_id", "salt", "block_seq", "n", "min_doc",
                   "max_doc", "max_tf", "min_dl", "max_dl", "doc_deltas",
-                  "tfs", "bucket", "max_score"):
+                  "tfs", "max_score"):
             assert r0[c] == r1[c], (c, r0, r1)

@@ -30,12 +30,12 @@ def packed(spark, sf_smoke, tmp_path_factory):
 
 def test_postings_scan_prunes_partitions_and_pushes_term_filter(packed):
     """Layout v2: files are term_id-sorted inside salt dirs, so pruning
-    is parquet row-group stats via PushedFilters on term_id (+ bucket as
-    a stats-pruned column)."""
+    is parquet row-group stats via PushedFilters on term_id.  Postings
+    store no bucket column, so the scan neither filters nor reads one."""
     df = packed.bm25_topk(["spark", "join"], k=10, mode="exact")
     pushed = pushed_filters(df)
     assert any("term_id" in f for f in pushed), f"term_id not pushed: {pushed}"
-    assert any("bucket" in f for f in pushed), f"bucket not pushed: {pushed}"
+    assert not any("bucket" in f for f in pushed), pushed
 
 
 def test_scoring_joins_are_broadcast(packed):

@@ -239,10 +239,9 @@ def test_term_dict_point_lookup_matches_pinned(spark, idx_dir):
     pi_b.DRIVER_ROW_BYTES = {**PackedIndex.DRIVER_ROW_BYTES, "dict": 1 << 62}
     assert not pi_b._fits("dict", pi_b.meta["n_terms"])
     assert pi_b._td_files() is not None
-    # the files store no term_id: the lookup hashes the query terms on
-    # the driver (tables.term_id_of), still with no Spark job
+    # the files store the ordinal term ids, which the lookup reads
     for f in glob.glob(f"{idx_dir}/term_dict/*.parquet"):
-        assert pq.read_schema(f).names == ["term", "df", "idf"]
+        assert pq.read_schema(f).names == ["term_id", "term", "df", "idf"]
     with spark_jobs(spark) as jobs:
         via_point = pi_b._query_info(terms)
     assert jobs == []

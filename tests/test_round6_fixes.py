@@ -66,7 +66,7 @@ def test_varint_overflow_raises_not_truncates(spark):
         "term_id long, salt int, doc_id long, tf int, doc_len int",
     )
     packed = pack_blocks_jvm(
-        rows, 128, 8, gen=0, max_doc_bound=1000, max_tf_bound=100
+        rows, 128, gen=0, max_doc_bound=1000, max_tf_bound=100
     )
     with pytest.raises(Exception) as exc:
         packed.collect()
@@ -85,7 +85,7 @@ def test_varint_width_bounds_byte_identical(spark):
         "term_id long, salt int, doc_id long, tf int, doc_len int",
     )
     packed = pack_blocks_jvm(
-        rows, 128, 8, gen=0, max_doc_bound=20000, max_tf_bound=127
+        rows, 128, gen=0, max_doc_bound=20000, max_tf_bound=127
     ).collect()
     assert len(packed) == 1
     blk = packed[0]

@@ -605,3 +605,51 @@ def test_chunked_wand_sparse_after_batch(spark, topical, tmp_path):
         e = _rows(idx.bm25_topk(terms, k=10, mode="exact"))
         assert w == e, terms
         assert chunk_count(salts) >= 2, (terms, salts)
+
+
+def test_whole_chunk_rescore_recuts_into_driver_runs(spark, tmp_path):
+    """A chunk whose prune keeps every block is rescored whole.  When
+    that whole-chunk volume misses the driver bound but one salt's
+    blocks fit it, the chunk is re-cut into runs of salts that each fit
+    (θ carrying from run to run) instead of going to Spark: on a
+    bound-adversarial query the rows equal exact, at least two runs
+    are planned, and no Spark job runs."""
+    rng = np.random.RandomState(17)
+    # both terms in every doc with iid tfs: every block's bound is the
+    # same, so no block can be pruned
+    docs = [
+        (i, " ".join(["alpha"] * int(rng.randint(1, 4))
+                     + ["beta"] * int(rng.randint(1, 4)) + [f"w{i}"]))
+        for i in range(800)
+    ]
+    d = str(tmp_path / "iid")
+    cfg = EngineConfig(n_salts=4, block_size=16, term_buckets=8)
+    build_index(
+        spark, spark.createDataFrame(docs, "doc_id long, text string"), d,
+        config=cfg,
+    )
+    idx = PackedIndex(spark, d, cfg, warm=True)
+    terms = ["alpha", "beta"]
+    want = _rows(idx.bm25_topk(terms, k=10, mode="exact"))
+    volume = sum(int(r["df"]) for r in idx._query_info(terms))
+    assert volume == 1600 and len(idx._wand_salts()) == 4
+    # one chunk of every salt does not fit; two salts' blocks do
+    idx.DRIVER_VOLUME_MAX = volume // 2
+    idx.WAND_THRESHOLD = 0  # the serving API dispatches to WAND
+    planned = []
+    plan = idx._wand_chunk
+
+    def spy(mp, *a, **kw):
+        got = plan(mp, *a, **kw)
+        planned.append((sorted(set(mp["salt"].tolist())), got is None))
+        return got
+
+    idx._wand_chunk = spy
+    with spark_jobs(spark) as jobs:
+        got = idx.bm25_topk_rows(terms, k=10)
+    assert jobs == []
+    assert [(doc, round(sc, 9), n) for doc, sc, n in got] == want
+    assert planned[0] == ([0, 1, 2, 3], True), planned
+    assert [s for s, handed_back in planned[1:] if not handed_back] == [
+        [0, 1], [2, 3]
+    ], planned

@@ -35,9 +35,9 @@ class EngineConfig:
     b: float = 0.75             # BM25 b
     block_size: int = 128       # docs per posting block (ours; ref has none)
     n_salts: int = 8            # MINIMUM doc-range salts for head-term skew
-    # term_id hash bucket of every block (the ``bucket`` column): the
-    # Iceberg publish partitions postings by (salt, bucket); the parquet
-    # postings dirs are partitioned by salt only
+    # term_id buckets of the Iceberg publish, which partitions postings
+    # by (salt, pmod(term_id, term_buckets)); the parquet postings dirs
+    # are partitioned by salt only and store no bucket
     term_buckets: int = 64
     # upper bound on a (term_id, salt) aggregation group in the packer: a
     # stop-word's salt-local run is <= salt_range docs, so build_index

@@ -11,13 +11,18 @@ at mod.rs:186-190) with a batch dataflow shaped for 10^12 documents:
                                            explode; no doc-keyed join)
     -> term_id = xxhash64(term); salt = doc_id // salt_range
                                           (doc-RANGE salts, not hash
-                                           salts: tables.salting)
+                                           salts: tables.salting; the
+                                           hash only keys the shuffle)
     -> repartition(term_id, salt)         (the ONE posting shuffle; head
                                            terms split across salts)
     -> groupBy(term_id, salt, doc_id, term) -> tf   (exchange-free: the
                                            group key refines the
                                            partitioning)
+    -> term_dict: df/idf per term, ids = tables.term_ordinals (the
+                                           term's rank in term order)
     -> groupBy(term_id, salt) collect+sort salt-local runs (exchange-free)
+    -> broadcast join (hash -> idf, ordinal) at group granularity: the
+                                           blocks carry the ordinal
     -> codec.encode_blocks_jvm            (delta + LEB128 varint blocks
                                            of block_size docs — pure JVM
                                            expressions; codec.py owns
@@ -73,6 +78,7 @@ from tf_idf_vectorizer_spark.operators.stats import corpus_stats, doc_stats, idf
 from tf_idf_vectorizer_spark.operators.tables import (
     salt_of,
     salting,
+    term_ordinals,
     write_doc_dict,
     write_lineage,
     write_meta,
@@ -84,11 +90,11 @@ from tf_idf_vectorizer_spark.operators.tables import (
 def make_live_repacker(
     bc,
     block_size: int,
-    term_buckets: int,
     k1: float,
     b: float,
     avg_len: float,
     salt_range: int,
+    id_map=None,
 ):
     """mapInPandas body of compact()'s repack (guide §8: every shuffle
     but the last moves a lightweight proxy — here the COMPRESSED block
@@ -104,7 +110,9 @@ def make_live_repacker(
     tests/test_compact_repack.py).
 
     ``bc`` broadcasts (sorted doc_ids, doc_lens int64, gens) — all of
-    doc_dict or the doc-id range of the blocks being repacked."""
+    doc_dict or the doc-id range of the blocks being repacked.
+    ``id_map``, when given, broadcasts (sorted old term ids, new ids):
+    compact() renumbers an index with hash term ids to ordinals."""
     kp1 = k1 + 1.0
     one_minus_b = 1.0 - b
 
@@ -128,6 +136,10 @@ def make_live_repacker(
         tf = tf[ok]
         tids = tids[ok]
         dls = dls_v[pos[ok]]
+        if id_map is not None:
+            # a live row's term is in the dictionary by construction
+            old, new = id_map.value
+            tids = new[np.searchsorted(old, tids)]
         order = np.lexsort((docs, tids))
         docs = docs[order]
         tf = tf[order]
@@ -171,7 +183,6 @@ def make_live_repacker(
                 "max_score": np.maximum.reduceat(imp, b_starts),
                 "doc_deltas": doc_deltas,
                 "tfs": tf_bytes,
-                "bucket": (bt % term_buckets).astype(np.int32),
                 "gen": np.zeros(bt.size, dtype=np.int32),
             }
         )
@@ -182,7 +193,6 @@ def make_live_repacker(
 def pack_blocks_jvm(
     rows: DataFrame,
     block_size: int,
-    term_buckets: int,
     gen: int,
     avg_len: float | None = None,
     k1: float = 1.2,
@@ -200,12 +210,15 @@ def pack_blocks_jvm(
       codec.encode_blocks_jvm
         -> delta + LEB128-varint payloads
 
-    ``idf_df`` (term_id, idf) joins AFTER the aggregation, broadcast at
-    GROUP granularity: carrying idf on every posting row would push 8
-    more bytes per posting through the build's dominant shuffle for a
-    value that is constant per term (measured: the pack phase is
-    memory-traffic-bound, ~0.6 scaling at 1->4 cores — bytes through
-    the shuffle are the scarce resource).
+    ``idf_df`` (term_id, idf and/or ordinal) joins AFTER the
+    aggregation, broadcast at GROUP granularity: carrying idf on every
+    posting row would push 8 more bytes per posting through the build's
+    dominant shuffle for a value that is constant per term (measured:
+    the pack phase is memory-traffic-bound, ~0.6 scaling at 1->4 cores
+    — bytes through the shuffle are the scarce resource).  When it has
+    an ``ordinal`` column, the rows are keyed by ``xxhash64(term)`` and
+    the blocks carry the ordinal as their term_id; every term of the
+    rows must then have one (inner join).
     """
     # ONE shuffle: groupBy(term_id, salt) collects the salt-local posting
     # run; blocks are array slices (no window pass).  Group size is
@@ -225,22 +238,26 @@ def pack_blocks_jvm(
             F.collect_list(F.struct("doc_id", "tf", "doc_len"))
         ).alias("run"),
     )
-    has_idf = idf_df is not None
-    if has_idf:
+    has_idf = idf_df is not None and "idf" in idf_df.columns
+    ordinal = idf_df is not None and "ordinal" in idf_df.columns
+    if idf_df is not None:
         g_all = g_all.join(
             F.broadcast(
                 idf_df.select(
-                    "term_id", F.col("idf").cast("double").alias("idf")
+                    "term_id",
+                    *([F.col("idf").cast("double").alias("idf")]
+                      if has_idf else []),
+                    *(["ordinal"] if ordinal else []),
                 )
             ),
             "term_id",
-            "left",
+            "inner" if ordinal else "left",
         )
     run = F.col("run")
     n_blocks = F.ceil(F.size(run) / F.lit(block_size)).cast("int")
     g = (
         g_all.select(
-            "term_id",
+            F.col("ordinal" if ordinal else "term_id").alias("term_id"),
             "salt",
             *(["idf"] if has_idf else []),
             F.posexplode(
@@ -306,7 +323,6 @@ def pack_blocks_jvm(
         "max_tf", "min_dl", "max_dl", "max_score",
         doc_deltas.alias("doc_deltas"),
         tf_bytes.alias("tfs"),
-        F.pmod(F.col("term_id"), F.lit(term_buckets)).cast("int").alias("bucket"),
         F.lit(gen).alias("gen"),
     )
 
@@ -331,11 +347,14 @@ def build_index(
     Tables written (parquet; Iceberg would slot in unchanged via
     ``writeTo`` when its runtime is on the classpath):
       doc_dict   (doc_id, url?, doc_len, norm, gen)
-      term_dict  (term, df, idf; term_id = xxhash64(term) is derived on
-                 read, stored only when a collision re-minted the ids)
+      term_dict  (term_id, term, df, idf; term_id = the term's rank in
+                 term order, tables.term_ordinals)
       postings   (salt=S/...) posting blocks, POSTINGS_FILE_SCHEMA
       manifest   (salt, phase, rows_in, rows_out, checksum, ts)
       meta.json  scalars (doc_num, total_len, config)
+
+    ``check_collisions=True`` counts the distinct ``xxhash64(term)``
+    keys of the TF shuffle and raises if two terms share one.
     """
     t0 = time.time()
     phases: dict[str, float] = {}
@@ -495,29 +514,24 @@ def _build_index_body(
 
     stats = corpus_stats(tf, "doc_id")
     idf = idf_table(stats, doc_num, precision)
-    # stable term ids: 64-bit hash of the term — the SAME xxhash64 the
-    # fused TF rows already carry (collision-checked below; no broadcast
-    # dictionary join anywhere in the build)
-    term_dict = idf.select(
+    # term_id here is the xxhash64 the fused TF rows are keyed by
+    hashed = idf.select(
         F.xxhash64("term").alias("term_id"), "term", "df", "idf"
-    )
-    term_dict.cache()
-    reminted = False
+    ).cache()
+    aggs = [F.count("*"), F.sum(F.length("term"))]
     if check_collisions:
-        n_terms, term_bytes, n_ids = term_dict.agg(
-            F.count("*"), F.sum(F.length("term")), F.countDistinct("term_id")
-        ).first()
-        if n_ids != n_terms:
-            # astronomically unlikely; re-mint with a salt to stay correct
-            reminted = True
-            term_dict = idf.select(
-                F.xxhash64("term", F.lit(1)).alias("term_id"),
-                "term", "df", "idf",
-            )
-    else:
-        n_terms, term_bytes = term_dict.agg(
-            F.count("*"), F.sum(F.length("term"))
-        ).first()
+        aggs.append(F.countDistinct("term_id"))
+    n_terms, term_bytes, *n_ids = hashed.agg(*aggs).first()
+    if n_ids and n_ids[0] != n_terms:
+        raise ValueError(
+            f"{n_terms - n_ids[0]} xxhash64 collision(s) among {n_terms} "
+            f"terms: two terms would share one TF shuffle key"
+        )
+    # the dictionary mints the stored ids: each term's rank in term
+    # order.  Not cached: the numbering is deterministic, and re-deriving
+    # it from the cached hashed rows for its two readers costs less than
+    # the job that would materialize a cache
+    term_dict = term_ordinals(hashed, n_terms)
     _mark("tf_and_term_dict")
 
     if norms:
@@ -538,15 +552,12 @@ def _build_index_body(
         )
 
     # ---- postings rows --------------------------------------------------
-    # idf deliberately NOT carried per row: pack_blocks_jvm joins it
-    # broadcast at (term_id, salt) group granularity after the shuffle.
-    # tf/doc_len narrow to int32 HERE, before any exchange (counts are
-    # u32 in the reference, term.rs); in the re-mint case term_id is
-    # re-derived from the term string, which costs the pack aggregation
-    # its exchange-free property — correct, and astronomically rare.
+    # idf and the ordinal deliberately NOT carried per row:
+    # pack_blocks_jvm joins them broadcast at (term_id, salt) group
+    # granularity after the shuffle.  tf/doc_len narrow to int32 HERE,
+    # before any exchange (counts are u32 in the reference, term.rs)
     rows = tf.select(
-        (F.xxhash64("term", F.lit(1)) if reminted else F.col("term_id"))
-        .alias("term_id"),
+        "term_id",
         "salt",
         "doc_id",
         F.col("tf_eff").cast("int").alias("tf"),
@@ -567,9 +578,9 @@ def _build_index_body(
     # <= doc_len for the integer dtypes, and the f16 roundtrip can
     # overshoot the raw count by < 2^-9 relative — 2x + 2 is airtight
     packed = pack_blocks_jvm(
-        rows, config.block_size, config.term_buckets, gen=0,
+        rows, config.block_size, gen=0,
         avg_len=build_avg_len, k1=config.k1, b=config.b,
-        idf_df=term_dict.select("term_id", "idf"),
+        idf_df=term_dict.select("term_id", "idf", "ordinal"),
         max_doc_bound=max_id,
         max_tf_bound=2 * max_dl_global + 2,
     )
@@ -579,7 +590,10 @@ def _build_index_body(
     _mark("pack_write")
     write_doc_dict(doc_dict, f"{out_dir}/doc_dict", doc_num)
     write_term_dict(
-        term_dict, f"{out_dir}/term_dict", n_terms, config, reminted=reminted
+        term_dict.select(
+            F.col("ordinal").alias("term_id"), "term", "df", "idf"
+        ),
+        f"{out_dir}/term_dict", n_terms, config,
     )
     dstats.unpersist()
     _mark("dict_writes")

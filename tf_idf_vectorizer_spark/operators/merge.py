@@ -7,14 +7,20 @@ vector, and re-adding the other side's docs (overwrite on key collision)
 src/utils/datastruct/vector/tf.rs:109-118), exercised by
 examples/merge.rs:19-28 after a sharded parallel build.
 
-The Spark restatement is simpler because term ids are CONTENT hashes
-(xxhash64(term)), identical across any two builds: no permutation, no
-remap.  Merging is a dataflow over live posting rows:
+Term ids are dictionary ordinals, so two indexes number the same term
+differently: each side's decoded rows map to their term through that
+side's own term_dict, and the merge mints ids for the union as a build
+does.  Rows are keyed by ``xxhash64(term)`` in between, as a build's
+TF rows are, which also lets inputs with hash ids (older indexes) merge.
+Merging is a dataflow over live posting rows:
 
   decode(live rows of A, minus B's doc ids)  ∪  decode(live rows of B)
+    -> term key = xxhash64(term), via each side's term_dict
     -> df/idf from the merged live rows      (term_dict)
+    -> ids = tables.term_ordinals            (rank in term order)
     -> re-salt (tables.salting over the merged max doc id)
-    -> pack_blocks_jvm(gen 0, merged idf)    (tight max_score bounds)
+    -> pack_blocks_jvm(gen 0, merged idf)    (tight max_score bounds;
+                                              the blocks carry the ids)
     -> tables.write_postings / write_doc_dict / write_term_dict /
        write_lineage / write_meta            (the build's layout: term-
                                               sorted salt files, range-
@@ -42,9 +48,9 @@ from tf_idf_vectorizer_spark.config import DEFAULT, EngineConfig
 from tf_idf_vectorizer_spark.operators.index_build import pack_blocks_jvm
 from tf_idf_vectorizer_spark.operators.stats import with_norms
 from tf_idf_vectorizer_spark.operators.tables import (
-    require_derived_ids,
     salt_of,
     salting,
+    term_ordinals,
     write_doc_dict,
     write_lineage,
     write_meta,
@@ -96,10 +102,6 @@ def _merge(
             f"cannot merge indexes built with different tokenizers "
             f"({tok_a!r} vs {tok_b!r})"
         )
-    # the merge mints xxhash64(term) ids for the union
-    for idx in (a, b):
-        td = idx._table_paths["term_dict"]
-        require_derived_ids(spark.read.parquet(td), td)
     precision = a.meta.get("precision", "f32")
     norms = bool(a.meta.get("norms", False)) and bool(b.meta.get("norms", False))
     os.makedirs(out_dir, exist_ok=True)
@@ -110,7 +112,10 @@ def _merge(
         decoded = idx.decode_postings(None)
         return decoded.join(
             idx.doc_dict.select("doc_id", "gen", "doc_len"), ["doc_id", "gen"]
-        ).select("term_id", "doc_id", "tf", "doc_len")
+        ).join(
+            idx.term_dict.select("term_id", F.xxhash64("term").alias("key")),
+            "term_id",
+        ).select(F.col("key").alias("term_id"), "doc_id", "tf", "doc_len")
 
     rows = _live(a).join(b_ids, "doc_id", "left_anti").unionByName(_live(b))
 
@@ -131,22 +136,24 @@ def _merge(
     # stats re-derived from merged live rows: df = #docs per term (each
     # (term, doc) appears once); idf = N/(df+1) (tfidf.rs:32-40)
     terms = (
-        a.term_dict.select("term_id", "term")
-        .unionByName(b.term_dict.select("term_id", "term"))
+        a.term_dict.select("term")
+        .unionByName(b.term_dict.select("term"))
         .distinct()
+        .select(F.xxhash64("term").alias("term_id"), "term")
     )
     df_stats = rows.groupBy("term_id").agg(F.count("*").alias("df"))
     dt = "float" if precision == "f32" else "double"
-    term_dict = df_stats.join(terms, "term_id").select(
+    hashed = df_stats.join(terms, "term_id").select(
         "term_id",
         "term",
         "df",
         (F.lit(float(doc_num)) / (F.col("df") + F.lit(1.0))).cast(dt).alias("idf"),
-    )
-    term_dict.cache()
-    n_terms, term_bytes = term_dict.agg(
+    ).cache()
+    n_terms, term_bytes = hashed.agg(
         F.count("*"), F.sum(F.length("term"))
     ).first()
+    # keyed by the hash until the pack; the written ids are ordinals
+    term_dict = term_ordinals(hashed, n_terms)
 
     if norms:
         doc_dict = with_norms(doc_dict, rows, term_dict, precision)
@@ -170,16 +177,21 @@ def _merge(
     # it max_score would be 0 and must not be trusted — see
     # meta["tight_bounds"])
     packed = pack_blocks_jvm(
-        salted, config.block_size, config.term_buckets, gen=0,
+        salted, config.block_size, gen=0,
         avg_len=build_avg_len, k1=config.k1, b=config.b,
-        idf_df=term_dict.select("term_id", "idf"),
+        idf_df=term_dict.select("term_id", "idf", "ordinal"),
         max_doc_bound=max_id,
     )
     write_postings(packed, f"{out_dir}/postings", n_salts, config)
     write_doc_dict(doc_dict, f"{out_dir}/doc_dict", doc_num)
-    write_term_dict(term_dict, f"{out_dir}/term_dict", n_terms, config)
+    write_term_dict(
+        term_dict.select(
+            F.col("ordinal").alias("term_id"), "term", "df", "idf"
+        ),
+        f"{out_dir}/term_dict", n_terms, config,
+    )
     write_lineage(spark, f"{out_dir}/postings", f"{out_dir}/manifest", "merge")
-    term_dict.unpersist()
+    hashed.unpersist()
     return write_meta(
         out_dir, t0, doc_num=doc_num, total_len=total_len, n_terms=n_terms,
         term_bytes=term_bytes, n_salts=n_salts, salt_range=salt_range,

@@ -11,23 +11,34 @@ side prunes on is defined once:
   doc_dict   ~1M docs per file, range-partitioned and sorted by doc_id:
              the WAND rescore's doc-range predicates prune row groups
   term_dict  ~250k terms per file, range-partitioned and sorted by term,
-             bounded row groups: a cold lookup prunes to ~one group/term.
-             No term_id column: the id is xxhash64(term), re-derived by
-             read_term_dict (Spark) and term_id_of (driver), except after
-             a collision re-mint, whose ids are stored
+             bounded row groups: a cold lookup prunes to ~one group/term
   meta.json  the scalars every reader needs
+
+Term ids are dense ordinals minted by the dictionary
+(:func:`term_ordinals`): a term's rank in term order when it entered the
+index, stored in term_dict and in every posting block.  A small sorted
+id delta-codes to a few bits per block where a random 64-bit hash did
+not.  Batches give new terms ids past the current maximum and never
+renumber.  ``xxhash64(term)`` keys only the build's TF shuffle and the
+canonical score fold.  Indexes written before (no ``"term_ids":
+"ordinal"`` in meta.json) carry hash ids, derived by
+:func:`read_term_dict` when term_dict does not store them; they serve
+as before, and ``compact()`` renumbers them.
 
 Posting blocks store only what their metadata cannot give
 (operators/codec.py): no first doc id (min_doc has it) and no tfs when
-all are 1.  Blocks and term_dicts written before stored the first id,
-every tf and the term ids; readers take them as they are.
+all are 1, and no ``bucket`` column (the Iceberg publish derives it).
+Blocks written before stored the first id, every tf and the bucket;
+readers take them as they are.
 
 Every parquet table is written with Parquet v2 data pages and zstd
 (WRITE_OPTIONS), dictionary encoding on and the zstd level at its
-default.  Parquet files describe their own format, so readers need no
-switch: v1/snappy files of older indexes, new files and a mix of both
-read alike.  Every batch rewrites term_dict, and compact() rewrites
-postings and doc_dict, in the new format.
+default.  Postings switch the dictionary off for term_id, min_doc and
+max_doc (POSTINGS_OPTIONS), so they delta-code.  Parquet files describe
+their own format, so readers need no switch: v1/snappy files of older
+indexes, new files and a mix of both read alike.  Every batch rewrites
+term_dict, and compact() rewrites postings and doc_dict, in the new
+format.
 """
 
 from __future__ import annotations
@@ -51,14 +62,23 @@ BLOCK_SCHEMA = (
 # files, and parquet schema inference on a file-less dir is an error.
 # min_dl yields the BM25 upper bound, max_dl the lower bound of the WAND
 # driver-theta fast path.  gen is the MVCC generation: a doc's live rows
-# are those whose gen matches its doc_dict row.
-POSTINGS_FILE_SCHEMA = BLOCK_SCHEMA + ", bucket int, gen int"
+# are those whose gen matches its doc_dict row.  Files of older indexes
+# also hold a ``bucket`` column, which this schema does not read.
+POSTINGS_FILE_SCHEMA = BLOCK_SCHEMA + ", gen int"
 
 # the file format of every table write: v2 pages delta-encode the id
 # columns where dictionaries fall back (DELTA_BINARY_PACKED) and
 # prefix-encode the sorted terms; zstd compresses what snappy barely
 # touched (perfbench base indexes: -25% bytes on serve, -33% on scan)
 WRITE_OPTIONS = {"compression": "zstd", "parquet.writer.version": "v2"}
+# added for postings: their sorted id columns delta-code
+# (DELTA_BINARY_PACKED) better without a dictionary.  min_doc/max_doc
+# are near-unique per block, so their dictionaries only fell back to
+# PLAIN; term_id ordinals step by 0 or 1 from block to block
+POSTINGS_OPTIONS = {
+    f"parquet.enable.dictionary#{c}": "false"
+    for c in ("term_id", "min_doc", "max_doc")
+}
 
 DOCS_PER_FILE = 1_000_000
 TERMS_PER_FILE = 250_000
@@ -102,7 +122,7 @@ def write_postings(
         # interleaves equal-salt rows from different chunks and shreds
         # the (term_id, block_seq) order the row-group term index needs
         .sortWithinPartitions("salt", "term_id", "block_seq")
-        .write.options(**WRITE_OPTIONS)
+        .write.options(**WRITE_OPTIONS, **POSTINGS_OPTIONS)
         .partitionBy("salt")
         .option("parquet.block.size", str(int(config.pq_rowgroup_bytes)))
         .mode(mode)
@@ -161,56 +181,69 @@ def write_doc_dict(
 
 
 def write_term_dict(
-    df: DataFrame, path: str, n_rows: int, config: EngineConfig,
-    *, reminted: bool = False,
+    df: DataFrame, path: str, n_rows: int, config: EngineConfig
 ) -> None:
-    """~250k terms per file, with the postings' row-group bound.  The
-    id is ``xxhash64(term)``, which :func:`read_term_dict` re-derives,
-    so it is not stored — a random 64-bit value per row was 80% of the
-    dictionary's bytes.  Only ids re-minted after a hash collision
-    (``build_index(check_collisions=True)``) cannot be re-derived; their
-    dictionary keeps its ``term_id`` column."""
+    """~250k terms per file, with the postings' row-group bound.
+    ``df`` is (term_id, term, df, idf) with ordinal ids; sorted by term,
+    the ids of one build ascend and delta-code to a few bits a row."""
     _write_sorted(
-        df if reminted else df.drop("term_id"),
-        path, "term", -(-int(n_rows) // TERMS_PER_FILE),
+        df, path, "term", -(-int(n_rows) // TERMS_PER_FILE),
         rowgroup_bytes=config.pq_rowgroup_bytes,
     )
 
 
 def read_term_dict(stored: DataFrame) -> DataFrame:
     """A term_dict as read from its files -> (term_id, term, df, idf).
-    A stored id column (re-minted ids, or an index written before ids
-    were derived) is kept; otherwise the id is ``xxhash64(term)``."""
+    A stored id column is kept; a dictionary without one (hash ids
+    derived on read, the layout before ordinals) gets
+    ``xxhash64(term)``."""
     if "term_id" in stored.columns:
         return stored
     return stored.select(F.xxhash64("term").alias("term_id"), *stored.columns)
 
 
-def ids_reminted(stored: DataFrame) -> bool:
-    """Whether a term_dict as read from its files holds ids that are not
-    ``xxhash64(term)``, so a rewrite must keep storing them.  Dictionaries
-    without the column cost no Spark job."""
-    return "term_id" in stored.columns and not stored.filter(
-        F.col("term_id") != F.xxhash64("term")
-    ).isEmpty()
-
-
-def require_derived_ids(stored: DataFrame, path: str) -> None:
-    """Refuse to extend the term_dict at ``path`` when its ids were
-    re-minted: batches and merges mint ``xxhash64(term)``, which would
-    file a re-used term under a second id that lookups never return."""
-    if ids_reminted(stored):
-        raise ValueError(
-            f"the term_dict at {path} holds term ids re-minted after a "
-            f"hash collision (build_index(check_collisions=True)); "
-            f"batches and merges mint xxhash64(term) ids and cannot "
-            f"extend it — rebuild the index instead"
+def term_ordinals(df: DataFrame, n_rows: int, base: int = 0) -> DataFrame:
+    """``df`` (distinct ``term``, ...) plus ``ordinal``: ``base`` + the
+    term's rank in term order.  The rows are range-partitioned by term
+    as :func:`write_term_dict` partitions them, sorted within each
+    partition, and numbered by per-partition offsets, so no single task
+    sees every term.  ``n_rows`` (an estimate is fine) picks the
+    partition count.  Up to one file's worth of terms is one partition,
+    numbered in place with no Spark job.  Past that, the ranged rows are
+    checkpointed first and one job counts each partition: a range
+    exchange samples anew on every run, so the counts and the numbering
+    must read the same materialized rows.  Either way the numbering is
+    the same however often the result is evaluated."""
+    parts = -(-int(n_rows) // TERMS_PER_FILE)
+    row = F.monotonically_increasing_id()
+    if parts <= 1:
+        return df.coalesce(1).sortWithinPartitions("term").select(
+            *df.columns, (F.lit(int(base)) + row).alias("ordinal")
         )
+    ranged = df.repartitionByRange(parts, "term").sortWithinPartitions(
+        "term"
+    ).select(
+        *df.columns, F.spark_partition_id().alias("_p"), row.alias("_r")
+    ).localCheckpoint()
+    sizes = dict(ranged.groupBy("_p").count().collect())
+    offsets, acc = [], int(base)
+    for p in range(parts):
+        offsets.append(acc)
+        acc += int(sizes.get(p, 0))
+    # monotonically_increasing_id: the partition id in the upper 31
+    # bits, the row's position in its partition in the lower 33
+    p = F.col("_p")
+    return ranged.select(
+        *df.columns,
+        (F.element_at(F.array(*map(F.lit, offsets)), p + 1)
+         + F.col("_r") - F.shiftleft(p.cast("long"), 33)).alias("ordinal"),
+    )
 
 
 # Spark's xxhash64 (XXH64, seed 42, over the UTF-8 bytes) in pure
-# Python, for the driver's term_dict point lookup: a handful of query
-# terms are hashed with no Spark job
+# Python: the driver's canonical fold key of a query term, and its
+# dictionary point lookup on an index with derived hash ids — a handful
+# of query terms are hashed with no Spark job
 _P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
 _P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
 _M64 = (1 << 64) - 1
@@ -285,6 +318,9 @@ def write_meta(
         "block_size": int(config.block_size),
         "precision": precision,
         "norms": bool(norms),
+        # term ids are dictionary ordinals (term_ordinals); an index
+        # without this marker holds xxhash64(term) ids
+        "term_ids": "ordinal",
         "generation": 0,
         "tokenizer": tokenizer,
         "k1": float(config.k1),

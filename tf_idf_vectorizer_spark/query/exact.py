@@ -225,11 +225,12 @@ class ExactSearcher:
             )
             out = self._hits(hits)
         else:
-            # canonical fold key: xxhash64(term) — the SAME value the
-            # packed build assigns as term_id (index_build.py), so the
-            # exact surface folds per-doc partials in the identical
-            # ascending order as every PackedIndex path and all plans
-            # agree bit-for-bit (VERDICT r4 finding #1; the plain F.sum
+            # canonical fold key: xxhash64(term) — the SAME key every
+            # PackedIndex path folds by (computed from the term there
+            # too, never the stored term id, which is a dictionary
+            # ordinal), so the exact surface folds per-doc partials in
+            # the identical ascending order and all plans agree
+            # bit-for-bit (VERDICT r4 finding #1; the plain F.sum
             # here folded in physical row order, so the exact surface
             # could split k-th-score ties differently from itself across
             # partitionings).  Hashing the raw query terms (one
@@ -247,7 +248,7 @@ class ExactSearcher:
                 .collect()
             ]
             joined = self.tf.join(qtab, "term").withColumn(
-                "term_id", F.xxhash64("term")
+                "fold", F.xxhash64("term")
             )
             partial = self._score_partials(algo, qtab, k1, b)
             # default filter (OR of the query terms): its candidate set

@@ -68,6 +68,7 @@ lower scores; 0 stays a valid upper bound).
 from __future__ import annotations
 
 import bisect
+import functools
 import glob
 import json
 import math
@@ -91,6 +92,17 @@ from tf_idf_vectorizer_spark.operators.codec import (
 from tf_idf_vectorizer_spark.operators.tables import read_term_dict, term_id_of
 
 _KEY_COLS = ["term_id", "salt", "block_seq", "gen"]
+
+# the canonical fold key of a query term: ``xxhash64(term)``, which
+# ExactSearcher computes in Spark — not the stored term id, so that
+# every path and every index layout folds in one order
+_fold_key = functools.lru_cache(maxsize=1 << 16)(term_id_of)
+
+
+def _in_fold_order(qinfo: list[dict]) -> list[dict]:
+    """Query dictionary rows in canonical fold order (see
+    :func:`canonical_fold`)."""
+    return sorted(qinfo, key=lambda r: _fold_key(r["term"]))
 
 
 def _arrow_df(spark: SparkSession, data, schema: str) -> DataFrame:
@@ -225,7 +237,7 @@ def _bm25_partial(ln_idf, tf, dl, k1: float, b: float, avg_len: float):
     ``log(idf) * (tf * (k1+1)) / (tf + k1*((1-b) + (b*dl)/avg))``.
     IEEE multiplication/addition are not associative, so every scoring
     path (JVM exact, flagged decode, numpy serving/rescore) must use the
-    same grouping AND fold per-doc partials in ascending term_id order,
+    same grouping AND fold per-doc partials in canonical order,
     or two docs with different inputs can land on the same double in one
     path and one ulp apart in another — splitting top-k ties
     differently between rank-identical paths (observed at 8M entries
@@ -249,7 +261,7 @@ def _fold(ids_parts: list, score_parts: list, dl_parts: list | None = None):
     """Driver twin of :func:`canonical_fold`: per-doc sums of per-term
     score partials -> (sorted unique doc ids, sums, doc_len per id or
     None).  bincount accumulates in row order, so parts passed in
-    ascending term_id order fold canonically."""
+    canonical fold order fold canonically."""
     uids, inv = np.unique(np.concatenate(ids_parts), return_inverse=True)
     sums = np.bincount(inv, weights=np.concatenate(score_parts))
     if dl_parts is None:
@@ -259,9 +271,13 @@ def _fold(ids_parts: list, score_parts: list, dl_parts: list | None = None):
     return uids, sums, udl
 
 
-def canonical_fold(partial, term_ids: list[int], key_col: str = "term_id"):
+def canonical_fold(partial, keys: list[int], key_col: str = "fold"):
     """Deterministic per-doc score aggregate: fold the per-term score
-    partials in ASCENDING term_id order.  IEEE addition is commutative
+    partials in ASCENDING order of their term's fold key
+    ``xxhash64(term)`` (column ``key_col``, values ``keys``).  It is
+    computed from the term, never read as the stored term id: indexes
+    with ordinal and with hash ids, and ExactSearcher, fold alike.
+    IEEE addition is commutative
     but not associative, and a plain ``F.sum`` folds in physical row
     order — which varies per doc with partitioning, so two docs with
     IDENTICAL inputs could differ in the last ulp and split a tie
@@ -272,15 +288,14 @@ def canonical_fold(partial, term_ids: list[int], key_col: str = "term_id"):
     left-to-right fold is bit-deterministic — the reference's
     single-threaded accumulation order (scoring.rs:428), restated.
     For very wide queries the conditional-agg tree would bloat codegen;
-    fall back to a sort-then-fold over collected (term_id, partial)
+    fall back to a sort-then-fold over collected (key, partial)
     structs, same fold order (bit-equal: x+0.0 == 0.0+x == x for every
     reachable partial, so missing-term coalesce and the 0.0 seed agree).
 
     Shared by every scoring surface — the PackedIndex distributed paths
-    AND ExactSearcher (which keys on ``xxhash64(term)``, the same value
-    the build assigns as term_id, index_build.py) — so one perimeter
-    covers all plans (VERDICT r4 finding #1)."""
-    tids = sorted(int(t) for t in term_ids)
+    AND ExactSearcher — so one perimeter covers all plans (VERDICT r4
+    finding #1)."""
+    tids = sorted(int(t) for t in keys)
     if not tids:
         # no query terms -> the joined relation is empty; keep an
         # aggregate expression so groupBy().agg() stays well-formed
@@ -602,9 +617,9 @@ class PackedIndex:
         tset = pa.array(ts, pa.string())
         out: list[dict] = []
         for pf, gs in sel:
-            # term_id is stored only by indexes that predate derived ids
-            # or re-minted them; otherwise it is xxhash64(term), hashed
-            # here by the pure-Python twin (tables.term_id_of)
+            # term_id is stored, except by indexes with derived hash
+            # ids: there it is xxhash64(term), hashed here by the
+            # pure-Python twin (tables.term_id_of)
             stored = "term_id" in pf.schema_arrow.names
             tbl = pf.read_row_groups(
                 gs, columns=["term", *(["term_id"] if stored else []), "df", "idf"]
@@ -687,15 +702,13 @@ class PackedIndex:
         return other
 
     def _blocks_for(self, term_ids: list[int] | None) -> DataFrame:
-        """Posting blocks for the given terms (bucket + term_id pruned),
-        or the whole postings table when term_ids is None (maintenance
-        paths: compact, norms refresh — never a term-dictionary collect)."""
+        """Posting blocks for the given terms (term_id pruned: the files
+        are term_id-sorted, so its row-group stats prune), or the whole
+        postings table when term_ids is None (maintenance paths:
+        compact, norms refresh — never a term-dictionary collect)."""
         if term_ids is None:
             return self._postings()
-        buckets = sorted({tid % self.meta["term_buckets"] for tid in term_ids})
-        return self._postings().filter(
-            F.col("bucket").isin(buckets) & F.col("term_id").isin(term_ids)
-        )
+        return self._postings().filter(F.col("term_id").isin(term_ids))
 
     def _broadcast(self, value):
         """Broadcast owned by this instance (released by unpersist)."""
@@ -746,7 +759,16 @@ class PackedIndex:
         """Deterministic per-doc score aggregate — see ``canonical_fold``
         (module level, shared with ExactSearcher so every scoring surface
         sits inside one bit-determinism perimeter)."""
-        return canonical_fold(partial, [int(r["term_id"]) for r in qinfo])
+        return canonical_fold(partial, [_fold_key(r["term"]) for r in qinfo])
+
+    def _qdf(self, qinfo: list[dict]) -> DataFrame:
+        """The query terms' broadcast side table (term_id, idf, fold)."""
+        return _arrow_df(
+            self.spark,
+            [(r["term_id"], float(r["idf"]), _fold_key(r["term"]))
+             for r in qinfo],
+            "term_id long, idf double, fold long",
+        )
 
     def _score_decoded(
         self,
@@ -761,12 +783,7 @@ class PackedIndex:
         config's quantize/denorm chain ran once at pack time, so every
         dtype (incl. the reference's default f16, mod.rs:50) matches
         ExactSearcher here."""
-        qdf = _arrow_df(
-            self.spark,
-            [(r["term_id"], float(r["idf"])) for r in qinfo],
-            "term_id long, idf double",
-        )
-        joined = decoded.join(F.broadcast(qdf), "term_id").join(
+        joined = decoded.join(F.broadcast(self._qdf(qinfo)), "term_id").join(
             self.doc_dict.select("doc_id", "gen", "doc_len"), ["doc_id", "gen"]
         )
         partial = _bm25_partial_col(k1, b, self.avg_len)
@@ -1231,20 +1248,28 @@ class PackedIndex:
         self, qinfo: list[dict], k1: float, b: float
     ) -> dict[int, tuple]:
         """{term_id: (doc ids, BM25 partials, doc_lens)} over the live
-        postings of the terms — one decode through the serving LRU."""
-        ln_idf = {r["term_id"]: math.log(float(r["idf"])) for r in qinfo}
-        return {
-            t: (dids, _bm25_partial(ln_idf[t], tf, dl, k1, b, self.avg_len), dl)
-            for t, (dids, tf, dl) in self._decode_live_driver(list(ln_idf)).items()
+        postings of the terms, in canonical fold order — one decode
+        through the serving LRU."""
+        ln_idf = {
+            r["term_id"]: math.log(float(r["idf"]))
+            for r in _in_fold_order(qinfo)
         }
+        live = self._decode_live_driver(list(ln_idf))
+        out = {}
+        for t, v in ln_idf.items():
+            dids, tf, dl = live[t]
+            out[t] = (dids, _bm25_partial(v, tf, dl, k1, b, self.avg_len), dl)
+        return out
 
     @staticmethod
     def _bm25_fold(partials: dict[int, tuple], tids) -> tuple:
         """The driver BM25 fold: per-doc sums of the ``tids`` terms'
-        partials, added in ascending term_id order (the canonical fold,
-        bit-identical to every other scoring path) -> (sorted doc ids,
-        scores, doc_lens); empty arrays when no term has postings."""
-        parts = [partials[t] for t in sorted(set(tids)) if t in partials]
+        partials, added in the order of ``partials`` (the canonical
+        fold order :meth:`_bm25_partials` builds, bit-identical to every
+        other scoring path) -> (sorted doc ids, scores, doc_lens); empty
+        arrays when no term has postings."""
+        want = set(tids)
+        parts = [v for t, v in partials.items() if t in want]
         if not parts:
             return np.empty(0, np.int64), np.empty(0), np.empty(0)
         return _fold(*zip(*parts))
@@ -1503,7 +1528,8 @@ class PackedIndex:
                     )
                 return out
         pairs = [
-            (int(qid), qinfo[t]["term_id"], float(qinfo[t]["idf"]))
+            (int(qid), qinfo[t]["term_id"], float(qinfo[t]["idf"]),
+             _fold_key(t))
             for qid, ts in queries.items()
             for t in set(ts)
             if t in qinfo
@@ -1522,7 +1548,8 @@ class PackedIndex:
             ):
                 return self._bm25_batch_driver(queries, qinfo, k, k1, b)
         qdf = _arrow_df(
-            self.spark, pairs, "query_id long, term_id long, idf double"
+            self.spark, pairs,
+            "query_id long, term_id long, idf double, fold long",
         )
         tids = sorted({p[1] for p in pairs})
         decoded = self.decode_postings(tids)
@@ -1532,9 +1559,7 @@ class PackedIndex:
         )
         partial = _bm25_partial_col(k1, b, self.avg_len)
         scored = joined.groupBy("query_id", "doc_id").agg(
-            self._det_score(
-                partial, [{"term_id": t} for t in tids]
-            ).alias("score"),
+            canonical_fold(partial, {p[3] for p in pairs}).alias("score"),
             F.first("doc_len").alias("doc_len"),
         )
         from pyspark.sql import Window
@@ -1822,8 +1847,10 @@ class PackedIndex:
         (a pyarrow point read on a local index, no Spark job) and is
         planned by :meth:`_wand_chunk`.  θ carries from chunk to chunk:
         the k-th score of the rows merged so far is a real doc's exact
-        score.  Returns the (score desc, doc_id asc) merge of the
-        chunks' rows."""
+        score.  A multi-salt chunk that :meth:`_wand_chunk` hands back
+        (its whole-chunk rescore would leave the driver) is re-cut into
+        driver-sized runs of its salts (:meth:`_driver_runs`).  Returns
+        the (score desc, doc_id asc) merge of the chunks' rows."""
         tids = [r["term_id"] for r in qinfo]
         idf_map = {r["term_id"]: float(r["idf"]) for r in qinfo}
         tight = self._tight_bounds_ok(k1, b)
@@ -1859,34 +1886,58 @@ class PackedIndex:
         sp = self._sparse_postings_np(sparse_ids, idf_map, k1, b)
         theta = self._floor_theta(sp, k) if nonneg else -math.inf
         rows: list[tuple] = []
-        pending = self._wand_chunks(qinfo)
+        # (salts, metadata already read or None)
+        pending = [(s, None) for s in self._wand_chunks(qinfo)]
         while pending:
-            salts = pending.pop(0)
-            # past generation 0 stale rows escape the dictionary bound:
-            # a multi-salt read stops one row past META_COLLECT_MAX, and
-            # a chunk that overflows splits
-            capped = not gen0 and (salts is None or len(salts) > 1)
-            # metadata columns only: the projection never reads payloads
-            mp = self._fetch_blocks(
-                tids, meta_cols, salts=salts,
-                limit=self.META_COLLECT_MAX + 1 if capped else None,
-            )
-            if capped and len(mp) > self.META_COLLECT_MAX:
-                pending[:0] = self._wand_chunks(
-                    qinfo, salts or self._wand_salts()
+            salts, mp = pending.pop(0)
+            if mp is None:
+                # past generation 0 stale rows escape the dictionary
+                # bound: a multi-salt read stops one row past
+                # META_COLLECT_MAX, and a chunk that overflows splits
+                capped = not gen0 and (salts is None or len(salts) > 1)
+                # metadata columns only: the projection never reads
+                # payloads
+                mp = self._fetch_blocks(
+                    tids, meta_cols, salts=salts,
+                    limit=self.META_COLLECT_MAX + 1 if capped else None,
                 )
-                continue
+                if capped and len(mp) > self.META_COLLECT_MAX:
+                    pending[:0] = [(s, None) for s in self._wand_chunks(
+                        qinfo, salts or self._wand_salts()
+                    )]
+                    continue
             if not len(mp):
                 continue
             if len(rows) >= k:
                 theta = max(theta, rows[k - 1][1])
-            rows = sorted(
-                rows + self._wand_chunk(
-                    mp, sp, theta, qinfo, k, k1, b, tight and nonneg
-                ),
-                key=lambda r: (-r[1], r[0]),
-            )[:k]
+            got = self._wand_chunk(
+                mp, sp, theta, qinfo, k, k1, b, tight and nonneg
+            )
+            if got is None:
+                pending[:0] = self._driver_runs(mp)
+                continue
+            rows = sorted(rows + got, key=lambda r: (-r[1], r[0]))[:k]
         return rows
+
+    def _driver_runs(self, mp: pd.DataFrame) -> list[tuple]:
+        """A chunk's block metadata ``mp`` cut into runs of ascending
+        salts whose blocks' ``n`` each sum to a driver-sized rescore
+        (:meth:`_driver_ok`), one salt at least -> [(salts, metadata
+        rows of those salts)]."""
+        vol = mp.groupby("salt")["n"].sum()
+        runs, run, acc = [], [], 0
+        for salt, v in zip(vol.index.tolist(), vol.tolist()):
+            if run and not self._driver_ok(acc + v):
+                runs.append(run)
+                run, acc = [], 0
+            run.append(salt)
+            acc += v
+        runs.append(run)
+        salt_col = mp["salt"].to_numpy()
+        return [
+            (run, mp[np.isin(salt_col, run)].reset_index(drop=True))
+            for run in runs
+        ]
 
     def _wand_chunks(self, qinfo: list[dict], salts: list[int] | None = None) -> list:
         """The runs of whole salts ("chunks") a WAND query plans one at
@@ -1938,14 +1989,19 @@ class PackedIndex:
         k1: float,
         b: float,
         meta_theta: bool,
-    ) -> list[tuple]:
+    ) -> list[tuple] | None:
         """One chunk's plan over its block metadata ``mp`` and the
         query's sparse postings ``sp`` (the chunk's blocks meet only its
         own docs of them): bounds, θ (at least ``theta``;
         raised from max_score when ``meta_theta``), prune, rescore ->
         the chunk's top-k rows, exact for every doc that can reach the
         query's top-k.  A chunk with no θ, or whose prune keeps >=90% of
-        its blocks, or that has no live candidate, is rescored whole."""
+        its blocks, or that has no live candidate, is rescored whole.
+        None when that whole-chunk rescore would leave the driver while
+        the chunk spans salts of which one alone fits it:
+        :meth:`_wand_topk` then re-cuts the chunk into driver-sized runs
+        (one distributed rescore of the chunk measured ~10x slower than
+        its one-salt runs on bench.py's wide query)."""
         n_blocks = len(mp)
         bterm = mp["term_id"].to_numpy(np.int64)
         blo = mp["min_doc"].to_numpy(np.int64)
@@ -1959,8 +2015,15 @@ class PackedIndex:
         if "max_score" in mp.columns:
             bub = np.minimum(bub, mp["max_score"].to_numpy(np.float64))
 
-        def whole() -> list[tuple]:
+        def whole() -> list[tuple] | None:
             # every block flagged: exact over every doc of the chunk
+            per_salt = mp.groupby("salt")["n"].sum()
+            if (
+                per_salt.size > 1
+                and not self._driver_ok(int(per_salt.sum()))
+                and self._driver_ok(int(per_salt.min()))
+            ):
+                return None
             return self._rescore_rows(
                 mp, np.ones(n_blocks, dtype=bool), _merge_ranges(blo, bhi),
                 qinfo, k, k1, b,
@@ -2089,7 +2152,9 @@ class PackedIndex:
         into the payload scan."""
         term, salt, bseq, gen = (blocks[c].to_numpy(np.int64) for c in _KEY_COLS)
         if self._driver_ok(int(blocks["n"].sum())):
-            idf_map = {r["term_id"]: float(r["idf"]) for r in qinfo}
+            idf_map = {
+                r["term_id"]: float(r["idf"]) for r in _in_fold_order(qinfo)
+            }
             return self._rescore_driver_rows(
                 term, salt, bseq, gen, flags, idf_map, k1, b, k
             )
@@ -2139,7 +2204,8 @@ class PackedIndex:
         pruning, the candidate volume is tiny — a distributed rescore
         would spend 10-100x the candidate decode cost shuffling the
         doc_dict join.  Requires _doc_stats_np() (driver-sized corpus
-        stats), which the caller checks."""
+        stats), which the caller checks.  ``idf_map`` lists the query
+        terms in canonical fold order."""
         kdf_pd = pd.DataFrame(
             {
                 "term_id": term.astype(np.int64),
@@ -2156,19 +2222,23 @@ class PackedIndex:
         ptid, _dids, tf, didx, ptgt = self._decode_live_np(pdf, ("is_target",))
         dl = dls[didx]
         # canonical fold: bincount accumulates in row order, so sort the
-        # rows by term_id — each doc's partials then add in ascending
-        # term_id order, bit-identical to every other scoring path
-        o = np.argsort(ptid, kind="stable")
-        ptid, tf, ptgt, dl, didx = ptid[o], tf[o], ptgt[o], dl[o], didx[o]
-        ln_idf = np.zeros(didx.size)
-        for t, v in idf_map.items():
-            ln_idf[ptid == t] = math.log(v)
+        # rows by their term's place in the fold order — each doc's
+        # partials then add canonically, bit-identical to every other
+        # scoring path
+        rank = np.zeros(ptid.size, np.int64)
+        ln_idf = np.zeros(ptid.size)
+        for i, (t, v) in enumerate(idf_map.items()):
+            m = ptid == t
+            rank[m] = i
+            ln_idf[m] = math.log(v)
+        o = np.argsort(rank, kind="stable")
+        ln_idf, tf, ptgt, dl, didx = ln_idf[o], tf[o], ptgt[o], dl[o], didx[o]
         score = _bm25_partial(ln_idf, tf, dl, k1, b, self.avg_len)
         # group by the PINNED doc index instead of np.unique (which
         # re-sorts the full entry array): bincount over the corpus-sized
         # index is O(entries + n_docs) and accumulates in row order —
-        # rows are term_id-sorted above, so each doc's partials still
-        # add in ascending term_id order (canonical fold preserved)
+        # rows are in fold order above, so each doc's partials still
+        # add canonically
         sums = np.bincount(didx, weights=score, minlength=sids.size)
         # candidates: docs appearing in >=1 TARGET (surviving) block
         cand = np.zeros(sids.size, dtype=bool)
@@ -2215,11 +2285,7 @@ class PackedIndex:
             blocks = blocks.filter(block_filter)
         blocks = blocks.join(kdf, _KEY_COLS)
         decoded = decode_blocks_df(blocks, carry=("is_target",))
-        qdf = _arrow_df(
-            self.spark,
-            [(r["term_id"], float(r["idf"])) for r in qinfo],
-            "term_id long, idf double",
-        )
+        qdf = self._qdf(qinfo)
         keys = ["doc_id", "gen"]
         dd = self.doc_dict.select(*keys, "doc_len")
         if doc_ranges is not None:

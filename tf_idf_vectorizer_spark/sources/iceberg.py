@@ -15,8 +15,9 @@ the same calls publish and serve the index out of a real catalog:
     (SQL extensions + a hadoop-type SparkCatalog named ``local``);
   * ``publish_index(spark, index_dir, namespace)`` — mirror a built
     index's tables into the catalog via ``writeTo``: postings
-    partitioned by (salt, bucket) so query-time pruning matches the
-    parquet layout, dictionaries unpartitioned, meta as a 1-row table;
+    partitioned by (salt, bucket), with the bucket computed from the
+    term id at publish (the parquet postings do not store it),
+    dictionaries unpartitioned, meta as a 1-row table;
   * ``read_table`` / ``snapshot_id`` — serve tables back and expose the
     per-table snapshot for cache invalidation and time travel;
   * checkpoint-resume maps onto Iceberg snapshots: each salt commit is
@@ -63,6 +64,23 @@ def _ident(namespace: str, name: str, catalog: str = CATALOG) -> str:
     return f"{catalog}.{namespace}.{name}"
 
 
+def postings_frame(spark: SparkSession, index_dir: str, meta: dict) -> DataFrame:
+    """The COMMITTED posting rows of a parquet index (the generation
+    watermark excludes orphans of a crashed incremental batch), read
+    through the live dir the meta commit pointer names, with the
+    ``bucket`` the catalog table partitions on:
+    ``pmod(term_id, meta["term_buckets"])``."""
+    from tf_idf_vectorizer_spark.ioutil import table_path
+    from tf_idf_vectorizer_spark.operators.tables import POSTINGS_FILE_SCHEMA
+
+    return spark.read.schema(POSTINGS_FILE_SCHEMA).parquet(
+        table_path(index_dir, meta, "postings")
+    ).filter(F.col("gen") <= int(meta.get("generation", 0))).withColumn(
+        "bucket",
+        F.pmod(F.col("term_id"), F.lit(int(meta["term_buckets"]))).cast("int"),
+    )
+
+
 def publish_index(
     spark: SparkSession,
     index_dir: str,
@@ -70,8 +88,8 @@ def publish_index(
     catalog: str = CATALOG,
 ) -> dict:
     """Mirror a built parquet index into Iceberg tables.  Returns
-    {table_name: snapshot_id}.  Postings keep their (salt, bucket)
-    partitioning so Iceberg partition pruning reproduces the parquet
+    {table_name: snapshot_id}.  Postings are partitioned by (salt,
+    bucket) so Iceberg partition pruning reproduces the parquet
     directory/row-group pruning the query path relies on."""
     if not iceberg_available(spark):
         raise RuntimeError(
@@ -85,22 +103,17 @@ def publish_index(
         meta = json.load(fh)
     spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {catalog}.{namespace}")
     snaps: dict = {}
-    # resolve live dirs through the meta commit pointer and publish only
-    # COMMITTED posting rows (the generation watermark excludes orphans
-    # of a crashed incremental batch)
-    postings = spark.read.parquet(table_path(index_dir, meta, "postings")).filter(
-        F.col("gen") <= int(meta.get("generation", 0))
-    )
     (
-        postings.writeTo(_ident(namespace, "postings", catalog))
+        postings_frame(spark, index_dir, meta)
+        .writeTo(_ident(namespace, "postings", catalog))
         .partitionedBy(F.col("salt"), F.col("bucket"))
         .createOrReplace()
     )
     for name in ("doc_dict", "term_dict"):
         df = spark.read.parquet(table_path(index_dir, meta, name))
         if name == "term_dict":
-            # catalog readers outside Spark join postings on term_id,
-            # which they cannot re-derive from Spark's xxhash64
+            # catalog readers outside Spark join postings on term_id;
+            # an index with derived hash ids does not store it
             df = read_term_dict(df)
         df.writeTo(_ident(namespace, name, catalog)).createOrReplace()
     spark.read.parquet(f"{index_dir}/manifest").writeTo(

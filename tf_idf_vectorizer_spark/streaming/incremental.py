@@ -97,9 +97,8 @@ from tf_idf_vectorizer_spark.operators.index_build import (
 from tf_idf_vectorizer_spark.operators.stats import with_norms
 from tf_idf_vectorizer_spark.operators.tables import (
     POSTINGS_FILE_SCHEMA,
-    read_term_dict,
-    require_derived_ids,
     salt_of,
+    term_ordinals,
     write_doc_dict,
     write_lineage,
     write_postings,
@@ -290,9 +289,14 @@ class IncrementalIndex:
             phases[name] = round(now - _last[0], 3)
             _last[0] = now
 
-        # before anything is written: a batch mints xxhash64(term) ids
-        stored_td = spark.read.parquet(self._path(meta, "term_dict"))
-        require_derived_ids(stored_td, self._path(meta, "term_dict"))
+        if meta.get("term_ids") != "ordinal":
+            # before anything is written: new terms get ids past the
+            # dictionary's ordinals, which a hash-id index does not have
+            raise ValueError(
+                f"the index at {self.dir} has hash term ids (written "
+                f"before dictionary ordinals); run compact() once to "
+                f"renumber it, then apply batches"
+            )
         committed_gen = int(meta.get("generation", 0))
         gen = committed_gen + 1
         postings_path = self._path(meta, "postings")
@@ -309,7 +313,7 @@ class IncrementalIndex:
         orig_doc_dict = doc_dict
         dd_extra = [c for c in doc_dict.columns
                     if c not in ("doc_id", "doc_len", "norm", "gen")]
-        term_dict = read_term_dict(stored_td)
+        term_dict = spark.read.parquet(self._path(meta, "term_dict"))
 
         ids_df = None
         if adds is not None:
@@ -518,8 +522,15 @@ class IncrementalIndex:
             if adds is None:
                 # the tf_adds path was not built on the fused exchange
                 rows = rows.repartition(pack_parts, "term_id", "salt")
+            # term_id is xxhash64(term) up to the pack, which writes the
+            # dictionary ids of _term_ids
+            df_add = tf.groupBy("term_id", "term").agg(
+                F.count("*").alias("df_add")
+            ).cache()
+            self._held.append(df_add)
+            ids = self._term_ids(df_add, term_dict)
             packed = pack_blocks_jvm(
-                rows, int(meta["block_size"]), meta["term_buckets"], gen=gen,
+                rows, int(meta["block_size"]), gen=gen, idf_df=ids,
                 max_doc_bound=int(max_new_id or 0),
                 max_tf_bound=2 * int(max_new_dl or 0) + 2,
             )
@@ -537,9 +548,6 @@ class IncrementalIndex:
             )
             _mark("lineage")
 
-            df_add = tf.groupBy("term_id", "term").agg(
-                F.count("*").alias("df_add")
-            )
             add_rows = new_doc_stats.select(
                 "doc_id",
                 "doc_len",
@@ -587,8 +595,10 @@ class IncrementalIndex:
                 )
             )
         if df_add is not None:
-            adds_stats = df_add.select(
-                "term_id", F.col("term").alias("new_term"), "df_add"
+            adds_stats = df_add.join(ids, "term_id").select(
+                F.col("ordinal").alias("term_id"),
+                F.col("term").alias("new_term"),
+                "df_add",
             )
             new_stats = (
                 new_stats.join(adds_stats, "term_id", "full_outer")
@@ -672,6 +682,31 @@ class IncrementalIndex:
             meta = self.refresh_norms()
         return meta
 
+    @staticmethod
+    def _term_ids(batch_terms: DataFrame, term_dict: DataFrame) -> DataFrame:
+        """(term_id = xxhash64(term), ordinal) of every batch term: the
+        id ``term_dict`` already holds for it, or for a new term the
+        next id past the dictionary's largest, in term order.  Existing
+        ids never change.  One Spark job counts the new terms and reads
+        that largest id."""
+        known = batch_terms.select("term_id", "term").join(
+            term_dict.select("term", F.col("term_id").alias("ordinal")),
+            "term",
+            "left",
+        )
+        new = known.filter(F.col("ordinal").isNull()).select(
+            "term_id", "term"
+        )
+        n_new, top = new.agg(F.count("*")).crossJoin(
+            term_dict.agg(F.max("term_id"))
+        ).first()
+        minted = term_ordinals(
+            new, n_new, base=0 if top is None else int(top) + 1
+        )
+        return known.filter(F.col("ordinal").isNotNull()).select(
+            "term_id", "ordinal"
+        ).unionByName(minted.select("term_id", "ordinal"))
+
     # ------------------------------------------------------------------
     @_releasing
     def set_term_counts(self, updates: DataFrame, refresh_norms: bool = False) -> dict:
@@ -753,9 +788,16 @@ class IncrementalIndex:
         Each block's ``max_score`` is the TRUE per-block maximum under
         the current corpus stats, so the tight WAND bounds stay valid
         (generation returns to 0, exactly when ``_tight_bounds_ok``
-        trusts them).  No term-dictionary collect: liveness alone
-        decides survival, and ln(idf) joins in the JVM.  Per-salt
-        lineage rows of the new postings append to the manifest."""
+        trusts them).  Liveness alone decides survival, and ln(idf)
+        joins in the JVM: no term-dictionary collect, except to
+        renumber hash ids (below).  Per-salt
+        lineage rows of the new postings append to the manifest.
+
+        An index with hash term ids (written before dictionary
+        ordinals) is renumbered on the way: the dictionary mints
+        ordinals as a build does, the kernel maps each live row's id
+        through a broadcast sorted (hash, ordinal) array, and term_dict
+        is rewritten with the ids.  Batches can extend it from then on."""
         spark = self.spark
         meta = self._meta()
         idx = PackedIndex(spark, self.dir, self.config)
@@ -781,7 +823,23 @@ class IncrementalIndex:
             par, min(-(-total_len // len(starts) // 150_000), 64 * par)
         )
         blocks = idx._postings().select("salt", *BLOCK_COLS)
-        ln_idf = idx.term_dict.select(
+        term_dict, id_map = idx.term_dict, None
+        renumber = meta.get("term_ids") != "ordinal"
+        if renumber:
+            minted = term_ordinals(
+                idx.term_dict, int(meta.get("n_terms", 0))
+            ).cache()
+            pairs = idx._topandas_arrow(minted.select("term_id", "ordinal"))
+            old = pairs["term_id"].to_numpy(np.int64)
+            o = np.argsort(old)
+            id_map = spark.sparkContext.broadcast(
+                (old[o], pairs["ordinal"].to_numpy(np.int64)[o])
+            )
+            self._held += [minted, id_map]
+            term_dict = minted.select(
+                F.col("ordinal").alias("term_id"), "term", "df", "idf"
+            )
+        ln_idf = term_dict.select(
             "term_id", F.log(F.col("idf").cast("double")).alias("ln_idf")
         )
         # declare the same nullability the JVM pack derives (posexplode
@@ -814,8 +872,8 @@ class IncrementalIndex:
             self._held.append(bc)
             packed = part.repartition(n_parts, "term_id", "salt").mapInPandas(
                 make_live_repacker(
-                    bc, int(meta["block_size"]), int(meta["term_buckets"]),
-                    k1=k1, b=b, avg_len=avg_len, salt_range=salt_range,
+                    bc, int(meta["block_size"]), k1=k1, b=b,
+                    avg_len=avg_len, salt_range=salt_range, id_map=id_map,
                 ),
                 schema=out_schema,
             )
@@ -845,11 +903,20 @@ class IncrementalIndex:
             f"{self.dir}/{dd_name}",
             meta["doc_num"],
         )
+        new_tables = {"postings": p_name, "doc_dict": dd_name}
+        if renumber:
+            td_name = f"term_dict_v{ver}"
+            write_term_dict(
+                term_dict, f"{self.dir}/{td_name}",
+                int(meta.get("n_terms", 0)), self.config,
+            )
+            new_tables["term_dict"] = td_name
+            meta["term_ids"] = "ordinal"
         meta["generation"] = 0
         meta["k1"] = k1
         meta["b"] = b
         meta["tight_bounds"] = True
-        self._commit(meta, {"postings": p_name, "doc_dict": dd_name})
+        self._commit(meta, new_tables)
 
 
 def stream_updates(
