@@ -452,6 +452,87 @@ def test_term_id_twin_matches_spark_xxhash64(spark):
         assert tables.term_id_of(r["t"]) == r["h"], r["t"]
 
 
+def test_term_dict_stores_ids_only_when_reminted(spark, tmp_path):
+    """term_dict stores an id column exactly when its ids are not
+    ``xxhash64(term)``: dictionary ordinals always, and the re-minted
+    hash ids of older indexes.  A dictionary of derived hash ids stores
+    none, and read_term_dict derives them from the term."""
+    df = spark.createDataFrame(
+        [("alpha", 3, 1.5), ("beta", 1, 3.0)], "term string, df long, idf float"
+    )
+    ordinal = tables.term_ordinals(df, 2).select(
+        F.col("ordinal").alias("term_id"), *df.columns
+    )
+    reminted = df.select(
+        F.xxhash64("term", F.lit(1)).alias("term_id"), *df.columns
+    )
+    for name, frame in (("ordinal", ordinal), ("reminted", reminted)):
+        path = str(tmp_path / name)
+        tables.write_term_dict(frame, path, 2, CFG)
+        stored = spark.read.parquet(path)
+        assert "term_id" in stored.columns
+        got = {r["term"]: r["term_id"]
+               for r in tables.read_term_dict(stored).collect()}
+        assert got == {r["term"]: r["term_id"] for r in frame.collect()}
+    assert got != {t: tables.term_id_of(t) for t in got}
+    assert {r["term"]: r["term_id"] for r in ordinal.collect()} == {
+        "alpha": 0, "beta": 1
+    }
+    # the layout of derived hash ids: no stored column, the hash on read
+    path = str(tmp_path / "derived")
+    df.write.parquet(path)
+    stored = spark.read.parquet(path)
+    assert "term_id" not in stored.columns
+    got = {r["term"]: r["term_id"]
+           for r in tables.read_term_dict(stored).collect()}
+    assert got == {t: tables.term_id_of(t) for t in ("alpha", "beta")}
+
+
+def test_batches_and_merges_refuse_reminted_ids(spark, tmp_path):
+    """A batch numbers new terms past the dictionary's ordinals, which
+    an index with re-minted hash ids does not have: apply_batch raises
+    before writing anything, and the index keeps serving as before.  A
+    merge carries no re-minted id over: it mints ordinals from the
+    terms, as a build of the union does, with the same answers."""
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta{i % 5}") for i in range(40)], "doc_id long, text string"
+    )
+    d = str(tmp_path / "reminted")
+    build_index(spark, docs, d, config=CFG)
+    _to_hash_ids(spark, d, store_ids=True,
+                 id_of=lambda t: tables.term_id_of(t) ^ 1)
+    assert all(i == tables.term_id_of(t) ^ 1
+               for t, i in _term_ids(spark, d).items())
+    generation = _meta(d)["generation"]
+
+    def answers(idx_dir):
+        pi = PackedIndex(spark, idx_dir, CFG)
+        rows = [pi.bm25_topk_rows(t, k=50) for t in (["alpha"], ["gamma"],
+                                                     ["beta1", "alpha"])]
+        pi.unpersist()
+        return rows
+
+    before = answers(d)
+    assert len(before[0]) == 40 and before[1] == []
+    adds = spark.createDataFrame([(40, "alpha gamma")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="hash term ids"):
+        IncrementalIndex(spark, d, CFG).apply_batch(adds=adds)
+    assert _meta(d)["generation"] == generation
+    assert answers(d) == before
+
+    plain = str(tmp_path / "plain")
+    build_index(spark, adds, plain, config=CFG)
+    union = str(tmp_path / "union")
+    build_index(spark, docs.unionByName(adds), union, config=CFG)
+    want = answers(union)
+    for i, (a, b) in enumerate(((d, plain), (plain, d))):
+        out = str(tmp_path / f"merged{i}")
+        merge_indexes(spark, a, b, out, CFG)
+        _assert_ordinal_dictionary(spark, out)
+        assert _term_ids(spark, out) == _term_ids(spark, union)
+        assert answers(out) == want
+
+
 def test_check_collisions_raises_and_stored_ids_serve(
     spark, base_docs, tmp_path, monkeypatch
 ):
