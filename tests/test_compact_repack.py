@@ -71,7 +71,7 @@ def _postings_rows(spark, idx_dir: str):
 
 
 def _reference_postings(spark, idx_dir: str, out: str) -> None:
-    """Decoded live rows -> pack_blocks_jvm(gen 0, idf from term_dict)
+    """Decoded live rows -> pack_blocks_jvm(gen 0, current avg_len)
     -> write_postings: the dataflow compact() replaces."""
     meta = json.load(open(f"{idx_dir}/meta.json"))
     idx = PackedIndex(spark, idx_dir, CFG)
@@ -89,7 +89,6 @@ def _reference_postings(spark, idx_dir: str, out: str) -> None:
         rows, CFG.block_size, gen=0,
         avg_len=meta["total_len"] / meta["doc_num"],
         k1=meta["k1"], b=meta["b"],
-        idf_df=idx.term_dict.select("term_id", "idf"),
         max_doc_bound=int(idx.doc_dict.agg(F.max("doc_id")).first()[0]),
     )
     tables.write_postings(packed, out, meta["n_salts"], CFG)

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import glob
 import json
+import math
 import os
 import random
 import shutil
@@ -35,7 +36,10 @@ from tf_idf_vectorizer_spark.operators.merge import merge_indexes
 from tf_idf_vectorizer_spark.query.exact import ExactSearcher
 from tf_idf_vectorizer_spark.query.packed import PackedIndex
 from tf_idf_vectorizer_spark.sources import iceberg as ice
-from tf_idf_vectorizer_spark.sources.synth import synth_corpus
+from tf_idf_vectorizer_spark.sources.synth import (
+    synth_corpus,
+    synth_topical_corpus,
+)
 from tf_idf_vectorizer_spark.streaming import IncrementalIndex
 
 from test_table_format import (  # noqa: F401  (base_docs is a fixture)
@@ -602,3 +606,89 @@ def test_packed_tf_is_at_least_one(spark, tmp_path, dtype):
             assert (len(r["tfs"]) == 0) == (r["max_tf"] == 1)
             n_ones += r["max_tf"] == 1
     assert n_ones
+
+
+def _to_product_max_score(spark, idx_dir: str) -> None:
+    """Rewrite a fresh build's ``max_score`` in the layout indexes had
+    before the idf-free impact: ln(idf) × impact, 0.0 where ln(idf) <= 0,
+    and no ``"max_score"`` marker in meta.json."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pi = PackedIndex(spark, idx_dir, CFG)
+    ln_idf = {r["term_id"]: math.log(r["idf"])
+              for r in pi.term_dict.select("term_id", "idf").collect()}
+    for f in _postings_files(idx_dir):
+        t = pq.read_table(f)
+        if not t.num_rows:
+            continue
+        ln = np.array([ln_idf[i] for i in t.column("term_id").to_pylist()])
+        ms = t.column("max_score").to_numpy()
+        i = t.schema.get_field_index("max_score")
+        t = t.set_column(
+            i, t.schema.field(i), pa.array(np.where(ln > 0, ln * ms, 0.0))
+        )
+        _rewrite(f, t)
+    meta = _meta(idx_dir)
+    del meta["max_score"]
+    write_json_atomic(meta, f"{idx_dir}/meta.json")
+
+
+def _max_scores(idx_dir: str) -> dict:
+    """{(term_id, salt, block_seq): stored max_score} of the live
+    postings."""
+    import pyarrow.parquet as pq
+
+    return {
+        (r["term_id"], int(f.split("salt=")[1].split("/")[0]),
+         r["block_seq"]): r["max_score"]
+        for f in _postings_files(idx_dir)
+        for r in pq.read_table(
+            f, columns=["term_id", "block_seq", "max_score"]
+        ).to_pylist()
+    }
+
+
+def test_product_max_score_layout_serves_and_compact_rewrites(
+    spark, tmp_path
+):
+    """An index whose blocks store ln(idf) × impact (no ``"max_score"``
+    marker) keeps serving: WAND == exact with θ taken from the block
+    metadata.  compact() rewrites its postings in the idf-free layout,
+    sets the marker, and the answers do not change."""
+    docs = synth_topical_corpus(spark, 6000, vocab=500, n_sites=8, seed=11)
+    fresh, old = str(tmp_path / "fresh"), str(tmp_path / "old")
+    build_index(spark, docs, fresh, config=CFG)
+    shutil.copytree(fresh, old)
+    _to_product_max_score(spark, old)
+    assert "max_score" not in _meta(old)
+    assert _max_scores(old) != _max_scores(fresh)
+    queries = [["t1"], ["t1", "s4"], ["t1", "t2", "s5"]]
+
+    def answers(idx_dir: str) -> list:
+        pi = PackedIndex(spark, idx_dir, CFG, warm=True)
+        assert pi._tight_bounds_ok(CFG.k1, CFG.b)
+        out = []
+        for terms in queries:
+            wand = [tuple(r[:3]) for r in
+                    pi.bm25_topk(terms, k=10, mode="wand").collect()]
+            exact = [tuple(r[:3]) for r in
+                     pi.bm25_topk(terms, k=10, mode="exact").collect()]
+            assert wand == exact, (idx_dir, terms)
+            out.append(wand)
+        # θ from max_score alone: the WAND plan rescores once, with no
+        # seed rescore of the rarest term's blocks
+        pi.WAND_THRESHOLD = 0
+        rescores = []
+        rescore = pi._rescore_rows
+        pi._rescore_rows = lambda *a: rescores.append(1) or rescore(*a)
+        out.append(pi.bm25_topk_rows(["t1", "s4"], k=10))
+        assert rescores == [1], idx_dir
+        return out
+
+    want = answers(fresh)
+    assert answers(old) == want
+    IncrementalIndex(spark, old, CFG).compact()
+    assert _meta(old)["max_score"] == "impact"
+    assert _max_scores(old) == _max_scores(fresh)
+    assert answers(old) == want

@@ -21,6 +21,7 @@ from tf_idf_vectorizer_spark.operators.index_build import build_index
 from tf_idf_vectorizer_spark.operators.merge import merge_indexes
 from tf_idf_vectorizer_spark.query.packed import PackedIndex
 from tf_idf_vectorizer_spark.sources import load_documents
+from tf_idf_vectorizer_spark.sources.synth import synth_corpus
 from tf_idf_vectorizer_spark.streaming import IncrementalIndex
 
 from test_point_reader import _no_spark_fallback
@@ -195,3 +196,39 @@ def test_old_format_index_serves_and_compact_upgrades(
     )
     for got, exp in zip(_results(spark, idx), want):
         _same(got, exp)
+
+
+def test_max_score_stays_dictionary_encoded(spark, tmp_path):
+    """``max_score`` stores each block's idf-free impact, a few hundred
+    distinct doubles shared by all terms: every postings chunk of it is
+    dictionary-encoded with no PLAIN (fallback) data page.  The footer's
+    per-page encoding stats come from the Parquet reader on the JVM
+    (pyarrow does not expose them)."""
+    docs = synth_corpus(spark, 3000, vocab=2500, seed=7).select(
+        "doc_id", "text"
+    )
+    idx = str(tmp_path / "idx")
+    build_index(spark, docs, idx, config=CFG)
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    chunks = 0
+    for f in _live_files(idx, ("postings",))["postings"]:
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                jvm.org.apache.hadoop.fs.Path(f), conf
+            )
+        )
+        try:
+            for block in reader.getFooter().getBlocks():
+                for col in block.getColumns():
+                    if col.getPath().toDotString() != "max_score":
+                        continue
+                    stats = col.getEncodingStats()
+                    assert stats.hasDictionaryPages(), f
+                    assert not stats.hasNonDictionaryEncodedPages(), (
+                        f, stats.toString()
+                    )
+                    chunks += 1
+        finally:
+            reader.close()
+    assert chunks

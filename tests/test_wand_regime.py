@@ -16,9 +16,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from tf_idf_vectorizer_spark.config import EngineConfig
+from tf_idf_vectorizer_spark.operators.codec import decode_blocks
 from tf_idf_vectorizer_spark.operators.index_build import build_index
 from tf_idf_vectorizer_spark.oracle import OracleIndex
-from tf_idf_vectorizer_spark.query.packed import PackedIndex
+from tf_idf_vectorizer_spark.query.packed import PackedIndex, _bm25_partial
 from tf_idf_vectorizer_spark.sources import load_documents
 from tf_idf_vectorizer_spark.sources.synth import synth_topical_corpus
 from tf_idf_vectorizer_spark.streaming.incremental import IncrementalIndex
@@ -164,6 +165,46 @@ def test_chunked_wand_sparse_paths(spark, topical):
         assert chunk_count(salts) >= 2, (terms, salts)
 
 
+def _assert_block_bounds(spark, idx_dir: str) -> None:
+    """Every gen-0 block's ``max_score``, read as the WAND planner reads
+    it (ln(idf) × the stored idf-free impact, 0 where ln(idf) <= 0),
+    is >= the ``_bm25_partial`` of each of its decoded postings and
+    equal to the largest of them, within 1e-9: the bound is sound, and
+    the metadata θ rests on a real doc's score."""
+    idx = PackedIndex(spark, idx_dir, CFG)
+    assert idx.meta["max_score"] == "impact"
+    blocks = idx._postings().filter(F.col("gen") == 0).select(
+        "term_id", "n", "min_doc", "doc_deltas", "tfs", "max_score"
+    ).toPandas()
+    assert len(blocks)
+    n = blocks["n"].to_numpy(np.int64)
+    docs, tf = decode_blocks(
+        n, blocks["min_doc"], blocks["doc_deltas"], blocks["tfs"]
+    )
+    doc_len = idx.doc_dict.select("doc_id", "doc_len").toPandas()
+    dl = doc_len.set_index("doc_id")["doc_len"].loc[docs].to_numpy(np.float64)
+    idf = {r["term_id"]: float(r["idf"]) for r in
+           idx.term_dict.select("term_id", "idf").collect()}
+    ln_idf = np.log(blocks["term_id"].map(idf).to_numpy(np.float64))
+    ms = blocks["max_score"].to_numpy(np.float64)
+    bound = np.where(ln_idf > 0, ln_idf * ms, 0.0)
+    partial = _bm25_partial(
+        np.repeat(ln_idf, n), tf.astype(np.float64), dl,
+        idx.meta["k1"], idx.meta["b"], idx.avg_len,
+    )
+    assert (np.repeat(bound, n) >= partial - 1e-9).all()
+    best = np.maximum.reduceat(partial, np.cumsum(n) - n)
+    pos = ln_idf > 0
+    assert pos.any()
+    np.testing.assert_allclose(bound[pos], best[pos], rtol=0, atol=1e-9)
+
+
+def test_block_max_score_is_a_real_docs_partial(spark, topical):
+    """A built index's block bounds (compacted and merged indexes are
+    checked in the two tests below)."""
+    _assert_block_bounds(spark, topical[0].dir)
+
+
 def test_wand_after_compact_keeps_tight_bounds(spark, topical, tmp_path):
     """compact() returns the index to generation 0 — exactly when
     _tight_bounds_ok trusts max_score — so the re-pack MUST recompute
@@ -185,6 +226,7 @@ def test_wand_after_compact_keeps_tight_bounds(spark, topical, tmp_path):
     idx2 = PackedIndex(spark, out, CFG)
     assert int(idx2.meta["generation"]) == 0
     assert idx2._tight_bounds_ok(CFG.k1, CFG.b)
+    _assert_block_bounds(spark, out)
     for terms in (["t1"], ["t1", "s4"], ["t1", "t2", "s5"]):
         w = _rows(idx2.bm25_topk(terms, k=10, mode="wand"))
         e = _rows(idx2.bm25_topk(terms, k=10, mode="exact"))
@@ -208,6 +250,7 @@ def test_merged_index_keeps_tight_bounds(spark, topical, tmp_path):
     merge_indexes(spark, idx.dir, out_b, out_m, config=CFG)
     m = PackedIndex(spark, out_m, CFG)
     assert m._tight_bounds_ok(CFG.k1, CFG.b)
+    _assert_block_bounds(spark, out_m)
     for terms in (["t1"], ["t1", "s2"]):
         w = _rows(m.bm25_topk(terms, k=10, mode="wand"))
         e = _rows(m.bm25_topk(terms, k=10, mode="exact"))

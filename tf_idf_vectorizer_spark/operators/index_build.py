@@ -21,7 +21,7 @@ at mod.rs:186-190) with a batch dataflow shaped for 10^12 documents:
     -> term_dict: df/idf per term, ids = tables.term_ordinals (the
                                            term's rank in term order)
     -> groupBy(term_id, salt) collect+sort salt-local runs (exchange-free)
-    -> broadcast join (hash -> idf, ordinal) at group granularity: the
+    -> broadcast join (hash -> ordinal) at group granularity: the
                                            blocks carry the ordinal
     -> codec.encode_blocks_jvm            (delta + LEB128 varint blocks
                                            of block_size docs — pure JVM
@@ -43,11 +43,14 @@ posting bytes.  This is what makes head-term skew tractable at scale: a
 stop-word's 10^12-entry posting list is built by all partitions in
 parallel and never sits in one task.
 
-Per-block metadata: (n, min_doc, max_doc, max_tf, min_dl).  ``max_tf``
-and ``min_dl`` give a parameter-free BM25 upper bound
+Per-block metadata: (n, min_doc, max_doc, max_tf, min_dl, max_dl,
+max_score).  ``max_tf`` and ``min_dl`` give a parameter-free BM25 upper
+bound
   ub = ln(idf) * (k1+1)*max_tf / (max_tf + k1*(1-b+b*min_dl/avg_len))
 valid for ANY (k1, b, avg_len) supplied at query time — the block-max
 metadata the north rule requires, robust to corpus-stat refreshes.
+``max_score`` is the tighter idf-free bound at the build's (k1, b,
+avg_len); the query multiplies it by ln(idf).
 
 Checkpoint-resume: the unit of work is the salt partition.  Each salt's
 postings are written under ``postings/salt=S/`` with a manifest row
@@ -103,9 +106,8 @@ def make_live_repacker(
     whose (doc_id, gen) misses the broadcast doc stats, re-sort by
     (term_id, salt, doc_id), re-slice into ``block_size`` blocks and
     re-encode — emitting gen-0 rows in POSTINGS_FILE_SCHEMA, with
-    ``max_score`` holding each block's best per-pair impact.  compact()
-    multiplies it by ln(idf) in the JVM, with ``pack_blocks_jvm``'s own
-    expression, so the written files are byte-identical to
+    ``max_score`` holding each block's best idf-free per-pair impact.
+    compact() writes this output as is: the files are byte-identical to
     ``pack_blocks_jvm`` over the same live rows (pinned by
     tests/test_compact_repack.py).
 
@@ -197,7 +199,7 @@ def pack_blocks_jvm(
     avg_len: float | None = None,
     k1: float = 1.2,
     b: float = 0.75,
-    idf_df: DataFrame | None = None,
+    ordinals: DataFrame | None = None,
     max_doc_bound: int | None = None,
     max_tf_bound: int | None = None,
 ) -> DataFrame:
@@ -210,15 +212,15 @@ def pack_blocks_jvm(
       codec.encode_blocks_jvm
         -> delta + LEB128-varint payloads
 
-    ``idf_df`` (term_id, idf and/or ordinal) joins AFTER the
-    aggregation, broadcast at GROUP granularity: carrying idf on every
-    posting row would push 8 more bytes per posting through the build's
-    dominant shuffle for a value that is constant per term (measured:
-    the pack phase is memory-traffic-bound, ~0.6 scaling at 1->4 cores
-    — bytes through the shuffle are the scarce resource).  When it has
-    an ``ordinal`` column, the rows are keyed by ``xxhash64(term)`` and
-    the blocks carry the ordinal as their term_id; every term of the
-    rows must then have one (inner join).
+    ``ordinals`` (term_id = xxhash64(term), ordinal) joins AFTER the
+    aggregation, broadcast at GROUP granularity: carrying the id on
+    every posting row would push 8 more bytes per posting through the
+    build's dominant shuffle for a value that is constant per term
+    (measured: the pack phase is memory-traffic-bound, ~0.6 scaling at
+    1->4 cores — bytes through the shuffle are the scarce resource).
+    The blocks carry the ordinal as their term_id; every term of the
+    rows must have one (inner join).  Without it the rows' term_id is
+    written as is.
     """
     # ONE shuffle: groupBy(term_id, salt) collects the salt-local posting
     # run; blocks are array slices (no window pass).  Group size is
@@ -238,28 +240,18 @@ def pack_blocks_jvm(
             F.collect_list(F.struct("doc_id", "tf", "doc_len"))
         ).alias("run"),
     )
-    has_idf = idf_df is not None and "idf" in idf_df.columns
-    ordinal = idf_df is not None and "ordinal" in idf_df.columns
-    if idf_df is not None:
+    if ordinals is not None:
         g_all = g_all.join(
-            F.broadcast(
-                idf_df.select(
-                    "term_id",
-                    *([F.col("idf").cast("double").alias("idf")]
-                      if has_idf else []),
-                    *(["ordinal"] if ordinal else []),
-                )
-            ),
+            F.broadcast(ordinals.select("term_id", "ordinal")),
             "term_id",
-            "inner" if ordinal else "left",
+            "inner",
         )
     run = F.col("run")
     n_blocks = F.ceil(F.size(run) / F.lit(block_size)).cast("int")
     g = (
         g_all.select(
-            F.col("ordinal" if ordinal else "term_id").alias("term_id"),
+            F.col("term_id" if ordinals is None else "ordinal").alias("term_id"),
             "salt",
-            *(["idf"] if has_idf else []),
             F.posexplode(
                 F.transform(
                     F.sequence(F.lit(0), n_blocks - 1),
@@ -280,25 +272,28 @@ def pack_blocks_jvm(
             .cast("long").alias("min_dl"),
             F.array_max(F.transform("pairs", lambda x: x["doc_len"]))
             .cast("long").alias("max_dl"),
-            *(["idf"] if has_idf else []),
             "pairs",
         )
     )
-    # per-block max BM25 impact at the build (k1, b, avg_len, idf) — the
-    # north rule's "per-block max-score metadata".  This is the TRUE
-    # per-block maximum: max over the block's docs of each doc's OWN
-    # score(tf_d, dl_d) — strictly tighter than the (max_tf, min_dl)
-    # formula bound (which pairs the best tf with the best doc length,
-    # a combination no real doc may have; on uniform-tf corpora that gap
-    # is exactly why block pruning used to die).  Because it is achieved
-    # by a real doc, the query layer can also use the k-th largest
-    # max_score of one term's (doc-disjoint) blocks as a job-free θ.
-    # The WAND path RECOMPUTES bounds from (max_tf, min_dl) whenever the
-    # index moved (incremental updates shift avg_len/idf); max_score is
-    # trusted only while meta generation == 0 and (k1, b) match the
-    # build (0.0 when idf is not carried, e.g. delta packs).
-    if has_idf and avg_len:
-        ln_idf = F.log(F.col("idf").cast("double"))
+    # per-block max BM25 impact at the build (k1, b, avg_len) — the
+    # north rule's "per-block max-score metadata", stored WITHOUT its
+    # ln(idf) factor: max over the block's docs of each doc's OWN
+    # tf·(k1+1) / (tf + k1·(1-b+b·dl/avg_len)).  That value depends on
+    # one doc's (tf, doc_len) only, so a few hundred distinct values
+    # repeat across every term and dictionary-encode; ln(idf) × it
+    # (differing per term) fell back to PLAIN doubles.  The query layer
+    # multiplies by ln(idf) (meta.json ``"max_score": "impact"``).
+    # It is the TRUE per-block maximum — strictly tighter than the
+    # (max_tf, min_dl) formula bound (which pairs the best tf with the
+    # best doc length, a combination no real doc may have; on uniform-tf
+    # corpora that gap is exactly why block pruning used to die).
+    # Because it is achieved by a real doc, the query layer can also
+    # use the k-th largest bound of one term's (doc-disjoint) blocks as
+    # a job-free θ.  The WAND path RECOMPUTES bounds from (max_tf,
+    # min_dl) whenever the index moved (incremental updates shift
+    # avg_len/idf); max_score is trusted only while meta generation == 0
+    # and (k1, b) match the build (0.0 without avg_len, e.g. delta packs).
+    if avg_len:
 
         def _pair_impact(x):
             tfd = x["tf"].cast("double")
@@ -308,10 +303,7 @@ def pack_blocks_jvm(
             )
             return tfd * F.lit(k1 + 1.0) / denom
 
-        best = F.array_max(F.transform("pairs", _pair_impact))
-        # when(>0) not when(<=0): a term missing from idf_df has null
-        # ln_idf, which must land in the 0.0 branch, not null the score
-        max_score = F.when(ln_idf > 0, ln_idf * best).otherwise(F.lit(0.0))
+        max_score = F.array_max(F.transform("pairs", _pair_impact))
     else:
         max_score = F.lit(0.0)
     g = g.withColumn("max_score", max_score)
@@ -552,8 +544,8 @@ def _build_index_body(
         )
 
     # ---- postings rows --------------------------------------------------
-    # idf and the ordinal deliberately NOT carried per row:
-    # pack_blocks_jvm joins them broadcast at (term_id, salt) group
+    # the ordinal deliberately NOT carried per row:
+    # pack_blocks_jvm joins it broadcast at (term_id, salt) group
     # granularity after the shuffle.  tf/doc_len narrow to int32 HERE,
     # before any exchange (counts are u32 in the reference, term.rs)
     rows = tf.select(
@@ -580,7 +572,7 @@ def _build_index_body(
     packed = pack_blocks_jvm(
         rows, config.block_size, gen=0,
         avg_len=build_avg_len, k1=config.k1, b=config.b,
-        idf_df=term_dict.select("term_id", "idf", "ordinal"),
+        ordinals=term_dict.select("term_id", "ordinal"),
         max_doc_bound=max_id,
         max_tf_bound=2 * max_dl_global + 2,
     )

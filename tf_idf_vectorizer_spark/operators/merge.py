@@ -19,7 +19,7 @@ Merging is a dataflow over live posting rows:
     -> df/idf from the merged live rows      (term_dict)
     -> ids = tables.term_ordinals            (rank in term order)
     -> re-salt (tables.salting over the merged max doc id)
-    -> pack_blocks_jvm(gen 0, merged idf)    (tight max_score bounds;
+    -> pack_blocks_jvm(gen 0, merged avg_len) (tight max_score bounds;
                                               the blocks carry the ids)
     -> tables.write_postings / write_doc_dict / write_term_dict /
        write_lineage / write_meta            (the build's layout: term-
@@ -172,14 +172,14 @@ def _merge(
     # a fine-grained explicit repartition on the compact path — see
     # incremental.compact)
     build_avg_len = float(total_len) / max(doc_num, 1)
-    # idf_df: per-block max_score is the TRUE max impact under the
+    # avg_len: per-block max_score is the TRUE max impact under the
     # MERGED corpus stats (tight WAND bounds survive the merge; without
     # it max_score would be 0 and must not be trusted — see
     # meta["tight_bounds"])
     packed = pack_blocks_jvm(
         salted, config.block_size, gen=0,
         avg_len=build_avg_len, k1=config.k1, b=config.b,
-        idf_df=term_dict.select("term_id", "idf", "ordinal"),
+        ordinals=term_dict.select("term_id", "ordinal"),
         max_doc_bound=max_id,
     )
     write_postings(packed, f"{out_dir}/postings", n_salts, config)

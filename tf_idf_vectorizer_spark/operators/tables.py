@@ -34,9 +34,15 @@ readers take them as they are.
 Every parquet table is written with Parquet v2 data pages and zstd
 (WRITE_OPTIONS), dictionary encoding on and the zstd level at its
 default.  Postings switch the dictionary off for term_id, min_doc and
-max_doc (POSTINGS_OPTIONS), so they delta-code.  Parquet files describe
-their own format, so readers need no switch: v1/snappy files of older
-indexes, new files and a mix of both read alike.  Every batch rewrites
+max_doc (POSTINGS_OPTIONS), so they delta-code.  Their ``max_score``
+stores each block's idf-free impact (meta.json ``"max_score":
+"impact"``): it depends on one doc's (tf, doc_len), so a few hundred
+values repeat across all terms and stay dictionary-encoded, where
+ln(idf) × impact, distinct per block, fell back to PLAIN doubles.
+Indexes written before store the product; the query side reads either,
+and ``compact()`` rewrites them.  Parquet files describe their own
+format, so readers need no switch: v1/snappy files of older indexes,
+new files and a mix of both read alike.  Every batch rewrites
 term_dict, and compact() rewrites postings and doc_dict, in the new
 format.
 """
@@ -61,7 +67,11 @@ BLOCK_SCHEMA = (
 # micro-batch) whose docs all tokenize to nothing writes ZERO posting
 # files, and parquet schema inference on a file-less dir is an error.
 # min_dl yields the BM25 upper bound, max_dl the lower bound of the WAND
-# driver-theta fast path.  gen is the MVCC generation: a doc's live rows
+# driver-theta fast path.  max_score is the block's best idf-free impact
+# tf·(k1+1) / (tf + k1·(1-b+b·dl/avg_len)), full double precision (the
+# query multiplies it by ln(idf)); blocks of indexes without meta.json's
+# ``"max_score": "impact"`` store ln(idf) × that impact, and blocks of a
+# batch store 0.0.  gen is the MVCC generation: a doc's live rows
 # are those whose gen matches its doc_dict row.  Files of older indexes
 # also hold a ``bucket`` column, which this schema does not read.
 POSTINGS_FILE_SCHEMA = BLOCK_SCHEMA + ", gen int"
@@ -302,9 +312,9 @@ def write_meta(
     **extra,
 ) -> dict:
     """Atomically write and return a freshly packed index's meta.json.
-    Every block is at generation 0 with max_score packed under real
-    idf/avg_len, so ``tight_bounds`` holds while generation stays 0 and
-    (k1, b) match; a pack that omits idf must not claim it."""
+    Every block is at generation 0 with max_score packed under the
+    real avg_len, so ``tight_bounds`` holds while generation stays 0 and
+    (k1, b) match; a pack that omits avg_len must not claim it."""
     meta = {
         "doc_num": int(doc_num),
         "total_len": int(total_len),
@@ -321,6 +331,9 @@ def write_meta(
         # term ids are dictionary ordinals (term_ordinals); an index
         # without this marker holds xxhash64(term) ids
         "term_ids": "ordinal",
+        # max_score holds each block's idf-free impact; an index without
+        # this marker stores ln(idf) x impact
+        "max_score": "impact",
         "generation": 0,
         "tokenizer": tokenizer,
         "k1": float(config.k1),

@@ -25,9 +25,10 @@ bounded passes:
      driver-sized; its payload is a term-pruned point read of its own,
      fetched once per query), each scored with its block's max_dl, are
      real docs' score FLOORS, so their k-th largest is a valid θ; on a
-     fresh index so is the k-th largest pack-time max_score among one
-     term's blocks.  The k-th score of the rows earlier chunks returned
-     is a real doc's exact score, so θ carries from chunk to chunk.
+     fresh index so is the k-th largest block max among one term's
+     blocks (ln(idf) × the pack-time idf-free ``max_score``).  The
+     k-th score of the rows earlier chunks returned is a real doc's
+     exact score, so θ carries from chunk to chunk.
      Fallback: exact-score the docs of the rarest term's highest-bound
      blocks.
   2. PRUNE — over block METADATA ONLY (the read projects the metadata
@@ -683,9 +684,11 @@ class PackedIndex:
             .join(ext, "term")
             .select("term_id", "term", "df", "idf")
         )
-        # the build-time max_score column was packed under the LOCAL idf,
-        # so it bounds nothing here: WAND recomputes bounds from
-        # (max_tf, min_dl) under the external idf
+        # the build-time max_score column of an index without the
+        # idf-free layout was packed under the LOCAL idf, so it bounds
+        # nothing here: WAND recomputes bounds from (max_tf, min_dl)
+        # under the external idf.  (The idf-free column would stay
+        # valid, since avg_len stays local; it is not trusted here yet.)
         other.meta = {**self.meta, "tight_bounds": False}
         # drop what copy.copy shared and depends on idf: the pinned term
         # map and the dictionary file metas.  The LRU is idf-free.
@@ -2013,7 +2016,13 @@ class PackedIndex:
             mp["min_dl"].to_numpy(np.float64), k1, b, self.avg_len,
         ), 0.0)
         if "max_score" in mp.columns:
-            bub = np.minimum(bub, mp["max_score"].to_numpy(np.float64))
+            ms = mp["max_score"].to_numpy(np.float64)
+            if self.meta.get("max_score") == "impact":
+                # the idf-free impact (index_build.py); the product
+                # differs from _bm25_partial's grouping by a few ulps,
+                # which the prune's 1e-9 slack covers
+                ms = np.where(ln_idf > 0, ln_idf * ms, 0.0)
+            bub = np.minimum(bub, ms)
 
         def whole() -> list[tuple] | None:
             # every block flagged: exact over every doc of the chunk
@@ -2037,7 +2046,6 @@ class PackedIndex:
             # — so the k-th largest max_score among a single term's
             # blocks is the k-th member of a set of k REAL docs' score
             # floors: a valid θ.  Take the best term.
-            ms = mp["max_score"].to_numpy(np.float64)
             o = np.lexsort((-ms, bterm))
             ts = bterm[o]
             first = np.concatenate(([True], ts[1:] != ts[:-1]))

@@ -530,7 +530,7 @@ class IncrementalIndex:
             self._held.append(df_add)
             ids = self._term_ids(df_add, term_dict)
             packed = pack_blocks_jvm(
-                rows, int(meta["block_size"]), gen=gen, idf_df=ids,
+                rows, int(meta["block_size"]), gen=gen, ordinals=ids,
                 max_doc_bound=int(max_new_id or 0),
                 max_tf_bound=2 * int(max_new_dl or 0) + 2,
             )
@@ -785,13 +785,17 @@ class IncrementalIndex:
         which ``salting`` caps at ``salt_target_rows`` docs), so driver
         memory stays bounded however large the index grows.
 
-        Each block's ``max_score`` is the TRUE per-block maximum under
-        the current corpus stats, so the tight WAND bounds stay valid
-        (generation returns to 0, exactly when ``_tight_bounds_ok``
-        trusts them).  Liveness alone decides survival, and ln(idf)
-        joins in the JVM: no term-dictionary collect, except to
-        renumber hash ids (below).  Per-salt
-        lineage rows of the new postings append to the manifest.
+        Each block's ``max_score`` is the TRUE per-block maximum of the
+        idf-free impact under the current avg_len, so the tight WAND
+        bounds stay valid (generation returns to 0, exactly when
+        ``_tight_bounds_ok`` trusts them, and the query multiplies by
+        the current ln(idf)).  Liveness alone decides survival: the
+        kernel's output is written as is, and the term dictionary is
+        read only to renumber hash ids (below).  An index written
+        before stores ln(idf) × impact; compact() rewrites it in the
+        idf-free layout and sets meta.json's ``"max_score":
+        "impact"``.  Per-salt lineage rows of the new postings append
+        to the manifest.
 
         An index with hash term ids (written before dictionary
         ordinals) is renumbered on the way: the dictionary mints
@@ -823,7 +827,7 @@ class IncrementalIndex:
             par, min(-(-total_len // len(starts) // 150_000), 64 * par)
         )
         blocks = idx._postings().select("salt", *BLOCK_COLS)
-        term_dict, id_map = idx.term_dict, None
+        id_map = None
         renumber = meta.get("term_ids") != "ordinal"
         if renumber:
             minted = term_ordinals(
@@ -839,9 +843,6 @@ class IncrementalIndex:
             term_dict = minted.select(
                 F.col("ordinal").alias("term_id"), "term", "df", "idf"
             )
-        ln_idf = term_dict.select(
-            "term_id", F.log(F.col("idf").cast("double")).alias("ln_idf")
-        )
         # declare the same nullability the JVM pack derives (posexplode
         # pos / size() / lit are non-null), so the written files are
         # BYTE-identical to pack_blocks_jvm's, footer included
@@ -849,12 +850,6 @@ class IncrementalIndex:
         for f_ in out_schema.fields:
             if f_.name in ("block_seq", "n", "gen"):
                 f_.nullable = False
-        # pack_blocks_jvm's max_score expression: when(>0), not
-        # when(<=0), so a term without idf lands in the 0.0 branch
-        ln = F.col("ln_idf")
-        max_score = F.when(ln > 0, ln * F.col("max_score")).otherwise(
-            F.lit(0.0)
-        )
         ver = int(meta.get("table_version", 0)) + 1
         meta["table_version"] = ver
         p_name, dd_name = f"postings_v{ver}", f"doc_dict_v{ver}"
@@ -880,11 +875,7 @@ class IncrementalIndex:
             # each salt sits in one chunk, so each salt dir still gets
             # one file: the first chunk overwrites, later ones append
             write_postings(
-                packed.join(ln_idf, "term_id", "left").select(
-                    *[max_score.alias(c) if c == "max_score" else c
-                      for c in out_schema.names]
-                ),
-                f"{self.dir}/{p_name}", n_salts, self.config,
+                packed, f"{self.dir}/{p_name}", n_salts, self.config,
                 "append" if i else "overwrite",
             )
             bc.unpersist()  # executors hold one chunk's pin at a time
@@ -912,6 +903,7 @@ class IncrementalIndex:
             )
             new_tables["term_dict"] = td_name
             meta["term_ids"] = "ordinal"
+        meta["max_score"] = "impact"
         meta["generation"] = 0
         meta["k1"] = k1
         meta["b"] = b
