@@ -54,6 +54,12 @@ def spark_jobs(spark):
         jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def persisted_rdds(spark) -> int:
+    """How many RDDs the session holds persisted: a cached relation
+    counts once it has been materialized."""
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 def force_wand_chunks(idx):
     """Force one-salt WAND chunks on ``idx`` (``META_COLLECT_MAX = 0``)
     and return a list that collects the ``salts`` argument of every

@@ -692,3 +692,44 @@ def test_product_max_score_layout_serves_and_compact_rewrites(
     assert _meta(old)["max_score"] == "impact"
     assert _max_scores(old) == _max_scores(fresh)
     assert answers(old) == want
+
+
+def _to_unrecorded_manifest(spark, idx_dir: str, drop_salt: int) -> None:
+    """Rewrite the manifest as the writers before the layout column left
+    it, with no ``layout``, and lose one salt as a crashed build does:
+    its postings and its manifest row."""
+    shutil.rmtree(f"{idx_dir}/postings/salt={drop_salt}")
+    manifest = f"{idx_dir}/manifest"
+    spark.read.parquet(manifest).drop("layout").filter(
+        F.col("salt") != drop_salt
+    ).write.parquet(manifest + "_old_layout")
+    shutil.rmtree(manifest)
+    os.rename(manifest + "_old_layout", manifest)
+
+
+@pytest.mark.parametrize("layout", ["hash_ids", "product_max_score"])
+def test_resume_refuses_salts_of_another_layout(
+    spark, base_docs, tmp_path, layout
+):
+    """A resumed build keeps the salts its manifest records.  Salts an
+    older layout wrote (their manifest rows record no layout) would keep
+    their term ids or ``max_score`` under a meta.json that describes the
+    new ones, so the resume raises, names ``compact()`` and writes
+    nothing."""
+    d = str(tmp_path / "idx")
+    build_index(spark, base_docs, d, config=CFG)
+    if layout == "hash_ids":
+        _to_hash_ids(spark, d, store_ids=True)
+    else:
+        _to_product_max_score(spark, d)
+    _to_unrecorded_manifest(spark, d, drop_salt=1)
+    before = {
+        p: os.path.getmtime(p)
+        for p in glob.glob(f"{d}/**", recursive=True)
+    }
+    with pytest.raises(ValueError, match=r"another index layout.*compact\(\)"):
+        build_index(spark, base_docs, d, config=CFG, resume=True)
+    assert {
+        p: os.path.getmtime(p)
+        for p in glob.glob(f"{d}/**", recursive=True)
+    } == before

@@ -14,6 +14,8 @@ from tf_idf_vectorizer_spark.query.packed import PackedIndex
 from tf_idf_vectorizer_spark.sources import load_documents
 from tf_idf_vectorizer_spark.streaming import IncrementalIndex, stream_updates
 
+from conftest import persisted_rdds
+
 CFG = EngineConfig(n_salts=4, block_size=64, term_buckets=16)
 
 QUERIES = [["spark", "join", "query"], ["the"], ["fresh", "newterm"]]
@@ -223,8 +225,7 @@ def test_batches_and_compact_release_caches_and_broadcasts(
 
     monkeypatch.setattr(SparkContext, "broadcast", broadcast)
     monkeypatch.setattr(Broadcast, "unpersist", unpersist)
-    jsc = spark.sparkContext._jsc
-    baseline = jsc.getPersistentRDDs().size()
+    baseline = persisted_rdds(spark)
     for i in range(2):
         inc.apply_batch(
             adds=spark.createDataFrame(
@@ -240,7 +241,7 @@ def test_batches_and_compact_release_caches_and_broadcasts(
     )
     inc.compact()
     merge_indexes(spark, inc_dir, other_dir, str(tmp_path / "rel_merged"), CFG)
-    assert jsc.getPersistentRDDs().size() == baseline
+    assert persisted_rdds(spark) == baseline
     # one per mixed batch (the dying rows), two for set_term_counts
     # (get_tf's doc ids + its batch's dying rows), compact's liveness pin
     assert len(created) >= 5

@@ -54,9 +54,11 @@ avg_len); the query multiplies it by ln(idf).
 
 Checkpoint-resume: the unit of work is the salt partition.  Each salt's
 postings are written under ``postings/salt=S/`` with a manifest row
-(salt, phase, rows_in, rows_out, checksum, ts); ``build_index`` with
-``resume=True`` skips salts already recorded and rebuilds only the rest
-(per-partition lineage + resume of the north rule).
+(salt, phase, rows_in, rows_out, checksum, ts, layout); ``build_index``
+with ``resume=True`` skips salts already recorded and rebuilds only the
+rest (per-partition lineage + resume of the north rule).  It refuses to
+keep a salt whose row records another block layout than this code
+writes (:func:`kept_salts`).
 """
 
 from __future__ import annotations
@@ -79,6 +81,7 @@ from tf_idf_vectorizer_spark.operators.codec import (
 )
 from tf_idf_vectorizer_spark.operators.stats import corpus_stats, doc_stats, idf_table
 from tf_idf_vectorizer_spark.operators.tables import (
+    LAYOUT,
     salt_of,
     salting,
     term_ordinals,
@@ -342,7 +345,7 @@ def build_index(
       term_dict  (term_id, term, df, idf; term_id = the term's rank in
                  term order, tables.term_ordinals)
       postings   (salt=S/...) posting blocks, POSTINGS_FILE_SCHEMA
-      manifest   (salt, phase, rows_in, rows_out, checksum, ts)
+      manifest   (salt, phase, rows_in, rows_out, checksum, ts, layout)
       meta.json  scalars (doc_num, total_len, config)
 
     ``check_collisions=True`` counts the distinct ``xxhash64(term)``
@@ -378,6 +381,33 @@ def build_index(
         spark.conf.set(_sp_key, _sp_prev)
 
 
+def kept_salts(spark: SparkSession, manifest_path: str) -> set[int]:
+    """The salts a resumed build keeps: those with a ``postings`` row in
+    the manifest.  Raises when one of them was written in another block
+    layout (its row records none, or another than ``tables.LAYOUT``):
+    the build would keep blocks whose term ids or ``max_score`` the
+    meta.json it writes misdescribes, and answer wrong."""
+    if not os.path.exists(manifest_path):
+        return set()
+    rows = (
+        spark.read.schema("salt int, phase string, layout string")
+        .parquet(manifest_path)
+        .filter(F.col("phase") == "postings")
+        .select("salt", "layout")
+        .collect()
+    )
+    other = sorted({r["salt"] for r in rows if r["layout"] != LAYOUT})
+    if other:
+        raise ValueError(
+            f"cannot resume the build at {manifest_path.rsplit('/', 1)[0]}: "
+            f"salt(s) {other} were written in another index layout than "
+            f"{LAYOUT!r}.  Rebuild it without resume; a complete index "
+            "of an older layout is upgraded in place by "
+            "IncrementalIndex.compact()"
+        )
+    return {r["salt"] for r in rows}
+
+
 def _build_index_body(
     spark, docs, out_dir, key_col, text_col, url_col, config, precision,
     resume, check_collisions, norms, cache_tf, tokenizer, t0, phases,
@@ -387,6 +417,10 @@ def _build_index_body(
         doc_len_expr,
         tokens_expr,
     )
+
+    # first, before any work: a resume that must be refused writes nothing
+    manifest_path = f"{out_dir}/manifest"
+    done_salts = kept_salts(spark, manifest_path) if resume else set()
 
     # ---- narrow scalar + doc-length pass (FIRST: it feeds the salting
     # AND the build-scoped shuffle width) -------------------------------
@@ -556,13 +590,7 @@ def _build_index_body(
         F.col("doc_len").cast("int").alias("doc_len"),
     )
 
-    manifest_path = f"{out_dir}/manifest"
-    done_salts: set[int] = set()
-    if resume and os.path.exists(manifest_path):
-        done = spark.read.parquet(manifest_path)
-        done_salts = {
-            r["salt"] for r in done.filter(F.col("phase") == "postings").collect()
-        }
+    if done_salts:
         rows = rows.filter(~F.col("salt").isin(list(done_salts)))
 
     build_avg_len = float(total_len) / max(int(doc_num), 1)

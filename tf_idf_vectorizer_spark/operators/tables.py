@@ -7,7 +7,8 @@ side prunes on is defined once:
   postings   salt=S/ dirs, one file per salt sorted by (term_id,
              block_seq), bounded row groups: the per-group term_id
              min/max stats are a coarse term index
-  manifest   per-salt lineage rows of the written blocks
+  manifest   per-salt lineage rows of the written blocks, each with
+             the block layout that wrote them (LAYOUT)
   doc_dict   ~1M docs per file, range-partitioned and sorted by doc_id:
              the WAND rescore's doc-range predicates prune row groups
   term_dict  ~250k terms per file, range-partitioned and sorted by term,
@@ -140,12 +141,21 @@ def write_postings(
     )
 
 
+# the block layout of this code, recorded with every manifest row: term
+# ids are dictionary ordinals and max_score the idf-free impact (the
+# meta.json markers ``"term_ids": "ordinal"`` and ``"max_score":
+# "impact"``).  Rows written before carry none.  A resumed build keeps
+# only salts whose row carries this one (index_build.kept_salts)
+LAYOUT = "ordinal-impact"
+
+
 def write_lineage(
     spark: SparkSession, postings_path: str, manifest_path: str, phase: str,
     where: Column | None = None, mode: str = "overwrite",
 ) -> None:
-    """Manifest rows (salt, phase, rows_in, rows_out, checksum, ts) of the
-    WRITTEN blocks selected by ``where``, from metadata columns only."""
+    """Manifest rows (salt, phase, rows_in, rows_out, checksum, ts,
+    layout) of the WRITTEN blocks selected by ``where``, from metadata
+    columns only."""
     written = spark.read.schema(POSTINGS_FILE_SCHEMA).parquet(postings_path)
     if where is not None:
         written = written.filter(where)
@@ -161,6 +171,7 @@ def write_lineage(
         F.col("rows_in").alias("rows_out"),
         "checksum",
         F.current_timestamp().alias("ts"),
+        F.lit(LAYOUT).alias("layout"),
     ).write.options(**WRITE_OPTIONS).mode(mode).parquet(manifest_path)
 
 

@@ -79,6 +79,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from tf_idf_vectorizer_spark.config import DEFAULT, EngineConfig
 from tf_idf_vectorizer_spark.operators.codec import (
@@ -114,10 +115,36 @@ def _arrow_df(spark: SparkSession, data, schema: str) -> DataFrame:
     folded at plan time (measured, local[32]).  Every k-row result and
     every per-query side table (term idf maps, seed keys, credits) goes
     through here.  ``data``: row list or prebuilt pandas frame."""
+    struct = _struct_of(schema)
     if not isinstance(data, pd.DataFrame):
-        names = [c.strip().split()[0] for c in schema.split(",")]
-        data = pd.DataFrame(list(data), columns=names)
-    return spark.createDataFrame(data, schema)
+        data = pd.DataFrame(list(data), columns=struct.names)
+    if data.empty:
+        # an empty pandas frame plans as a parallelized RDD (one job on
+        # collect); an empty Arrow table stays a LocalRelation
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        data = to_arrow_schema(struct).empty_table()
+    return spark.createDataFrame(data, struct)
+
+
+@functools.lru_cache(maxsize=None)
+def _struct_of(schema: str) -> StructType:
+    """A DDL schema string parsed once: a string schema is parsed in the
+    JVM on every createDataFrame call (~15% of a small wrap+collect)."""
+    return StructType.fromDDL(schema)
+
+
+def _concat(parts: list):
+    """One pyarrow Table of per-file ``parts``.  Files written by
+    different jobs (merge inputs, incremental appends) can disagree on
+    nullability flags, so each part is cast to the first part's types
+    before the concat; a real type clash raises ArrowInvalid."""
+    import pyarrow as pa
+
+    if len(parts) > 1:
+        target = pa.schema([pa.field(f.name, f.type) for f in parts[0].schema])
+        parts = [p.cast(target) for p in parts]
+    return pa.concat_tables(parts)
 
 
 def _range_max(vals: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
@@ -356,17 +383,6 @@ class PackedIndex:
                 f"index at {index_dir} was built with dtype={built!r}; "
                 f"open it with a matching EngineConfig (got {config.dtype!r})"
             )
-        # doc_dict shares the postings' committed-generation watermark:
-        # a pure-append batch writes its doc rows into the live dir
-        # BEFORE the meta commit (O(batch) ingest — no dict rewrite), so
-        # rows above the watermark are uncommitted and must stay
-        # invisible, exactly like orphan posting rows
-        self.doc_dict = spark.read.parquet(paths["doc_dict"]).filter(
-            F.col("gen") <= int(self.meta.get("generation", 0))
-        ).cache()
-        self.term_dict = read_term_dict(
-            spark.read.parquet(paths["term_dict"])
-        ).cache()
         self.doc_num = self.meta["doc_num"]
         # avg_len over all docs at query time (scoring.rs:415); an empty
         # corpus has no scorable docs, so any positive placeholder works
@@ -392,6 +408,27 @@ class PackedIndex:
         )
         if warm:
             self.warm()
+
+    # The two dictionaries as cached Spark relations, built on first
+    # use: parquet schema inference is a Spark job, and a driver-sized
+    # local index pins both through :meth:`_read_local` instead, so its
+    # open, warm-up and driver queries never build them.
+    @functools.cached_property
+    def doc_dict(self) -> DataFrame:
+        # doc_dict shares the postings' committed-generation watermark:
+        # a pure-append batch writes its doc rows into the live dir
+        # BEFORE the meta commit (O(batch) ingest — no dict rewrite), so
+        # rows above the watermark are uncommitted and must stay
+        # invisible, exactly like orphan posting rows
+        return self.spark.read.parquet(self._table_paths["doc_dict"]).filter(
+            F.col("gen") <= int(self.meta.get("generation", 0))
+        ).cache()
+
+    @functools.cached_property
+    def term_dict(self) -> DataFrame:
+        return read_term_dict(
+            self.spark.read.parquet(self._table_paths["term_dict"])
+        ).cache()
 
     @classmethod
     def from_iceberg(
@@ -458,32 +495,40 @@ class PackedIndex:
         self, full: bool = True, terms: list[str] | None = None
     ) -> "PackedIndex":
         """Serving-tier warm-up (opt-in at open via warm=True): pin the
-        term dictionary and doc stats (when driver-sized), force the
-        postings file listing, and drive each query dispatch path once
-        on the RAREST corpus term — the cheapest term everywhere, so
-        Janino codegen of the scan/decode/score plans, the Arrow collect
-        path, and the Python decode workers are all hot before the first
-        real query (the WAND pass stats the postings files for the
-        pyarrow point reader that serves its reads).  Cuts the first
-        query's ~2-3 s cold cost; returns self for chaining.
+        term dictionary and doc stats when driver-sized, then drive the
+        paths this index's dispatch will take once, on the RAREST corpus
+        term (the cheapest term everywhere); returns self for chaining.
+
+        A local driver-sized index pins both dictionaries straight from
+        its files and serves rows and WAND queries from the pyarrow
+        point reader, so warming it launches no Spark job: it stats the
+        postings files and runs the numpy decode and scorers once.  The
+        distributed decode (Janino codegen and the session's first
+        Python worker) is warmed only when those driver paths cannot
+        serve (doc stats past the budget, or postings the point reader
+        cannot read); otherwise the first distributed call
+        (``mode="exact"``, a batch past the driver bound) pays that
+        start-up itself.
 
         ``terms``: optionally pre-decode a workload's expected terms
-        into the serving LRU (one batched scan; budget-bounded), so
+        into the serving LRU (one batched read; budget-bounded), so
         even their FIRST queries answer from resident postings —
         sub-millisecond on repeated-vocabulary workloads."""
         self._query_info([])  # pins the term map when it fits
-        self._doc_stats_np()
-        if getattr(self, "_term_map", None):
+        driver = self._doc_stats_np() is not None and self._pq_files() is not None
+        if getattr(self, "_term_map", None) is not None:
             # dictionary already pinned driver-side: the rarest term is
             # a Python min over the map — no Spark sort job
             rare = min(
-                self._term_map.values(), key=lambda r: (r["df"], r["term"])
+                self._term_map.values(), key=lambda r: (r["df"], r["term"]),
+                default=None,
             )
         else:
             rare = self.term_dict.orderBy("df", "term").first()
         if rare is None:
             return self
-        self.decode_postings([rare["term_id"]]).limit(1).collect()
+        if not driver:
+            self.decode_postings([rare["term_id"]]).limit(1).collect()
         if full:
             # serving/driver path: pruned scan + Arrow collect + numpy
             self.bm25_topk_rows([rare["term"]], k=1)
@@ -504,14 +549,12 @@ class PackedIndex:
                 self._decode_live_driver(picked)
         return self
 
-    def _rowgroup_stats(self, table: str, pattern: str, keys: list[str]):
-        """Per-row-group min/max stats of the ``keys`` columns of one
-        table's local parquet files (``pattern`` under its live dir),
-        for the driver point readers: a list of (file path, ParquetFile,
-        {key: mins}, {key: maxes}, group byte sizes), or None when the
-        files cannot serve point reads (non-local path, pyarrow missing,
-        more than PQ_POINT_READ_MAX_FILES files, a key or its stats
-        missing)."""
+    def _local_files(self, table: str, pattern: str) -> list[str] | None:
+        """The parquet files of one table (``pattern`` under its live
+        dir) when the driver can read them itself, else None: a
+        non-local path (also Iceberg-served, and the ``term_dict`` of a
+        ``with_external_stats`` copy), pyarrow missing, no file, or more
+        than PQ_POINT_READ_MAX_FILES files."""
         path = getattr(self, "_table_paths", {}).get(table)
         if path is None:
             return None
@@ -520,12 +563,47 @@ class PackedIndex:
         if not path.startswith("/") or not os.path.isdir(path):
             return None
         try:
-            import pyarrow.parquet as pq
+            import pyarrow.parquet  # noqa: F401
         except ImportError:
             return None
         files = sorted(glob.glob(f"{path}/{pattern}"))
         if not files or len(files) > self.PQ_POINT_READ_MAX_FILES:
             return None
+        return files
+
+    def _read_local(self, table: str, columns: list[str], where=None):
+        """THE local table reader: ``columns`` of one dictionary table's
+        rows that pass ``where`` (pyarrow filters, which also prune row
+        groups by their min/max stats), read by pyarrow with no Spark
+        job, as one pyarrow Table.  None when the files cannot serve the
+        read (:meth:`_local_files`), or when a file lacks a column: the
+        caller then reads through Spark."""
+        files = self._local_files(table, "*.parquet")
+        if files is None:
+            return None
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        try:
+            return _concat([
+                pq.read_table(f, columns=columns, filters=where)
+                for f in files
+            ])
+        except pa.ArrowInvalid:
+            return None
+
+    def _rowgroup_stats(self, table: str, pattern: str, keys: list[str]):
+        """Per-row-group min/max stats of the ``keys`` columns of one
+        table's local parquet files (``pattern`` under its live dir),
+        for the driver point readers: a list of (file path, ParquetFile,
+        {key: mins}, {key: maxes}, group byte sizes), or None when the
+        files cannot serve point reads (:meth:`_local_files`, or a key
+        or its stats missing)."""
+        files = self._local_files(table, pattern)
+        if files is None:
+            return None
+        import pyarrow.parquet as pq
+
         out = []
         for f in files:
             try:
@@ -635,18 +713,24 @@ class PackedIndex:
     def _query_info(self, terms: list[str]) -> list[dict]:
         """Lookup of the query terms' dictionary rows (the broadcast
         'hot dictionary' — a handful of rows per query).  A dictionary
-        that fits the driver budget is pinned once: zero-job lookups."""
+        that fits the driver budget is pinned once: zero-job lookups.
+        The pin reads the local files (:meth:`_read_local`); a
+        dictionary without stored ids (derived hash ids), a
+        non-local one and a ``with_external_stats`` copy's are
+        collected through Spark, which derives ``xxhash64`` or joins
+        the external stats."""
         if self._fits(
             "dict", self.meta.get("n_terms", 1 << 62),
             self.meta.get("term_bytes", 0),
         ):
             if not hasattr(self, "_term_map"):
-                self._term_map = {
-                    r["term"]: r.asDict()
-                    for r in self.term_dict.select(
-                        "term", "term_id", "df", "idf"
-                    ).collect()
-                }
+                cols = ["term", "term_id", "df", "idf"]
+                tbl = self._read_local("term_dict", cols)
+                rows = (
+                    tbl.to_pylist() if tbl is not None else
+                    [r.asDict() for r in self.term_dict.select(*cols).collect()]
+                )
+                self._term_map = {r["term"]: r for r in rows}
             found = [self._term_map[t] for t in set(terms) if t in self._term_map]
             return sorted(found, key=lambda r: r["term"])
         if not terms:
@@ -722,8 +806,9 @@ class PackedIndex:
     def unpersist(self) -> None:
         """Release what this instance holds on the cluster: the cached
         dictionaries and the broadcasts its reads created."""
-        self.doc_dict.unpersist()
-        self.term_dict.unpersist()
+        for name in ("doc_dict", "term_dict"):
+            if name in self.__dict__:  # never built: nothing cached
+                self.__dict__[name].unpersist()
         for bc in getattr(self, "_bcs", []):
             bc.unpersist()
         self._bcs = []
@@ -939,13 +1024,24 @@ class PackedIndex:
             conf.set(key, prev)
 
     def _pin_doc_stats(self, lo: int | None = None, hi: int | None = None):
-        """(sorted doc_id, doc_len, gen) arrays of the doc_dict rows with
-        ``lo <= doc_id < hi`` (every row by default), collected through
-        Arrow and refused on a duplicate doc_id (``doc_id_order``)."""
-        dd = self.doc_dict
+        """(sorted doc_id, doc_len, gen) arrays of the committed doc_dict
+        rows with ``lo <= doc_id < hi`` (every row by default), refused
+        on a duplicate doc_id (``doc_id_order``).  Read from the local
+        files when they can serve (:meth:`_read_local`; doc_dict is
+        range-partitioned and sorted by doc_id, so the row-group stats
+        prune a ranged pin), else collected through Arrow."""
+        cols = ["doc_id", "doc_len", "gen"]
+        where = [("gen", "<=", int(self.meta.get("generation", 0)))]
         if lo is not None:
-            dd = dd.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        pdf = self._topandas_arrow(dd.select("doc_id", "doc_len", "gen"))
+            where += [("doc_id", ">=", int(lo)), ("doc_id", "<", int(hi))]
+        tbl = self._read_local("doc_dict", cols, where)
+        if tbl is not None:
+            pdf = tbl.to_pandas()
+        else:
+            dd = self.doc_dict
+            if lo is not None:
+                dd = dd.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+            pdf = self._topandas_arrow(dd.select(*cols))
         ids = pdf["doc_id"].to_numpy(np.int64)
         order = doc_id_order(ids)
         return (
@@ -1183,17 +1279,10 @@ class PackedIndex:
                     "salt", pa.array(np.full(len(t), salt, np.int32))
                 )
             parts.append(t)
-        # files written by different jobs (merge inputs, incremental
-        # appends) can disagree on nullability flags — normalize to the
-        # first part's types before concat; a real type clash falls back
-        # to the Spark scan rather than failing the query
+        # a real type clash falls back to the Spark scan rather than
+        # failing the query
         try:
-            if len(parts) > 1:
-                target = pa.schema(
-                    [pa.field(f.name, f.type) for f in parts[0].schema]
-                )
-                parts = [p.cast(target) for p in parts]
-            return pa.concat_tables(parts).to_pandas()
+            return _concat(parts).to_pandas()
         except pa.ArrowInvalid:
             return None
 
@@ -1611,8 +1700,13 @@ class PackedIndex:
             ):
                 self._dnorms = None
             else:
-                pdf = self._topandas_arrow(
-                    self.doc_dict.select("doc_id", "norm")
+                cols = ["doc_id", "norm"]
+                tbl = self._read_local("doc_dict", cols, [
+                    ("gen", "<=", int(self.meta.get("generation", 0)))
+                ])
+                pdf = (
+                    tbl.to_pandas() if tbl is not None else
+                    self._topandas_arrow(self.doc_dict.select(*cols))
                 )
                 ids = pdf["doc_id"].to_numpy(np.int64)
                 order = np.argsort(ids, kind="stable")
